@@ -68,7 +68,8 @@ Merge strategies (reference ``core/config.py:158-160``, README "Merge
 Strategies"):
 - ``upsert``        : last-writer-wins by monotone ``lsn``.
 - ``delete_insert`` : target rows for batch keys removed, then batch inserted
-                      (CoW only — needs key-match removal).
+                      (always rewrites the dirty buckets, in either
+                      ``merge_mode`` — needs key-match removal).
 - ``collapse``      : append-only sinks, DEFERRED-cancel: each batch appends
                       its latest version per key as ``_sign=+1`` delta rows
                       (deletes as tombstone-marked version rows) and reads
@@ -97,7 +98,7 @@ import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -120,6 +121,9 @@ SIGN_COL = "_sign"  # collapse strategy only: +1 live row, -1 cancel row
 DELETED_COL = "_deleted"  # tombstone marker (see module docstring)
 
 _SYSTEM_COLS = (LSN_COL, DELETED_COL, SIGN_COL)
+# lineage ops of the append write shape: commits that only add delta files
+# and never replace a file — the only ones compact's rebase commutes with
+_APPEND_OPS = ("merge:upsert:mor", "merge:collapse")
 # observe()-based digests build n_buckets aggregate expressions into the
 # write job; beyond this, fall back to the file-grouped read in
 # _maintain_digests (plan size / codegen limits)
@@ -1315,14 +1319,18 @@ class LakeTable:
                 # appends (the racer's delta files LWW-supersede our new
                 # base on read). A racing compact/rescale would leave two
                 # bases for the same rows (duplicates, and read() skips the
-                # LWW resolve with no pending deltas); a racing purge would
-                # resurrect erased rows from our pre-purge snapshot. Walk
-                # the intervening commits and refuse to rebase over any
-                # non-merge op — the caller retries from fresh state.
+                # LWW resolve with no pending deltas); a racing bucket-
+                # rewriting merge (CoW upsert, delete_insert) already
+                # replaced the files we folded, so our pre-race base would
+                # duplicate its keys and bring its deletes back; a racing
+                # purge would resurrect erased rows from our pre-purge
+                # snapshot. Walk the intervening commits and refuse to
+                # rebase over anything but an append — the caller retries
+                # from fresh state.
                 for iv in range(base_version + 1, cur_v + 1):
                     ivm = self._load_manifest(iv)
                     iop = str((ivm or {}).get("lineage", {}).get("op", ""))
-                    if not iop.startswith("merge:"):
+                    if iop not in _APPEND_OPS:
                         raise ConcurrentWriteError(
                             f"manifest advanced v{base_version} -> v{cur_v} with a "
                             f"non-append commit '{iop or 'unknown'}' at v{iv}; "
@@ -1433,14 +1441,11 @@ class LakeTable:
             df = df.withColumn(LSN_COL, F.lit(lsn).cast("long"))
         if DELETED_COL not in df.columns:
             df = df.withColumn(DELETED_COL, F.lit(False))
-        df = df.withColumn(BUCKET_COL, self._bucket_col())
-        data_schema = df.drop(BUCKET_COL).schema
-        new, dig, tot = self._write_snapshot(df)
-        buckets = {b: {"base": fs, "delta": []} for b, fs in new.items()}
-        n = self._count_rows([f for fs in new.values() for f in fs])
-        lineage = {"batch_id": batch_id, "op": "overwrite", "rows_written": n}
-        v = self._commit(buckets, data_schema, batch_id, lineage, dig, tot)
-        return MergeResult(v, batch_id, True, [int(b) for b in new], n)
+        # a full replace defines the table's schema: no evolution onto the old
+        return self._commit_write(
+            self._load_manifest(), df.withColumn(BUCKET_COL, self._bucket_col()),
+            batch_id, "overwrite", evolve=False,
+        )
 
     # ----------------------------------------------------------------- merge
     def _enforce_constraints(
@@ -1533,10 +1538,34 @@ class LakeTable:
         """Apply one change batch. ``batch_df`` columns = data columns +
         ``op_col`` ∈ {insert, update, upsert, delete} + monotone ``lsn_col``.
 
-        upsert/CoW : union dirty-bucket target rows with the deduped batch,
-                     LWW-reduce, rewrite only dirty buckets.
-        upsert/MoR : append the deduped batch as delta files — write cost is
-                     O(batch) regardless of table size; reads resolve.
+        Each strategy builds the rows it lands and hands them to the one
+        commit tail (``_commit_write``) in one of two write shapes:
+
+        *append deltas* — the table is never read; write cost is O(batch)
+        regardless of table size, and reads LWW-resolve base∪delta:
+
+        upsert/MoR    : the batch, deduped to one row per key (deletes as
+                        tombstones), lands as delta files.
+        collapse      : the batch's latest version per key lands as
+                        ``_sign=+1`` delta rows (deletes as tombstone-marked
+                        versions). Superseded versions annihilate at read
+                        time and physically at ``compact()``; delete markers
+                        persist until ``expire_tombstones`` (see the module
+                        docstring for why cancels are deferred).
+
+        *rewrite dirty buckets* — the target rows of the buckets the batch
+        touches are combined with the batch and rewritten as base files:
+
+        upsert/CoW    : union with the deduped batch, LWW-reduce.
+        delete_insert : drop every target row whose key matches a batch key,
+                        insert the batch's non-delete rows. Physical removal
+                        (no tombstones) per the reference's delete-then-insert
+                        contract — assumes in-order delivery.
+
+        ``merge_mode`` only picks between the two upsert shapes: ``collapse``
+        ignores it (always appends) and ``delete_insert`` always rewrites
+        buckets, in either mode. Every strategy evolves the table schema
+        additively (new columns, widening numeric promotions).
 
         ``unique_keys``: the caller guarantees the batch already holds at
         most ONE row per key (e.g. it is the output of a per-key aggregate).
@@ -1545,10 +1574,17 @@ class LakeTable:
         guarantee degrades to both versions landing as deltas and the READ
         side's LWW resolve picking one, never a corrupt table.
         """
-        if batch_id in self.committed_batch_ids():
-            return MergeResult(self.current_version(), batch_id, False)
+        # the ONE manifest this merge reads the target from and commits
+        # against — loaded before anything reads the table, so a writer that
+        # lands at any later point fails the commit's version check
+        m = self._load_manifest()
+        if m is not None and batch_id in m.get("committed_batch_ids", []):
+            return MergeResult(int(m["version"]), batch_id, False)
         if strategy not in ("upsert", "delete_insert", "collapse"):
             raise ValueError(f"unknown merge strategy: {strategy}")
+        op = (f"merge:upsert:{self.merge_mode}" if strategy == "upsert"
+              else f"merge:{strategy}")
+        append = op in _APPEND_OPS
 
         data_cols = [c for c in batch_df.columns if c not in (op_col, lsn_col)]
         batch = (
@@ -1569,17 +1605,16 @@ class LakeTable:
                                  "rows_quarantined": rows_quarantined}
 
         # ONE pre-scan of the batch serves both the op-count lineage stats and
-        # the dirty-bucket list (delete_insert/CoW need it; MoR upsert and
-        # collapse learn their buckets from the write itself) — two separate
-        # jobs here would scan the batch twice per commit
-        need_dirty = strategy == "delete_insert" or (
-            strategy == "upsert" and self.merge_mode == "cow"
-        )
+        # the dirty-bucket list (the rewrite shape needs it; the append shape
+        # learns its buckets from the write itself) — two separate jobs here
+        # would scan the batch twice per commit
         stats: dict[str, Any] = {}
         dirty: list[int] | None = None
         obs_ops = None
-        if need_dirty:
+        if not append:
             pre = batch.groupBy("_op", BUCKET_COL).agg(F.count(F.lit(1)).alias("n")).collect()
+            # dirty buckets of the raw batch == those of the deduped rows
+            # (LWW only drops rows within a key, never a bucket)
             dirty = sorted({r[BUCKET_COL] for r in pre})
             if self.track_stats:
                 op_counts: dict[str, int] = {}
@@ -1587,223 +1622,144 @@ class LakeTable:
                     op_counts[r["_op"]] = op_counts.get(r["_op"], 0) + r["n"]
                 stats["op_counts"] = op_counts
         elif self.track_stats:
-            # hot paths (MoR upsert, collapse): op counts ride the WRITE job
-            # via observe() — a separate groupBy action would scan the batch
-            # twice per commit
+            # append shape: op counts ride the WRITE job via observe() — a
+            # separate groupBy action would scan the batch twice per commit
             from pyspark.sql import Observation
 
             obs_ops = Observation()
             batch = batch.observe(
                 obs_ops,
                 *[
-                    F.sum((F.col("_op") == F.lit(op)).cast("long")).alias(op)
-                    for op in ("insert", "update", "upsert", "delete")
+                    F.sum((F.col("_op") == F.lit(name)).cast("long")).alias(name)
+                    for name in ("insert", "update", "upsert", "delete")
                 ],
             )
+        fold = None
         if strategy == "collapse":
-            return self._merge_collapse(
-                batch, data_cols, batch_id, stats, lineage_extra, obs_ops
+            op_rank = F.when(F.col("_op") == "delete", 2).otherwise(1)
+            payload = [c for c in data_cols if c not in self.key_cols]
+            rows = (
+                batch.groupBy(*self.key_cols)
+                .agg(F.max(F.struct(F.col(LSN_COL), op_rank.alias("_r"), F.col("_op"),
+                                    *[F.col(c) for c in payload])).alias("w"))
+                .select(*self.key_cols, *[F.col(f"w.{c}").alias(c) for c in payload],
+                        F.col(f"w.{LSN_COL}").alias(LSN_COL), F.col("w._op").alias("_op"))
+                .withColumn(DELETED_COL, F.col("_op") == F.lit("delete"))
+                .drop("_op")
+                .withColumn(SIGN_COL, F.lit(1))
             )
-        if strategy == "delete_insert":
-            return self._merge_delete_insert(batch, batch_id, stats, lineage_extra, dirty)
+        elif strategy == "delete_insert":
+            keys = batch.select(*self.key_cols).distinct()
+            rows = (
+                batch.filter(F.col("_op") != F.lit("delete"))
+                .drop("_op")
+                .withColumn(DELETED_COL, F.lit(False))
+            )
 
-        # -------- upsert: dedupe batch to one row per key with tombstones
-        tombstoned = batch.withColumn(
-            DELETED_COL, F.col("_op") == F.lit("delete")
-        ).drop("_op")
-        deduped = (
-            tombstoned if unique_keys else self._resolve_lww(tombstoned)
-        ).withColumn(BUCKET_COL, self._bucket_col())
+            def fold(target: DataFrame, inserts: DataFrame) -> DataFrame:
+                survivors = target.join(F.broadcast(keys), on=self.key_cols, how="left_anti")
+                return survivors.unionByName(inserts, allowMissingColumns=True).withColumn(
+                    DELETED_COL, F.coalesce(F.col(DELETED_COL), F.lit(False))
+                )
+        else:
+            # upsert: dedupe the batch to one row per key, with tombstones
+            tombstoned = batch.withColumn(
+                DELETED_COL, F.col("_op") == F.lit("delete")
+            ).drop("_op")
+            rows = tombstoned if unique_keys else self._resolve_lww(tombstoned)
+            if not append:
+                def fold(target: DataFrame, deduped: DataFrame) -> DataFrame:
+                    return self._resolve_lww(
+                        target.unionByName(deduped, allowMissingColumns=True)
+                    )
+        return self._commit_write(
+            m, rows.withColumn(BUCKET_COL, self._bucket_col()), batch_id, op,
+            append=append, dirty=dirty, fold=fold, stats=stats, obs_ops=obs_ops,
+            extra=lineage_extra,
+        )
 
-        m = self._load_manifest()
-        if self.merge_mode == "mor":
-            assert dirty is None  # MoR: no pre-read, buckets come from the write
-            # no pre-read, no dirty-bucket job: the write itself reveals which
-            # buckets got deltas (dir listing), so MoR ingest is exactly ONE
-            # scan + one shuffle + one write per batch.
-            data_schema = deduped.drop(BUCKET_COL).schema
-            if m is not None:  # additive + type-widening schema evolution
-                data_schema = _merge_schemas(self._schema_of(m), data_schema)
-                deduped = _conform_types(deduped, data_schema)
-            new, dig, tot = self._write_snapshot(deduped, per_file_digests=False)
+    def _commit_write(
+        self,
+        m: dict[str, Any] | None,
+        df: DataFrame,
+        batch_id: str,
+        op: str,
+        append: bool = False,
+        dirty: list[int] | None = None,
+        fold: Callable[[DataFrame, DataFrame], DataFrame] | None = None,
+        evolve: bool = True,
+        stats: dict[str, Any] | None = None,
+        obs_ops: Any = None,
+        extra: dict[str, Any] | None = None,
+    ) -> MergeResult:
+        """The one commit tail of every merge strategy, ``overwrite``,
+        ``expire_tombstones`` and ``rescale``: schema evolution → snapshot
+        write → bucket-map edit → row / op counts → lineage → ``_commit``.
+
+        ``m`` is the manifest the caller loaded BEFORE reading anything of
+        the table. The target rows, the bucket map and the commit's version
+        check all come from it, so a writer landing at any later point
+        fails the commit with :class:`ConcurrentWriteError` instead of
+        being silently overwritten. ``df`` carries BUCKET_COL.
+
+        Two write shapes:
+
+        - ``append``: ``df``'s files join their buckets as DELTA files (MoR
+          upsert, collapse). Delta digests are never summed, so the write
+          computes the batch total only.
+        - rewrite (default): ``df``'s files become the whole BASE of their
+          buckets. With ``dirty`` (CoW upsert, delete_insert), the target
+          rows of those buckets are read from ``m`` and combined with
+          ``df`` by ``fold(target, rows)`` first; a dirty bucket resolving
+          to zero rows is a CoW delete. Without it, ``df`` replaces every
+          bucket (overwrite, expire_tombstones, rescale).
+
+        ``evolve``: additive + type-widening schema evolution of ``df`` onto
+        ``m``'s schema (off for ``overwrite``, which defines a new one)."""
+        base_version = int(m["version"]) if m else 0
+        data_schema = df.drop(BUCKET_COL).schema
+        if evolve and m is not None:
+            data_schema = _merge_schemas(self._schema_of(m), data_schema)
+            df = _conform_types(df, data_schema)
+        if fold is not None:
+            rows = df.drop(BUCKET_COL)
+            target = self.read(buckets=dirty, version=base_version, include_deleted=True)
+            # both sides carry the evolved types, so the union never leans
+            # on implicit coercion (and conflicts fail with a clear error)
+            target = _conform_types(target, data_schema) if target.columns else rows.limit(0)
+            df = fold(target, rows).withColumn(BUCKET_COL, self._bucket_col())
+            data_schema = df.drop(BUCKET_COL).schema
+        new, dig, tot = self._write_snapshot(df, per_file_digests=not append)
+        if append:
             buckets = dict(m["buckets"]) if m else {}
             for b, fs in new.items():
                 e = self._entry(m, b)
-                e["delta"] = e["delta"] + fs
-                buckets[b] = e
+                buckets[b] = {"base": e["base"], "delta": e["delta"] + fs}
         else:
-            # dirty buckets of the deduped batch == those of the raw batch
-            # (LWW only drops rows within a key, never a bucket)
-            target = self.read(buckets=dirty, include_deleted=True)
-            if not target.columns:
-                target = deduped.drop(BUCKET_COL).limit(0)
-            # additive + type-widening evolution, same rules as MoR: both
-            # sides conform to the merged schema so the union never leans on
-            # implicit coercion (and conflicts fail with a clear error)
-            merged = _merge_schemas(target.schema, deduped.drop(BUCKET_COL).schema)
-            unioned = _conform_types(target, merged).unionByName(
-                _conform_types(deduped.drop(BUCKET_COL), merged),
-                allowMissingColumns=True,
-            )
-            resolved = self._resolve_lww(unioned).withColumn(BUCKET_COL, self._bucket_col())
-            new, dig, tot = self._write_snapshot(resolved)
-            buckets = dict(m["buckets"]) if m else {}
-            for b in dirty:  # dirty bucket resolving to zero rows = CoW delete
-                buckets.pop(str(b), None)
-            for b, fs in new.items():
-                buckets[b] = {"base": fs, "delta": []}
-            data_schema = resolved.drop(BUCKET_COL).schema
-
+            replaced = None if dirty is None else {str(b) for b in dirty}
+            buckets = {} if m is None or replaced is None else {
+                b: e for b, e in m["buckets"].items() if b not in replaced
+            }
+            buckets.update({b: {"base": fs, "delta": []} for b, fs in new.items()})
         rows_written = self._count_rows([f for fs in new.values() for f in fs])
-        self._fill_op_counts(stats, obs_ops, rows_written)
-        lineage = {
-            "batch_id": batch_id,
-            "op": f"merge:{strategy}:{self.merge_mode}",
-            "touched_buckets": sorted(int(b) for b in new),
-            "rows_written": rows_written,
-            **stats,
-            **(lineage_extra or {}),
-        }
-        v = self._commit(buckets, data_schema, batch_id, lineage, dig, tot,
-                         base_version=(int(m["version"]) if m else 0))
-        return MergeResult(v, batch_id, True, sorted(int(b) for b in new), rows_written, stats)
-
-    @staticmethod
-    def _fill_op_counts(
-        stats: dict[str, Any], obs_ops, rows_written: int
-    ) -> None:
-        """Read the per-op observe counters after the write job ran. On an
-        empty batch, PropagateEmptyRelation optimizes the metrics node away
-        and ``Observation.get`` would fail — but a zero-row write implies a
-        zero-row batch, so the counts are known without reading it."""
-        if obs_ops is None:
-            return
-        if rows_written == 0:
-            stats["op_counts"] = {}
-        else:
-            stats["op_counts"] = {
+        stats = {} if stats is None else stats
+        if obs_ops is not None:
+            # the per-op observe counters, read after the write job ran. On
+            # an empty batch, PropagateEmptyRelation optimizes the metrics
+            # node away and ``Observation.get`` would fail — but a zero-row
+            # write implies a zero-row batch, so the counts are known
+            stats["op_counts"] = {} if rows_written == 0 else {
                 k: int(v) for k, v in obs_ops.get.items()
                 if v is not None and int(v) > 0
             }
-
-    def _merge_delete_insert(
-        self,
-        batch: DataFrame,
-        batch_id: str,
-        stats: dict[str, Any],
-        lineage_extra: dict[str, Any] | None,
-        dirty: list[int],
-    ) -> MergeResult:
-        """delete_insert (CoW only): remove every target row whose key matches
-        a batch key, insert batch rows. Physical-removal semantics (no
-        tombstones) per the reference's delete-then-insert contract —
-        assumes in-order delivery."""
-        target = self.read(buckets=dirty, include_deleted=True)
-        inserts = (
-            batch.filter(F.col("_op") != F.lit("delete"))
-            .drop("_op", BUCKET_COL)
-            .withColumn(DELETED_COL, F.lit(False))
-        )
-        if not target.columns:
-            target = inserts.limit(0)
-        keys = batch.select(*self.key_cols).distinct()
-        survivors = target.join(F.broadcast(keys), on=self.key_cols, how="left_anti")
-        resolved = (
-            survivors.unionByName(inserts, allowMissingColumns=True)
-            .withColumn(DELETED_COL, F.coalesce(F.col(DELETED_COL), F.lit(False)))
-            .withColumn(BUCKET_COL, self._bucket_col())
-        )
-        new, dig, tot = self._write_snapshot(resolved)
-        m = self._load_manifest()
-        buckets = dict(m["buckets"]) if m else {}
-        for b in dirty:
-            buckets.pop(str(b), None)
-        for b, fs in new.items():
-            buckets[b] = {"base": fs, "delta": []}
-        data_schema = resolved.drop(BUCKET_COL).schema
-        rows_written = self._count_rows([f for fs in new.values() for f in fs])
+        touched = sorted(int(b) for b in new)
         lineage = {
-            "batch_id": batch_id, "op": "merge:delete_insert",
-            "touched_buckets": sorted(int(b) for b in new),
-            "rows_written": rows_written, **stats, **(lineage_extra or {}),
+            "batch_id": batch_id, "op": op, "touched_buckets": touched,
+            "rows_written": rows_written, **stats, **(extra or {}),
         }
         v = self._commit(buckets, data_schema, batch_id, lineage, dig, tot,
-                         base_version=(int(m["version"]) if m else 0))
-        return MergeResult(v, batch_id, True, sorted(int(b) for b in new), rows_written, stats)
-
-    def _merge_collapse(
-        self,
-        batch: DataFrame,
-        data_cols: list[str],
-        batch_id: str,
-        stats: dict[str, Any],
-        lineage_extra: dict[str, Any] | None,
-        obs_ops,
-    ) -> MergeResult:
-        """Collapse: APPEND-ONLY with DEFERRED cancels — the batch's latest
-        version per key lands as ``_sign=+1`` DELTA rows (deletes as
-        tombstone-marked version rows) and the target table is NEVER read:
-        per-batch cost is O(batch) in both writes and reads, independent of
-        table size. This is ClickHouse VersionedCollapsingMergeTree (the
-        production form of the CollapsingMergeTree sink the reference
-        targets, ``/root/reference/adapters/clickhouse.py:93-105``): it
-        exists precisely because synthesizing a cancel row at insert time
-        needs the key's current live row — a point lookup per key that
-        becomes an O(live-rows) probe per micro-batch on a hash-bucketed
-        10^10-row table. Instead, superseded versions annihilate
-
-        - at READ time: the same LWW-by-``_lsn`` resolver as MoR upsert
-          (``read()``), and
-        - physically at ``compact()``: the fold a CollapsingMergeTree
-          background merge performs — superseded versions vanish, survivors
-          rewrite as ``_sign=+1`` base rows. Delete markers persist as
-          tombstones until ``expire_tombstones`` (unlike ClickHouse's
-          physical removal — see ``compact``'s comment: dropping them lets
-          late stale updates resurrect deleted keys).
-
-        Engine-written collapse tables therefore never contain ``-1`` rows;
-        ``collapse_live_view`` remains the fold for externally-supplied raw
-        sign data and is the identity on resolved engine tables."""
-        op_rank = F.when(F.col("_op") == "delete", 2).otherwise(1)
-        latest = (
-            batch.groupBy(*self.key_cols)
-            .agg(F.max(F.struct(F.col(LSN_COL), op_rank.alias("_r"), F.col("_op"),
-                                *[F.col(c) for c in data_cols if c not in self.key_cols])).alias("w"))
-            .select(*self.key_cols,
-                    *[F.col(f"w.{c}").alias(c) for c in data_cols if c not in self.key_cols],
-                    F.col(f"w.{LSN_COL}").alias(LSN_COL), F.col("w._op").alias("_op"))
-        )
-        versions = (
-            latest.withColumn(DELETED_COL, F.col("_op") == F.lit("delete"))
-            .drop("_op")
-            .withColumn(SIGN_COL, F.lit(1))
-            .withColumn(BUCKET_COL, self._bucket_col())
-        )
-        m = self._load_manifest()
-        data_schema = versions.drop(BUCKET_COL).schema
-        if m is not None:  # additive + type-widening schema evolution
-            data_schema = _merge_schemas(self._schema_of(m), data_schema)
-            versions = _conform_types(versions, data_schema)
-        # sign tables never have a summable live digest: batch total only
-        new, dig, tot = self._write_snapshot(versions, per_file_digests=False)
-        buckets = dict(m["buckets"]) if m else {}
-        for b, fs in new.items():
-            e = self._entry(m, b)
-            e["delta"] = e["delta"] + fs
-            buckets[b] = e
-        rows_written = self._count_rows([f for fs in new.values() for f in fs])
-        self._fill_op_counts(stats, obs_ops, rows_written)
-        lineage = {
-            "batch_id": batch_id, "op": "merge:collapse",
-            "touched_buckets": sorted(int(b) for b in new),
-            "rows_written": rows_written, **stats, **(lineage_extra or {}),
-        }
-        # through _commit like every other strategy: persists n_buckets (a
-        # rescale()d table must not fall back to the constructor default) and
-        # maintains the file-digest cache / batch checksum
-        v = self._commit(buckets, data_schema, batch_id, lineage, dig, tot,
-                         base_version=(int(m["version"]) if m else 0))
-        return MergeResult(v, batch_id, True, sorted(int(b) for b in new), rows_written, stats)
+                         base_version=base_version)
+        return MergeResult(v, batch_id, True, touched, rows_written, stats)
 
     def changes_since(self, lsn: int, max_lsn: int | None = None) -> DataFrame:
         """Incremental change feed (Delta-CDF / Iceberg-changelog analogue,
@@ -2114,8 +2070,7 @@ class LakeTable:
         m = self._load_manifest()
         if m is None:
             return MergeResult(0, batch_id or "gc", False)
-        schema = self._schema_of(m)
-        df = self._read_files(self._files(m, None), schema)
+        df = self._read_files(self._files(m, None), self._schema_of(m))
         resolved = self._resolve_lww(df) if any(
             e.get("delta") for e in m["buckets"].values()
         ) else df
@@ -2125,15 +2080,10 @@ class LakeTable:
                 & (F.col(LSN_COL) < F.lit(older_than_lsn))
             )
         ).withColumn(BUCKET_COL, self._bucket_col())
-        new, dig, tot = self._write_snapshot(kept)
-        buckets = {b: {"base": fs, "delta": []} for b, fs in new.items()}
-        bid = batch_id or f"gc-v{m['version']}"
-        rows = self._count_rows([f for fs in new.values() for f in fs])
-        lineage = {"batch_id": bid, "op": "expire_tombstones", "rows_written": rows,
-                   "older_than_lsn": older_than_lsn}
-        v = self._commit(buckets, schema, bid, lineage, dig, tot,
-                         base_version=int(m["version"]))
-        return MergeResult(v, bid, True, sorted(int(b) for b in new), rows)
+        return self._commit_write(
+            m, kept, batch_id or f"gc-v{m['version']}", "expire_tombstones",
+            extra={"older_than_lsn": older_than_lsn},
+        )
 
     def purge_keys(
         self,
@@ -2328,24 +2278,18 @@ class LakeTable:
         if m is None:
             self.n_buckets = n_buckets
             return MergeResult(0, batch_id or "rescale", False)
-        schema = self._schema_of(m)
-        df = self._read_files(self._files(m, None), schema)
+        df = self._read_files(self._files(m, None), self._schema_of(m))
         if any(e.get("delta") for e in m["buckets"].values()):
             # versioned deltas (collapse included) must resolve before the
             # all-base rewrite — multiple versions of a key written as base
             # would never LWW again on read
             df = self._resolve_lww(df)
         self.n_buckets = n_buckets
-        rebucketed = df.withColumn(BUCKET_COL, self._bucket_col())
-        new, dig, tot = self._write_snapshot(rebucketed)
-        buckets = {b: {"base": fs, "delta": []} for b, fs in new.items()}
-        bid = batch_id or f"rescale-{n_buckets}"
-        rows = self._count_rows([f for fs in new.values() for f in fs])
-        lineage = {"batch_id": bid, "op": "rescale", "rows_written": rows,
-                   "n_buckets": n_buckets}
-        v = self._commit(buckets, schema, bid, lineage, dig, tot,
-                         base_version=int(m["version"]))
-        return MergeResult(v, bid, True, sorted(int(b) for b in new), rows)
+        return self._commit_write(
+            m, df.withColumn(BUCKET_COL, self._bucket_col()),
+            batch_id or f"rescale-{n_buckets}", "rescale",
+            extra={"n_buckets": n_buckets},
+        )
 
     def rollback(self, version: int, batch_id: str | None = None) -> MergeResult:
         """Reinstate the table state of ``version`` as a NEW commit —

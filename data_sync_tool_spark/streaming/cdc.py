@@ -29,7 +29,6 @@ module supplies the streaming machinery from Spark per SURVEY §2.8:
 
 from __future__ import annotations
 
-import os
 import signal
 import time
 from dataclasses import dataclass, field
@@ -363,7 +362,10 @@ class CdcPipeline:
                 "partitions": sorted(
                     (
                         {
-                            "src": os.path.basename(r["src"]) or r["src"],
+                            # the full path: basenames repeat across the
+                            # directories of one partitioned write, the
+                            # path is unique and stable across replays
+                            "src": r["src"],
                             "offset_min": r["lo"], "offset_max": r["hi"],
                             "rows": r["n"], "checksum": int(r["ck"]),
                         }

@@ -66,19 +66,27 @@ def test_merge_landing_during_compact_survives_via_rebase(spark, tmp_path):
     assert {(r.conv_id, r.text) for r in a.read().collect()} == got
 
 
-def test_stale_data_merge_raises_instead_of_clobbering(spark, tmp_path):
+@pytest.mark.parametrize("strategy,merge_mode", [
+    ("upsert", "mor"), ("upsert", "cow"), ("delete_insert", "cow"), ("collapse", "mor"),
+])
+def test_stale_data_merge_raises_instead_of_clobbering(spark, tmp_path, strategy, merge_mode):
+    """One bucket, so the racer's row lands in the bucket the stale merge
+    rewrites: every strategy must commit against the manifest it read the
+    target from, and fail loudly when another writer landed in between."""
     path = str(tmp_path / "t")
-    a = LakeTable(spark, path, KEYS, n_buckets=2, merge_mode="mor")
-    b = LakeTable(spark, path, KEYS, n_buckets=2, merge_mode="mor")
-    a.merge_into(_mk(spark, [("x", 0, "v1", 1, "upsert")]), "b0")
+    a = LakeTable(spark, path, KEYS, n_buckets=1, merge_mode=merge_mode)
+    b = LakeTable(spark, path, KEYS, n_buckets=1, merge_mode=merge_mode)
+    a.merge_into(_mk(spark, [("x", 0, "v1", 1, "upsert")]), "b0", strategy=strategy)
 
     def racer():
-        b.merge_into(_mk(spark, [("r", 0, "racer", 2, "upsert")]), "race")
+        b.merge_into(_mk(spark, [("r", 0, "racer", 2, "upsert")]), "race",
+                     strategy=strategy)
 
     restore = _inject_during_write(a, racer)
     try:
         with pytest.raises(ConcurrentWriteError, match="manifest advanced"):
-            a.merge_into(_mk(spark, [("x", 0, "v2", 3, "upsert")]), "b1")
+            a.merge_into(_mk(spark, [("x", 0, "v2", 3, "upsert")]), "b1",
+                         strategy=strategy)
     finally:
         restore()
     # the racer's commit is intact; the stale merge left no manifest trace
@@ -86,7 +94,7 @@ def test_stale_data_merge_raises_instead_of_clobbering(spark, tmp_path):
     assert got == {("x", "v1"), ("r", "racer")}
     assert "b1" not in a.committed_batch_ids()
     # the standard recovery: retry the merge against the current state
-    a.merge_into(_mk(spark, [("x", 0, "v2", 3, "upsert")]), "b1")
+    a.merge_into(_mk(spark, [("x", 0, "v2", 3, "upsert")]), "b1", strategy=strategy)
     assert {(r.conv_id, r.text) for r in a.read().collect()} == {
         ("x", "v2"), ("r", "racer")
     }
@@ -113,6 +121,39 @@ def test_compact_refuses_rebase_over_racing_purge(spark, tmp_path):
     assert {(r.conv_id, r.text) for r in a.read().collect()} == {("y", "keep2")}
     a.compact()
     assert {(r.conv_id, r.text) for r in a.read().collect()} == {("y", "keep2")}
+
+
+@pytest.mark.parametrize("strategy,racer_mode", [
+    ("delete_insert", "mor"), ("upsert", "cow"),
+])
+def test_compact_refuses_rebase_over_racing_bucket_rewrite(
+    spark, tmp_path, strategy, racer_mode
+):
+    """A merge that REWROTE buckets (CoW upsert, delete_insert) replaced the
+    very base and delta files the compact folded — it is not an additive
+    append. Rebasing over it would prepend the compact's pre-race base next
+    to the racer's: a duplicate key, and a deleted key brought back."""
+    path = str(tmp_path / "t")
+    a = LakeTable(spark, path, KEYS, n_buckets=2, merge_mode="mor")
+    b = LakeTable(spark, path, KEYS, n_buckets=2, merge_mode=racer_mode)
+    a.merge_into(_mk(spark, [("x", 0, "v1", 1, "upsert"),
+                             ("y", 0, "w1", 2, "upsert")]), "b0")
+    a.merge_into(_mk(spark, [("x", 0, "v2", 3, "upsert")]), "b1")
+
+    def racer():
+        b.merge_into(_mk(spark, [("y", 0, None, 4, "delete"),
+                                 ("x", 0, "v3", 5, "upsert")]), "race",
+                     strategy=strategy)
+
+    restore = _inject_during_write(a, racer)
+    try:
+        with pytest.raises(ConcurrentWriteError, match="non-append"):
+            a.compact()
+    finally:
+        restore()
+    assert sorted((r.conv_id, r.text) for r in a.read().collect()) == [("x", "v3")]
+    a.compact()
+    assert sorted((r.conv_id, r.text) for r in a.read().collect()) == [("x", "v3")]
 
 
 def test_compact_refuses_rebase_over_racing_compact(spark, tmp_path):

@@ -345,7 +345,7 @@ def test_strategy_switch_upsert_to_collapse_converges(spark, tmp_path):
     """A MoR table carrying UNRESOLVED upsert deltas that then receives
     collapse batches must still converge: one LWW-by-_lsn rule resolves
     every pending version regardless of which strategy wrote it (collapse
-    deltas are versioned +1 rows, never -1 — see read()/_merge_collapse).
+    deltas are versioned +1 rows, never -1 — see read()/merge_into).
     Guards the strategy-switch hazard from round-3 ADVICE (a sign-aware
     read that skipped LWW would count stale upsert versions as live)."""
     t = LakeTable(spark, str(tmp_path / "t"), ["k"], n_buckets=4,
@@ -413,3 +413,54 @@ def test_composite_key_zone_maps_prune_on_second_key_column(spark, tmp_path, mon
     import pytest as _pytest
     with _pytest.raises(ValueError, match="key_ranges_col"):
         t.read(key_ranges=[(0, 1)], key_ranges_col="v")
+
+
+def _merge_jobs(spark, table, batch, batch_id, strategy):
+    """Spark jobs one ``merge_into`` call runs, counted by job group."""
+    import time
+
+    sc = spark.sparkContext
+    group = f"merge-jobs-{batch_id}-{time.monotonic_ns()}"
+    sc.setJobGroup(group, "merge_into job count")
+    try:
+        table.merge_into(batch, batch_id=batch_id, strategy=strategy)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed by the async listener bus: wait until it drains
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("strategy,merge_mode,jobs", [
+    ("upsert", "mor", 3),
+    ("collapse", "mor", 3),
+    ("upsert", "cow", 6),
+    ("delete_insert", "cow", 6),
+])
+@pytest.mark.parametrize("options,extra_jobs", [
+    ({}, 0),
+    ({"checksum": False}, 0),
+    ({"bloom_filters": True}, 2),
+])
+def test_merge_job_count_per_write_shape(
+    spark, tmp_path, strategy, merge_mode, jobs, options, extra_jobs
+):
+    """Pins the Spark job count of a steady-state merge for each write
+    shape: append deltas (MoR upsert, collapse) and rewrite dirty buckets
+    (CoW upsert, delete_insert). A second merge of 5 updates + 1 delete
+    into a 4-bucket table of 120 rows; checksums ride the write job (no
+    extra jobs), key blooms add their footer read-back."""
+    t = LakeTable(spark, str(tmp_path / "t"), ["k"], n_buckets=4,
+                  merge_mode=merge_mode, **options)
+    schema = "k string, v string, op string, lsn long"
+    t.merge_into(spark.createDataFrame(
+        [(f"k{i:03d}", "v1", "insert", i) for i in range(120)], schema
+    ), batch_id="load", strategy=strategy)
+    batch = spark.createDataFrame(
+        [(f"k{i:03d}", "v2", "update", 200 + i) for i in range(5)]
+        + [("k010", None, "delete", 300)], schema,
+    )
+    assert _merge_jobs(spark, t, batch, "b1", strategy) == jobs + extra_jobs
+    live = {r.k: r.v for r in t.read().collect()}
+    assert len(live) == 119 and "k010" not in live
+    assert all(live[f"k{i:03d}"] == "v2" for i in range(5))
