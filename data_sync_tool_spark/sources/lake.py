@@ -166,8 +166,27 @@ class MergeResult:
     stats: dict[str, Any] = field(default_factory=dict)
 
 
+def _manifest_property(name: str) -> property:
+    """Read-only view of one table property in the current manifest (the
+    constructor's seed value before the first commit)."""
+    return property(lambda self: self._props(self._load_manifest())[name])
+
+
 class LakeTable:
-    """A single lake table rooted at ``path`` with key ``key_cols``."""
+    """A single lake table rooted at ``path`` with key ``key_cols``.
+
+    The handle holds no table state. The table properties (``n_buckets``,
+    ``stats_columns``, ``constraints``, ``on_violation``, ``ttl``) live in
+    the manifest; constructor values only seed a table with no manifest
+    yet. Every operation loads ONE manifest first, takes everything from
+    it, and publishes at its version + 1 (atomic create-if-absent), so a
+    writer landing in between fails it with :class:`ConcurrentWriteError`."""
+
+    n_buckets = _manifest_property("n_buckets")
+    stats_columns = _manifest_property("stats_columns")
+    constraints = _manifest_property("constraints")
+    on_violation = _manifest_property("on_violation")
+    ttl = _manifest_property("ttl")
 
     def __init__(
         self,
@@ -194,7 +213,6 @@ class LakeTable:
         self.spark = spark
         self.path = path
         self.key_cols = list(key_cols)
-        self.n_buckets = n_buckets
         self.checksum = checksum
         self.merge_mode = merge_mode
         # per-batch op-count lineage costs one extra scan of the batch;
@@ -204,12 +222,6 @@ class LakeTable:
         # column-pruned read-back of its NEW files (O(batch)); point-lookup
         # reads then skip bucket files that cannot contain the probed keys
         self.bloom_filters = bloom_filters
-        # opt-in per-file min/max zone maps for NON-key columns (Delta/Iceberg
-        # "data skipping" stats): harvested from parquet footers at commit
-        # time (metadata-only, O(new files)); ``read(ranges=...)`` prunes
-        # files on resolved buckets. Persisted in the manifest so every
-        # reader skips with the same index.
-        self.stats_columns = list(stats_columns or [])
         # exactly-once memory: how many recent batch_ids each manifest
         # retains. Bounded so manifests stay O(1) over 10^6 commits; safe
         # because a checkpointed source can only re-deliver batches within
@@ -218,43 +230,44 @@ class LakeTable:
         self.idempotence_window = idempotence_window
         os.makedirs(os.path.join(path, _MANIFEST_DIR), exist_ok=True)
         os.makedirs(os.path.join(path, _DATA_DIR), exist_ok=True)
-        # the manifest is authoritative for the bucket count (rescale
-        # persists it); a constructor mismatch silently follows the manifest
-        # CHECK constraints (Delta CHECK-constraint analogue): name → SQL
-        # boolean expression over data columns, enforced on every merge for
-        # non-delete rows. A row violates when the expression is FALSE
-        # (NULL passes, SQL CHECK semantics). on_violation="error" aborts
-        # the batch (nothing committed); "quarantine" diverts violating
-        # rows to {path}/_quarantine/<batch_id> (the row-level DLQ) and
-        # merges the rest, recording rows_quarantined in lineage — so a
-        # quarantined VERSION is as if it never arrived: LWW serves the
-        # key's previous value. Cost: one extra O(batch) job per merge
-        # (the violation probe / quarantine write); zero when unset.
-        self.constraints = dict(constraints or {})
-        self.on_violation = on_violation
-        # declarative row TTL (ClickHouse TTL analogue): SQL boolean over
-        # data columns; TRUE = expired. Enforced at compact() — expired
-        # versions are dropped during the fold (zero extra jobs: the filter
-        # rides the rewrite) and rows_expired lands in lineage. Reads may
-        # serve expired rows until the next compact, exactly like ClickHouse
-        # SELECTs before a background merge. Same retention caveat as
-        # expire_tombstones: only expire past the source's replay horizon,
-        # or a late-arriving OLDER version of an expired key resurrects.
-        self.ttl = ttl
-        m = self._load_manifest()
-        if m is not None and m.get("n_buckets"):
-            self.n_buckets = int(m["n_buckets"])
-        if m is not None and not self.stats_columns:
-            # follow the manifest like n_buckets; an explicit constructor
-            # list still wins (enables stats on an existing table)
-            self.stats_columns = list(m.get("stats_columns", []))
-        if m is not None and not self.constraints:
-            # constraints are TABLE properties: persisted in the manifest so
-            # every writer handle enforces them, not just the declaring one
-            self.constraints = dict(m.get("constraints", {}))
-            self.on_violation = m.get("on_violation", self.on_violation)
-        if m is not None and self.ttl is None:
-            self.ttl = m.get("ttl")
+        # TABLE properties, persisted in every manifest so every writer
+        # handle enforces them; these values only seed a new table
+        self._seed: dict[str, Any] = {
+            "n_buckets": n_buckets,
+            # opt-in per-file min/max zone maps for NON-key columns
+            # (Delta/Iceberg "data skipping" stats): harvested from parquet
+            # footers at commit time (metadata-only, O(new files));
+            # ``read(ranges=...)`` prunes files on resolved buckets
+            "stats_columns": list(stats_columns or []),
+            # CHECK constraints (Delta CHECK-constraint analogue): name → SQL
+            # boolean expression over data columns, enforced on every merge
+            # for non-delete rows. A row violates when the expression is
+            # FALSE (NULL passes, SQL CHECK semantics). on_violation="error"
+            # aborts the batch (nothing committed); "quarantine" diverts
+            # violating rows to {path}/_quarantine/<batch_id> (the row-level
+            # DLQ) and merges the rest, recording rows_quarantined in
+            # lineage — so a quarantined VERSION is as if it never arrived:
+            # LWW serves the key's previous value. Cost: one extra O(batch)
+            # job per merge (the violation probe / quarantine write); zero
+            # when unset.
+            "constraints": dict(constraints or {}),
+            "on_violation": on_violation,
+            # declarative row TTL (ClickHouse TTL analogue): SQL boolean over
+            # data columns; TRUE = expired. Enforced at compact() — expired
+            # versions are dropped during the fold (zero extra jobs: the
+            # filter rides the rewrite) and rows_expired lands in lineage.
+            # Reads may serve expired rows until the next compact, exactly
+            # like ClickHouse SELECTs before a background merge. Same
+            # retention caveat as expire_tombstones: only expire past the
+            # source's replay horizon, or a late-arriving OLDER version of
+            # an expired key resurrects.
+            "ttl": ttl,
+        }
+
+    def _props(self, m: dict[str, Any] | None) -> dict[str, Any]:
+        """The table properties of manifest ``m``; the seed when the table
+        has no manifest yet."""
+        return {k: m[k] for k in self._seed} if m else dict(self._seed)
 
     # ------------------------------------------------------------- manifests
     def _manifest_path(self, version: int) -> str:
@@ -277,11 +290,10 @@ class LakeTable:
         except FileNotFoundError:  # vacuumed (expired) version
             return None
 
-    def _commit_manifest(self, manifest: dict[str, Any]) -> int:
-        """Atomic commit: write temp file, rename to the next version.
-        Single-writer protocol (the streaming driver); on a shared object
-        store this is a catalog compare-and-swap — exactly Iceberg's commit."""
-        version = self.current_version() + 1
+    def _commit_manifest(self, manifest: dict[str, Any], version: int) -> int:
+        """Atomic commit: write a temp file, publish it as ``version`` — the
+        version the operation read, + 1. On a shared object store this is a
+        catalog compare-and-swap — exactly Iceberg's commit."""
         manifest["version"] = version
         # wall-clock commit time: powers read(as_of=...) and age-based
         # vacuum. Informational only — ordering authority is the version
@@ -295,11 +307,18 @@ class LakeTable:
         # racing writer already claimed this version number, whereas an
         # exists()-check + rename would let the later rename silently
         # clobber the earlier commit (POSIX rename overwrites). This is
-        # the filesystem analogue of Iceberg's catalog compare-and-swap.
+        # the filesystem analogue of Iceberg's catalog compare-and-swap,
+        # and the ONLY version check: publishing at read version + 1 makes
+        # check and publish one step, with no Spark job in between.
         try:
             os.link(tmp, final)
         except FileExistsError:
-            raise RuntimeError(f"concurrent commit detected at version {version}")
+            op = manifest.get("lineage", {}).get("op", "commit")
+            raise ConcurrentWriteError(
+                f"manifest advanced past v{version - 1} while '{op}' was "
+                f"running (concurrent commit detected at version {version}); "
+                f"retry the operation against the current state"
+            ) from None
         finally:
             os.unlink(tmp)
         return version
@@ -374,9 +393,9 @@ class LakeTable:
         return out
 
     # ---------------------------------------------------------------- common
-    def _bucket_col(self) -> F.Column:
+    def _bucket_col(self, n_buckets: int) -> F.Column:
         return F.pmod(
-            F.xxhash64(F.col(self.key_cols[0]).cast("string")), F.lit(self.n_buckets)
+            F.xxhash64(F.col(self.key_cols[0]).cast("string")), F.lit(int(n_buckets))
         ).cast("int")
 
     # ----------------------------------------------------------- key blooms
@@ -452,26 +471,18 @@ class LakeTable:
         return out
 
     def _probe_keys(
-        self, keys: list[Any], key_type: T.DataType,
-        n_buckets: int | None = None,
+        self, keys: list[Any], key_type: T.DataType, n_buckets: int
     ) -> list[tuple[Any, int, list[int]]]:
         """(key, bucket, bloom positions) for each probe key — ONE tiny job
         over the bounded key list, using the same bucket/bloom expressions
-        as the write path. ``n_buckets`` MUST come from the manifest being
-        probed, not the constructor cache: a long-lived handle used after
-        another process rescale()s would otherwise prune to wrong buckets
-        and silently miss rows (hash-bucket pruning is not conservative
-        under a stale bucket count, unlike range/bloom pruning)."""
+        as the write path, under the probed manifest's ``n_buckets``."""
+        key = self.key_cols[0]
         kt = self.spark.createDataFrame(
-            [(k,) for k in keys], T.StructType([T.StructField("k", key_type)])
+            [(k,) for k in keys], T.StructType([T.StructField(key, key_type)])
         )
-        bucket = F.pmod(
-            F.xxhash64(F.col("k").cast("string")),
-            F.lit(int(n_buckets if n_buckets is not None else self.n_buckets)),
-        ).cast("int")
         rows = kt.select(
-            F.col("k"), bucket.alias("b"),
-            F.array(*self._bloom_positions(F.col("k"))).alias("p"),
+            F.col(key).alias("k"), self._bucket_col(n_buckets).alias("b"),
+            F.array(*self._bloom_positions(F.col(key))).alias("p"),
         ).collect()
         return [(r["k"], int(r["b"]), [int(x) for x in r["p"]]) for r in rows]
 
@@ -557,10 +568,9 @@ class LakeTable:
             return 0
         for f, st in self._file_blooms(todo, self._schema_of(m)).items():
             stats[f] = {**stats.get(f, {}), **st}
-        manifest = {k: v for k, v in m.items() if k != "version"}
-        manifest["file_stats"] = stats
-        manifest["lineage"] = {"op": "build_blooms", "files_indexed": len(todo)}
-        self._commit_manifest(manifest)
+        manifest = {**m, "file_stats": stats,
+                    "lineage": {"op": "build_blooms", "files_indexed": len(todo)}}
+        self._commit_manifest(manifest, int(m["version"]) + 1)
         return len(todo)
 
     @staticmethod
@@ -678,8 +688,7 @@ class LakeTable:
             keys = list(keys)
             key_type = schema[self.key_cols[0]].dataType
             probe_map = {}
-            mb = int(m.get("n_buckets", self.n_buckets))
-            for pk in (self._probe_keys(keys, key_type, n_buckets=mb) if keys else []):
+            for pk in (self._probe_keys(keys, key_type, m["n_buckets"]) if keys else []):
                 probe_map.setdefault(pk[1], []).append(pk)
             kb = sorted(probe_map)
             buckets = kb if buckets is None else sorted(set(buckets) & set(kb))
@@ -801,11 +810,11 @@ class LakeTable:
             df = self._resolve_lww(df)
         if not include_deleted and DELETED_COL in df.columns:
             df = df.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False))).drop(DELETED_COL)
-        if apply_ttl and self.ttl and df.columns:
+        if apply_ttl and m["ttl"] and df.columns:
             # strict-retention read: hide expired-but-not-yet-compacted rows
             # (compact is where they physically drop); post-resolve filter,
             # same hazard-free position as ranges
-            df = df.filter(~F.coalesce(F.expr(self.ttl), F.lit(False)))
+            df = df.filter(~F.coalesce(F.expr(m["ttl"]), F.lit(False)))
         if ranges and df.columns:
             # row-level restriction AFTER the resolve (a pre-resolve filter
             # could drop a key's latest out-of-range version and serve a
@@ -860,14 +869,16 @@ class LakeTable:
     def _write_snapshot(
         self,
         df: DataFrame,
+        *,
+        n_buckets: int,
         per_file_digests: bool = True,
         sort_by_key: bool = False,
         max_records_per_file: int | None = None,
         sort_cols: list[str] | None = None,
     ) -> tuple[dict[str, list[str]], dict[str, dict[str, Any]], dict[str, Any] | None]:
-        """Write ``df`` (must carry BUCKET_COL) partitioned by bucket under a
-        fresh snapshot dir; return (bucket_id → absolute file list,
-        file → digest).
+        """Write ``df`` (must carry BUCKET_COL, hashed over ``n_buckets``)
+        partitioned by bucket under a fresh snapshot dir; return (bucket_id
+        → absolute file list, file → digest).
 
         Digests (checksum=True) are aggregated from ``df``'s OWN plan right
         after the write: the write job leaves its shuffle files behind, so
@@ -887,7 +898,7 @@ class LakeTable:
         # more cores); with it, each task writes whole buckets (≤1 file per
         # bucket per commit) and the per-batch file count is O(n_buckets),
         # independent of parallelism.
-        clustered = df.repartition(self.n_buckets, F.col(BUCKET_COL))
+        clustered = df.repartition(n_buckets, F.col(BUCKET_COL))
         order = list(sort_cols or ([self.key_cols[0]] if sort_by_key else []))
         if order:
             # clustered rewrite (compact/rescale maintenance): sort each
@@ -915,7 +926,7 @@ class LakeTable:
         # row hash is projected ONCE into a helper column (dropped above the
         # CollectMetrics node, so it is never written), and the per-bucket
         # sums are primitive long aggregates over it.
-        per_file = per_file_digests and self.n_buckets <= _OBSERVE_DIGEST_MAX_BUCKETS
+        per_file = per_file_digests and n_buckets <= _OBSERVE_DIGEST_MAX_BUCKETS
         want_digests = self.checksum
         want_lsn = LSN_COL in clustered.columns
         if want_digests or want_lsn:
@@ -944,7 +955,7 @@ class LakeTable:
                 if per_file:
                     aggs += [
                         F.sum(F.when(F.col(BUCKET_COL) == b, F.col("_rh_obs"))).alias(f"d{b}")
-                        for b in range(self.n_buckets)
+                        for b in range(n_buckets)
                     ]
             key_stats = False
             if want_lsn:
@@ -1191,12 +1202,14 @@ class LakeTable:
 
     def _maintain_digests(
         self,
+        prev: dict[str, Any] | None,
         buckets: dict[str, Any],
         data_schema: T.StructType,
         new_digests: dict[str, dict[str, Any]] | None = None,
         batch_total: dict[str, Any] | None = None,
     ) -> tuple[dict[str, Any], int | None, int]:
-        """Carry the per-file digest cache forward across a commit.
+        """Carry the per-file digest cache of ``prev`` (the manifest the
+        commit publishes after) forward across the commit.
 
         Returns (cache, table_checksum, batch_checksum):
         - digests for files new in this commit are computed (O(new files));
@@ -1211,7 +1224,6 @@ class LakeTable:
         """
         data_cols = [f.name for f in data_schema.fields if f.name not in _SYSTEM_COLS]
         cols_key = _digest_cols_key(data_schema, data_cols)
-        prev = self._load_manifest()
         cache_prev: dict[str, Any] = prev.get("file_digests", {}) if prev else {}
         live = self._files({"buckets": buckets}, None)
         has_delta = any(e.get("delta") for e in buckets.values())
@@ -1265,7 +1277,7 @@ class LakeTable:
             # lineage. Read back exactly this commit's undigested files under
             # the manifest schema instead: bounded (O(batch)), rare (only on
             # schema-mismatch commits), and keeps the per-batch contract.
-            prev_live = set(self._files(prev, None)) if prev else set()
+            prev_live = set(self._files(prev, None))
             new_delta = [f for f in delta_files if f not in prev_live]
             pending = sorted(set(new_files + new_delta) - set(cache))
             extra = self._file_digests(pending, data_schema)
@@ -1287,6 +1299,8 @@ class LakeTable:
 
     def _commit(
         self,
+        prev: dict[str, Any] | None,
+        props: dict[str, Any],
         buckets: dict[str, Any],
         data_schema: T.StructType,
         batch_id: str,
@@ -1294,52 +1308,15 @@ class LakeTable:
         new_digests: dict[str, dict[str, Any]] | None = None,
         batch_total: dict[str, Any] | None = None,
         extra_file_stats: dict[str, dict[str, Any]] | None = None,
-        base_version: int | None = None,
-        rebase: Any = None,
     ) -> int:
-        """``base_version``: the manifest version the caller BUILT ``buckets``
-        from. If another writer committed in between, the stale bucket map
-        would silently drop their files — so a mismatch either raises
-        :class:`ConcurrentWriteError` (caller retries its whole operation)
-        or, when ``rebase`` is given, rebuilds ``buckets`` against the
-        current manifest (``rebase(current_buckets) -> buckets``) — the
-        optimistic path for maintenance ops whose edits commute with
-        concurrent ingest (compact: replace folded files, keep new deltas)."""
-        prev = self._load_manifest()
-        if base_version is not None:
-            cur_v = int(prev["version"]) if prev else 0
-            if cur_v != base_version:
-                if rebase is None:
-                    raise ConcurrentWriteError(
-                        f"manifest advanced v{base_version} -> v{cur_v} while "
-                        f"'{lineage.get('op', batch_id)}' was running; retry the "
-                        f"operation against the current state"
-                    )
-                # The optimistic rebase commutes ONLY with additive merge
-                # appends (the racer's delta files LWW-supersede our new
-                # base on read). A racing compact/rescale would leave two
-                # bases for the same rows (duplicates, and read() skips the
-                # LWW resolve with no pending deltas); a racing bucket-
-                # rewriting merge (CoW upsert, delete_insert) already
-                # replaced the files we folded, so our pre-race base would
-                # duplicate its keys and bring its deletes back; a racing
-                # purge would resurrect erased rows from our pre-purge
-                # snapshot. Walk the intervening commits and refuse to
-                # rebase over anything but an append — the caller retries
-                # from fresh state.
-                for iv in range(base_version + 1, cur_v + 1):
-                    ivm = self._load_manifest(iv)
-                    iop = str((ivm or {}).get("lineage", {}).get("op", ""))
-                    if iop not in _APPEND_OPS:
-                        raise ConcurrentWriteError(
-                            f"manifest advanced v{base_version} -> v{cur_v} with a "
-                            f"non-append commit '{iop or 'unknown'}' at v{iv}; "
-                            f"'{lineage.get('op', batch_id)}' cannot rebase over it — "
-                            f"retry against the current state"
-                        )
-                buckets = rebase(dict(prev["buckets"]) if prev else {})
-                lineage = {**lineage, "rebased_from": base_version,
-                           "rebased_onto": cur_v}
+        """Publish ``buckets`` with the table properties ``props`` as the
+        version after ``prev`` — the manifest the caller loaded before
+        reading anything of the table and BUILT ``buckets`` from. Batch ids,
+        file stats, digests and watermarks carry forward from ``prev`` too.
+        If another writer published in between, the stale bucket map would
+        silently drop their files, so the publish raises
+        :class:`ConcurrentWriteError` and the caller retries its whole
+        operation (``compact`` rebases instead)."""
         recent = [b for b in (prev or {}).get("committed_batch_ids", []) if b != batch_id]
         recent.append(batch_id)
         # per-file lsn bounds (conservative: a commit's files inherit the
@@ -1375,11 +1352,11 @@ class LakeTable:
             ]
             for f, st in self._file_blooms(todo, data_schema).items():
                 file_stats[f] = {**file_stats.get(f, {}), **st}
-        if self.stats_columns:
+        if props["stats_columns"]:
             # non-key column zone maps for NEW files: parquet footer reads
             # only (metadata, no data pages) — O(new files) per commit
             schema_cols = {f.name for f in data_schema.fields}
-            want = [c for c in self.stats_columns if c in schema_cols]
+            want = [c for c in props["stats_columns"] if c in schema_cols]
             todo = [
                 f for f in live_files
                 if f not in prev_files and "cs" not in file_stats.get(f, {})
@@ -1398,11 +1375,7 @@ class LakeTable:
         manifest = {
             "buckets": buckets,
             "schema": json.dumps(data_schema.jsonValue()),
-            "n_buckets": self.n_buckets,
-            "stats_columns": self.stats_columns,
-            "constraints": self.constraints,
-            "on_violation": self.on_violation,
-            "ttl": self.ttl,
+            **props,
             "committed_batch_ids": recent[-self.idempotence_window:],
             "file_stats": file_stats,
             "watermarks": watermarks,
@@ -1410,12 +1383,12 @@ class LakeTable:
         }
         if self.checksum:
             cache, table_checksum, batch_checksum = self._maintain_digests(
-                buckets, data_schema, new_digests, batch_total
+                prev, buckets, data_schema, new_digests, batch_total
             )
             manifest["file_digests"] = cache
             lineage["table_checksum"] = table_checksum
             lineage["batch_checksum"] = batch_checksum
-        return self._commit_manifest(manifest)
+        return self._commit_manifest(manifest, int(prev["version"]) + 1 if prev else 1)
 
     def overwrite(self, df: DataFrame, batch_id: str = "overwrite", lsn: int = 0) -> MergeResult:
         """Full-table replace (initial load). Adds system columns if absent.
@@ -1443,17 +1416,17 @@ class LakeTable:
             df = df.withColumn(DELETED_COL, F.lit(False))
         # a full replace defines the table's schema: no evolution onto the old
         return self._commit_write(
-            self._load_manifest(), df.withColumn(BUCKET_COL, self._bucket_col()),
-            batch_id, "overwrite", evolve=False,
+            self._load_manifest(), df, batch_id, "overwrite", evolve=False
         )
 
     # ----------------------------------------------------------------- merge
     def _enforce_constraints(
-        self, batch: DataFrame, batch_id: str
+        self, batch: DataFrame, batch_id: str, props: dict[str, Any]
     ) -> tuple[DataFrame, int]:
-        """Apply the table's CHECK constraints to a change batch (non-delete
-        rows only — a delete carries no payload to validate). Violation =
-        expression evaluates FALSE (NULL passes, SQL CHECK semantics).
+        """Apply the CHECK constraints of the table properties ``props`` to
+        a change batch (non-delete rows only — a delete carries no payload
+        to validate). Violation = expression evaluates FALSE (NULL passes,
+        SQL CHECK semantics).
 
         ``error``: raise :class:`ConstraintViolationError` with a bounded
         row sample before anything is written — the batch retries after the
@@ -1467,13 +1440,13 @@ class LakeTable:
         flags = {
             name: (F.col("_op") != F.lit("delete"))
             & (F.expr(sql) == F.lit(False))
-            for name, sql in self.constraints.items()
+            for name, sql in props["constraints"].items()
         }
         is_bad = F.lit(False)
         for flag in flags.values():
             is_bad = is_bad | F.coalesce(flag, F.lit(False))
         bad = batch.filter(is_bad).drop(BUCKET_COL)
-        if self.on_violation == "error":
+        if props["on_violation"] == "error":
             sample = bad.limit(3).collect()
             if sample:
                 shown = [
@@ -1482,7 +1455,7 @@ class LakeTable:
                 ]
                 raise ConstraintViolationError(
                     f"batch {batch_id!r} violates CHECK constraints "
-                    f"{sorted(self.constraints)}; first rows: {shown}. "
+                    f"{sorted(props['constraints'])}; first rows: {shown}. "
                     f"Fix the producer and retry, or declare "
                     f"on_violation='quarantine' to divert bad rows."
                 )
@@ -1580,6 +1553,7 @@ class LakeTable:
         m = self._load_manifest()
         if m is not None and batch_id in m.get("committed_batch_ids", []):
             return MergeResult(int(m["version"]), batch_id, False)
+        props = self._props(m)
         if strategy not in ("upsert", "delete_insert", "collapse"):
             raise ValueError(f"unknown merge strategy: {strategy}")
         op = (f"merge:upsert:{self.merge_mode}" if strategy == "upsert"
@@ -1591,15 +1565,15 @@ class LakeTable:
             batch_df.withColumn(LSN_COL, F.col(lsn_col).cast("long"))
             .withColumn("_op", F.col(op_col))
             .drop(op_col, lsn_col)
-            .withColumn(BUCKET_COL, self._bucket_col())
+            .withColumn(BUCKET_COL, self._bucket_col(props["n_buckets"]))
         )
         if not allow_delete:
             # deletes ignored entirely (reference MergeStrategyConfig
             # allow_delete=False, core/config.py:158-160)
             batch = batch.filter(F.col("_op") != F.lit("delete"))
         rows_quarantined = 0
-        if self.constraints:
-            batch, rows_quarantined = self._enforce_constraints(batch, batch_id)
+        if props["constraints"]:
+            batch, rows_quarantined = self._enforce_constraints(batch, batch_id, props)
             if rows_quarantined:
                 lineage_extra = {**(lineage_extra or {}),
                                  "rows_quarantined": rows_quarantined}
@@ -1673,9 +1647,8 @@ class LakeTable:
                         target.unionByName(deduped, allowMissingColumns=True)
                     )
         return self._commit_write(
-            m, rows.withColumn(BUCKET_COL, self._bucket_col()), batch_id, op,
-            append=append, dirty=dirty, fold=fold, stats=stats, obs_ops=obs_ops,
-            extra=lineage_extra,
+            m, rows, batch_id, op, append=append, dirty=dirty, fold=fold,
+            stats=stats, obs_ops=obs_ops, extra=lineage_extra, props=props,
         )
 
     def _commit_write(
@@ -1691,16 +1664,19 @@ class LakeTable:
         stats: dict[str, Any] | None = None,
         obs_ops: Any = None,
         extra: dict[str, Any] | None = None,
+        props: dict[str, Any] | None = None,
     ) -> MergeResult:
         """The one commit tail of every merge strategy, ``overwrite``,
         ``expire_tombstones`` and ``rescale``: schema evolution → snapshot
         write → bucket-map edit → row / op counts → lineage → ``_commit``.
 
         ``m`` is the manifest the caller loaded BEFORE reading anything of
-        the table. The target rows, the bucket map and the commit's version
-        check all come from it, so a writer landing at any later point
-        fails the commit with :class:`ConcurrentWriteError` instead of
-        being silently overwritten. ``df`` carries BUCKET_COL.
+        the table. The target rows, the bucket map, the table properties
+        (``props`` overrides them: rescale's new bucket count) and the
+        version the commit publishes at all come from it, so a writer
+        landing at any later point fails the commit with
+        :class:`ConcurrentWriteError` instead of being silently
+        overwritten. ``df``'s rows are bucketed here.
 
         Two write shapes:
 
@@ -1716,20 +1692,25 @@ class LakeTable:
 
         ``evolve``: additive + type-widening schema evolution of ``df`` onto
         ``m``'s schema (off for ``overwrite``, which defines a new one)."""
-        base_version = int(m["version"]) if m else 0
+        props = props or self._props(m)
+        bucket = self._bucket_col(props["n_buckets"])
+        df = df.withColumn(BUCKET_COL, bucket)
         data_schema = df.drop(BUCKET_COL).schema
         if evolve and m is not None:
             data_schema = _merge_schemas(self._schema_of(m), data_schema)
             df = _conform_types(df, data_schema)
         if fold is not None:
             rows = df.drop(BUCKET_COL)
-            target = self.read(buckets=dirty, version=base_version, include_deleted=True)
+            target = self.read(buckets=dirty, version=int(m["version"]) if m else 0,
+                               include_deleted=True)
             # both sides carry the evolved types, so the union never leans
             # on implicit coercion (and conflicts fail with a clear error)
             target = _conform_types(target, data_schema) if target.columns else rows.limit(0)
-            df = fold(target, rows).withColumn(BUCKET_COL, self._bucket_col())
+            df = fold(target, rows).withColumn(BUCKET_COL, bucket)
             data_schema = df.drop(BUCKET_COL).schema
-        new, dig, tot = self._write_snapshot(df, per_file_digests=not append)
+        new, dig, tot = self._write_snapshot(
+            df, n_buckets=props["n_buckets"], per_file_digests=not append
+        )
         if append:
             buckets = dict(m["buckets"]) if m else {}
             for b, fs in new.items():
@@ -1757,8 +1738,7 @@ class LakeTable:
             "batch_id": batch_id, "op": op, "touched_buckets": touched,
             "rows_written": rows_written, **stats, **(extra or {}),
         }
-        v = self._commit(buckets, data_schema, batch_id, lineage, dig, tot,
-                         base_version=base_version)
+        v = self._commit(m, props, buckets, data_schema, batch_id, lineage, dig, tot)
         return MergeResult(v, batch_id, True, touched, rows_written, stats)
 
     def changes_since(self, lsn: int, max_lsn: int | None = None) -> DataFrame:
@@ -1948,8 +1928,8 @@ class LakeTable:
         ]
         if not dirty:
             return MergeResult(m["version"], batch_id or "compact", False)
+        props = self._props(m)
         schema = self._schema_of(m)
-        df = self._read_files(self._files(m, dirty), schema)
         # ONE resolution rule for every strategy: LWW picks each key's latest
         # version (collapse deltas are versioned +1 rows — the
         # CollapsingMergeTree background-merge fold); survivors of a sign
@@ -1960,21 +1940,21 @@ class LakeTable:
         # drop the marker and a late-arriving STALE update resurrects the
         # deleted key (hypothesis-pinned in
         # test_any_batching_and_order_converges with a mid-run compact).
-        resolved = self._resolve_lww(df)
-        if SIGN_COL in df.columns:
+        resolved = self.read(buckets=dirty, version=int(m["version"]), include_deleted=True)
+        if SIGN_COL in resolved.columns:
             resolved = resolved.withColumn(SIGN_COL, F.lit(1))
         ttl_obs = None
-        if self.ttl:
+        if props["ttl"]:
             # row TTL enforcement point (see __init__): the expired-count
             # observe and the drop filter both ride the rewrite job
             from pyspark.sql import Observation
 
-            expired = F.coalesce(F.expr(self.ttl), F.lit(False))
+            expired = F.coalesce(F.expr(props["ttl"]), F.lit(False))
             ttl_obs = Observation()
             resolved = resolved.observe(
                 ttl_obs, F.sum(expired.cast("long")).alias("n_expired")
             ).filter(~expired)
-        resolved = resolved.withColumn(BUCKET_COL, self._bucket_col())
+        resolved = resolved.withColumn(BUCKET_COL, self._bucket_col(props["n_buckets"]))
         sort_cols = None
         if zorder_by:
             missing = [c for c in zorder_by if c not in resolved.columns]
@@ -2002,18 +1982,13 @@ class LakeTable:
             )
             sort_cols = ["_zo"]
         new, dig, tot = self._write_snapshot(
-            resolved, sort_by_key=cluster_by_key,
+            resolved, n_buckets=props["n_buckets"], sort_by_key=cluster_by_key,
             max_records_per_file=max_file_rows, sort_cols=sort_cols,
         )
-        out = dict(m["buckets"])
-        for b in dirty:
-            out.pop(str(b), None)
-        for b, fs in new.items():
-            out[b] = {"base": fs, "delta": []}
         new_files = [f for fs in new.values() for f in fs]
         key_stats = self._file_key_stats(new_files) if cluster_by_key else None
         if zorder_by:
-            want = sorted(set(zorder_by) | set(self.stats_columns))
+            want = sorted(set(zorder_by) | set(props["stats_columns"]))
             key_stats = self._file_col_stats(new_files, want)
         bid = batch_id or f"compact-v{m['version']}"
         rows = self._count_rows(new_files)
@@ -2021,33 +1996,59 @@ class LakeTable:
                    "compacted_buckets": sorted(dirty)}
         if ttl_obs is not None:
             lineage["rows_expired"] = int(ttl_obs.get.get("n_expired") or 0)
-        # optimistic rebase: compact is the maintenance op that runs beside
-        # live ingest ("a background job that never blocks ingest"). If a
-        # merge committed while we rewrote, the folded state is still valid
-        # — it covers everything up to our read — and the racer's files must
-        # survive: per dirty bucket, replace exactly the files we folded
-        # with the new base and KEEP any delta the racer appended since (it
-        # LWW-supersedes the folded base on read, like any pending delta).
+        # per dirty bucket, replace exactly the files we folded with the new
+        # base and KEEP every other file — on a rebase, the racer's deltas
         folded = set(self._files(m, dirty))
 
-        def rebase(cur: dict[str, Any]) -> dict[str, Any]:
-            out2 = {b: {"base": list(e.get("base", [])),
-                        "delta": list(e.get("delta", []))}
-                    for b, e in cur.items()}
+        def fold_into(cur: dict[str, Any]) -> dict[str, Any]:
+            out = {b: {"base": list(e.get("base", [])),
+                       "delta": list(e.get("delta", []))}
+                   for b, e in cur.items()}
             for b in dirty:
-                e = out2.get(str(b), {"base": [], "delta": []})
+                e = out.get(str(b), {"base": [], "delta": []})
                 e["base"] = [f for f in e["base"] if f not in folded]
                 e["delta"] = [f for f in e["delta"] if f not in folded]
-                out2[str(b)] = e
+                out[str(b)] = e
             for b, fs in new.items():
-                e = out2.setdefault(b, {"base": [], "delta": []})
+                e = out.setdefault(b, {"base": [], "delta": []})
                 e["base"] = fs + e["base"]
-            return {b: e for b, e in out2.items()
+            return {b: e for b, e in out.items()
                     if e.get("base") or e.get("delta")}
 
-        v = self._commit(out, schema, bid, lineage, dig, tot,
-                         extra_file_stats=key_stats,
-                         base_version=int(m["version"]), rebase=rebase)
+        try:
+            v = self._commit(m, props, fold_into(m["buckets"]), schema, bid,
+                             lineage, dig, tot, extra_file_stats=key_stats)
+        except ConcurrentWriteError:
+            # optimistic rebase: compact is the maintenance op that runs
+            # beside live ingest ("a background job that never blocks
+            # ingest"). If a merge committed while we rewrote, the folded
+            # state is still valid — it covers everything up to our read —
+            # and the racer's delta files LWW-supersede our new base on
+            # read, like any pending delta. That commutes ONLY with additive
+            # merge appends: a racing compact/rescale would leave two bases
+            # for the same rows (duplicates, and read() skips the LWW
+            # resolve with no pending deltas); a racing bucket-rewriting
+            # merge (CoW upsert, delete_insert) already replaced the files
+            # we folded, so our pre-race base would duplicate its keys and
+            # bring its deletes back; a racing purge would resurrect erased
+            # rows from our pre-purge snapshot. Walk the intervening
+            # commits and refuse to rebase over anything but an append —
+            # the caller retries from fresh state.
+            cur = self._load_manifest()
+            base_v, cur_v = int(m["version"]), int(cur["version"])
+            for iv in range(base_v + 1, cur_v + 1):
+                iop = str((self._load_manifest(iv) or {}).get("lineage", {}).get("op", ""))
+                if iop not in _APPEND_OPS:
+                    raise ConcurrentWriteError(
+                        f"manifest advanced v{base_v} -> v{cur_v} with a "
+                        f"non-append commit '{iop or 'unknown'}' at v{iv}; "
+                        f"'compact' cannot rebase over it — retry against the "
+                        f"current state"
+                    ) from None
+            lineage = {**lineage, "rebased_from": base_v, "rebased_onto": cur_v}
+            # appends evolve the schema additively: commit under theirs
+            v = self._commit(cur, props, fold_into(cur["buckets"]), self._schema_of(cur),
+                             bid, lineage, dig, tot, extra_file_stats=key_stats)
         return MergeResult(v, bid, True, sorted(int(b) for b in new), rows)
 
     # ------------------------------------------------------------- utilities
@@ -2070,16 +2071,13 @@ class LakeTable:
         m = self._load_manifest()
         if m is None:
             return MergeResult(0, batch_id or "gc", False)
-        df = self._read_files(self._files(m, None), self._schema_of(m))
-        resolved = self._resolve_lww(df) if any(
-            e.get("delta") for e in m["buckets"].values()
-        ) else df
+        resolved = self.read(version=int(m["version"]), include_deleted=True)
         kept = resolved.filter(
             ~(
                 F.coalesce(F.col(DELETED_COL), F.lit(False))
                 & (F.col(LSN_COL) < F.lit(older_than_lsn))
             )
-        ).withColumn(BUCKET_COL, self._bucket_col())
+        )
         return self._commit_write(
             m, kept, batch_id or f"gc-v{m['version']}", "expire_tombstones",
             extra={"older_than_lsn": older_than_lsn},
@@ -2122,19 +2120,19 @@ class LakeTable:
         operation a conversation store needs.
         """
         keys = list(keys)
+        m = self._load_manifest()
         report: dict[str, Any] = {
-            "version": self.current_version(), "committed": False,
+            "version": int(m["version"]) if m else 0, "committed": False,
             "files_rewritten": 0, "rows_purged": 0,
         }
-        m = self._load_manifest()
         if m is None or not keys:
             return report
         schema = self._schema_of(m)
         key0 = self.key_cols[0]
         key_type = schema[key0].dataType
+        nb = m["n_buckets"]
         probe_map: dict[int, list[tuple[Any, int, list[int]]]] = {}
-        mb = int(m.get("n_buckets", self.n_buckets))
-        for pk in self._probe_keys(keys, key_type, n_buckets=mb):
+        for pk in self._probe_keys(keys, key_type, nb):
             probe_map.setdefault(pk[1], []).append(pk)
         stats = m.get("file_stats", {})
         affected: dict[str, dict[str, list[str]]] = {}
@@ -2184,9 +2182,9 @@ class LakeTable:
             n_rewritten += len(files)
             rows_before += self._count_rows(files)
             kept = drop_keys(self._read_files(files, schema)).withColumn(
-                BUCKET_COL, self._bucket_col()
+                BUCKET_COL, self._bucket_col(nb)
             )
-            new, dig, tot = self._write_snapshot(kept)
+            new, dig, tot = self._write_snapshot(kept, n_buckets=nb)
             all_digests.update(dig)
             if tot:
                 totals.append(tot)
@@ -2224,9 +2222,8 @@ class LakeTable:
             "files_rewritten": n_rewritten, "n_keys": len(keys),
         }
         v = self._commit(
-            out_buckets, schema, bid, lineage, all_digests, batch_total,
-            extra_file_stats=self._file_key_stats(new_files_all),
-            base_version=int(m["version"]),
+            m, self._props(m), out_buckets, schema, bid, lineage, all_digests,
+            batch_total, extra_file_stats=self._file_key_stats(new_files_all),
         )
         report.update(
             version=v, committed=True, files_rewritten=n_rewritten,
@@ -2272,23 +2269,20 @@ class LakeTable:
     def rescale(self, n_buckets: int, batch_id: str | None = None) -> MergeResult:
         """Rewrite the table under a new bucket count (Iceberg
         REPLACE PARTITION FIELD + rewrite). One full read→write; subsequent
-        merges prune against the new layout. The table object's
-        ``n_buckets`` is updated in place and persisted in the manifest."""
+        merges prune against the new layout; the new count is persisted in
+        the manifest. A table with no manifest yet has no layout to change
+        (``applied=False``): its constructor's ``n_buckets`` seeds it."""
         m = self._load_manifest()
         if m is None:
-            self.n_buckets = n_buckets
             return MergeResult(0, batch_id or "rescale", False)
-        df = self._read_files(self._files(m, None), self._schema_of(m))
-        if any(e.get("delta") for e in m["buckets"].values()):
-            # versioned deltas (collapse included) must resolve before the
-            # all-base rewrite — multiple versions of a key written as base
-            # would never LWW again on read
-            df = self._resolve_lww(df)
-        self.n_buckets = n_buckets
+        # read() resolves pending versioned deltas (collapse included), as
+        # the all-base rewrite needs — multiple versions of a key written
+        # as base would never LWW again on read
+        df = self.read(version=int(m["version"]), include_deleted=True)
         return self._commit_write(
-            m, df.withColumn(BUCKET_COL, self._bucket_col()),
-            batch_id or f"rescale-{n_buckets}", "rescale",
+            m, df, batch_id or f"rescale-{n_buckets}", "rescale",
             extra={"n_buckets": n_buckets},
+            props={**self._props(m), "n_buckets": n_buckets},
         )
 
     def rollback(self, version: int, batch_id: str | None = None) -> MergeResult:
@@ -2305,9 +2299,12 @@ class LakeTable:
 
         Fails if ``version`` (or any of its files) was vacuumed — time
         travel and rollback reach exactly as far as ``vacuum(keep_last)``
-        retains. Restores ``n_buckets`` if a rescale happened since. Per-file
-        digests and stats are carried from the target manifest, so the
-        checksum path pays no read-back."""
+        retains. Restores ``n_buckets`` if a rescale happened since (the
+        reinstated files are bucketed by it); every other property, the
+        batch-id window and the publish version come from the current
+        manifest. Per-file digests and stats are carried from the target
+        manifest, so the checksum path pays no read-back."""
+        cur = self._load_manifest()
         m = self._load_manifest(version)
         if m is None:
             raise ValueError(
@@ -2321,7 +2318,7 @@ class LakeTable:
                 f"cannot roll back to version {version}: {len(missing)} of its "
                 f"data files were vacuumed (first: {missing[0]})"
             )
-        self.n_buckets = int(m.get("n_buckets", self.n_buckets))
+        props = {**self._props(cur), "n_buckets": m["n_buckets"]}
         schema = self._schema_of(m)
         bid = batch_id or f"rollback-v{version}"
         lineage = {
@@ -2329,7 +2326,7 @@ class LakeTable:
             "rows_written": 0, "files_reinstated": len(files),
         }
         v = self._commit(
-            m["buckets"], schema, bid, lineage,
+            cur, props, m["buckets"], schema, bid, lineage,
             new_digests=m.get("file_digests"),
             extra_file_stats=m.get("file_stats"),
         )

@@ -189,7 +189,8 @@ def test_build_blooms_backfills_existing_table(spark, tmp_path):
 def test_keyed_read_composes_with_explicit_buckets_and_versions(spark, tmp_path):
     t = _ingest(spark, tmp_path)
     k = "conv0050"
-    b = t._probe_keys([k], t._schema_of(t._load_manifest())["conv_id"].dataType)[0][1]
+    m = t._load_manifest()
+    b = t._probe_keys([k], t._schema_of(m)["conv_id"].dataType, m["n_buckets"])[0][1]
     assert t.read(buckets=[b], keys=[k]).count() == 3
     # a bucket list NOT containing the key's bucket → empty (intersection)
     other = [x for x in range(4) if x != b]

@@ -18,21 +18,22 @@ def _mk(spark, rows):
     )
 
 
-def _inject_during_write(victim, action):
-    """Run ``action`` once, between the victim's snapshot write and its
-    manifest commit — the classic read-modify-write race window."""
-    orig = victim._write_snapshot
+def _inject_during_write(victim, action, method="_write_snapshot"):
+    """Run ``action`` once, right after the victim's first call of
+    ``method`` — by default between its snapshot write and its manifest
+    commit, the classic read-modify-write race window."""
+    orig = getattr(victim, method)
     fired = [False]
 
-    def hooked(df, **kw):
-        out = orig(df, **kw)
+    def hooked(*args, **kw):
+        out = orig(*args, **kw)
         if not fired[0]:
             fired[0] = True
             action()
         return out
 
-    victim._write_snapshot = hooked  # type: ignore[method-assign]
-    return lambda: setattr(victim, "_write_snapshot", orig)
+    setattr(victim, method, hooked)
+    return lambda: setattr(victim, method, orig)
 
 
 def test_merge_landing_during_compact_survives_via_rebase(spark, tmp_path):
@@ -64,6 +65,30 @@ def test_merge_landing_during_compact_survives_via_rebase(spark, tmp_path):
     # and a follow-up compact (no race) folds the racer's delta too
     a.compact()
     assert {(r.conv_id, r.text) for r in a.read().collect()} == got
+
+
+def test_compact_rebase_commits_under_the_racing_append_schema(spark, tmp_path):
+    """A merge landing mid-compact may evolve the schema (a new column).
+    The rebased compact publishes against the racer's manifest, so its
+    schema — not the compact's pre-race one — must be what it commits."""
+    path = str(tmp_path / "t")
+    a = LakeTable(spark, path, KEYS, n_buckets=2, merge_mode="mor")
+    b = LakeTable(spark, path, KEYS, n_buckets=2, merge_mode="mor")
+    a.merge_into(_mk(spark, [("x", 0, "v1", 1, "upsert")]), "b0")
+    a.merge_into(_mk(spark, [("x", 0, "v2", 2, "upsert")]), "b1")
+
+    def racer():
+        b.merge_into(_mk(spark, [("z", 0, "new", 3, "upsert")])
+                     .withColumn("tool", F.lit("grep")), "race")
+
+    restore = _inject_during_write(a, racer)
+    try:
+        assert a.compact().applied
+    finally:
+        restore()
+    assert a.lineage()[-1]["rebased_onto"] > a.lineage()[-1]["rebased_from"]
+    got = {(r.conv_id, r.text, r.tool) for r in a.read().collect()}
+    assert got == {("x", "v2", None), ("z", "new", "grep")}
 
 
 @pytest.mark.parametrize("strategy,merge_mode", [
@@ -98,6 +123,67 @@ def test_stale_data_merge_raises_instead_of_clobbering(spark, tmp_path, strategy
     assert {(r.conv_id, r.text) for r in a.read().collect()} == {
         ("x", "v2"), ("r", "racer")
     }
+
+
+@pytest.mark.parametrize("merge_mode", ["mor", "cow"])
+def test_writer_landing_during_commit_bloom_build_raises(spark, tmp_path, merge_mode):
+    """A commit's own Spark work (key blooms here; stats and digests alike)
+    runs after the merge read the table and before the publish. A writer
+    landing there must fail the publish, not be dropped from the bucket
+    map: the version check and the publish are one atomic step."""
+    path = str(tmp_path / "t")
+    a = LakeTable(spark, path, KEYS, n_buckets=1, merge_mode=merge_mode,
+                  bloom_filters=True)
+    b = LakeTable(spark, path, KEYS, n_buckets=1, merge_mode=merge_mode,
+                  bloom_filters=True)
+    a.merge_into(_mk(spark, [("x", 0, "v1", 1, "upsert")]), "b0")
+
+    def racer():
+        b.merge_into(_mk(spark, [("r", 0, "racer", 2, "upsert")]), "race")
+
+    restore = _inject_during_write(a, racer, method="_file_blooms")
+    try:
+        with pytest.raises(ConcurrentWriteError, match="manifest advanced"):
+            a.merge_into(_mk(spark, [("x", 0, "v2", 3, "upsert")]), "b1")
+    finally:
+        restore()
+    assert {(r.conv_id, r.text) for r in a.read().collect()} == {
+        ("x", "v1"), ("r", "racer")
+    }
+    assert "race" in a.committed_batch_ids()
+    assert "b1" not in a.committed_batch_ids()
+    a.merge_into(_mk(spark, [("x", 0, "v2", 3, "upsert")]), "b1")
+    assert {(r.conv_id, r.text) for r in a.read().collect()} == {
+        ("x", "v2"), ("r", "racer")
+    }
+
+
+def test_build_blooms_publishes_against_the_version_it_read(spark, tmp_path):
+    """build_blooms commits a copy of the manifest it read; a merge landing
+    during its bloom job must fail that publish instead of vanishing."""
+    path = str(tmp_path / "t")
+    a = LakeTable(spark, path, KEYS, n_buckets=1, merge_mode="mor")
+    b = LakeTable(spark, path, KEYS, n_buckets=1, merge_mode="mor")
+    a.merge_into(_mk(spark, [("x", 0, "v1", 1, "upsert")]), "b0")
+
+    def racer():
+        b.merge_into(_mk(spark, [("r", 0, "racer", 2, "upsert")]), "race")
+
+    restore = _inject_during_write(a, racer, method="_file_blooms")
+    try:
+        with pytest.raises(ConcurrentWriteError, match="manifest advanced"):
+            a.build_blooms()
+    finally:
+        restore()
+    assert {(r.conv_id, r.text) for r in a.read().collect()} == {
+        ("x", "v1"), ("r", "racer")
+    }
+    assert "race" in a.committed_batch_ids()
+    # the retry indexes every live file, the racer's included
+    assert a.build_blooms() == 2
+    m = a._load_manifest()
+    assert all("bloom" in m["file_stats"][f] for f in a._files(m, None))
+
 
 def test_compact_refuses_rebase_over_racing_purge(spark, tmp_path):
     """The optimistic rebase commutes only with additive merge appends. A
@@ -188,14 +274,13 @@ def test_manifest_publish_is_atomic_create_if_absent(spark, tmp_path):
     path = str(tmp_path / "t")
     a = LakeTable(spark, path, KEYS, n_buckets=2, merge_mode="mor")
     a.merge_into(_mk(spark, [("x", 0, "v1", 1, "upsert")]), "b0")
-    # a racer publishes version 2 AFTER our current_version() read (pin the
-    # read stale to land exactly in the check-then-publish window)
+    # a racer publishes version 2 AFTER our operation read version 1, so
+    # our publish at the pinned read version + 1 finds it taken
     nxt = a._manifest_path(2)
     with open(nxt, "w") as f:
         f.write('{"version": 2, "buckets": {}, "committed_batch_ids": []}')
-    a.current_version = lambda: 1  # type: ignore[method-assign]
     with pytest.raises(RuntimeError, match="concurrent commit"):
-        a._commit_manifest({"buckets": {}, "committed_batch_ids": []})
+        a._commit_manifest({"buckets": {}, "committed_batch_ids": []}, 2)
     # the racer's manifest was NOT overwritten, and no tmp files leak
     with open(nxt) as f:
         assert '"version": 2' in f.read()

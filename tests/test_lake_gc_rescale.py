@@ -119,9 +119,71 @@ def test_point_lookup_follows_manifest_bucket_count_after_rescale(spark, ch, tmp
     other = LakeTable(spark, path, ["conv_id", "turn_idx"], n_buckets=4,
                       merge_mode="mor")
     other.rescale(16)
-    assert stale.n_buckets == 4  # handle really is stale
+    assert stale.n_buckets == 16  # the handle reads the manifest, never a cache
     got = {
         (r.conv_id, r.turn_idx, r.text)
         for r in stale.read(keys=["conv-1", "conv-7"]).collect()
     }
     assert got == want
+
+
+_KV = "k string, v string, op string, lsn long"
+_ALL = [f"k{i:02d}" for i in range(40)]
+
+
+def _load_40(spark):
+    return spark.createDataFrame([(k, "v1", "insert", i) for i, k in enumerate(_ALL)], _KV)
+
+
+def _update_14(spark):
+    return spark.createDataFrame(
+        [(k, "v2", "update", 100 + i) for i, k in enumerate(_ALL[:14])], _KV
+    )
+
+
+def _assert_40_keys_converged(t):
+    """One row per key with the 14 updates applied, and a point lookup of
+    all 40 keys (hash-bucket pruning) serves exactly the full scan."""
+    scan = sorted((r.k, r.v) for r in t.read().collect())
+    assert len(scan) == 40 and len({k for k, _ in scan}) == 40
+    assert scan == sorted([(k, "v2") for k in _ALL[:14]] + [(k, "v1") for k in _ALL[14:]])
+    assert sorted((r.k, r.v) for r in t.read(keys=_ALL).collect()) == scan
+
+
+@pytest.mark.parametrize("strategy,merge_mode", [
+    ("upsert", "cow"), ("upsert", "mor"), ("delete_insert", "cow"), ("collapse", "mor"),
+])
+def test_stale_handle_merges_under_the_manifest_bucket_count(
+    spark, tmp_path, strategy, merge_mode
+):
+    """A handle opened before another process rescale()d the table must
+    bucket its merge with the manifest's count: under the old count a
+    rewrite misses each key's old row (duplicates) and point lookups prune
+    to the wrong buckets."""
+    path = str(tmp_path / "t")
+    a = LakeTable(spark, path, ["k"], n_buckets=4, merge_mode=merge_mode)
+    a.merge_into(_load_40(spark), "load", strategy=strategy)
+    LakeTable(spark, path, ["k"], n_buckets=4, merge_mode=merge_mode).rescale(16)
+    a.merge_into(_update_14(spark), "b1", strategy=strategy)
+    fresh = LakeTable(spark, path, ["k"], merge_mode=merge_mode)
+    _assert_40_keys_converged(fresh)
+    assert fresh._load_manifest()["n_buckets"] == 16
+    fresh.compact()
+    _assert_40_keys_converged(fresh)
+
+
+def test_rollback_past_rescale_restores_the_bucket_count(spark, tmp_path):
+    """Rolling back past a rescale reinstates files bucketed by the old
+    count, so the old count is what the manifest must carry — and a
+    handle opened after the rescale must merge under it."""
+    path = str(tmp_path / "t")
+    t = LakeTable(spark, path, ["k"], n_buckets=4, merge_mode="mor")
+    t.merge_into(_load_40(spark), "load")
+    v_before = t.current_version()
+    t.rescale(16)
+    after = LakeTable(spark, path, ["k"], merge_mode="mor")
+    t.rollback(v_before)
+    after.merge_into(_update_14(spark), "b1")
+    fresh = LakeTable(spark, path, ["k"], merge_mode="mor")
+    _assert_40_keys_converged(fresh)
+    assert fresh._load_manifest()["n_buckets"] == 4
