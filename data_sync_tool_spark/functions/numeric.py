@@ -36,4 +36,6 @@ def round6_half_up(x: np.ndarray) -> np.ndarray:
             out[i] = float(
                 Decimal(repr(float(x[i]))).quantize(q, rounding=ROUND_HALF_UP)
             )
+    # BigDecimal has no negative zero: Spark rounds -1e-9 and -0.0 to +0.0
+    out += 0.0
     return out

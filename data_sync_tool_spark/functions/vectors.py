@@ -1,7 +1,9 @@
 """Vector expressions over ``array<float>`` embedding columns.
 
 Built-in higher-order functions (``aggregate``/``zip_with``) keep the math
-JVM-side — no Python UDF in the similarity hot path.
+JVM-side for the candidate-join paths (LSH, IVF). The flat top-k kernel
+(``operators.similarity._block_topk``) replicates these folds in numpy,
+double for double.
 """
 
 from __future__ import annotations

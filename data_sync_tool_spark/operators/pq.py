@@ -18,12 +18,16 @@ Scale shape:
 - **encode** is ONE lazy Arrow pass: per batch, a numpy argmin against
   each subspace codebook. The corpus is encoded once (build-once /
   query-many — persist the codes, drop the vectors).
-- **search (ADC)** is pure JVM: each query precomputes its m×k lookup
-  table of subvector·codeword dot products (driver numpy over the
-  small query batch), ships it as an ``array<array<double>>`` column
-  on the BROADCAST query side, and the asymmetric distance is one
-  ``zip_with`` + ``aggregate`` over the codes — no Python, no shuffle
-  of the corpus, no decode. Top-k via the per-query window.
+- **search (ADC)** runs in the flat top-k kernel shared with exact
+  search (``similarity._block_topk``): each query's m×k lookup table of
+  subvector·codeword dot products is built driver-side (numpy over the
+  small query batch) and broadcast once as one ``(m, n_queries, k)``
+  array; each Arrow batch of codes is scored by one numpy gather per
+  subspace, every partition keeps its top k per query, and the
+  per-query window merges those — no Python row loop, no shuffle of the
+  corpus, no decode, no (query, code) pair rows. The executor-side LUT
+  path for corpus-sized query sets (``distributed_luts=True``) keeps the
+  JVM ``zip_with`` + ``aggregate`` join; both give equal doubles.
 
 Vectors are L2-normalized before subspace split, so ADC inner product
 approximates cosine (residual/OPQ rotations are out of scope).
@@ -35,9 +39,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from .similarity import _MAX_DRIVER_QUERIES, _block_topk, _collect_queries, _topk_per_query
 
 
 def _normalize(m: np.ndarray) -> np.ndarray:
@@ -166,6 +173,22 @@ def _lut_udf(bc_books):
     return lut
 
 
+def _adc_block(luts: np.ndarray, codes: pd.Series):
+    """Score function of ``pq_topk``'s kernel path: the ADC of a batch of
+    codes against the broadcast ``(m, n_queries, k)`` LUTs, folded over
+    subspaces from 0.0 like the JVM ``aggregate(zip_with(codes, lut, …))``
+    (``0.0 + lut[0][c0] + lut[1][c1] + …``), so every double is equal."""
+    c = np.stack(codes.to_numpy())
+
+    def block(qs: slice) -> np.ndarray:
+        acc = np.zeros((qs.stop - qs.start, len(c)))
+        for sub in range(luts.shape[0]):
+            acc += luts[sub, qs][:, c[:, sub]]
+        return acc
+
+    return block
+
+
 def pq_topk(
     codes: DataFrame,
     queries: DataFrame,
@@ -174,7 +197,7 @@ def pq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     code_col: str = "codes",
-    max_queries: int = 65_536,
+    max_queries: int = _MAX_DRIVER_QUERIES,
     distributed_luts: bool = False,
     lut_slice_bytes: int = 64 << 20,
     max_lut_slices: int = 64,
@@ -182,86 +205,80 @@ def pq_topk(
     """(query_id, neighbor_id, adc) approximate top-k by asymmetric
     distance: the corpus side is the CODES table only. Each query's m×k
     LUT of subvector·codeword inner products is computed driver-side
-    (queries are the small side) and broadcast; scoring is pure JVM —
-    ``adc = Σ_sub lut[sub][code[sub]]`` via ``zip_with`` + ``aggregate``
-    over the code array, so the hot path moves ~m ints + one LUT probe
-    per scored pair, never a vector.
+    (queries are the small side) and broadcast once as one ``(m, n_q, k)``
+    array; ``similarity._block_topk`` scores whole Arrow batches of codes
+    with ``adc = Σ_sub lut[sub][code[sub]]`` (a numpy gather per subspace)
+    and keeps each partition's top k per query — the hot path moves ~m
+    ints per corpus row, never a vector, and no (query, code) pair row.
 
     The driver-side LUT build bounds the query batch at ``max_queries``
     (serving-sized; past it the collect itself is the bottleneck) and
     raises past the bound. For LARGER query sets pass
     ``distributed_luts=True``: LUTs are built executor-side by an
-    Arrow-batched UDF, the query set is hash-partitioned into slices of
-    ≤ ``lut_slice_bytes`` of LUT payload, and EACH slice joins with an
-    explicit broadcast hint — the non-equi scoring join must always plan
-    as a *Broadcast*NestedLoopJoin (plan-pinned); without the hint a
-    LUT relation past the autoBroadcast size estimate silently degrades
-    to a CartesianProduct with the corpus side replicated per partition
-    pair. Past ``max_lut_slices`` slices (~4 GB of LUTs at the defaults)
-    the flat all-pairs scan is the wrong tool and this raises, pointing
-    at ``ivfpq_topk`` (bucketed, sub-all-pairs). Both paths score
+    Arrow-batched UDF and scored by a JVM join. The query set is
+    hash-partitioned into slices whose LUT payload is *expected* to stay
+    ≤ ``lut_slice_bytes`` under uniform hashing (not a hard cap; the
+    budget counts LUT doubles only, not Spark's row and array overhead),
+    and EACH slice joins with an explicit broadcast hint — the non-equi
+    scoring join must always plan as a *Broadcast*NestedLoopJoin
+    (plan-pinned); without the hint a LUT relation past the autoBroadcast
+    size estimate silently degrades to a CartesianProduct with the corpus
+    side replicated per partition pair. Each slice rescans the codes, so
+    the corpus is read once per slice, and ``queries`` is evaluated
+    n_slices + 1 times (a count, then once per slice): it must be
+    deterministic — checkpoint it first if it is not. Past
+    ``max_lut_slices`` slices (~4 GB of LUTs at the defaults) the flat
+    all-pairs scan is the wrong tool and this raises, pointing at
+    ``ivfpq_topk`` (bucketed, sub-all-pairs). Both paths score
     identically (pytest-pinned)."""
     books = np.asarray(books, dtype=np.float64)
     m, kk, dsub = books.shape
     spark = codes.sparkSession
-    if distributed_luts:
-        n_q = queries.select(id_col).count()
-        if n_q == 0:
-            return spark.createDataFrame(
-                [], "query_id long, neighbor_id long, adc double"
-            )
-        lut_bytes = m * kk * 8  # doubles per query LUT
-        slice_rows = max(1, lut_slice_bytes // lut_bytes)
-        n_slices = -(-n_q // slice_rows)
-        if n_slices > max_lut_slices:
-            raise ValueError(
-                f"pq_topk(distributed_luts=True) would need {n_slices} "
-                f"broadcast LUT slices for {n_q} queries "
-                f"(> max_lut_slices={max_lut_slices}); a flat ADC scan at "
-                f"this size is the wrong shape — use ivfpq_topk (bucketed) "
-                f"or raise lut_slice_bytes/max_lut_slices deliberately."
-            )
-        bc = spark.sparkContext.broadcast(books)
+    if not distributed_luts:
+        qids, qmat = _collect_queries(
+            queries, id_col, vec_col, max_queries, "pq_topk",
+            "Pass distributed_luts=True (executor-side LUTs, no collect) or "
+            "bucket with ivfpq_topk.",
+        )
+        qmat = _normalize(qmat)
+        luts = np.empty((m, len(qmat), kk))
+        for qi in range(len(qmat)):
+            for sub in range(m):
+                luts[sub, qi] = qmat[qi, sub * dsub:(sub + 1) * dsub] @ books[sub].T
+        return _block_topk(
+            codes.select(id_col, code_col), id_col, qids.cast(pa.int64()),
+            luts, k, _adc_block, "adc",
+        )
 
-        def _slice(i: int) -> DataFrame:
-            # deterministic hash slicing BELOW the LUT projection: the
-            # filter prunes before the Arrow UDF, so LUT work totals one
-            # pass over the queries across all slices
-            sliced = queries if n_slices == 1 else queries.filter(
-                F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_slices)) == F.lit(i)
-            )
-            return F.broadcast(sliced.select(
-                F.col(id_col).alias("query_id"),
-                _lut_udf(bc)(F.col(vec_col)).alias("lut"),
-            ))
+    n_q = queries.select(id_col).count()
+    if n_q == 0:
+        return spark.createDataFrame(
+            [], "query_id long, neighbor_id long, adc double"
+        )
+    lut_bytes = m * kk * 8  # doubles per query LUT
+    slice_rows = max(1, lut_slice_bytes // lut_bytes)
+    n_slices = -(-n_q // slice_rows)
+    if n_slices > max_lut_slices:
+        raise ValueError(
+            f"pq_topk(distributed_luts=True) would need {n_slices} "
+            f"broadcast LUT slices for {n_q} queries "
+            f"(> max_lut_slices={max_lut_slices}); a flat ADC scan at "
+            f"this size is the wrong shape — use ivfpq_topk (bucketed) "
+            f"or raise lut_slice_bytes/max_lut_slices deliberately."
+        )
+    bc = spark.sparkContext.broadcast(books)
 
-        slices = [_slice(i) for i in range(n_slices)]
-    else:
-        q_rows = queries.select(id_col, vec_col).limit(max_queries + 1).collect()
-        if len(q_rows) > max_queries:
-            raise ValueError(
-                f"pq_topk collects the query batch driver-side to build ADC "
-                f"LUTs; got more than max_queries={max_queries} queries. "
-                f"Pass distributed_luts=True (executor-side LUTs, no "
-                f"collect) or bucket with ivfpq_topk."
-            )
-        if not q_rows:
-            return spark.createDataFrame(
-                [], "query_id long, neighbor_id long, adc double"
-            )
-        qmat = _normalize(np.asarray([r[vec_col] for r in q_rows], dtype=np.float64))
-        luts = []
-        for qi, row in enumerate(q_rows):
-            lut = [
-                [float(x) for x in qmat[qi, sub * dsub:(sub + 1) * dsub] @ books[sub].T]
-                for sub in range(m)
-            ]
-            luts.append((row[id_col], lut))
-        slices = [F.broadcast(spark.createDataFrame(
-            luts, "query_id long, lut array<array<double>>"
-        ))]
-
-    def _score(qdf: DataFrame) -> DataFrame:
+    def _score(i: int) -> DataFrame:
+        # deterministic hash slicing BELOW the LUT projection: the filter
+        # prunes before the Arrow UDF, so LUT work totals one pass over the
+        # queries across all slices
+        sliced = queries if n_slices == 1 else queries.filter(
+            F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_slices)) == F.lit(i)
+        )
+        qdf = F.broadcast(sliced.select(
+            F.col(id_col).alias("query_id"),
+            _lut_udf(bc)(F.col(vec_col)).alias("lut"),
+        ))
         return (
             codes.select(F.col(id_col).alias("neighbor_id"), F.col(code_col))
             .join(qdf, F.col("query_id") != F.col("neighbor_id"))
@@ -283,11 +300,10 @@ def pq_topk(
             )
         )
 
-    scored = _score(slices[0])
-    for s in slices[1:]:  # slices partition the query set: union is exact
-        scored = scored.unionByName(_score(s))
-    w = Window.partitionBy("query_id").orderBy(F.col("adc").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")
+    scored = _score(0)
+    for i in range(1, n_slices):  # slices partition the query set: union is exact
+        scored = scored.unionByName(_score(i))
+    return _topk_per_query(scored, "adc", k)
 
 
 def pq_topk_refined(
@@ -397,7 +413,7 @@ def pq_topk_indexed(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_queries: int = 65_536,
+    max_queries: int = _MAX_DRIVER_QUERIES,
     distributed_luts: bool = False,
     lut_slice_bytes: int = 64 << 20,
     max_lut_slices: int = 64,
@@ -546,7 +562,7 @@ def ivfpq_topk(
     refine: DataFrame | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_queries: int = 65_536,
+    max_queries: int = _MAX_DRIVER_QUERIES,
 ) -> DataFrame:
     """ADC top-k against a persisted IVF-PQ index. Probe selection and the
     per-(query, list) LUTs are computed driver-side from the tiny centroid

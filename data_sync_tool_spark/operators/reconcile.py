@@ -54,6 +54,7 @@ from ..functions.hashes import (
     rowhash_int32,
     rowhash_md5,
 )
+from ..session import local_frame
 
 MD5_SUM_HASH = "md5sum_hash"
 HASH_MD5_HASH = "hash_md5_hash"
@@ -204,9 +205,7 @@ def block_digest(df: DataFrame, cfg: ReconcileConfig, interval: int,
     ``groupBy(floor(x/interval)) → (num_rows, hash)``. A single distributed
     hash aggregate — the Spark realization of ``build_block_hash_query``."""
     if cfg.partition_column not in df.columns:  # uninitialized side
-        return df.sparkSession.createDataFrame(
-            [], "bucket long, num_rows long, hash string"
-        )
+        return local_frame(df.sparkSession, [], "bucket long, num_rows long, hash string")
     x = _partition_value(cfg)
     pre = df.filter((x >= F.lit(lo)) & (x < F.lit(hi))).select(
         F.floor(x / F.lit(interval)).cast("long").alias("bucket"),
@@ -292,7 +291,7 @@ def build_blocks(
             # list would bloat the plan when many blocks mismatch.
             ratio = intervals[level0 - 1] // interval
             parents = F.broadcast(
-                spark.createDataFrame([(int(i),) for i in drill_ids], "pid long")
+                local_frame(spark, [(int(i),) for i in drill_ids], "pid long")
             )
             cond = F.floor(F.col("bucket") / F.lit(ratio)) == F.col("pid")
             src_d = src_d.join(parents, on=cond, how="left_semi")
@@ -421,7 +420,7 @@ def plan_repair(
         if not ranges:
             return df.limit(0)
         x = _partition_value(cfg)
-        rng = spark.createDataFrame(ranges, "r_start long, r_end long")
+        rng = local_frame(spark, ranges, "r_start long, r_end long")
         return df.join(
             F.broadcast(rng), on=[(x >= rng["r_start"]) & (x < rng["r_end"])], how="left_semi"
         )

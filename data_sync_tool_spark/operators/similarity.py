@@ -1,7 +1,8 @@
 """Similarity search over ``array<float>`` embedding columns.
 
-- ``brute_force_topk`` : exact cosine top-k — JVM higher-order-function dot
-  products, per-query top-k via window. The correctness baseline.
+- ``brute_force_topk`` : exact cosine top-k — the query batch is collected
+  once and broadcast as a numpy matrix; ``_block_topk`` scores whole corpus
+  Arrow batches against it. The correctness baseline.
 - ``lsh_topk``         : sign-random-projection LSH — deterministic
   hyperplanes from a seeded hash, bucket join on bit-prefix, exact re-rank
   inside buckets. The scale path: candidate count ~ corpus/2^bits per probe.
@@ -11,9 +12,11 @@
 - ``embedding_near_dup_pairs`` : near-duplicate detection at threshold via
   the LSH buckets (the embedding-cosine entry of the dedup suite).
 
-At 100 TB the corpus side is bucketed once and reused across query batches;
-all three paths avoid a full cross-join except the deliberately-exact
-baseline, whose cross join is partition-parallel (corpus × query-broadcast).
+``_block_topk`` is the one flat top-k kernel (``brute_force_topk`` and
+``pq.pq_topk``): each corpus partition keeps every query's k best rows, so
+only ≤k rows per query per partition reach the final per-query window and
+no (query, corpus) pair ever materializes in the JVM. The LSH and IVF paths
+still score their candidate pairs with JVM joins.
 """
 
 import numpy as np
@@ -22,7 +25,149 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.numeric import round6_half_up
 from ..functions.vectors import cosine, cosine_prenormed, norm
+
+# Driver-collected query batches (``brute_force_topk``, ``pq_topk``'s LUT
+# build, ``ivfpq_topk``) are bounded here: past it the collect itself is the
+# bottleneck, and the bucketed paths are the right tool.
+_MAX_DRIVER_QUERIES = 65_536
+# float64 elements per score block in ``_block_topk`` (≤ ~64 MB), the same
+# budget ``_pairs_within_groups`` uses for its gram chunks.
+_SCORE_BLOCK_ELEMS = 8_000_000
+
+
+def _collect_queries(
+    queries: DataFrame, id_col: str, vec_col: str, max_queries: int,
+    who: str, redirect: str,
+):
+    """``(ids, mat)``: the query batch as an Arrow id array (its Spark type
+    intact) and an ``(n, dim)`` float64 matrix — one bounded collect that
+    raises past ``max_queries``."""
+    t = queries.select(id_col, vec_col).limit(max_queries + 1).toArrow()
+    if t.num_rows > max_queries:
+        raise ValueError(
+            f"{who} collects its query batch on the driver and is bounded at "
+            f"max_queries={max_queries}; got more. {redirect}"
+        )
+    flat = t.column(1).combine_chunks().flatten().to_numpy(zero_copy_only=False)
+    mat = flat.astype(np.float64).reshape(t.num_rows, -1 if t.num_rows else 0)
+    return t.column(0).combine_chunks(), mat
+
+
+def _fold_norms(m_t: np.ndarray) -> np.ndarray:
+    """``sqrt(Σ x·x)`` per column of a dim-major matrix, folded like
+    ``functions.vectors.norm``."""
+    acc = np.zeros(m_t.shape[1])
+    for d in range(m_t.shape[0]):
+        acc += m_t[d] * m_t[d]
+    return np.sqrt(acc)
+
+
+def _cosine_block(side, vecs: pd.Series):
+    """Score function of ``brute_force_topk``: ``cosine_prenormed`` over a
+    corpus batch against the broadcast ``(queries_t, query_norms)``."""
+    q_t, qn = side
+    c_t = np.stack(vecs.to_numpy()).astype(np.float64).T.copy()
+    cn = _fold_norms(c_t)
+
+    def block(qs: slice) -> np.ndarray:
+        # dot products summed left to right over dims from 0.0, exactly the
+        # JVM fold (a BLAS gemm sums in another order: last-ulp drift)
+        q = q_t[:, qs]
+        dot = np.zeros((q.shape[1], c_t.shape[1]))
+        tmp = np.empty_like(dot)
+        for d in range(len(q)):
+            np.multiply(q[d, :, None], c_t[d, None, :], out=tmp)
+            dot += tmp
+        den = qn[qs, None] * cn[None, :]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            return np.where(den > 0, dot / den, 0.0)
+
+    return block
+
+
+def _keep_topk(q: np.ndarray, ids: np.ndarray, s: np.ndarray, k: int) -> np.ndarray:
+    """Positions of each query's k best entries by (score desc, id asc)."""
+    order = np.lexsort((ids, -s, q))
+    qs = q[order]
+    rank = np.arange(len(order)) - np.searchsorted(qs, qs, side="left")
+    return order[rank < k]
+
+
+def _topk_per_query(scored: DataFrame, score_col: str, k: int) -> DataFrame:
+    """Each query's first k rows by (score desc, neighbor_id asc)."""
+    w = Window.partitionBy("query_id").orderBy(F.col(score_col).desc(), F.col("neighbor_id"))
+    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")
+
+
+def _block_topk(
+    corpus: DataFrame,
+    id_col: str,
+    query_ids,
+    query_side,
+    k: int,
+    score_fn,
+    score_col: str,
+) -> DataFrame:
+    """``(query_id, neighbor_id, score_col)``: each query's top k corpus rows
+    by (score desc, neighbor_id asc), self-matches excluded.
+
+    ``corpus`` is ``(id_col, payload)``; ``query_ids`` is an Arrow array (its
+    type is the output ``query_id`` type) and ``query_side`` whatever
+    ``score_fn`` needs, broadcast once. ``score_fn(query_side, payload)``
+    parses one Arrow batch's payload column and returns ``block(qs)``, the
+    raw ``(len(qs), batch rows)`` scores of a query chunk.
+
+    Per batch, queries go in chunks of ≤ ``_SCORE_BLOCK_ELEMS`` scores; each
+    chunk is rounded with ``round6_half_up`` (Spark's ``round(·, 6)``), then
+    ``np.partition`` finds every query's k-th score and only entries at or
+    above it stay candidates, so ties at the boundary survive to the exact
+    ``lexsort`` on (query, score desc, id). The partition's running top k
+    absorbs each batch's candidates; the partition emits ≤k rows per query,
+    and a ``row_number`` window merges partitions."""
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    id_type = corpus.schema[id_col].dataType.simpleString()
+    schema = (f"query_id {from_arrow_type(query_ids.type).simpleString()}, "
+              f"neighbor_id {id_type}, {score_col} double")
+    spark = corpus.sparkSession
+    if len(query_ids) == 0:
+        return spark.createDataFrame([], schema)
+    bc = spark.sparkContext.broadcast(
+        (query_ids.to_numpy(zero_copy_only=False), query_side)
+    )
+    budget = _SCORE_BLOCK_ELEMS
+
+    def kernel(batches):
+        qids, side = bc.value
+        kept = None  # the partition's running top k: (query index, id, score)
+        for pdf in batches:
+            n = len(pdf)
+            if n == 0:
+                continue
+            ids = pdf.iloc[:, 0].to_numpy()
+            block = score_fn(side, pdf.iloc[:, 1])
+            parts = [] if kept is None else [kept]
+            step = max(1, budget // n)
+            for q0 in range(0, len(qids), step):
+                qs = slice(q0, min(q0 + step, len(qids)))
+                s = block(qs)
+                s = round6_half_up(s.ravel()).reshape(s.shape)
+                keep = qids[qs, None] != ids[None, :]
+                if 0 < k < n:
+                    kth = np.partition(np.where(keep, s, -np.inf), n - k, axis=1)[:, n - k]
+                    keep &= s >= kth[:, None]
+                r, c = np.nonzero(keep)
+                parts.append((r + q0, ids[c], s[r, c]))
+            q, i, sc = (np.concatenate(x) for x in zip(*parts))
+            top = _keep_topk(q, i, sc, k)
+            kept = (q[top], i[top], sc[top])
+        if kept is not None:
+            q, i, sc = kept
+            yield pd.DataFrame({"query_id": qids[q], "neighbor_id": i, score_col: sc})
+
+    return _topk_per_query(corpus.mapInPandas(kernel, schema), score_col, k)
 
 
 def brute_force_topk(
@@ -33,26 +178,22 @@ def brute_force_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(query_id, neighbor_id, cos) exact top-k per query (self-match
-    excluded). Query side is broadcast: each corpus partition scores its own
-    rows — no shuffle until the (tiny) per-query top-k reduction. Norms are
-    attached per side BEFORE the cross join, so each of the |C|×|Q| scored
-    pairs pays one HOF aggregate (the dot), not three."""
-    from .dedup_suite import _FANOUT_MIN_BYTES_HEAVY, _ensure_parallelism
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-        norm(F.col(vec_col)).alias("qn"),
+    excluded). The query batch is collected once (bounded at
+    ``_MAX_DRIVER_QUERIES``; past it this raises — bucket with ``lsh_topk``
+    or ``ivf_topk``) and broadcast as a numpy matrix with its norms;
+    ``_block_topk`` scores each corpus Arrow batch against it. Every score
+    is bit-identical to the JVM ``round(cosine_prenormed(q, c), 6)``: dot
+    products and norms fold left to right over dims, then
+    ``d > 0 ? dot/d : 0.0``."""
+    qids, qmat = _collect_queries(
+        queries, id_col, vec_col, _MAX_DRIVER_QUERIES, "brute_force_topk",
+        "Use lsh_topk or ivf_topk (bucketed candidates, no driver collect).",
     )
-    c = _ensure_parallelism(corpus, _FANOUT_MIN_BYTES_HEAVY).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"),
-        norm(F.col(vec_col)).alias("cn"),
+    q_t = qmat.T.copy()
+    return _block_topk(
+        corpus.select(id_col, vec_col), id_col, qids, (q_t, _fold_norms(q_t)),
+        k, _cosine_block, "cos",
     )
-    scored = c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")).select(
-        "query_id", "neighbor_id",
-        F.round(cosine_prenormed(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")), 6).alias("cos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")
 
 
 _SRP_WEIGHT_CACHE: dict[tuple[int, int, int], list[list[float]]] = {}

@@ -1879,7 +1879,8 @@ def q_emb_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN: train codebooks on the deterministic
     hash-min sample, encode the corpus to m small ints per vector (~100×
     compression at production dims — the representation a 10^10-vector
-    store actually scans), ADC top-k purely JVM-side over the codes.
+    store actually scans), ADC top-k over the codes in the flat numpy
+    kernel.
     Rows-only: PQ is lossy by construction (no exhaustive configuration
     equals brute force); the code assignment, ADC math, recall vs brute
     force, and frozen-codebook append path are pytest-pinned against

@@ -20,7 +20,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def build_session(
@@ -85,3 +86,37 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType | str) -> DataFrame:
+    """A small driver-side table (key lists, range bounds, empty results) as
+    a JVM ``LocalTableScan``.
+
+    ``spark.createDataFrame(list_of_tuples)`` parallelizes pickled rows into
+    a Python RDD, so EVERY action over the frame — and every join that
+    broadcasts it — starts Python worker tasks to unpickle them again (the
+    dominant cost of a keyed lake read or an empty-side scan on a small
+    batch). Built from an Arrow table instead, the rows live in the plan
+    and are read without a Python task. ``rows`` are tuples in field order;
+    ``schema`` is a ``StructType`` or a DDL string, and values must already
+    match its types (a type Arrow cannot carry raises)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    if not schema.fields:  # Arrow cannot carry a zero-column table
+        return spark.range(0).select()
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = []
+    for c, f, af in zip(cols, schema.fields, arrow_schema):
+        if isinstance(f.dataType, T.TimestampType):
+            # Spark reads a datetime without tzinfo as local time, Arrow as
+            # UTC: convert the way createDataFrame does, then hand Arrow the
+            # instants as microseconds
+            c = [f.dataType.toInternal(v) for v in c]
+            arrays.append(pa.array(c, type=pa.int64()).cast(af.type))
+        else:
+            arrays.append(pa.array(list(c), type=af.type))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow_schema))

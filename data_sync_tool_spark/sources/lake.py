@@ -105,6 +105,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.hashes import rowhash_xxhash64
+from ..session import local_frame
 
 
 def _row_digest(*cols):
@@ -477,8 +478,8 @@ class LakeTable:
         over the bounded key list, using the same bucket/bloom expressions
         as the write path, under the probed manifest's ``n_buckets``."""
         key = self.key_cols[0]
-        kt = self.spark.createDataFrame(
-            [(k,) for k in keys], T.StructType([T.StructField(key, key_type)])
+        kt = local_frame(
+            self.spark, [(k,) for k in keys], T.StructType([T.StructField(key, key_type)])
         )
         rows = kt.select(
             F.col(key).alias("k"), self._bucket_col(n_buckets).alias("b"),
@@ -600,7 +601,7 @@ class LakeTable:
 
     def _read_files(self, files: list[str], schema: T.StructType) -> DataFrame:
         if not files:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         return self.spark.read.schema(schema).option("mergeSchema", "true").parquet(*files)
 
     def _resolve_lww(self, df: DataFrame) -> DataFrame:
@@ -681,7 +682,7 @@ class LakeTable:
                     f"version {version} is expired (vacuumed) or unknown; "
                     f"current version is {self.current_version()}"
                 )
-            return self.spark.createDataFrame([], T.StructType([]))
+            return local_frame(self.spark, [], T.StructType([]))
         schema = self._schema_of(m)
         probe_map: dict[int, list[tuple[Any, int, list[int]]]] | None = None
         if keys is not None:
@@ -784,8 +785,8 @@ class LakeTable:
             elif len(keys) <= 512:
                 df = df.filter(k0.isin(keys))
             else:  # large key lists: broadcast semi-join, not a 10k-term IN
-                kt = self.spark.createDataFrame(
-                    [(k,) for k in keys],
+                kt = local_frame(
+                    self.spark, [(k,) for k in keys],
                     T.StructType([T.StructField(self.key_cols[0], key_type)]),
                 )
                 df = df.join(F.broadcast(kt), on=self.key_cols[0], how="left_semi")
@@ -844,8 +845,8 @@ class LakeTable:
         key = F.col(kc)
         bounded = [r for r in key_ranges if r[0] is not None and r[1] is not None]
         if len(key_ranges) > 128 and len(bounded) == len(key_ranges):
-            rng = self.spark.createDataFrame(
-                bounded, T.StructType([
+            rng = local_frame(
+                self.spark, bounded, T.StructType([
                     T.StructField("r_lo", df.schema[kc].dataType),
                     T.StructField("r_hi", df.schema[kc].dataType),
                 ])
@@ -1494,7 +1495,7 @@ class LakeTable:
         )
         paths = [p for p in paths if os.path.isdir(p)]
         if not paths:
-            return self.spark.createDataFrame([], T.StructType([]))
+            return local_frame(self.spark, [], T.StructType([]))
         return self.spark.read.parquet(*paths)
 
     def merge_into(
@@ -1764,7 +1765,7 @@ class LakeTable:
         superseded (same contract as replaying a table-format changelog)."""
         m = self._load_manifest()
         if m is None:
-            return self.spark.createDataFrame([], T.StructType([]))
+            return local_frame(self.spark, [], T.StructType([]))
         stats = m.get("file_stats", {})
         files = [
             f for f in self._files(m, None)
@@ -2161,8 +2162,8 @@ class LakeTable:
                 # null-keyed rows (never produced by merge, conceivable in
                 # imported files) are kept: isin is NULL for them
                 return df.filter(~F.coalesce(k0.isin(keys), F.lit(False)))
-            kt = self.spark.createDataFrame(
-                [(k,) for k in keys],
+            kt = local_frame(
+                self.spark, [(k,) for k in keys],
                 T.StructType([T.StructField(key0, key_type)]),
             )
             return df.join(F.broadcast(kt), on=key0, how="left_anti")

@@ -10,7 +10,7 @@ from data_sync_tool_spark.operators.dedupe import lww_dedupe, replay_final_state
 from data_sync_tool_spark.sources.lake import LakeTable, collapse_live_view
 from data_sync_tool_spark.sources.registry import changelog
 
-from .util_oracle import assert_matches_oracle
+from .util_oracle import assert_matches_frame, run_oracle
 
 
 @pytest.fixture(scope="module")
@@ -300,14 +300,24 @@ def test_lineage_records_offsets_and_checksum(spark, ch, tmp_path):
 
 
 def test_entry_contract_queries_match_oracle(spark, sf_small):
+    from concurrent.futures import ThreadPoolExecutor
+
     import __spark_entry__ as E
 
     qs, oracles = E.queries(), E.oracle_sql()
     assert set(oracles) <= set(qs)
-    for name, fn in qs.items():
-        if name not in oracles:
-            continue
-        assert_matches_oracle(fn(spark, sf_small), oracles[name], sf_small)
+    # DuckDB evaluates the oracles on a side thread (it releases the GIL)
+    # while Spark runs the queries: the all-pairs shingle oracles alone take
+    # over a minute, which the Spark side now overlaps instead of waiting out
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        want = {
+            name: pool.submit(run_oracle, oracles[name], sf_small)
+            for name in qs if name in oracles
+        }
+        for name, fn in qs.items():
+            if name not in oracles:
+                continue
+            assert_matches_frame(fn(spark, sf_small), want[name].result())
 
 
 def test_entry_smoke(spark):

@@ -210,3 +210,39 @@ def test_large_key_list_uses_semi_join(spark, tmp_path):
     ]
     got = t.read(keys=probe).count()
     assert got == 120 * 3
+
+
+@pytest.fixture
+def local_tz_not_utc(monkeypatch):
+    """Run with the driver process's local time zone 5 h west of UTC: Spark
+    reads a datetime without tzinfo as local time."""
+    import time
+
+    monkeypatch.setenv("TZ", "EST5")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_timestamp_keys_match_on_in_list_and_semi_join(spark, tmp_path, local_tz_not_utc):
+    """Naive-datetime keys resolve to the same instants on every keyed-read
+    path — the ≤512-key IN filter, the >512-key broadcast semi-join, and the
+    bucket/bloom probe both use — when the local zone is not UTC."""
+    import datetime as dt
+
+    base = dt.datetime(2024, 1, 15, 8, 30)
+    keys = [base + dt.timedelta(minutes=7 * i) for i in range(600)]
+    t = LakeTable(
+        spark, str(tmp_path / "t"), ["ts"], n_buckets=4,
+        merge_mode="mor", bloom_filters=True,
+    )
+    t.merge_into(
+        spark.createDataFrame(
+            [(k, i, i) for i, k in enumerate(keys)], "ts timestamp, v long, lsn long"
+        ).withColumn("op", F.lit("upsert")),
+        batch_id="b0",
+    )
+    small = keys[:100]
+    assert sorted(r["v"] for r in t.read(keys=small).collect()) == list(range(100))
+    assert sorted(r["v"] for r in t.read(keys=keys).collect()) == list(range(600))

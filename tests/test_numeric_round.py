@@ -21,11 +21,13 @@ def test_round6_matches_spark_on_adversarial_values(spark):
         0.12345649999999,       # just below a midpoint
         0.12345650000001,       # just above
         0.0, 1.0, 0.5, 0.25, 2.0 / 3.0, 1e-7, 123.4567894999,
+        -1e-9, -0.0,            # BigDecimal has no negative zero: Spark gives +0.0
     ]
     df = spark.createDataFrame([(float(v),) for v in vals], "x double")
     want = [r["r"] for r in df.select(F.round("x", 6).alias("r")).collect()]
     got = round6_half_up(np.asarray(vals)).tolist()
     assert got == want
+    assert np.signbit(got).tolist() == np.signbit(want).tolist()
 
 
 def test_round6_random_parity(spark):

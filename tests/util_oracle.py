@@ -29,8 +29,14 @@ def _canon(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def assert_matches_oracle(spark_df, sql: str, sf_dir: str) -> None:
+    assert_matches_frame(spark_df, run_oracle(sql, sf_dir))
+
+
+def assert_matches_frame(spark_df, oracle_df: pd.DataFrame) -> None:
+    """The compare of ``assert_matches_oracle`` against an oracle result
+    computed beforehand (e.g. on a side thread)."""
     got = _canon(spark_df.toPandas())
-    want = _canon(run_oracle(sql, sf_dir))
+    want = _canon(oracle_df)
     assert len(got) == len(want), f"row count: spark={len(got)} oracle={len(want)}"
     mism = (got != want).sum()
     assert mism == 0, f"{mism} mismatching rows; first spark={got[got != want].head(3).tolist()} oracle={want[got != want].head(3).tolist()}"
