@@ -1,8 +1,9 @@
 """Vector expressions over ``array<float>`` embedding columns.
 
 Built-in higher-order functions (``aggregate``/``zip_with``) keep the math
-JVM-side for the candidate-join paths (LSH, IVF). The flat top-k kernel
-(``operators.similarity._block_topk``) replicates these folds in numpy,
+JVM-side for per-row expressions (SRP bucket ids, SemDeDup marginality,
+the reference plans tests compare against). Top-k search does not use
+them: ``operators.similarity._block_topk`` replicates these folds in numpy,
 double for double.
 """
 

@@ -18,16 +18,19 @@ Scale shape:
 - **encode** is ONE lazy Arrow pass: per batch, a numpy argmin against
   each subspace codebook. The corpus is encoded once (build-once /
   query-many — persist the codes, drop the vectors).
-- **search (ADC)** runs in the flat top-k kernel shared with exact
+- **search (ADC)** runs in the top-k kernel shared with every similarity
   search (``similarity._block_topk``): each query's m×k lookup table of
   subvector·codeword dot products is built driver-side (numpy over the
   small query batch) and broadcast once as one ``(m, n_queries, k)``
   array; each Arrow batch of codes is scored by one numpy gather per
   subspace, every partition keeps its top k per query, and the
   per-query window merges those — no Python row loop, no shuffle of the
-  corpus, no decode, no (query, code) pair rows. The executor-side LUT
-  path for corpus-sized query sets (``distributed_luts=True``) keeps the
-  JVM ``zip_with`` + ``aggregate`` join; both give equal doubles.
+  corpus, no decode, no (query, code) pair rows. IVF-PQ restricts the
+  same kernel to the posting lists each query probes, and both refine
+  stages restrict it to each query's candidate ids. The executor-side
+  LUT path for corpus-sized query sets (``distributed_luts=True``) keeps
+  the JVM ``zip_with`` + ``aggregate`` join — the one JVM pair scorer
+  left; both give equal doubles.
 
 Vectors are L2-normalized before subspace split, so ADC inner product
 approximates cosine (residual/OPQ rotations are out of scope).
@@ -42,9 +45,16 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from .similarity import _MAX_DRIVER_QUERIES, _block_topk, _collect_queries, _topk_per_query
+from .similarity import (
+    _MAX_DRIVER_QUERIES,
+    _block_topk,
+    _collect_queries,
+    _centroid_matrix,
+    _probe,
+    _refine,
+    _topk_per_query,
+)
 
 
 def _normalize(m: np.ndarray) -> np.ndarray:
@@ -173,20 +183,40 @@ def _lut_udf(bc_books):
     return lut
 
 
-def _adc_block(luts: np.ndarray, codes: pd.Series):
-    """Score function of ``pq_topk``'s kernel path: the ADC of a batch of
-    codes against the broadcast ``(m, n_queries, k)`` LUTs, folded over
-    subspaces from 0.0 like the JVM ``aggregate(zip_with(codes, lut, …))``
-    (``0.0 + lut[0][c0] + lut[1][c1] + …``), so every double is equal."""
-    c = np.stack(codes.to_numpy())
+def _luts(qmat: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """``(m, n_queries, k)`` ADC lookup tables of the (normalized) query
+    rows: one subvector·codebook product per query and subspace."""
+    m, kk, dsub = books.shape
+    luts = np.empty((m, len(qmat), kk))
+    for qi in range(len(qmat)):
+        for sub in range(m):
+            luts[sub, qi] = qmat[qi, sub * dsub:(sub + 1) * dsub] @ books[sub].T
+    return luts
 
-    def block(qs: slice) -> np.ndarray:
-        acc = np.zeros((qs.stop - qs.start, len(c)))
+
+def _adc_block(luts: np.ndarray, pdf: pd.DataFrame):
+    """Score function of ``pq_topk``: ``score(q, r)`` is the ADC of batch
+    rows ``r`` (codes in column 1) for queries ``q``, folded over subspaces
+    from 0.0 like the JVM ``aggregate(zip_with(codes, lut, …))``
+    (``0.0 + lut[0][c0] + …``), so every double is equal."""
+    c = np.stack(pdf.iloc[:, 1].to_numpy())
+
+    def score(q, r):
+        acc = np.zeros(np.broadcast_shapes(np.shape(q), np.shape(r)))
         for sub in range(luts.shape[0]):
-            acc += luts[sub, qs][:, c[:, sub]]
+            acc += luts[sub][q, c[r, sub]]
         return acc
 
-    return block
+    return score
+
+
+def _adc_topk(codes: DataFrame, id_col: str, code_col: str, qids, qmat: np.ndarray,
+              books: np.ndarray, k: int) -> DataFrame:
+    """Flat ADC top-k of a collected query batch."""
+    return _block_topk(
+        codes.select(id_col, code_col), id_col, qids,
+        _luts(_normalize(qmat), books), k, _adc_block, "adc",
+    )
 
 
 def pq_topk(
@@ -232,23 +262,11 @@ def pq_topk(
     ``ivfpq_topk`` (bucketed, sub-all-pairs). Both paths score
     identically (pytest-pinned)."""
     books = np.asarray(books, dtype=np.float64)
-    m, kk, dsub = books.shape
+    m, kk, _ = books.shape
     spark = codes.sparkSession
     if not distributed_luts:
-        qids, qmat = _collect_queries(
-            queries, id_col, vec_col, max_queries, "pq_topk",
-            "Pass distributed_luts=True (executor-side LUTs, no collect) or "
-            "bucket with ivfpq_topk.",
-        )
-        qmat = _normalize(qmat)
-        luts = np.empty((m, len(qmat), kk))
-        for qi in range(len(qmat)):
-            for sub in range(m):
-                luts[sub, qi] = qmat[qi, sub * dsub:(sub + 1) * dsub] @ books[sub].T
-        return _block_topk(
-            codes.select(id_col, code_col), id_col, qids.cast(pa.int64()),
-            luts, k, _adc_block, "adc",
-        )
+        qids, qmat = _collect_queries(queries, id_col, vec_col, max_queries, "pq_topk")
+        return _adc_topk(codes, id_col, code_col, qids.cast(pa.int64()), qmat, books, k)
 
     n_q = queries.select(id_col).count()
     if n_q == 0:
@@ -319,32 +337,18 @@ def pq_topk_refined(
 ) -> DataFrame:
     """Two-stage PQ search — the production shape: ADC over the compressed
     codes generates ``k × oversample`` candidates per query (the corpus
-    scan touches codes only), then ONLY those candidates re-attach their
-    raw vectors for an exact cosine re-rank. At 10^10 vectors the exact
-    stage reads k×oversample×|queries| vectors instead of the corpus —
-    the refine join is the same slim candidates-then-attach shape as
-    ``lsh_topk``. Returns (query_id, neighbor_id, cos)."""
-    from ..functions.vectors import cosine_prenormed, norm
-
-    cands = pq_topk(
-        codes, queries, books, k=k * oversample, id_col=id_col,
-        vec_col=vec_col, code_col=code_col,
-    ).select("query_id", "neighbor_id")
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-        norm(F.col(vec_col)).alias("qn"),
+    scan touches codes only), then ONLY those candidates are re-ranked by
+    exact cosine (``similarity._refine``: the kernel restricted to each
+    query's candidate ids). The query batch is collected once for both
+    stages, bounded as in ``pq_topk``. Returns (query_id, neighbor_id,
+    cos)."""
+    qids, qmat = _collect_queries(
+        queries, id_col, vec_col, _MAX_DRIVER_QUERIES, "pq_topk_refined"
     )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"),
-        norm(F.col(vec_col)).alias("cn"),
-    )
-    scored = cands.join(F.broadcast(qv), "query_id").join(cv, "neighbor_id").select(
-        "query_id", "neighbor_id",
-        F.round(cosine_prenormed(F.col("qv"), F.col("cv"),
-                                 F.col("qn"), F.col("cn")), 6).alias("cos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")
+    qids = qids.cast(pa.int64())
+    books = np.asarray(books, dtype=np.float64)
+    cands = _adc_topk(codes, id_col, code_col, qids, qmat, books, k * oversample)
+    return _refine(corpus, id_col, vec_col, qids, qmat, cands, k, "cos")
 
 
 def pq_index_write(
@@ -434,11 +438,11 @@ def pq_topk_indexed(
 # lists, PQ RESIDUAL codes (vector − its list centroid) bound the bytes per
 # scanned row. ADC decomposes the inner product as
 #   q·v ≈ q·c_list + Σ_sub lut_q[sub][code_sub],
-# so each (query, probed list) pair needs one scalar (q·c) plus one m×k
-# lookup table over the residual codebooks — both computed driver-side from
-# the tiny centroid/query matrices and shipped on the broadcast side of the
-# posting-list join. The corpus side moves m small ints per row, read from
-# ONLY the probed list_id= partitions.
+# so each (query, probed list) pair needs one scalar (q·c) plus the query's
+# m×k lookup table over the residual codebooks — both computed driver-side
+# from the tiny centroid/query matrices and broadcast as arrays. The corpus
+# side moves m small ints per row, read from ONLY the probed list_id=
+# partitions.
 
 
 def _rescode_udf(books_bc, cmat_bc):
@@ -484,8 +488,7 @@ def ivfpq_index_write(
         corpus, n_centroids, id_col, vec_col, n_iters
     )
     spark = corpus.sparkSession
-    crows = centroids_df.orderBy("list_id").collect()
-    cmat = np.asarray([r["centroid"] for r in crows], dtype=np.float64)
+    cmat = _centroid_matrix(centroids_df)[1]
     # residual codebooks: sample assigned driver-side against the same
     # centroids the corpus pass uses — identical argmax, so sample residuals
     # are distributed like corpus residuals
@@ -516,10 +519,7 @@ def ivfpq_index_write(
 
 
 def _load_ivfpq(spark, path: str) -> tuple[np.ndarray, np.ndarray]:
-    crows = spark.read.parquet(f"{path}/centroids").orderBy("list_id").collect()
-    if not crows:
-        raise ValueError(f"no IVF centroids at {path}/centroids")
-    cmat = np.asarray([r["centroid"] for r in crows], dtype=np.float64)
+    cmat = _centroid_matrix(spark.read.parquet(f"{path}/centroids"))[1]
     return cmat, pq_read_books(spark, path)
 
 
@@ -552,6 +552,16 @@ def ivfpq_index_append(
     )
 
 
+def _ivfpq_block(side, pdf: pd.DataFrame):
+    """Score function of ``ivfpq_topk``: ``qc[query, list] + adc`` over the
+    batch's codes (column 1) and list ids (column 2), added like the JVM
+    ``qc + aggregate(…)``."""
+    luts, qc = side
+    adc = _adc_block(luts, pdf)
+    lists = pdf.iloc[:, 2].to_numpy()
+    return lambda q, r: qc[q, lists[r]] + adc(q, r)
+
+
 def ivfpq_topk(
     spark,
     path: str,
@@ -564,102 +574,32 @@ def ivfpq_topk(
     vec_col: str = "embedding",
     max_queries: int = _MAX_DRIVER_QUERIES,
 ) -> DataFrame:
-    """ADC top-k against a persisted IVF-PQ index. Probe selection and the
-    per-(query, list) LUTs are computed driver-side from the tiny centroid
-    matrix (n_queries × n_probe tables of m×k doubles) and broadcast; the
+    """ADC top-k against a persisted IVF-PQ index. The query batch is
+    collected once (bounded at ``max_queries``; past it this raises — split
+    it, or score flat codes with ``pq_topk(distributed_luts=True)``).
+    Probes, the ``(n_queries, n_lists)`` q·centroid matrix and the
+    ``(m, n_queries, k)`` LUTs are computed driver-side and broadcast; the
     posting-list scan reads ONLY the probed ``list_id=`` partitions and
-    moves codes, never vectors. With ``refine`` (a DataFrame carrying the
-    raw vectors) the ADC top ``k × oversample`` candidates are exactly
-    re-ranked by cosine — the candidates-then-attach shape; without it the
-    ADC scores rank directly. Returns (query_id, neighbor_id, score).
-
-    The driver-side probe/LUT build bounds the query batch at
-    ``max_queries`` and raises past it (a 10^6-query batch would be
-    driver-bound here — split it, or score flat codes with
-    ``pq_topk(distributed_luts=True)``)."""
+    moves codes, never vectors, and ``similarity._block_topk`` scores each
+    row only for the queries that probe its list. With ``refine`` (a
+    DataFrame carrying the raw vectors) the ADC top ``k × oversample``
+    candidates are exactly re-ranked by cosine (``similarity._refine``);
+    without it the ADC scores rank directly. Returns (query_id,
+    neighbor_id, score)."""
     cmat, books = _load_ivfpq(spark, path)
-    m, kk, dsub = books.shape
-    q_rows = queries.select(id_col, vec_col).limit(max_queries + 1).collect()
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"ivfpq_topk builds per-query probe lists and ADC LUTs "
-            f"driver-side; got more than max_queries={max_queries} queries. "
-            f"Split the query batch, or use pq_topk(distributed_luts=True)."
-        )
-    if not q_rows:
-        return spark.createDataFrame([], "query_id long, neighbor_id long, score double")
-    qmat = _normalize(np.asarray([r[vec_col] for r in q_rows], dtype=np.float64))
-    qc = qmat @ cmat.T  # (n_queries, n_centroids)
-    n_probe = min(n_probe, len(cmat))
-    probe_rows = []
-    for qi, row in enumerate(q_rows):
-        # the LUT depends on (query, residual codebooks) only — one per query
-        lut = [
-            [float(x) for x in qmat[qi, sub * dsub:(sub + 1) * dsub] @ books[sub].T]
-            for sub in range(m)
-        ]
-        # ties broken by list_id: argsort on (-score, list) via stable lexsort
-        order = np.lexsort((np.arange(len(cmat)), -qc[qi]))[:n_probe]
-        for lid in order:
-            probe_rows.append((row[id_col], int(lid), float(qc[qi, lid]), lut))
-    probes = spark.createDataFrame(
-        probe_rows,
-        "query_id long, list_id int, qc double, lut array<array<double>>",
-    )
-    probed = sorted({r[1] for r in probe_rows})
+    qids, qmat = _collect_queries(queries, id_col, vec_col, max_queries, "ivfpq_topk")
+    qids = qids.cast(pa.int64())
+    qn = _normalize(qmat)
+    qc = qn @ cmat.T  # (n_queries, n_lists)
+    q, probed = _probe(qc, np.arange(len(cmat)), n_probe)
     codes = spark.read.parquet(f"{path}/codes").filter(
-        F.col("list_id").isin(probed)  # partition-pruned scan
+        F.col("list_id").isin(np.unique(probed).tolist())  # partition-pruned scan
     )
-    scored = (
-        codes.select(F.col(id_col).alias("neighbor_id"), "codes", "list_id")
-        .join(F.broadcast(probes), "list_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                F.col("qc")
-                + F.aggregate(
-                    F.zip_with(
-                        F.col("codes"),
-                        F.col("lut"),
-                        lambda c, lut: F.element_at(lut, c + F.lit(1)),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            ).alias("score"),
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    topn = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k * (oversample if refine is not None else 1))
-        .drop("rn")
+    topn = _block_topk(
+        codes.select(id_col, "codes", "list_id", F.array("list_id").alias("keys")), id_col, qids,
+        (_luts(qn, books), qc), k * (oversample if refine is not None else 1),
+        _ivfpq_block, "score", probes=(q, probed),
     )
     if refine is None:
         return topn
-    from ..functions.vectors import cosine_prenormed, norm
-
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-        norm(F.col(vec_col)).alias("qn"),
-    )
-    cv = refine.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"),
-        norm(F.col(vec_col)).alias("cn"),
-    )
-    exact = (
-        topn.select("query_id", "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id", "neighbor_id",
-            F.round(cosine_prenormed(F.col("qv"), F.col("cv"),
-                                     F.col("qn"), F.col("cn")), 6).alias("score"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return exact.withColumn("rn", F.row_number().over(w2)).filter(F.col("rn") <= k).drop("rn")
+    return _refine(refine, id_col, vec_col, qids, qmat, topn, k, "score")

@@ -1,22 +1,29 @@
 """Similarity search over ``array<float>`` embedding columns.
 
-- ``brute_force_topk`` : exact cosine top-k — the query batch is collected
-  once and broadcast as a numpy matrix; ``_block_topk`` scores whole corpus
-  Arrow batches against it. The correctness baseline.
+- ``brute_force_topk`` : exact cosine top-k over every corpus row. The
+  correctness baseline.
 - ``lsh_topk``         : sign-random-projection LSH — deterministic
-  hyperplanes from a seeded hash, bucket join on bit-prefix, exact re-rank
-  inside buckets. The scale path: candidate count ~ corpus/2^bits per probe.
+  hyperplanes from a seeded hash; a query scores only the rows that share
+  its bucket in some table. The scale path: candidate count ~ corpus/2^bits
+  per probe.
 - ``ivf_topk``         : IVF-flat — deterministic centroid sample, vectors
   assigned to nearest centroid (numpy over Arrow batches), queries probe the
-  ``n_probe`` nearest centroid lists only.
+  ``n_probe`` nearest centroid lists only. ``ivf_topk_indexed`` runs the
+  same search over a persisted index.
 - ``embedding_near_dup_pairs`` : near-duplicate detection at threshold via
-  the LSH buckets (the embedding-cosine entry of the dedup suite).
+  the LSH buckets (the embedding-cosine member of the dedup suite).
 
-``_block_topk`` is the one flat top-k kernel (``brute_force_topk`` and
-``pq.pq_topk``): each corpus partition keeps every query's k best rows, so
-only ≤k rows per query per partition reach the final per-query window and
-no (query, corpus) pair ever materializes in the JVM. The LSH and IVF paths
-still score their candidate pairs with JVM joins.
+Every top-k search here and in ``pq`` runs one kernel, ``_block_topk``: the
+query batch is collected once (``_collect_queries``, bounded at
+``_MAX_DRIVER_QUERIES``) and broadcast as numpy arrays, each corpus Arrow
+batch is scored in numpy, every partition keeps each query's k best rows,
+and only those reach the per-query window (``_topk_per_query``). An
+optional key restriction turns the flat search into a bucketed one: each
+corpus row carries keys (its SRP bucket per table, its IVF list, or its own
+id for an exact re-rank of candidates), each query probes keys, and only
+(query, row) pairs sharing a key are scored — no (query, corpus) pair ever
+materializes in the JVM. The one JVM pair scorer left is
+``pq.pq_topk(distributed_luts=True)``, for query sets past the bound.
 """
 
 import numpy as np
@@ -26,20 +33,22 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.numeric import round6_half_up
-from ..functions.vectors import cosine, cosine_prenormed, norm
+from ..functions.vectors import cosine_prenormed, norm
 
-# Driver-collected query batches (``brute_force_topk``, ``pq_topk``'s LUT
-# build, ``ivfpq_topk``) are bounded here: past it the collect itself is the
-# bottleneck, and the bucketed paths are the right tool.
+# Every top-k search collects its query batch on the driver, bounded here:
+# past it the collect itself is the bottleneck.
 _MAX_DRIVER_QUERIES = 65_536
+_OVER_BOUND = (
+    "Split the query batch, or score PQ codes with "
+    "pq_topk(distributed_luts=True) (executor-side LUTs, no driver collect)."
+)
 # float64 elements per score block in ``_block_topk`` (≤ ~64 MB), the same
 # budget ``_pairs_within_groups`` uses for its gram chunks.
 _SCORE_BLOCK_ELEMS = 8_000_000
 
 
 def _collect_queries(
-    queries: DataFrame, id_col: str, vec_col: str, max_queries: int,
-    who: str, redirect: str,
+    queries: DataFrame, id_col: str, vec_col: str, max_queries: int, who: str,
 ):
     """``(ids, mat)``: the query batch as an Arrow id array (its Spark type
     intact) and an ``(n, dim)`` float64 matrix — one bounded collect that
@@ -48,7 +57,7 @@ def _collect_queries(
     if t.num_rows > max_queries:
         raise ValueError(
             f"{who} collects its query batch on the driver and is bounded at "
-            f"max_queries={max_queries}; got more. {redirect}"
+            f"max_queries={max_queries}; got more. {_OVER_BOUND}"
         )
     flat = t.column(1).combine_chunks().flatten().to_numpy(zero_copy_only=False)
     mat = flat.astype(np.float64).reshape(t.num_rows, -1 if t.num_rows else 0)
@@ -64,27 +73,37 @@ def _fold_norms(m_t: np.ndarray) -> np.ndarray:
     return np.sqrt(acc)
 
 
-def _cosine_block(side, vecs: pd.Series):
-    """Score function of ``brute_force_topk``: ``cosine_prenormed`` over a
-    corpus batch against the broadcast ``(queries_t, query_norms)``."""
-    q_t, qn = side
-    c_t = np.stack(vecs.to_numpy()).astype(np.float64).T.copy()
-    cn = _fold_norms(c_t)
+def _cosine_side(qmat: np.ndarray):
+    """The broadcast query side of a cosine search: ``(queries_t, norms)``."""
+    q_t = qmat.T.copy()
+    return q_t, _fold_norms(q_t)
 
-    def block(qs: slice) -> np.ndarray:
-        # dot products summed left to right over dims from 0.0, exactly the
-        # JVM fold (a BLAS gemm sums in another order: last-ulp drift)
-        q = q_t[:, qs]
-        dot = np.zeros((q.shape[1], c_t.shape[1]))
+
+def _cosine(q_t, qn, c_t, cn):
+    """``score(q, r)``: the JVM ``cosine_prenormed`` (before ``round``) of
+    queries ``q`` against rows ``r``, two index arrays that broadcast. Dot
+    products sum left to right over dims from 0.0, exactly the JVM fold (a
+    BLAS gemm sums in another order: last-ulp drift), then
+    ``d > 0 ? dot/d : 0.0``."""
+
+    def score(q, r):
+        dot = np.zeros(np.broadcast_shapes(np.shape(q), np.shape(r)))
         tmp = np.empty_like(dot)
-        for d in range(len(q)):
-            np.multiply(q[d, :, None], c_t[d, None, :], out=tmp)
+        for d in range(len(q_t)):
+            np.multiply(q_t[d][q], c_t[d][r], out=tmp)
             dot += tmp
-        den = qn[qs, None] * cn[None, :]
+        den = qn[q] * cn[r]
         with np.errstate(divide="ignore", invalid="ignore"):
             return np.where(den > 0, dot / den, 0.0)
 
-    return block
+    return score
+
+
+def _cosine_block(side, pdf: pd.DataFrame):
+    """Cosine score function of ``_block_topk``: the batch's vectors
+    (column 1) against the broadcast ``_cosine_side``."""
+    c_t = np.stack(pdf.iloc[:, 1].to_numpy()).astype(np.float64).T.copy()
+    return _cosine(*side, c_t, _fold_norms(c_t))
 
 
 def _keep_topk(q: np.ndarray, ids: np.ndarray, s: np.ndarray, k: int) -> np.ndarray:
@@ -101,6 +120,27 @@ def _topk_per_query(scored: DataFrame, score_col: str, k: int) -> DataFrame:
     return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")
 
 
+def _row_keys(keys: np.ndarray, col: pd.Series):
+    """``(row, key rank)`` of every key a batch row carries that some query
+    probes; ``keys`` are the sorted probed keys."""
+    rows = np.repeat(np.arange(len(col)), col.map(len).to_numpy())
+    rk = np.concatenate(col.to_numpy())
+    pos = np.minimum(np.searchsorted(keys, rk), len(keys) - 1)
+    hit = keys[pos] == rk
+    return rows[hit], pos[hit]
+
+
+def _key_pairs(index, rows, rank, nq: int, q0: int, q1: int, n: int):
+    """``(query, row)`` index pairs that share a key, for queries in
+    ``[q0, q1)``; ``index`` is the ascending ``key rank · nq + query``
+    array. A pair sharing several keys (LSH tables) appears once."""
+    lo = np.searchsorted(index, rank * nq + q0)
+    cnt = np.searchsorted(index, rank * nq + q1) - lo
+    at = np.repeat(lo - np.cumsum(cnt) + cnt, cnt) + np.arange(cnt.sum())
+    pair = np.unique(index[at] % nq * n + np.repeat(rows, cnt))
+    return pair // n, pair % n
+
+
 def _block_topk(
     corpus: DataFrame,
     id_col: str,
@@ -109,57 +149,83 @@ def _block_topk(
     k: int,
     score_fn,
     score_col: str,
+    probes=None,
 ) -> DataFrame:
     """``(query_id, neighbor_id, score_col)``: each query's top k corpus rows
     by (score desc, neighbor_id asc), self-matches excluded.
 
-    ``corpus`` is ``(id_col, payload)``; ``query_ids`` is an Arrow array (its
+    ``corpus`` is ``(id_col, payload…)``; ``query_ids`` is an Arrow array (its
     type is the output ``query_id`` type) and ``query_side`` whatever
-    ``score_fn`` needs, broadcast once. ``score_fn(query_side, payload)``
-    parses one Arrow batch's payload column and returns ``block(qs)``, the
-    raw ``(len(qs), batch rows)`` scores of a query chunk.
+    ``score_fn`` needs, broadcast once. ``score_fn(query_side, batch)``
+    parses one Arrow batch (a pandas frame of the corpus columns) and
+    returns ``score(q, r)``: the raw scores of query indices ``q`` against
+    batch row indices ``r``, two index arrays that broadcast together.
 
-    Per batch, queries go in chunks of ≤ ``_SCORE_BLOCK_ELEMS`` scores; each
-    chunk is rounded with ``round6_half_up`` (Spark's ``round(·, 6)``), then
+    Without ``probes`` every query meets every row: per batch, queries go in
+    chunks of ≤ ``_SCORE_BLOCK_ELEMS`` scores, scored as one dense block;
     ``np.partition`` finds every query's k-th score and only entries at or
     above it stay candidates, so ties at the boundary survive to the exact
-    ``lexsort`` on (query, score desc, id). The partition's running top k
-    absorbs each batch's candidates; the partition emits ≤k rows per query,
-    and a ``row_number`` window merges partitions."""
+    ``lexsort`` on (query, score desc, id).
+
+    ``probes = (query_index, key)`` is the key restriction: parallel arrays
+    naming the keys each query probes, while the corpus's last column holds
+    each row's keys (``array<long>``). The inverted key → query index is
+    built here and broadcast once; per batch the kernel keeps only rows
+    carrying a probed key, and per query chunk it forms only the (query,
+    row) pairs that share a key, each once however many keys they share,
+    and scores them as one flat vector.
+
+    Scores are rounded with ``round6_half_up`` (Spark's ``round(·, 6)``). The
+    partition's running top k absorbs each batch's candidates; the partition
+    emits ≤k rows per query, and a ``row_number`` window merges partitions."""
     from pyspark.sql.pandas.types import from_arrow_type
 
     id_type = corpus.schema[id_col].dataType.simpleString()
     schema = (f"query_id {from_arrow_type(query_ids.type).simpleString()}, "
               f"neighbor_id {id_type}, {score_col} double")
     spark = corpus.sparkSession
-    if len(query_ids) == 0:
+    if len(query_ids) == 0 or (probes is not None and len(probes[1]) == 0):
         return spark.createDataFrame([], schema)
-    bc = spark.sparkContext.broadcast(
-        (query_ids.to_numpy(zero_copy_only=False), query_side)
-    )
+    qids = query_ids.to_numpy(zero_copy_only=False)
+    index = None
+    if probes is not None:
+        keys, rank = np.unique(np.asarray(probes[1]), return_inverse=True)
+        index = (keys, np.unique(rank * len(qids) + np.asarray(probes[0])))
+    bc = spark.sparkContext.broadcast((qids, query_side, index))
     budget = _SCORE_BLOCK_ELEMS
 
     def kernel(batches):
-        qids, side = bc.value
+        qids, side, index = bc.value
+        nq = len(qids)
         kept = None  # the partition's running top k: (query index, id, score)
         for pdf in batches:
+            if index is not None and len(pdf):
+                rows, rank = _row_keys(index[0], pdf.iloc[:, -1])
+                # parse and score only the rows some query probes
+                hit, rows = np.unique(rows, return_inverse=True)
+                pdf = pdf.iloc[hit]
             n = len(pdf)
             if n == 0:
                 continue
             ids = pdf.iloc[:, 0].to_numpy()
-            block = score_fn(side, pdf.iloc[:, 1])
+            score = score_fn(side, pdf)
             parts = [] if kept is None else [kept]
             step = max(1, budget // n)
-            for q0 in range(0, len(qids), step):
-                qs = slice(q0, min(q0 + step, len(qids)))
-                s = block(qs)
+            for q0 in range(0, nq, step):
+                q1 = min(q0 + step, nq)
+                if index is None:
+                    q, r = np.arange(q0, q1)[:, None], np.arange(n)
+                else:
+                    q, r = _key_pairs(index[1], rows, rank, nq, q0, q1, n)
+                s = score(q, r)
                 s = round6_half_up(s.ravel()).reshape(s.shape)
-                keep = qids[qs, None] != ids[None, :]
-                if 0 < k < n:
+                keep = qids[q] != ids[r]
+                if index is None and 0 < k < n:
                     kth = np.partition(np.where(keep, s, -np.inf), n - k, axis=1)[:, n - k]
                     keep &= s >= kth[:, None]
-                r, c = np.nonzero(keep)
-                parts.append((r + q0, ids[c], s[r, c]))
+                at = np.nonzero(keep)
+                parts.append((np.broadcast_to(q, s.shape)[at],
+                              ids[np.broadcast_to(r, s.shape)[at]], s[at]))
             q, i, sc = (np.concatenate(x) for x in zip(*parts))
             top = _keep_topk(q, i, sc, k)
             kept = (q[top], i[top], sc[top])
@@ -168,6 +234,25 @@ def _block_topk(
             yield pd.DataFrame({"query_id": qids[q], "neighbor_id": i, score_col: sc})
 
     return _topk_per_query(corpus.mapInPandas(kernel, schema), score_col, k)
+
+
+def _refine(
+    corpus: DataFrame, id_col: str, vec_col: str, query_ids, qmat: np.ndarray,
+    cands: DataFrame, k: int, score_col: str,
+) -> DataFrame:
+    """Exact cosine top-k among each query's candidates (``cands``: the
+    ``(query_id, neighbor_id)`` rows of a first stage over the same query
+    batch): every candidate id is a key its query probes, and every corpus
+    row's key is its own id."""
+    t = cands.select("query_id", "neighbor_id").toArrow()
+    qids = query_ids.to_numpy(zero_copy_only=False)
+    order = np.argsort(qids, kind="stable")
+    q = order[np.searchsorted(qids, t.column(0).to_numpy(), sorter=order)]
+    return _block_topk(
+        corpus.select(id_col, vec_col, F.array(id_col).alias("keys")), id_col, query_ids,
+        _cosine_side(qmat), k, _cosine_block, score_col,
+        probes=(q, t.column(1).to_numpy()),
+    )
 
 
 def brute_force_topk(
@@ -179,19 +264,16 @@ def brute_force_topk(
 ) -> DataFrame:
     """(query_id, neighbor_id, cos) exact top-k per query (self-match
     excluded). The query batch is collected once (bounded at
-    ``_MAX_DRIVER_QUERIES``; past it this raises — bucket with ``lsh_topk``
-    or ``ivf_topk``) and broadcast as a numpy matrix with its norms;
-    ``_block_topk`` scores each corpus Arrow batch against it. Every score
-    is bit-identical to the JVM ``round(cosine_prenormed(q, c), 6)``: dot
-    products and norms fold left to right over dims, then
-    ``d > 0 ? dot/d : 0.0``."""
+    ``_MAX_DRIVER_QUERIES``; past it this raises) and broadcast as a numpy
+    matrix with its norms; ``_block_topk`` scores each corpus Arrow batch
+    against it. Every score is bit-identical to the JVM
+    ``round(cosine_prenormed(q, c), 6)``: dot products and norms fold left
+    to right over dims, then ``d > 0 ? dot/d : 0.0``."""
     qids, qmat = _collect_queries(
-        queries, id_col, vec_col, _MAX_DRIVER_QUERIES, "brute_force_topk",
-        "Use lsh_topk or ivf_topk (bucketed candidates, no driver collect).",
+        queries, id_col, vec_col, _MAX_DRIVER_QUERIES, "brute_force_topk"
     )
-    q_t = qmat.T.copy()
     return _block_topk(
-        corpus.select(id_col, vec_col), id_col, qids, (q_t, _fold_norms(q_t)),
+        corpus.select(id_col, vec_col), id_col, qids, _cosine_side(qmat),
         k, _cosine_block, "cos",
     )
 
@@ -256,63 +338,38 @@ def lsh_topk(
     n_bits: int = 8,
     n_tables: int = 2,
     seed: int = 7,
-    dim: int | None = None,
 ) -> DataFrame:
     """Approximate top-k: candidates = same SRP bucket in ANY of ``n_tables``
     tables; exact cosine re-rank inside candidates. ``n_bits=0`` is the
     exhaustive configuration (single bucket → all pairs → exactly brute
     force — the oracle-checkable setting).
 
-    Scale shape: the bucket self-join carries ONLY (id, tbl, bucket) — the
-    embedding vectors must not ride the ×n_tables explode nor either shuffle
-    side (at dim 768 that serializes each vector n_tables× and shuffles it
-    twice before pair dedup); they are re-attached once per side AFTER the
-    candidate pairs are deduped — the same slimming as
-    ``dedup_suite.minhash_lsh_pairs``. Pass ``dim`` (embedding width) to
-    skip the one-row probe job that otherwise infers it."""
-    if dim is None and n_bits > 0:
-        dim = len(corpus.select(vec_col).first()[0])
-
-    def bucketed_ids(df: DataFrame, ident: str) -> DataFrame:
-        # bucket ids are computed from the vector in the projection, but the
-        # vector column is dropped before the explode output
-        return df.select(
-            F.col(id_col).alias(ident),
-            F.posexplode(
-                F.array(*[
-                    _srp_bits(df.sparkSession, vec_col, n_bits, dim, seed + t)
-                    for t in range(n_tables)
-                ])
-            ).alias("tbl", "bucket"),
-        )
-
-    cb = bucketed_ids(corpus, "neighbor_id")
-    qb = bucketed_ids(queries, "query_id")
-    cands = (
-        cb.join(qb, ["tbl", "bucket"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .dropDuplicates(["query_id", "neighbor_id"])
+    The query batch is collected once (bounded at ``_MAX_DRIVER_QUERIES``;
+    past it this raises) and its buckets are folded in numpy exactly like
+    ``_srp_bits``, which buckets the corpus rows. Each bucket is a key
+    ``tbl << n_bits | bucket``, so tables cannot collide, and
+    ``_block_topk`` scores only the (query, row) pairs that share one —
+    each pair once, however many tables it shares, and the vectors never
+    leave their corpus batch."""
+    qids, qmat = _collect_queries(queries, id_col, vec_col, _MAX_DRIVER_QUERIES, "lsh_topk")
+    spark, (nq, dim) = corpus.sparkSession, qmat.shape
+    q_keys = np.empty((nq, n_tables), dtype=np.int64)
+    for t in range(n_tables):
+        w = np.asarray(_srp_weights(spark, n_bits, dim, seed + t) if n_bits else [],
+                       dtype=np.float64).reshape(n_bits, dim)
+        dot = np.zeros((nq, n_bits))
+        for d in range(dim):
+            dot += qmat[:, d, None] * w[None, :, d]
+        # ~(dot < 0) is Spark's ``dot >= 0``, which is also true for NaN
+        q_keys[:, t] = (t << n_bits) | ((~(dot < 0)) << np.arange(n_bits)).sum(axis=1)
+    row_keys = F.array(*[
+        F.lit(t << n_bits) + _srp_bits(spark, vec_col, n_bits, dim, seed + t)
+        for t in range(n_tables)
+    ])
+    return _block_topk(
+        corpus.select(id_col, vec_col, row_keys.alias("keys")), id_col, qids, _cosine_side(qmat),
+        k, _cosine_block, "cos", probes=(np.repeat(np.arange(nq), n_tables), q_keys.ravel()),
     )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-        norm(F.col(vec_col)).alias("qn"),
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"),
-        norm(F.col(vec_col)).alias("cn"),
-    )
-    scored = (
-        cands.join(qv, "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id", "neighbor_id",
-            F.round(cosine_prenormed(F.col("qv"), F.col("cv"),
-                                     F.col("qn"), F.col("cn")), 6).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")
 
 
 def _assign_udf(cmat: np.ndarray, cids: np.ndarray):
@@ -354,6 +411,8 @@ def ivf_assign(
     iterations) — the bound on worst-case probe cost; recall at fixed
     n_probe is data-dependent. Returns (assigned corpus df + 'list_id',
     centroids df)."""
+    from ..session import local_frame
+
     n_sample = max(n_centroids, n_centroids * sample_per_centroid)
     sample_rows = (
         corpus.select(id_col, vec_col)
@@ -380,12 +439,54 @@ def ivf_assign(
                 new[lid] = m / max(float(np.linalg.norm(m)), 1e-12)
         cmat = new
 
-    centroids_df = corpus.sparkSession.createDataFrame(
+    # an Arrow-backed local table: reading it back (``_centroid_matrix``)
+    # or broadcasting it starts no Python worker
+    centroids_df = local_frame(
+        corpus.sparkSession,
         [(int(i), [float(x) for x in cmat[i]]) for i in range(len(cmat))],
         "list_id long, centroid array<double>",
     )
     assigned = corpus.withColumn("list_id", _assign_udf(cmat, cids)(F.col(vec_col)))
     return assigned, centroids_df
+
+
+def _centroid_matrix(centroids: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """``(list_ids, centroid matrix)`` of a ``(list_id, centroid)`` table, in
+    list_id order."""
+    t = centroids.select("list_id", "centroid").toArrow()
+    if not t.num_rows:
+        raise ValueError("no IVF centroids")
+    t = t.sort_by("list_id")
+    return (np.asarray(t.column("list_id").to_pylist(), dtype=np.int64),
+            np.asarray(t.column("centroid").to_pylist(), dtype=np.float64))
+
+
+def _probe(scores: np.ndarray, list_ids: np.ndarray, n_probe: int):
+    """``(query index, list_id)`` probe pairs: each query's ``n_probe`` best
+    lists by (score desc, list_id asc), the JVM probe window's order."""
+    best = np.lexsort((np.broadcast_to(list_ids, scores.shape), -scores))[:, :n_probe]
+    return np.repeat(np.arange(len(scores)), best.shape[1]), list_ids[best].ravel()
+
+
+def _ivf_search(
+    lists: DataFrame, list_ids: np.ndarray, cmat: np.ndarray, queries: DataFrame,
+    k: int, n_probe: int, id_col: str, vec_col: str, who: str,
+) -> DataFrame:
+    """IVF-flat top-k over ``lists`` (corpus rows with their ``list_id``):
+    each query probes its ``n_probe`` nearest centroids by an unrounded
+    numpy cosine folded like the JVM ``cosine``, only the probed lists are
+    read, and ``_block_topk`` scores the rows of the lists a query probes."""
+    qids, qmat = _collect_queries(queries, id_col, vec_col, _MAX_DRIVER_QUERIES, who)
+    side = _cosine_side(qmat)
+    c_t = cmat.T.copy()
+    cs = _cosine(*side, c_t, _fold_norms(c_t))(np.arange(len(qmat))[:, None],
+                                               np.arange(len(cmat)))
+    q, probed = _probe(cs, list_ids, n_probe)
+    lists = lists.filter(F.col("list_id").isin(np.unique(probed).tolist()))
+    return _block_topk(
+        lists.select(id_col, vec_col, F.array("list_id").alias("keys")), id_col, qids, side,
+        k, _cosine_block, "cos", probes=(q, probed),
+    )
 
 
 def ivf_topk(
@@ -398,33 +499,12 @@ def ivf_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-flat search: queries probe their ``n_probe`` nearest centroid
-    lists; exact cosine re-rank within the probed lists."""
+    lists; exact cosine re-rank within the probed lists. The query batch is
+    collected once (bounded at ``_MAX_DRIVER_QUERIES``; past it this
+    raises); probes and scoring run in ``_ivf_search``."""
     assigned, centroids = ivf_assign(corpus, n_centroids, id_col, vec_col)
-    qc = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-        norm(F.col(vec_col)).alias("qn"),
-    )
-    probe_scores = qc.join(F.broadcast(centroids)).select(
-        "query_id", "qv", "qn", "list_id", cosine(F.col("qv"), F.col("centroid")).alias("cs")
-    )
-    wp = Window.partitionBy("query_id").orderBy(F.col("cs").desc(), F.col("list_id"))
-    probes = (
-        probe_scores.withColumn("pr", F.row_number().over(wp))
-        .filter(F.col("pr") <= n_probe)
-        .select("query_id", "qv", "qn", "list_id")
-    )
-    cands = probes.join(
-        assigned.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"),
-                        norm(F.col(vec_col)).alias("cn"), "list_id"),
-        "list_id",
-    ).filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = cands.select(
-        "query_id", "neighbor_id",
-        F.round(cosine_prenormed(F.col("qv"), F.col("cv"),
-                                 F.col("qn"), F.col("cn")), 6).alias("cos"),
-    ).dropDuplicates(["query_id", "neighbor_id"])
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")
+    return _ivf_search(assigned, *_centroid_matrix(centroids), queries, k, n_probe,
+                       id_col, vec_col, "ivf_topk")
 
 
 def ivf_index_write(
@@ -441,11 +521,10 @@ def ivf_index_write(
 
     Layout: ``{path}/lists`` = the assigned corpus parquet PARTITIONED BY
     list_id (each posting list is its own partition directory, so a probe
-    reads only its lists), with each vector's norm precomputed at write time;
-    ``{path}/centroids`` = the tiny centroid table."""
+    reads only its lists); ``{path}/centroids`` = the tiny centroid table."""
     assigned, centroids = ivf_assign(corpus, n_centroids, id_col, vec_col, n_iters)
     (
-        assigned.select(id_col, vec_col, "list_id", norm(F.col(vec_col)).alias("vnorm"))
+        assigned.select(id_col, vec_col, "list_id")
         # cluster rows by list BEFORE partitionBy: without this every task
         # opens a writer per list (tasks x lists small files)
         .repartition(max(1, n_centroids // 4), F.col("list_id"))
@@ -473,13 +552,10 @@ def ivf_index_append(
     every existing posting list, i.e. a full rebuild. By construction,
     append ≡ rebuilding the whole index with the same centroids over
     corpus ∪ batch (pytest-asserted)."""
-    spark = batch.sparkSession
-    rows = spark.read.parquet(f"{path}/centroids").orderBy("list_id").collect()
-    cmat = np.asarray([r["centroid"] for r in rows], dtype=np.float64)
-    cids = np.asarray([r["list_id"] for r in rows], dtype=np.int64)
+    cids, cmat = _centroid_matrix(batch.sparkSession.read.parquet(f"{path}/centroids"))
     assigned = batch.withColumn("list_id", _assign_udf(cmat, cids)(F.col(vec_col)))
     (
-        assigned.select(id_col, vec_col, "list_id", norm(F.col(vec_col)).alias("vnorm"))
+        assigned.select(id_col, vec_col, "list_id")
         .repartition(max(1, len(cids) // 4), F.col("list_id"))
         .write.partitionBy("list_id").mode("append").parquet(f"{path}/lists")
     )
@@ -494,43 +570,18 @@ def ivf_topk_indexed(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Top-k against a PERSISTED IVF index: probe selection broadcasts the
-    centroid table, then the posting-list scan reads ONLY the probed
-    ``list_id=`` partitions — static partition pruning via an explicit (and
-    tiny, ≤ n_centroids) probed-list collect, never a full index scan.
-    Bit-identical to ``ivf_topk`` over the same index build (pytest-asserted)."""
-    centroids = spark.read.parquet(f"{path}/centroids")
-    qc = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
-        norm(F.col(vec_col)).alias("qn"),
+    """Top-k against a PERSISTED IVF index: the tiny centroid table is read
+    once, probes are chosen on the driver, and the posting-list scan reads
+    ONLY the probed ``list_id=`` partitions — static partition pruning,
+    never a full index scan. The query batch is bounded as in ``ivf_topk``.
+    Reads id, vector and list_id only, so indexes written with a stored
+    ``vnorm`` column answer identically. Bit-identical to ``ivf_topk`` over
+    the same index build (pytest-asserted)."""
+    return _ivf_search(
+        spark.read.parquet(f"{path}/lists"),
+        *_centroid_matrix(spark.read.parquet(f"{path}/centroids")),
+        queries, k, n_probe, id_col, vec_col, "ivf_topk_indexed",
     )
-    probe_scores = qc.join(F.broadcast(centroids)).select(
-        "query_id", "qv", "qn", "list_id", cosine(F.col("qv"), F.col("centroid")).alias("cs")
-    )
-    wp = Window.partitionBy("query_id").orderBy(F.col("cs").desc(), F.col("list_id"))
-    probes = (
-        probe_scores.withColumn("pr", F.row_number().over(wp))
-        .filter(F.col("pr") <= n_probe)
-        .select("query_id", "qv", "qn", "list_id")
-    )
-    probed_lists = sorted(
-        r["list_id"] for r in probes.select("list_id").distinct().collect()
-    )
-    lists = spark.read.parquet(f"{path}/lists").filter(
-        F.col("list_id").isin(probed_lists)  # partition-pruned scan
-    )
-    cands = probes.join(
-        lists.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"),
-                     F.col("vnorm").alias("cn"), "list_id"),
-        "list_id",
-    ).filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = cands.select(
-        "query_id", "neighbor_id",
-        F.round(cosine_prenormed(F.col("qv"), F.col("cv"),
-                                 F.col("qn"), F.col("cn")), 6).alias("cos"),
-    ).dropDuplicates(["query_id", "neighbor_id"])
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")
 
 
 def _pairs_within_groups(

@@ -34,7 +34,9 @@ pipelines:
 
 
 def _run(*args: str) -> dict:
-    env = os.environ | {"PYTHONPATH": REPO, "SPARK_GRAFT_CPUS": "8"}
+    # the caller's SPARK_GRAFT_CPUS: more local cores than the host has only
+    # slows each subprocess down
+    env = os.environ | {"PYTHONPATH": REPO}
     out = subprocess.run(
         [sys.executable, "-m", "data_sync_tool_spark", *args],
         capture_output=True, text=True, timeout=600, env=env, cwd=REPO,
