@@ -78,15 +78,20 @@ def blockhash_sum(rowhash: Column) -> Column:
     return F.sum(rowhash)
 
 
-def blockhash_ordered(rowhash: Column, order_col: Column) -> Column:
+def blockhash_ordered(
+    rowhash: Column, order_col: Column, where: Column | None = None
+) -> Column:
     """Order-dependent block digest: md5 of rowhashes concatenated in
     ``order_col`` order (reference strategy ``hash_md5_hash``).
 
     ``collect_list`` ordering is nondeterministic under shuffle, so the sort
     happens explicitly AFTER collection via ``array_sort`` on
-    ``struct(order_col, rowhash)`` — never rely on input order.
+    ``struct(order_col, rowhash)`` — never rely on input order. Rows where
+    ``where`` is not true are left out (``collect_list`` skips NULLs), so one
+    aggregate can digest several row subsets.
     """
-    pairs = F.collect_list(F.struct(order_col.alias("o"), rowhash.cast("string").alias("h")))
+    pair = F.struct(order_col.alias("o"), rowhash.cast("string").alias("h"))
+    pairs = F.collect_list(pair if where is None else F.when(where, pair))
     ordered = F.transform(F.array_sort(pairs), lambda s: s["h"])
     return F.md5(F.array_join(ordered, ","))
 

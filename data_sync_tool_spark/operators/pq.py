@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .similarity import (
+    _CENTROIDS,
     _MAX_DRIVER_QUERIES,
     _block_topk,
     _collect_queries,
@@ -55,6 +56,11 @@ from .similarity import (
     _refine,
     _topk_per_query,
 )
+
+
+# A persisted index's codebook table: read with its schema, a parquet read
+# runs no schema-inference job.
+_BOOKS = "sub int, code int, word array<double>"
 
 
 def _normalize(m: np.ndarray) -> np.ndarray:
@@ -374,7 +380,7 @@ def pq_index_write(
         for c in range(kk)
     ]
     spark.createDataFrame(
-        rows, "sub int, code int, word array<double>"
+        rows, _BOOKS
     ).write.mode("overwrite").parquet(f"{path}/books")
     pq_encode(corpus, books, id_col, vec_col).write.mode("overwrite").parquet(
         f"{path}/codes"
@@ -382,7 +388,7 @@ def pq_index_write(
 
 
 def pq_read_books(spark, path: str) -> np.ndarray:
-    rows = spark.read.parquet(f"{path}/books").collect()
+    rows = spark.read.schema(_BOOKS).parquet(f"{path}/books").collect()
     if not rows:
         raise ValueError(f"no PQ codebooks at {path}/books")
     m = max(r["sub"] for r in rows) + 1
@@ -514,12 +520,12 @@ def ivfpq_index_write(
             for sub in range(mm)
             for c in range(kk)
         ],
-        "sub int, code int, word array<double>",
+        _BOOKS,
     ).write.mode("overwrite").parquet(f"{path}/books")
 
 
 def _load_ivfpq(spark, path: str) -> tuple[np.ndarray, np.ndarray]:
-    cmat = _centroid_matrix(spark.read.parquet(f"{path}/centroids"))[1]
+    cmat = _centroid_matrix(spark.read.schema(_CENTROIDS).parquet(f"{path}/centroids"))[1]
     return cmat, pq_read_books(spark, path)
 
 

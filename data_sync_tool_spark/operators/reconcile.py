@@ -26,10 +26,12 @@ Semantics parity (each cites the reference):
 Where this is NOT a port (the Spark-first differences):
 - The reference recurses block-by-block, issuing one SQL round-trip per
   mismatched block per side (single-threaded; TODO at ``:386``). Here each
-  LEVEL is ONE distributed aggregation per side — ``groupBy(floor(x/interval))``
-  with map-side partial aggregation — and the drilldown filter is a broadcast
-  semi-join against the (small) set of mismatched parent buckets. Total Spark
-  jobs ≤ 2×len(intervals), independent of how many blocks mismatch.
+  LEVEL is ONE distributed aggregation over both sides — their rows tagged
+  by side, unioned, ``groupBy(floor(x/interval))`` with map-side partial
+  aggregation, per-side counts and hashes masked by side — and the drilldown
+  filter is a broadcast semi-join against the (small) set of mismatched
+  parent buckets. Level 1 also yields the data range: one action per level,
+  however many blocks mismatch.
 - Bucket ids stay NUMERIC end-to-end; block [start,end) is reconstructed by
   arithmetic, eliminating the reference's string-label decode
   (``to_blocks``, ``:211-252`` — flagged as drift-prone in SURVEY §7).
@@ -41,6 +43,7 @@ Where this is NOT a port (the Spark-first differences):
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Literal
 
 from pyspark.sql import Column, DataFrame
@@ -140,100 +143,107 @@ def _partition_value(cfg: ReconcileConfig) -> Column:
 
 
 def _row_hash(cfg: ReconcileConfig, df: DataFrame) -> Column:
-    if cfg.hash_column:
-        h = F.col(cfg.hash_column)
-        if cfg.strategy != MD5_SUM_HASH:
-            return h  # order-dependent strategy digests the value as a string
-        # md5sum_hash sums rowhashes, so the precomputed column must be
-        # numeric. A hex md5 STRING would cast to NULL under Spark's non-ANSI
-        # cast — sum(NULL) on both sides reads as "every block matches", the
-        # silent-wrong failure mode. Convert hex explicitly (first-8-hex
-        # prefix, exactly rowhash_int32's encoding) or fail loudly.
-        dtype = df.schema[cfg.hash_column].dataType
-        if isinstance(dtype, T.StringType):
-            return F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
-        if isinstance(dtype, T.NumericType):
-            return h
-        raise ValueError(
-            f"hash_column {cfg.hash_column!r} must be numeric or a hex md5 "
-            f"string for strategy {MD5_SUM_HASH}; got {dtype.simpleString()}"
-        )
-    cols = [F.col(c) for c in cfg.fields]
-    return rowhash_int32(*cols) if cfg.strategy == MD5_SUM_HASH else rowhash_md5(*cols)
+    """One side's row hash, cast to the type its block hash digests (decimal
+    for the sum, string for the ordered md5): a union that widens one side's
+    columns cannot change that side's hash."""
+    to = "decimal(38,0)" if cfg.strategy == MD5_SUM_HASH else "string"
+    if not cfg.hash_column:
+        cols = [F.col(c) for c in cfg.fields]
+        rh = rowhash_int32(*cols) if cfg.strategy == MD5_SUM_HASH else rowhash_md5(*cols)
+        return rh.cast(to)
+    h = F.col(cfg.hash_column)
+    dtype = df.schema[cfg.hash_column].dataType
+    if cfg.strategy != MD5_SUM_HASH or isinstance(dtype, T.NumericType):
+        return h.cast(to)
+    # md5sum_hash sums rowhashes, so the precomputed column must be numeric.
+    # A hex md5 STRING would cast to NULL under Spark's non-ANSI cast —
+    # sum(NULL) on both sides reads as "every block matches", the
+    # silent-wrong failure mode. Convert hex explicitly (first-8-hex prefix,
+    # exactly rowhash_int32's encoding) or fail loudly.
+    if isinstance(dtype, T.StringType):
+        return F.conv(F.substring(h, 1, 8), 16, 10).cast("long").cast(to)
+    raise ValueError(
+        f"hash_column {cfg.hash_column!r} must be numeric or a hex md5 "
+        f"string for strategy {MD5_SUM_HASH}; got {dtype.simpleString()}"
+    )
 
 
-def _block_hash(cfg: ReconcileConfig) -> Column:
+def _block_hash(cfg: ReconcileConfig, where: Column) -> Column:
+    """Block hash of the rows where ``where`` holds: masked rows are NULL to
+    ``sum``/``collect_list``, which skip NULLs, so a side's hash is
+    bit-identical to digesting that side alone."""
     rh = F.col("_rh")
     if cfg.strategy == MD5_SUM_HASH:
         # decimal(38,0) accumulator: overflow-proof for any block size
-        return blockhash_sum(rh.cast("decimal(38,0)")).cast("string")
-    if not cfg.order_column:
+        return blockhash_sum(F.when(where, rh)).cast("string")
+    return blockhash_ordered(rh, F.col("_oc"), where)
+
+
+def _tagged(cfg: ReconcileConfig, *sides: DataFrame) -> DataFrame:
+    """The sides' projections ``(side, x, _rh[, _oc])`` in one frame, ``side``
+    = argument position (0 = source, 1 = sink). An uninitialized side (no
+    partition column, e.g. a sink before its first load) adds no rows."""
+    if cfg.strategy == HASH_MD5_HASH and not cfg.order_column:
         raise ValueError("hash_md5_hash requires order_column")
-    return blockhash_ordered(rh, F.col("_oc"))
+    oc = [F.col(cfg.order_column).alias("_oc")] if cfg.strategy == HASH_MD5_HASH else []
+    parts = [
+        df.select(F.lit(side).alias("side"), _partition_value(cfg).alias("x"),
+                  _row_hash(cfg, df).alias("_rh"), *oc)
+        for side, df in enumerate(sides) if cfg.partition_column in df.columns
+    ]
+    if parts:
+        return reduce(DataFrame.unionByName, parts)
+    rh = "decimal(38,0)" if cfg.strategy == MD5_SUM_HASH else "string"
+    return local_frame(sides[0].sparkSession, [],
+                       f"side int, x long, _rh {rh}" + (", _oc string" if oc else ""))
 
 
-def get_data_range(
-    source_df: DataFrame, sink_df: DataFrame, cfg: ReconcileConfig
-) -> tuple[int, int]:
-    """[start, end) over source ∪ sink with +1 exclusive-end buffer, clamped
-    by user bounds (``get_data_range``, ``engine/reconcile.py:96-132``)."""
-    if cfg.start is not None and cfg.end is not None:
-        return cfg.start, cfg.end
-    lo, hi = None, None
-    for df in (source_df, sink_df):
-        if cfg.partition_column not in df.columns:
-            continue  # uninitialized side (e.g. empty sink before first load)
-        r = df.agg(
-            F.min(_partition_value(cfg)).alias("lo"), F.max(_partition_value(cfg)).alias("hi")
-        ).first()
-        if r["lo"] is not None:
-            lo = r["lo"] if lo is None else min(lo, r["lo"])
-            hi = r["hi"] if hi is None else max(hi, r["hi"])
-    if lo is None:
-        raise ValueError("both sides empty: nothing to reconcile")
-    hi = hi + 1  # exclusive end buffer (+1s for datetime epoch / +1 for int)
-    if cfg.start is not None:
-        lo = max(cfg.start, lo)
-    if cfg.end is not None:
-        hi = min(cfg.end, hi)
-    return int(lo), int(hi)
+def _in_range(lo: int | None, hi: int | None) -> Column:
+    x = F.col("x")
+    return (x.isNotNull() if lo is None else x >= lo) & (F.lit(True) if hi is None else x < hi)
+
+
+def _level(rows: DataFrame, cfg: ReconcileConfig, interval: int,
+           keep: Column | None = None) -> DataFrame:
+    """One ladder level of side-tagged rows in ONE ``groupBy(bucket)``: the
+    per-side ``s_rows``/``s_hash``/``k_*`` give the status — N (count+hash
+    equal), M (both, differ), A (source-only), D (sink-only) — sized by the
+    larger count as ``num_rows`` (``calculate_block_status``,
+    ``engine/reconcile.py:258-281``). Rows failing ``keep`` land in a NULL
+    bucket, with a NULL status, that only feeds the ``x_lo``/``x_hi`` range."""
+    bucket = F.floor(F.col("x") / F.lit(interval)).cast("long")
+    src, snk = F.col("side") == 0, F.col("side") == 1
+    d = rows.groupBy((bucket if keep is None else F.when(keep, bucket)).alias("bucket")).agg(
+        F.count(F.when(src, 1)).alias("s_rows"), F.count(F.when(snk, 1)).alias("k_rows"),
+        _block_hash(cfg, src).alias("s_hash"), _block_hash(cfg, snk).alias("k_hash"),
+        F.min("x").alias("x_lo"), F.max("x").alias("x_hi"),
+    )
+    s_rows, k_rows = F.col("s_rows"), F.col("k_rows")
+    status = (
+        F.when(F.col("bucket").isNull(), F.lit(None))
+        .when(s_rows == 0, F.lit("D"))
+        .when(k_rows == 0, F.lit("A"))
+        .when((s_rows == k_rows) & (F.col("s_hash") == F.col("k_hash")), F.lit("N"))
+        .otherwise(F.lit("M"))
+    )
+    return d.select("*", F.greatest(s_rows, k_rows).alias("num_rows"), status.alias("status"))
 
 
 def block_digest(df: DataFrame, cfg: ReconcileConfig, interval: int,
                  lo: int, hi: int) -> DataFrame:
-    """One side's per-bucket digest at one ladder level:
-    ``groupBy(floor(x/interval)) → (num_rows, hash)``. A single distributed
-    hash aggregate — the Spark realization of ``build_block_hash_query``."""
-    if cfg.partition_column not in df.columns:  # uninitialized side
-        return local_frame(df.sparkSession, [], "bucket long, num_rows long, hash string")
-    x = _partition_value(cfg)
-    pre = df.filter((x >= F.lit(lo)) & (x < F.lit(hi))).select(
-        F.floor(x / F.lit(interval)).cast("long").alias("bucket"),
-        _row_hash(cfg, df).alias("_rh"),
-        *( [F.col(cfg.order_column).alias("_oc")] if cfg.strategy == HASH_MD5_HASH else [] ),
-    )
-    return pre.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("num_rows"), _block_hash(cfg).alias("hash")
-    )
+    """One side's per-bucket digest over [lo, hi) at one ladder level:
+    ``groupBy(floor(x/interval)) → (num_rows, hash)`` — the Spark
+    realization of ``build_block_hash_query``."""
+    d = _level(_tagged(cfg, df).filter(_in_range(lo, hi)), cfg, interval)
+    return d.select("bucket", F.col("s_rows").alias("num_rows"), F.col("s_hash").alias("hash"))
 
 
-def _status_join(src: DataFrame, snk: DataFrame) -> DataFrame:
-    """Full-outer alignment on bucket → N/M/A/D + larger-count sizing
-    (``calculate_block_status``, ``engine/reconcile.py:258-281``)."""
-    s = src.select("bucket", F.col("num_rows").alias("s_rows"), F.col("hash").alias("s_hash"))
-    k = snk.select("bucket", F.col("num_rows").alias("k_rows"), F.col("hash").alias("k_hash"))
-    j = s.join(k, "bucket", "full_outer")
-    status = (
-        F.when(F.col("s_rows").isNull(), F.lit("D"))
-        .when(F.col("k_rows").isNull(), F.lit("A"))
-        .when(
-            (F.col("s_rows") == F.col("k_rows")) & (F.col("s_hash") == F.col("k_hash")),
-            F.lit("N"),
-        )
-        .otherwise(F.lit("M"))
-    )
-    num_rows = F.greatest(F.coalesce("s_rows", F.lit(0)), F.coalesce("k_rows", F.lit(0)))
-    return j.select("bucket", num_rows.alias("num_rows"), status.alias("status"))
+def block_status(source_df: DataFrame, sink_df: DataFrame, cfg: ReconcileConfig,
+                 interval: int, lo: int | None = None, hi: int | None = None) -> DataFrame:
+    """Both sides' (bucket, num_rows, status) over [lo, hi) at one ladder
+    level, in one aggregate."""
+    rows = _tagged(cfg, source_df, sink_df).filter(_in_range(lo, hi))
+    return _level(rows, cfg, interval).select("bucket", "num_rows", "status")
 
 
 @dataclass
@@ -252,80 +262,76 @@ class BlockPlan:
         return iter((self.blocks, self.statuses))
 
 
-def build_blocks(
-    source_df: DataFrame,
-    sink_df: DataFrame,
-    cfg: ReconcileConfig,
-    max_level: int | None = None,
-    collect_settled: bool = True,
-) -> BlockPlan:
-    """The full drilldown: per ladder level, digest both sides ONCE (filtered
-    to mismatched parents via broadcast semi-join), emit settled blocks,
-    descend into oversized M/A blocks. Returns merge_adjacent-coalesced
-    blocks+statuses ordered by range start, exactly like ``build_blocks`` +
-    ``merge_adjacent`` in the reference.
+def build_blocks(source_df: DataFrame, sink_df: DataFrame, cfg: ReconcileConfig,
+                 max_level: int | None = None, collect_settled: bool = True) -> BlockPlan:
+    """The full drilldown: per ladder level, ONE aggregate over both sides
+    (rows filtered to mismatched parents via broadcast semi-join), emit
+    settled blocks, descend into oversized M/A blocks. Returns
+    merge_adjacent-coalesced blocks+statuses ordered by range start, exactly
+    like ``build_blocks`` + ``merge_adjacent`` in the reference.
+
+    Level 1 reads every row and also yields the data range [lo, hi) of
+    ``get_data_range`` (``engine/reconcile.py:96-132``) as per-bucket
+    min/max, rows outside the user bounds in a NULL bucket (both bounds set:
+    the range is the bounds).
 
     ``collect_settled=False`` is the 100-TB shape: matched (N) blocks are
-    counted by a distributed aggregate instead of ``collect()``-ing one driver
-    row per bucket — at a fine ladder over a mostly-in-sync table the N rows
-    are ~the whole table's bucket count, while M/A/D + drill rows stay
-    diff-sized. The repair plan only needs M/A/D blocks anyway."""
+    counted by a distributed aggregate (which also returns the range)
+    instead of ``collect()``-ing one driver row per bucket — at a fine
+    ladder over a mostly-in-sync table the N rows are ~the whole table's
+    bucket count, while M/A/D + drill rows stay diff-sized. The repair plan
+    only needs M/A/D blocks anyway."""
     intervals = cfg.intervals()
     max_level = len(intervals) if max_level is None else min(max_level, len(intervals))
-    lo, hi = get_data_range(source_df, sink_df, cfg)
-    spark = source_df.sparkSession
-
+    rows = _tagged(cfg, source_df, sink_df)
+    bounded = cfg.start is not None and cfg.end is not None
+    lo, hi = cfg.start, cfg.end
     emitted: list[Block] = []
-    n_blocks_agg = 0
-    n_rows_agg = 0
+    n_blocks_agg = n_rows_agg = 0
     drill_ids: list[int] | None = None  # parent bucket ids to descend into
 
     for level0, interval in enumerate(intervals[:max_level]):
         level = level0 + 1
-        src_d = block_digest(source_df, cfg, interval, lo, hi)
-        snk_d = block_digest(sink_df, cfg, interval, lo, hi)
-        if drill_ids is not None:
-            # keep only buckets whose PARENT mismatched. Child buckets nest
-            # exactly (intervals() guarantees child | parent), and the
-            # mismatch set rides a broadcast semi-join — a literal isin()
-            # list would bloat the plan when many blocks mismatch.
-            ratio = intervals[level0 - 1] // interval
-            parents = F.broadcast(
-                local_frame(spark, [(int(i),) for i in drill_ids], "pid long")
-            )
-            cond = F.floor(F.col("bucket") / F.lit(ratio)) == F.col("pid")
-            src_d = src_d.join(parents, on=cond, how="left_semi")
-            snk_d = snk_d.join(parents, on=cond, how="left_semi")
-        is_last = level == max_level
-        needs_drill = (
-            F.col("status").isin("M", "A")
-            & (F.col("num_rows") > F.lit(cfg.max_block_size))
-            & F.lit(not is_last)
-        )
-        status = _status_join(src_d, snk_d).withColumn("drill", needs_drill)
-        if collect_settled:
-            rows = status.collect()
+        if drill_ids is None:  # with both bounds set, read only the rows inside
+            d = _level(rows.filter(_in_range(lo, hi)), cfg, interval) if bounded else \
+                _level(rows, cfg, interval, _in_range(lo, hi))
         else:
-            status = status.persist()
-            rows = status.filter((F.col("status") != "N") | F.col("drill")).collect()
-            n_agg = status.filter(F.col("status") == "N").agg(
-                F.count(F.lit(1)).alias("nb"), F.coalesce(F.sum("num_rows"), F.lit(0)).alias("nr")
+            # keep only rows whose PARENT bucket mismatched. Child buckets
+            # nest exactly (intervals() guarantees child | parent); the
+            # mismatch set rides a broadcast semi-join, not an isin() list.
+            pids = local_frame(rows.sparkSession, [(int(i),) for i in drill_ids], "pid long")
+            cond = F.floor(F.col("x") / F.lit(intervals[level0 - 1])) == F.col("pid")
+            d = _level(rows.filter(_in_range(lo, hi)).join(F.broadcast(pids), cond, "left_semi"),
+                       cfg, interval)
+        is_last = level == max_level
+        d = d.withColumn("drill", F.col("status").isin("M", "A") & F.lit(not is_last)
+                         & (F.col("num_rows") > F.lit(cfg.max_block_size)))
+        if collect_settled:
+            got = ranges = d.collect()
+        else:  # ONE action: the diff-sized M/A/D + drill rows, N totals, range
+            settled = F.col("status") == "N"
+            n_agg = d.agg(
+                F.collect_list(F.when(~settled, F.struct(*d.columns))).alias("rows"),
+                F.count(F.when(settled, 1)).alias("nb"),
+                F.coalesce(F.sum(F.when(settled, F.col("num_rows"))), F.lit(0)).alias("nr"),
+                F.min("x_lo").alias("x_lo"), F.max("x_hi").alias("x_hi"),
             ).first()
-            status.unpersist()
+            got, ranges = n_agg["rows"], [n_agg]
             n_blocks_agg += n_agg["nb"]
             n_rows_agg += int(n_agg["nr"])
-        emitted.extend(
-            Block(
-                start=max(r["bucket"] * interval, lo),
-                end=min((r["bucket"] + 1) * interval, hi),
-                level=level,
-                num_rows=r["num_rows"],
-                status=r["status"],
-            )
-            for r in rows
-            if not r["drill"]
-        )
-        drill_ids = [r["bucket"] for r in rows if r["drill"]]
+        if level == 1 and not bounded:  # +1 exclusive end, clamped by the user bounds
+            xs = [r for r in ranges if r["x_lo"] is not None]
+            if not xs:
+                raise ValueError("both sides empty: nothing to reconcile")
+            lo, hi = min(r["x_lo"] for r in xs), max(r["x_hi"] for r in xs) + 1
+            lo = lo if cfg.start is None else max(cfg.start, lo)
+            hi = hi if cfg.end is None else min(cfg.end, hi)
+        emitted += [
+            Block(max(r["bucket"] * interval, lo), min((r["bucket"] + 1) * interval, hi),
+                  level, r["num_rows"], r["status"])
+            for r in got if r["bucket"] is not None and not r["drill"]
+        ]
+        drill_ids = [r["bucket"] for r in got if r["drill"]]
         if is_last or not drill_ids:
             break
 
@@ -372,21 +378,15 @@ def status_counts(blocks: list[Block] | BlockPlan) -> dict[str, int]:
     return out
 
 
-def find_diff_timegroups(
-    source_df: DataFrame,
-    sink_df: DataFrame,
-    cfg: ReconcileConfig,
-    interval: int | None = None,
-) -> DataFrame:
+def find_diff_timegroups(source_df: DataFrame, sink_df: DataFrame, cfg: ReconcileConfig,
+                         interval: int | None = None) -> DataFrame:
     """Single-level per-timegroup digest diff (``engine/diff.py:3-5``): one
-    digest per side at one interval, full-outer status join, return only the
-    divergent groups — the reference's earlier non-hierarchical strategy.
-    Output: (bucket, num_rows, status≠N)."""
+    aggregate over both sides at one interval within the user bounds, only
+    the divergent groups — the reference's earlier non-hierarchical
+    strategy. Output: (bucket, num_rows, status≠N). Lazy: it runs no job."""
     interval = interval or cfg.intervals()[0]
-    lo, hi = get_data_range(source_df, sink_df, cfg)
-    s = block_digest(source_df, cfg, interval, lo, hi)
-    k = block_digest(sink_df, cfg, interval, lo, hi)
-    return _status_join(s, k).filter(F.col("status") != "N")
+    diff = block_status(source_df, sink_df, cfg, interval, cfg.start, cfg.end)
+    return diff.filter(F.col("status") != "N")
 
 
 # ----------------------------------------------------------------- repair

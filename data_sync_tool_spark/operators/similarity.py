@@ -45,6 +45,9 @@ _OVER_BOUND = (
 # float64 elements per score block in ``_block_topk`` (≤ ~64 MB), the same
 # budget ``_pairs_within_groups`` uses for its gram chunks.
 _SCORE_BLOCK_ELEMS = 8_000_000
+# A persisted index's centroid table: read with its schema, a parquet read
+# runs no schema-inference job.
+_CENTROIDS = "list_id long, centroid array<double>"
 
 
 def _collect_queries(
@@ -443,8 +446,7 @@ def ivf_assign(
     # or broadcasting it starts no Python worker
     centroids_df = local_frame(
         corpus.sparkSession,
-        [(int(i), [float(x) for x in cmat[i]]) for i in range(len(cmat))],
-        "list_id long, centroid array<double>",
+        [(int(i), [float(x) for x in cmat[i]]) for i in range(len(cmat))], _CENTROIDS,
     )
     assigned = corpus.withColumn("list_id", _assign_udf(cmat, cids)(F.col(vec_col)))
     return assigned, centroids_df
@@ -552,7 +554,8 @@ def ivf_index_append(
     every existing posting list, i.e. a full rebuild. By construction,
     append ≡ rebuilding the whole index with the same centroids over
     corpus ∪ batch (pytest-asserted)."""
-    cids, cmat = _centroid_matrix(batch.sparkSession.read.parquet(f"{path}/centroids"))
+    cids, cmat = _centroid_matrix(
+        batch.sparkSession.read.schema(_CENTROIDS).parquet(f"{path}/centroids"))
     assigned = batch.withColumn("list_id", _assign_udf(cmat, cids)(F.col(vec_col)))
     (
         assigned.select(id_col, vec_col, "list_id")
@@ -579,7 +582,7 @@ def ivf_topk_indexed(
     the same index build (pytest-asserted)."""
     return _ivf_search(
         spark.read.parquet(f"{path}/lists"),
-        *_centroid_matrix(spark.read.parquet(f"{path}/centroids")),
+        *_centroid_matrix(spark.read.schema(_CENTROIDS).parquet(f"{path}/centroids")),
         queries, k, n_probe, id_col, vec_col, "ivf_topk_indexed",
     )
 

@@ -23,8 +23,8 @@ from .operators.reconcile import (
     HASH_MD5_HASH,
     MD5_SUM_HASH,
     ReconcileConfig,
-    _status_join,
     block_digest,
+    block_status,
 )
 from .plans.query import Field, Filter, Join, Pivot, Query, Unpivot, build_dataframe
 from .sources.registry import read_table
@@ -686,9 +686,7 @@ ORACLE_RECON_DIGEST_ORDERED = f"""
 
 def q_reconcile_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     src, snk = _recon_sides(spark, sf_dir)
-    s = block_digest(src, _RECON_CFG, 1000, _RECON_LO, _RECON_HI)
-    k = block_digest(snk, _RECON_CFG, 1000, _RECON_LO, _RECON_HI)
-    return _status_join(s, k).orderBy("bucket")
+    return block_status(src, snk, _RECON_CFG, 1000, _RECON_LO, _RECON_HI).orderBy("bucket")
 
 
 ORACLE_RECON_STATUS = f"""

@@ -35,7 +35,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .lake import LSN_COL, LakeTable, MergeResult
@@ -142,14 +142,14 @@ def refresh_agg_view(
     feed = src.changes_since(-1 if last is None else last, max_lsn=max_lsn)
     if not feed.columns:
         return None
-    # ONE pass over the pruned feed serves both the head-lsn probe and the
-    # affected-group set: the former shape (a plain max() job, then a
-    # distinct-groups job) executed the feed scan twice per refresh. The
-    # aggregate is tiny (one row per touched group) and checkpointed once;
-    # every later consumer (probe collect, recompute semi-join, vanished-
-    # group anti-join, head probe) rereads the materialized rows.
-    aff = feed.groupBy(group).agg(F.max(LSN_COL).alias("_hi")).localCheckpoint()
-    head = aff.agg(F.max("_hi")).first()[0]
+    # ONE pass over the pruned feed: the affected groups (one row per touched
+    # group), checkpointed once for every later consumer (probe collect,
+    # recompute semi-join, vanished-group anti-join), observing the head lsn
+    # on the way (the plan's top node, so no rule drops it over an empty feed).
+    obs = Observation()
+    aff = feed.groupBy(group).agg(F.max(LSN_COL).alias("_hi"))
+    aff = aff.observe(obs, F.max("_hi").alias("head")).localCheckpoint()
+    head = obs.get["head"]
     if head is None:
         return None
     hi = int(head)

@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import functions as F
+from pyspark.sql import Observation, functions as F
 
 from .lake import BUCKET_COL, LSN_COL, SIGN_COL, LakeTable, MergeResult
 
@@ -59,11 +59,11 @@ def sync_step(
     """Apply one incremental sync step from ``src`` into ``dst``; returns the
     commit, or None when there is nothing new.
 
-    Costs two jobs over the PRUNED feed (a max-lsn probe that also gates the
-    empty case, then the merge). The probe reads row-level ``_lsn`` rather
-    than trusting manifest bounds: rewrite commits (compact/rollback) carry
-    conservative file bounds, and an inflated watermark would silently skip
-    source rows landing under it.
+    Reads the PRUNED feed once: its checkpoint observes the head lsn (a max
+    over row-level ``_lsn``, which also gates the empty case) and the merge
+    reads the checkpoint. Row-level, not manifest bounds: rewrite commits
+    (compact/rollback) carry conservative file bounds, and an inflated
+    watermark would silently skip source rows landing under it.
 
     ``row_filter`` (a boolean Column over source columns) makes ``dst`` a
     FILTERED replica — the ClickHouse materialized-view-WHERE shape. A
@@ -91,12 +91,12 @@ def sync_step(
     feed = src.changes_since(last, max_lsn=max_lsn)
     if not feed.columns:  # source has never committed
         return None
-    # materialize the pruned feed once: the head-lsn probe below and the
-    # merge's dedupe+write otherwise each execute the feed scan. The
-    # checkpoint is batch-sized (O(new commits) — the sync contract), never
-    # table-sized.
-    feed = feed.localCheckpoint()
-    hi = feed.agg(F.max(LSN_COL)).first()[0]
+    # materialize the pruned feed once (batch-sized: O(new commits), never
+    # table-sized), observing its head lsn on the way; the observe is the
+    # checkpointed plan's top node, so no rule drops it over an empty feed.
+    obs = Observation()
+    feed = feed.observe(obs, F.max(LSN_COL).alias("hi")).localCheckpoint()
+    hi = obs.get["hi"]
     if hi is None:
         return None
     batch = feed.drop(

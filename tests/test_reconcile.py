@@ -15,18 +15,28 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql import types as T
 
+from data_sync_tool_spark.functions.hashes import (
+    blockhash_ordered,
+    blockhash_sum,
+    rowhash_int32,
+    rowhash_md5,
+)
 from data_sync_tool_spark.operators.reconcile import (
     HASH_MD5_HASH,
     MD5_SUM_HASH,
     Block,
+    BlockPlan,
     ReconcileConfig,
+    _partition_value,
     build_blocks,
-    get_data_range,
+    find_diff_timegroups,
     merge_adjacent,
     plan_repair,
     status_counts,
 )
+from data_sync_tool_spark.session import local_frame
 from data_sync_tool_spark.sources.lake import LakeTable
 
 GOLDEN = {"A": 10_000, "D": 10_000, "N": 10_437, "M": 9_563}
@@ -142,11 +152,16 @@ def test_precomputed_hash_column(spark, source, sink):
 
 
 def test_data_range_union_and_clamp(spark, source, sink):
-    cfg = _cfg()
-    lo, hi = get_data_range(source, sink, cfg)
-    assert (lo, hi) == (1, 40_001)  # union of sides + exclusive-end +1
-    lo, hi = get_data_range(source, sink, _cfg(start=5_000, end=12_000))
-    assert (lo, hi) == (5_000, 12_000)
+    """The level-1 aggregate yields the data range: the plan spans the union
+    of the sides with an exclusive-end +1, clamped by the user bounds."""
+    def span(cfg):
+        blocks = build_blocks(source, sink, cfg).blocks
+        return blocks[0].start, blocks[-1].end
+
+    assert _ref_range(source, sink, _cfg()) == (1, 40_001)
+    assert span(_cfg(max_block_size=100_000)) == (1, 40_001)
+    assert span(_cfg(max_block_size=100_000, start=5_000, end=12_000)) == (5_000, 12_000)
+    assert span(_cfg(max_block_size=100_000, start=5_000)) == (5_000, 40_001)
 
 
 def test_merge_adjacent_reference_semantics():
@@ -294,3 +309,226 @@ def test_str_partition_column_hash_drilldown(spark, tmp_path):
     lake.merge_into(changes, batch_id="repair")
     c2 = status_counts(build_blocks(src, lake.read().drop("_lsn"), cfg2))
     assert c2["M"] == 0 and c2["A"] == 0 and c2["D"] == 0 and c2["N"] == n
+
+
+# ------------------------------------------------- reference-equality tests
+# The two-pass plan build — a min/max range job per side, then per ladder
+# level one digest per side aligned by a full-outer join — rebuilt here as
+# the reference that the one-aggregate-per-level ``build_blocks`` must match
+# exactly: same blocks, statuses and settled N totals.
+def _ref_row_hash(cfg, df):
+    if cfg.hash_column:
+        h = F.col(cfg.hash_column)
+        if cfg.strategy != MD5_SUM_HASH:
+            return h
+        if isinstance(df.schema[cfg.hash_column].dataType, T.StringType):
+            return F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
+        return h
+    cols = [F.col(c) for c in cfg.fields]
+    return rowhash_int32(*cols) if cfg.strategy == MD5_SUM_HASH else rowhash_md5(*cols)
+
+
+def _ref_range(source_df, sink_df, cfg):
+    if cfg.start is not None and cfg.end is not None:
+        return cfg.start, cfg.end
+    lo, hi = None, None
+    for df in (source_df, sink_df):
+        if cfg.partition_column not in df.columns:
+            continue
+        x = _partition_value(cfg)
+        r = df.agg(F.min(x).alias("lo"), F.max(x).alias("hi")).first()
+        if r["lo"] is not None:
+            lo = r["lo"] if lo is None else min(lo, r["lo"])
+            hi = r["hi"] if hi is None else max(hi, r["hi"])
+    if lo is None:
+        raise ValueError("both sides empty: nothing to reconcile")
+    hi = hi + 1
+    if cfg.start is not None:
+        lo = max(cfg.start, lo)
+    if cfg.end is not None:
+        hi = min(cfg.end, hi)
+    return int(lo), int(hi)
+
+
+def _ref_digest(df, cfg, interval, lo, hi):
+    if cfg.partition_column not in df.columns:
+        return local_frame(df.sparkSession, [], "bucket long, num_rows long, hash string")
+    x = _partition_value(cfg)
+    ordered = cfg.strategy == HASH_MD5_HASH
+    pre = df.filter((x >= F.lit(lo)) & (x < F.lit(hi))).select(
+        F.floor(x / F.lit(interval)).cast("long").alias("bucket"),
+        _ref_row_hash(cfg, df).alias("_rh"),
+        *([F.col(cfg.order_column).alias("_oc")] if ordered else []),
+    )
+    h = (blockhash_ordered(F.col("_rh"), F.col("_oc")) if ordered
+         else blockhash_sum(F.col("_rh").cast("decimal(38,0)")).cast("string"))
+    return pre.groupBy("bucket").agg(F.count(F.lit(1)).alias("num_rows"), h.alias("hash"))
+
+
+def _ref_status(src, snk):
+    s = src.select("bucket", F.col("num_rows").alias("s_rows"), F.col("hash").alias("s_hash"))
+    k = snk.select("bucket", F.col("num_rows").alias("k_rows"), F.col("hash").alias("k_hash"))
+    status = (
+        F.when(F.col("s_rows").isNull(), F.lit("D"))
+        .when(F.col("k_rows").isNull(), F.lit("A"))
+        .when((F.col("s_rows") == F.col("k_rows")) & (F.col("s_hash") == F.col("k_hash")),
+              F.lit("N"))
+        .otherwise(F.lit("M"))
+    )
+    num_rows = F.greatest(F.coalesce("s_rows", F.lit(0)), F.coalesce("k_rows", F.lit(0)))
+    return s.join(k, "bucket", "full_outer").select(
+        "bucket", num_rows.alias("num_rows"), status.alias("status"))
+
+
+def _ref_plans(source_df, sink_df, cfg):
+    """{collect_settled: BlockPlan} of the reference. N blocks never drill,
+    so the collect_settled=False plan is the same emitted list without its N
+    blocks, which it counts instead."""
+    spark = source_df.sparkSession
+    intervals = cfg.intervals()
+    lo, hi = _ref_range(source_df, sink_df, cfg)
+    emitted, drill_ids = [], None
+    for level0, interval in enumerate(intervals):
+        level = level0 + 1
+        src_d = _ref_digest(source_df, cfg, interval, lo, hi)
+        snk_d = _ref_digest(sink_df, cfg, interval, lo, hi)
+        if drill_ids is not None:
+            ratio = intervals[level0 - 1] // interval
+            parents = F.broadcast(local_frame(spark, [(i,) for i in drill_ids], "pid long"))
+            cond = F.floor(F.col("bucket") / F.lit(ratio)) == F.col("pid")
+            src_d = src_d.join(parents, on=cond, how="left_semi")
+            snk_d = snk_d.join(parents, on=cond, how="left_semi")
+        is_last = level == len(intervals)
+        rows = _ref_status(src_d, snk_d).collect()
+        drill = [r["status"] in ("M", "A") and r["num_rows"] > cfg.max_block_size
+                 and not is_last for r in rows]
+        emitted += [
+            Block(max(r["bucket"] * interval, lo), min((r["bucket"] + 1) * interval, hi),
+                  level, r["num_rows"], r["status"])
+            for r, dr in zip(rows, drill) if not dr
+        ]
+        drill_ids = [r["bucket"] for r, dr in zip(rows, drill) if dr]
+        if is_last or not drill_ids:
+            break
+    emitted.sort(key=lambda b: (b.start, b.end, b.level))
+    settled = [b for b in emitted if b.status == "N"]
+    return {
+        True: BlockPlan(*merge_adjacent(emitted, cfg.max_block_size)),
+        False: BlockPlan(*merge_adjacent([b for b in emitted if b.status != "N"],
+                                         cfg.max_block_size),
+                         len(settled), sum(b.num_rows for b in settled)),
+    }
+
+
+def _ref_diff_timegroups(source_df, sink_df, cfg, interval):
+    lo, hi = _ref_range(source_df, sink_df, cfg)
+    s = _ref_digest(source_df, cfg, interval, lo, hi)
+    k = _ref_digest(sink_df, cfg, interval, lo, hi)
+    return _ref_status(s, k).filter(F.col("status") != "N")
+
+
+def _assert_plans_match(src, snk, cfg):
+    want = _ref_plans(src, snk, cfg)
+    for collect_settled in (True, False):
+        got = build_blocks(src, snk, cfg, collect_settled=collect_settled)
+        assert got == want[collect_settled], (cfg, collect_settled)
+
+
+def _small_side(spark, n, mod, id_type="int"):
+    """ids [0, n) minus a gap [1000, 1500): int/str/datetime partition
+    columns plus a numeric and a hex-string precomputed hash."""
+    df = spark.range(n).filter((F.col("id") < 1_000) | (F.col("id") >= 1_500))
+    v = F.concat(F.lit("v"), (F.col("id") % mod).cast("string"))
+    return df.select(
+        F.col("id").cast(id_type).alias("id"), v.alias("v"),
+        F.format_string("u-%06d", F.col("id")).alias("uid"),
+        F.timestamp_seconds(F.lit(1_700_000_000) + F.col("id") * 37).alias("ts"),
+        F.pmod(rowhash_int32(F.col("id"), v), F.lit(1 << 31)).cast(id_type).alias("h"),
+        F.md5(F.concat_ws("|", F.col("id").cast("string"), v)).alias("hx"),
+    )
+
+
+@pytest.fixture(scope="module")
+def small(spark):
+    """Source and sink that differ in values (``v`` from id % 7 vs id % 11),
+    in source-only ids (all but every third id in [200, 2600), and
+    3000..3199) and in sink-only ids (below 200)."""
+    src = _small_side(spark, 3_200, 7).filter(F.col("id") >= 200).cache()
+    snk = _small_side(spark, 3_000, 11).filter(
+        (F.col("id") < 200) | (F.col("id") % 3 == 0) | (F.col("id") >= 2_600)
+    ).cache()
+    return src, snk
+
+
+@pytest.mark.parametrize("max_block_size", [1, 100, 1000])
+def test_golden_plan_matches_reference(spark, source, sink, max_block_size):
+    _assert_plans_match(source, sink, _cfg(max_block_size=max_block_size))
+
+
+@pytest.mark.parametrize("kw", [
+    dict(strategy=HASH_MD5_HASH, order_column="id"),
+    dict(hash_column="h", fields=[]),
+    dict(hash_column="hx", fields=[]),
+    dict(strategy=HASH_MD5_HASH, order_column="id", hash_column="hx", fields=[]),
+    dict(partition_column="ts", partition_column_type="datetime",
+         initial_partition_interval=86_400),
+    dict(partition_column="uid", partition_column_type="str",
+         initial_partition_interval=1 << 28, interval_reduction_factor=16),
+    # start-only inside the data gap, its level-1 block kept whole: the block
+    # starts at the bound, not at the first row after it
+    dict(start=1_200, max_block_size=1_000),
+    dict(start=10_000),  # start-only, beyond all data: empty plan
+    dict(end=2_000),
+    dict(start=500, end=2_500),
+], ids=["ordered", "hash-numeric", "hash-hex", "ordered-hash-hex", "datetime", "str",
+        "start-in-gap", "start-beyond", "end-only", "both-bounds"])
+def test_plan_matches_reference(spark, small, kw):
+    src, snk = small
+    base = dict(partition_column="id", fields=["id", "v"], initial_partition_interval=1_000,
+                max_block_size=100)
+    cfg = ReconcileConfig(**{**base, **kw})
+    _assert_plans_match(src, snk, cfg)
+    if kw.get("start") == 10_000:
+        assert build_blocks(src, snk, cfg).blocks == []
+
+
+def test_plan_matches_reference_on_edge_inputs(spark, small):
+    src, snk = small
+    cfg = ReconcileConfig(partition_column="id", fields=["id", "v"],
+                          initial_partition_interval=1_000, max_block_size=100)
+    empty_src, empty_snk = src.limit(0), snk.limit(0)
+    # both sides empty: the same error, in both modes
+    for collect_settled in (True, False):
+        with pytest.raises(ValueError, match="both sides empty"):
+            build_blocks(empty_src, empty_snk, cfg, collect_settled=collect_settled)
+    with pytest.raises(ValueError, match="both sides empty"):
+        _ref_range(empty_src, empty_snk, cfg)
+    # both bounds over empty (and uninitialized) inputs: an empty plan, no error
+    bounded = ReconcileConfig(**{**cfg.__dict__, "start": 0, "end": 5_000})
+    uninit = local_frame(spark, [], T.StructType([]))
+    for a, b in ((empty_src, empty_snk), (uninit, uninit)):
+        _assert_plans_match(a, b, bounded)
+        assert build_blocks(a, b, bounded).blocks == []
+    # an uninitialized sink (no partition column): every source block is A
+    _assert_plans_match(src, uninit, cfg)
+    assert set(build_blocks(src, uninit, cfg).statuses) == {"A"}
+    # int vs long partition, order and hash columns: widening in the union
+    # cannot change either side's hash
+    wide = _small_side(spark, 3_000, 11, id_type="long")
+    for kw in (dict(hash_column="h", fields=[]),
+               dict(strategy=HASH_MD5_HASH, order_column="id", hash_column="h", fields=[])):
+        _assert_plans_match(src, wide, ReconcileConfig(**{**cfg.__dict__, **kw}))
+
+
+@pytest.mark.parametrize("which", ["golden", "small-bounded"])
+def test_diff_timegroups_matches_reference(spark, source, sink, small, which):
+    if which == "golden":
+        src, snk, cfg, interval = source, sink, _cfg(), 1_000
+    else:
+        src, snk = small
+        cfg = ReconcileConfig(partition_column="id", fields=["id", "v"], start=300,
+                              strategy=HASH_MD5_HASH, order_column="id")
+        interval = 100
+    got = find_diff_timegroups(src, snk, cfg, interval=interval).collect()
+    want = _ref_diff_timegroups(src, snk, cfg, interval).collect()
+    assert sorted(got) == sorted(want) and got

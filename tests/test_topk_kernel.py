@@ -352,17 +352,18 @@ def _plan(df) -> str:
 
 # Jobs per call of each search over the job-count fixture: at most what the
 # JVM pair plans it replaces ran on the same fixture. LSH counts a cold
-# hyperplane cache (one weight job per table); every parquet read of an
-# index counts its schema-inference job.
+# hyperplane cache (one weight job per table). Index centroids and codebooks
+# are read with their fixed schemas (no inference job); the posting-list and
+# code reads, whose columns follow the corpus, count their inference job.
 MAX_JOBS = {
     "brute_force_topk": 3,
     "pq_topk": 3,
     "lsh_topk_0bits": 6,
     "lsh_topk_3bits": 13,
     "ivf_topk": 5,
-    "ivf_topk_indexed": 10,
-    "ivfpq_topk": 12,
-    "ivfpq_topk_refine": 14,
+    "ivf_topk_indexed": 5,
+    "ivfpq_topk": 6,
+    "ivfpq_topk_refine": 8,
     "pq_topk_refined": 5,
 }
 
