@@ -155,11 +155,9 @@ def _row_hash(cfg: ReconcileConfig, df: DataFrame) -> Column:
     dtype = df.schema[cfg.hash_column].dataType
     if cfg.strategy != MD5_SUM_HASH or isinstance(dtype, T.NumericType):
         return h.cast(to)
-    # md5sum_hash sums rowhashes, so the precomputed column must be numeric.
-    # A hex md5 STRING would cast to NULL under Spark's non-ANSI cast —
-    # sum(NULL) on both sides reads as "every block matches", the
-    # silent-wrong failure mode. Convert hex explicitly (first-8-hex prefix,
-    # exactly rowhash_int32's encoding) or fail loudly.
+    # md5sum_hash sums rowhashes: a hex md5 STRING would cast to NULL, and
+    # sum(NULL) on both sides reads as "every block matches". Convert hex
+    # (first-8-hex prefix, rowhash_int32's encoding) or fail loudly.
     if isinstance(dtype, T.StringType):
         return F.conv(F.substring(h, 1, 8), 16, 10).cast("long").cast(to)
     raise ValueError(
@@ -180,16 +178,22 @@ def _block_hash(cfg: ReconcileConfig, where: Column) -> Column:
 
 
 def _tagged(cfg: ReconcileConfig, *sides: DataFrame) -> DataFrame:
-    """The sides' projections ``(side, x, _rh[, _oc])`` in one frame, ``side``
-    = argument position (0 = source, 1 = sink). An uninitialized side (no
-    partition column, e.g. a sink before its first load) adds no rows."""
+    """The sides' ``(side, x, _rh[, _oc])`` rows in one frame, ``side`` = argument
+    position (0 = source, 1 = sink); an uninitialized side (no partition column)
+    adds none. The order column needs one type on all sides, or integral types
+    (lossless widening): a union promoting it would re-sort one side."""
     if cfg.strategy == HASH_MD5_HASH and not cfg.order_column:
         raise ValueError("hash_md5_hash requires order_column")
+    live = [(side, df) for side, df in enumerate(sides) if cfg.partition_column in df.columns]
     oc = [F.col(cfg.order_column).alias("_oc")] if cfg.strategy == HASH_MD5_HASH else []
+    ocs = {df.schema[cfg.order_column].dataType for _, df in live} if oc else set()
+    if len(ocs) > 1 and not all(isinstance(t, T.IntegralType) for t in ocs):
+        raise ValueError(f"order_column {cfg.order_column!r} differs in type between the "
+                         f"sides: {sorted(t.simpleString() for t in ocs)}")
     parts = [
         df.select(F.lit(side).alias("side"), _partition_value(cfg).alias("x"),
                   _row_hash(cfg, df).alias("_rh"), *oc)
-        for side, df in enumerate(sides) if cfg.partition_column in df.columns
+        for side, df in live
     ]
     if parts:
         return reduce(DataFrame.unionByName, parts)
@@ -209,11 +213,15 @@ def _level(rows: DataFrame, cfg: ReconcileConfig, interval: int,
     per-side ``s_rows``/``s_hash``/``k_*`` give the status — N (count+hash
     equal), M (both, differ), A (source-only), D (sink-only) — sized by the
     larger count as ``num_rows`` (``calculate_block_status``,
-    ``engine/reconcile.py:258-281``). Rows failing ``keep`` land in a NULL
-    bucket, with a NULL status, that only feeds the ``x_lo``/``x_hi`` range."""
+    ``engine/reconcile.py:258-281``). Rows failing ``keep`` only feed the
+    ``x_lo``/``x_hi`` range of a NULL bucket (NULL status): their side and row
+    hash are masked, so they join no count or hash and are never hashed."""
     bucket = F.floor(F.col("x") / F.lit(interval)).cast("long")
+    if keep is not None:
+        rows = rows.withColumns({c: F.when(keep, F.col(c)) for c in ("side", "_rh")})
+        bucket = F.when(keep, bucket)
     src, snk = F.col("side") == 0, F.col("side") == 1
-    d = rows.groupBy((bucket if keep is None else F.when(keep, bucket)).alias("bucket")).agg(
+    d = rows.groupBy(bucket.alias("bucket")).agg(
         F.count(F.when(src, 1)).alias("s_rows"), F.count(F.when(snk, 1)).alias("k_rows"),
         _block_hash(cfg, src).alias("s_hash"), _block_hash(cfg, snk).alias("k_hash"),
         F.min("x").alias("x_lo"), F.max("x").alias("x_hi"),
@@ -231,9 +239,8 @@ def _level(rows: DataFrame, cfg: ReconcileConfig, interval: int,
 
 def block_digest(df: DataFrame, cfg: ReconcileConfig, interval: int,
                  lo: int, hi: int) -> DataFrame:
-    """One side's per-bucket digest over [lo, hi) at one ladder level:
-    ``groupBy(floor(x/interval)) → (num_rows, hash)`` — the Spark
-    realization of ``build_block_hash_query``."""
+    """One side's per-bucket ``(num_rows, hash)`` over [lo, hi) at one ladder
+    level — the Spark realization of ``build_block_hash_query``."""
     d = _level(_tagged(cfg, df).filter(_in_range(lo, hi)), cfg, interval)
     return d.select("bucket", F.col("s_rows").alias("num_rows"), F.col("s_hash").alias("hash"))
 
@@ -248,10 +255,9 @@ def block_status(source_df: DataFrame, sink_df: DataFrame, cfg: ReconcileConfig,
 
 @dataclass
 class BlockPlan:
-    """build_blocks output. Iterable as ``(blocks, statuses)`` for
-    backward-compatible tuple unpacking. With ``collect_settled=False`` the
-    (typically dominant) N blocks never reach the driver — they are folded
-    into ``settled_n_blocks``/``settled_n_rows`` by a distributed aggregate."""
+    """build_blocks output, iterable as ``(blocks, statuses)``. With
+    ``collect_settled=False`` the (typically dominant) N blocks never reach the
+    driver: a distributed aggregate folds them into ``settled_n_*``."""
 
     blocks: list[Block]
     statuses: list[str]
@@ -266,21 +272,16 @@ def build_blocks(source_df: DataFrame, sink_df: DataFrame, cfg: ReconcileConfig,
                  max_level: int | None = None, collect_settled: bool = True) -> BlockPlan:
     """The full drilldown: per ladder level, ONE aggregate over both sides
     (rows filtered to mismatched parents via broadcast semi-join), emit
-    settled blocks, descend into oversized M/A blocks. Returns
-    merge_adjacent-coalesced blocks+statuses ordered by range start, exactly
-    like ``build_blocks`` + ``merge_adjacent`` in the reference.
+    settled blocks, descend into oversized M/A blocks; returns the
+    merge_adjacent-coalesced blocks ordered by range start, like the
+    reference. Level 1 also yields the data range [lo, hi) of
+    ``get_data_range`` (``engine/reconcile.py:96-132``) as per-bucket min/max
+    (with both bounds set the range is the bounds).
 
-    Level 1 reads every row and also yields the data range [lo, hi) of
-    ``get_data_range`` (``engine/reconcile.py:96-132``) as per-bucket
-    min/max, rows outside the user bounds in a NULL bucket (both bounds set:
-    the range is the bounds).
-
-    ``collect_settled=False`` is the 100-TB shape: matched (N) blocks are
-    counted by a distributed aggregate (which also returns the range)
-    instead of ``collect()``-ing one driver row per bucket — at a fine
-    ladder over a mostly-in-sync table the N rows are ~the whole table's
-    bucket count, while M/A/D + drill rows stay diff-sized. The repair plan
-    only needs M/A/D blocks anyway."""
+    ``collect_settled=False`` is the 100-TB shape: matched (N) blocks, ~the
+    whole table's bucket count at a fine ladder, are counted by the level's
+    one action instead of ``collect()``-ed; M/A/D + drill rows stay
+    diff-sized, and the repair plan only needs M/A/D blocks."""
     intervals = cfg.intervals()
     max_level = len(intervals) if max_level is None else min(max_level, len(intervals))
     rows = _tagged(cfg, source_df, sink_df)
@@ -296,9 +297,8 @@ def build_blocks(source_df: DataFrame, sink_df: DataFrame, cfg: ReconcileConfig,
             d = _level(rows.filter(_in_range(lo, hi)), cfg, interval) if bounded else \
                 _level(rows, cfg, interval, _in_range(lo, hi))
         else:
-            # keep only rows whose PARENT bucket mismatched. Child buckets
-            # nest exactly (intervals() guarantees child | parent); the
-            # mismatch set rides a broadcast semi-join, not an isin() list.
+            # rows whose PARENT bucket mismatched: child buckets nest exactly
+            # (intervals() guarantees child | parent); ids ride a broadcast semi-join
             pids = local_frame(rows.sparkSession, [(int(i),) for i in drill_ids], "pid long")
             cond = F.floor(F.col("x") / F.lit(intervals[level0 - 1])) == F.col("pid")
             d = _level(rows.filter(_in_range(lo, hi)).join(F.broadcast(pids), cond, "left_semi"),

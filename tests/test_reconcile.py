@@ -13,6 +13,8 @@ Golden totals at max_block_size=1 (full drilldown):
 
 from __future__ import annotations
 
+import hashlib
+
 import pyspark.sql.functions as F
 import pytest
 from pyspark.sql import types as T
@@ -29,7 +31,10 @@ from data_sync_tool_spark.operators.reconcile import (
     Block,
     BlockPlan,
     ReconcileConfig,
+    _in_range,
+    _level,
     _partition_value,
+    _tagged,
     build_blocks,
     find_diff_timegroups,
     merge_adjacent,
@@ -532,3 +537,37 @@ def test_diff_timegroups_matches_reference(spark, source, sink, small, which):
     got = find_diff_timegroups(src, snk, cfg, interval=interval).collect()
     want = _ref_diff_timegroups(src, snk, cfg, interval).collect()
     assert sorted(got) == sorted(want) and got
+
+
+@pytest.mark.parametrize("strategy", [MD5_SUM_HASH, HASH_MD5_HASH])
+def test_rows_outside_one_bound_only_feed_the_range(spark, small, strategy):
+    """Level 1 of a start-only config reads every row for the range, but rows
+    below the bound reach neither a count nor a block hash: the NULL bucket
+    hashes no row (an ordered digest of nothing is md5 of "")."""
+    src, snk = small
+    cfg = ReconcileConfig(partition_column="id", fields=["id", "v"], strategy=strategy,
+                          order_column="id", start=1_200)
+    d = _level(_tagged(cfg, src, snk), cfg, 1_000, _in_range(cfg.start, None))
+    (out,) = d.filter(F.col("bucket").isNull()).collect()
+    empty = None if strategy == MD5_SUM_HASH else hashlib.md5(b"").hexdigest()
+    assert (out["s_rows"], out["k_rows"], out["s_hash"], out["k_hash"]) == (0, 0, empty, empty)
+    assert (out["x_lo"], out["x_hi"], out["status"]) == (0, 999, None)
+    # the in-window buckets digest exactly the rows at or above the bound
+    inside = {r["bucket"]: r for r in d.filter(F.col("bucket").isNotNull()).collect()}
+    want = _ref_digest(src, cfg, 1_000, 1_200, 10_000).collect()
+    assert {r["bucket"]: (r["num_rows"], r["hash"]) for r in want} == {
+        b: (r["s_rows"], r["s_hash"]) for b, r in inside.items()}
+
+
+def test_order_column_types_must_agree(spark, small):
+    """An order column the union would promote (int vs string, date vs int)
+    raises a clear error instead of re-sorting one side or failing in the
+    analyzer; integral types widen losslessly (matched in the edge test)."""
+    src, snk = small
+    cfg = ReconcileConfig(partition_column="id", fields=["id", "v"], strategy=HASH_MD5_HASH,
+                          order_column="o", initial_partition_interval=1_000,
+                          max_block_size=100)
+    for a, b in ((F.col("id"), F.col("id").cast("string")),
+                 (F.to_date("ts"), F.col("id"))):
+        with pytest.raises(ValueError, match="order_column 'o' differs in type"):
+            build_blocks(src.withColumn("o", a), snk.withColumn("o", b), cfg)
