@@ -113,9 +113,9 @@ def assemble_changed_transcripts(
 
     The dirty-conversation list is bounded by the polled commits. When it
     fits ``max_pruned_keys`` and ``conv_col`` is the table's leading key,
-    the live read prunes FILES through the manifest key zone maps
-    (``read(key_ranges=...)`` — point ranges per conversation; on a
-    key-clustered table only the touched conversations' files are opened).
+    the live read prunes FILES through the manifest zone maps
+    (``read(ranges={conv_col: ...})`` — a point range per conversation; on
+    a key-clustered table only the touched conversations' files are opened).
     Larger change sets fall back to one broadcast semi-join over a full
     scan, which is the same cost a fresh batch assembly would pay."""
     changed = table.changes_since(since_lsn).select(conv_col).dropDuplicates()
@@ -124,7 +124,7 @@ def assemble_changed_transcripts(
         schema = "conv_id string, n_turns bigint, transcript string, fp string"
         return table.spark.createDataFrame([], schema)
     if len(dirty) <= max_pruned_keys and table.key_cols[0] == conv_col:
-        live = table.read(key_ranges=[(c, c + "\x00") for c in sorted(dirty)])
+        live = table.read(ranges={conv_col: [(c, c + "\x00") for c in sorted(dirty)]})
     else:
         live = table.read().join(F.broadcast(changed), conv_col, "left_semi")
     return assemble_transcripts(live, conv_col, order_col, role_col, text_col, sep)

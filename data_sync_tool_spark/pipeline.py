@@ -164,7 +164,7 @@ class Pipeline:
             next_lsn = lsn if lsn is not None else sink_lake.current_version() + 1
             # repair reads the sink restricted to the divergent ranges; when
             # the reconcile partitions on ANY of the lake's key columns, the
-            # manifest per-column key zone maps prune whole FILES before the
+            # manifest zone maps prune whole FILES in every bucket before the
             # scan (watermark-ordered ingest lands each commit in a narrow
             # key band, so a repair of 2% of the range opens ~2% of the
             # delta files) — the row-level range restriction plan_repair
@@ -177,7 +177,7 @@ class Pipeline:
                 and rc.partition_column_type == "int"
             ):
                 snk_rep = sink_lake.read(
-                    key_ranges=ranges, key_ranges_col=rc.partition_column,
+                    ranges={rc.partition_column: ranges}
                 ).drop("_lsn")
             changes = plan_repair(
                 src, snk_rep, cfg, blocks, unique_keys=keys,

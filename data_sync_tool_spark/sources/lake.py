@@ -628,11 +628,9 @@ class LakeTable:
         buckets: list[int] | None = None,
         version: int | None = None,
         include_deleted: bool = False,
-        key_ranges: list[tuple[Any, Any]] | None = None,
         keys: list[Any] | None = None,
         ranges: dict[str, list[tuple[Any, Any]]] | None = None,
         as_of: Any | None = None,
-        key_ranges_col: str | None = None,
         apply_ttl: bool = False,
         cluster_first_key: bool = False,
     ) -> DataFrame:
@@ -640,16 +638,6 @@ class LakeTable:
         to a bucket subset via the manifest (no directory listing — the
         manifest IS the file index). In MoR state, base∪delta are LWW-resolved
         on the fly. Tombstones filtered unless ``include_deleted``.
-
-        ``key_ranges``: half-open ``[lo, hi)`` ranges over a KEY column —
-        the first by default, any other via ``key_ranges_col`` (per-column
-        commit zone maps cover every key column, so a composite key whose
-        first column is low-cardinality still prunes on the selective one).
-        Files whose manifest key zone map cannot intersect any range are
-        skipped entirely (conservative: stats-less files always read),
-        then rows are filtered to the ranges. LWW stays correct under
-        pruning: every version of an in-range key lives in a file whose
-        bounds cover that key, so no version is dropped before the resolve.
 
         ``keys``: point lookup on the FIRST key column — the "fetch these
         conversations" serving path. Prunes to the keys' hash buckets
@@ -659,15 +647,29 @@ class LakeTable:
         bucket's files, minus the bloom-negative deltas; LWW correctness is
         preserved because blooms have no false negatives.
 
-        ``ranges``: half-open ``[lo, hi)`` ranges over NON-key columns
-        (``{col: [(lo, hi), ...]}`` — the Delta/Iceberg data-skipping
-        read). Files on RESOLVED buckets whose ``stats_columns`` zone map
-        cannot intersect are skipped; buckets with pending delta files are
-        never file-pruned, because a key's LATEST version may sit in a file
-        whose stats exclude the range while a stale version matches —
-        pruning it would resurrect the stale row. (Key-based pruning has no
-        such hazard: a key never changes across versions.) The row filter
-        applies AFTER the LWW resolve for the same reason.
+        ``ranges``: ``{col: [(lo, hi), ...]}``, half-open ranges, OR-ed
+        per column and AND-ed across columns (the Delta/Iceberg data-
+        skipping read). Each file's manifest stats carry one zone map
+        ``{col: [min, max]}`` — every key column from the write job, any
+        ``stats_columns`` (and clustered-compact columns) from the parquet
+        footers — and a file whose map cannot intersect is skipped
+        (conservative: a column without a bound never prunes). Whether a
+        column is a key decides the rest:
+
+        - KEY column: files prune in every bucket and rows filter BEFORE
+          the LWW resolve — a key never changes across its versions, so
+          every version of an in-range key lives in a file whose bounds
+          cover it. Per-column maps let a composite key whose first column
+          is low-cardinality prune on the selective one.
+        - non-key column: files prune on RESOLVED buckets only and rows
+          filter AFTER the resolve. A key's LATEST version may sit in a
+          file whose map excludes the range while a stale version matches;
+          pruning that file, or filtering before the resolve, would serve
+          the stale row.
+
+        Manifests written before the one zone-map shape (``kzm``,
+        ``key_min``/``key_max``, ``cs`` entries) are not read for pruning:
+        their files are always opened until a rewrite gives them a map.
 
         ``as_of``: time travel by commit timestamp instead of version
         number (epoch seconds / datetime / ISO string)."""
@@ -709,75 +711,34 @@ class LakeTable:
 
             base_files = [f for f in base_files if bloom_keep(f)]
             delta_files = [f for f in delta_files if bloom_keep(f)]
-        if key_ranges:
-            kr_col = key_ranges_col or self.key_cols[0]
-            if kr_col not in self.key_cols:
-                # only KEY columns are MoR-safe to file-prune with pending
-                # deltas (a key never changes across its versions); non-key
-                # columns go through ranges= (resolved-bucket pruning only)
-                raise ValueError(
-                    f"key_ranges_col must be a key column {self.key_cols}, "
-                    f"got {kr_col!r}"
-                )
+        if ranges:
             stats = m.get("file_stats", {})
-            first_key = kr_col == self.key_cols[0]
+            # files of buckets with pending deltas: non-key columns never
+            # prune there (MoR staleness, see docstring)
+            unresolved = {
+                f for e in m["buckets"].values() if e.get("delta")
+                for kind in ("base", "delta") for f in e.get(kind, [])
+            }
 
             def may_intersect(f: str) -> bool:
-                st = stats.get(f) or {}
-                # both sources may exist (loose commit-level kzm + tight
-                # per-file footer key_min/key_max after a clustered compact):
-                # intersect — each is a sound cover, so their intersection is
-                # the tightest sound bound
-                bounds = (st.get("kzm") or {}).get(kr_col)
-                if first_key and "key_max" in st:
-                    pf = (st["key_min"], st["key_max"])
-                    bounds = pf if bounds is None else (
-                        max(bounds[0], pf[0]), min(bounds[1], pf[1])
+                zm = stats.get(f, {}).get("zm", {})
+                return all(
+                    col not in zm
+                    or (col not in self.key_cols and f in unresolved)
+                    or any(
+                        (hi is None or zm[col][0] < self._norm_bound(hi))
+                        and (lo is None or zm[col][1] >= self._norm_bound(lo))
+                        for lo, hi in rs
                     )
-                if bounds is None:
-                    return True  # stats-less file: always read (conservative)
-                mn, mx = bounds
-                return any(
-                    (hi is None or mn < hi) and (lo is None or mx >= lo)
-                    for lo, hi in key_ranges
+                    for col, rs in ranges.items()
                 )
 
             base_files = [f for f in base_files if may_intersect(f)]
             delta_files = [f for f in delta_files if may_intersect(f)]
-        if ranges:
-            stats = m.get("file_stats", {})
-            unresolved = {
-                b for b, e in m["buckets"].items() if e.get("delta")
-            }
-            fb = {
-                f: b
-                for b, e in m["buckets"].items()
-                for kind in ("base", "delta")
-                for f in e.get(kind, [])
-            }
-
-            def range_keep(f: str) -> bool:
-                if fb[f] in unresolved:
-                    return True  # see docstring: MoR staleness hazard
-                cs = stats.get(f, {}).get("cs", {})
-                for col, rs in ranges.items():
-                    if col not in cs:
-                        continue  # no stats for this column — can't prune
-                    flo, fhi = cs[col]
-                    if not any(
-                        (hi is None or flo < self._norm_bound(hi))
-                        and (lo is None or fhi >= self._norm_bound(lo))
-                        for lo, hi in rs
-                    ):
-                        return False
-                return True
-
-            base_files = [f for f in base_files if range_keep(f)]
-            delta_files = [f for f in delta_files if range_keep(f)]
         df = self._read_files(base_files + delta_files, schema)
-        if key_ranges and df.columns:
-            df = self._apply_key_ranges(df, key_ranges,
-                                        col=key_ranges_col or self.key_cols[0])
+        for col, rs in (ranges or {}).items():
+            if col in self.key_cols and df.columns:
+                df = self._range_filter(df, col, rs)
         if keys is not None and df.columns:
             k0 = F.col(self.key_cols[0])
             if not keys:
@@ -816,55 +777,38 @@ class LakeTable:
             # (compact is where they physically drop); post-resolve filter,
             # same hazard-free position as ranges
             df = df.filter(~F.coalesce(F.expr(m["ttl"]), F.lit(False)))
-        if ranges and df.columns:
-            # row-level restriction AFTER the resolve (a pre-resolve filter
-            # could drop a key's latest out-of-range version and serve a
-            # stale in-range one)
-            for col, rs in ranges.items():
-                cond = None
-                for lo, hi in rs:
-                    c = F.lit(True)
-                    if lo is not None:
-                        c = c & (F.col(col) >= F.lit(lo))
-                    if hi is not None:
-                        c = c & (F.col(col) < F.lit(hi))
-                    cond = c if cond is None else (cond | c)
-                if cond is not None:
-                    df = df.filter(cond)
+        for col, rs in (ranges or {}).items():
+            if col not in self.key_cols and df.columns:
+                df = self._range_filter(df, col, rs)
         return df
 
-    def _apply_key_ranges(
-        self, df: DataFrame, key_ranges: list[tuple[Any, Any]],
-        col: str | None = None,
+    def _range_filter(
+        self, df: DataFrame, col: str, rs: list[tuple[Any, Any]]
     ) -> DataFrame:
-        """Exact row-level restriction to half-open key ranges. Few ranges
-        compile to an OR chain (codegen-friendly, pushes to the scan); a
-        diff-sized list (reconcile repair of a very drifted table) becomes a
-        broadcast range semi-join instead of a 10k-term expression tree."""
-        kc = col or self.key_cols[0]
-        key = F.col(kc)
-        bounded = [r for r in key_ranges if r[0] is not None and r[1] is not None]
-        if len(key_ranges) > 128 and len(bounded) == len(key_ranges):
-            rng = local_frame(
-                self.spark, bounded, T.StructType([
-                    T.StructField("r_lo", df.schema[kc].dataType),
-                    T.StructField("r_hi", df.schema[kc].dataType),
-                ])
-            )
+        """Exact row-level restriction of ``col`` to half-open ranges (an
+        empty list matches nothing). Few ranges compile to an OR chain
+        (codegen-friendly, pushes to the scan); a diff-sized list
+        (reconcile repair of a very drifted table) becomes a broadcast
+        range semi-join instead of a 10k-term expression tree."""
+        c = F.col(col)
+        if len(rs) > 128 and all(lo is not None and hi is not None for lo, hi in rs):
+            t = df.schema[col].dataType
+            rng = local_frame(self.spark, [tuple(r) for r in rs], T.StructType([
+                T.StructField("r_lo", t), T.StructField("r_hi", t),
+            ]))
             return df.join(
-                F.broadcast(rng),
-                on=[(key >= rng["r_lo"]) & (key < rng["r_hi"])],
+                F.broadcast(rng), on=[(c >= rng["r_lo"]) & (c < rng["r_hi"])],
                 how="left_semi",
             )
-        cond = None
-        for lo, hi in key_ranges:
-            c = F.lit(True)
+        cond = F.lit(False)
+        for lo, hi in rs:
+            term = F.lit(True)
             if lo is not None:
-                c = c & (key >= F.lit(lo))
+                term = term & (c >= F.lit(lo))
             if hi is not None:
-                c = c & (key < F.lit(hi))
-            cond = c if cond is None else (cond | c)
-        return df.filter(cond) if cond is not None else df
+                term = term & (c < F.lit(hi))
+            cond = cond | term
+        return df.filter(cond)
 
     # ---------------------------------------------------------------- writes
     def _write_snapshot(
@@ -958,35 +902,32 @@ class LakeTable:
                         F.sum(F.when(F.col(BUCKET_COL) == b, F.col("_rh_obs"))).alias(f"d{b}")
                         for b in range(n_buckets)
                     ]
-            key_stats = False
+            zone_cols: list[str] = []
             if want_lsn:
                 # commit-level lsn bounds: every file of this commit gets the
                 # batch's [lsn_min, lsn_max] — a sound (conservative) file-
                 # pruning index for changes_since(); two scalar aggregates
                 aggs += [F.min(LSN_COL).alias("lsn_min"), F.max(LSN_COL).alias("lsn_max")]
-                # key zone maps (same trick, same cost): commit-level min/max
-                # of EVERY key column, JSON-storable types only. Prunes
-                # key-range reads (reconcile repair) when ingest has key
-                # locality — watermark-ordered int keys land each commit's
-                # delta files in a narrow key band. Per-column (not just the
-                # first key) so a composite key whose first column is
-                # low-cardinality still prunes on the selective column.
-                # Hash-bucketed random keys give full-range bounds and prune
-                # nothing (inherent to any zone map); pruning is conservative
-                # either way. Cost: two scalar aggregates per key column,
-                # riding the write job's existing observe().
-                key_zone_cols = [
+                # zone map of EVERY key column (same trick, same cost):
+                # commit-level min/max, JSON-storable types only. Prunes
+                # range reads on key columns (reconcile repair) when ingest
+                # has key locality — watermark-ordered int keys land each
+                # commit's delta files in a narrow key band. Per-column so a
+                # composite key whose first column is low-cardinality still
+                # prunes on the selective column. Hash-bucketed random keys
+                # give full-range bounds and prune nothing (inherent to any
+                # zone map); pruning is conservative either way. Cost: two
+                # scalar aggregates per key column, riding the write job's
+                # existing observe().
+                zone_cols = [
                     kc for kc in self.key_cols
                     if kc in clustered.columns and isinstance(
                         clustered.schema[kc].dataType,
                         (T.IntegralType, T.FloatType, T.DoubleType, T.StringType),
                     )
                 ]
-                if key_zone_cols:
-                    key_stats = True
-                    for i, kc in enumerate(key_zone_cols):
-                        aggs += [F.min(kc).alias(f"kzmin{i}"),
-                                 F.max(kc).alias(f"kzmax{i}")]
+                for i, kc in enumerate(zone_cols):
+                    aggs += [F.min(kc).alias(f"zmin{i}"), F.max(kc).alias(f"zmax{i}")]
             to_write = src.observe(obs, *aggs)
             if want_digests:
                 to_write = to_write.drop("_rh_obs")
@@ -1023,19 +964,13 @@ class LakeTable:
             if want_lsn and got.get("lsn_max") is not None:
                 total["lsn_min"] = int(got["lsn_min"])
                 total["lsn_max"] = int(got["lsn_max"])
-                if key_stats:
-                    kzm = {
-                        kc: [got[f"kzmin{i}"], got[f"kzmax{i}"]]
-                        for i, kc in enumerate(key_zone_cols)
-                        if got.get(f"kzmax{i}") is not None
-                    }
-                    if kzm:
-                        total["kzm"] = kzm
-                        # first-key bounds also kept under the legacy names
-                        # (older manifests / readers use key_min/key_max)
-                        if self.key_cols[0] in kzm:
-                            total["key_min"] = kzm[self.key_cols[0]][0]
-                            total["key_max"] = kzm[self.key_cols[0]][1]
+                zm = {
+                    kc: [got[f"zmin{i}"], got[f"zmax{i}"]]
+                    for i, kc in enumerate(zone_cols)
+                    if got.get(f"zmax{i}") is not None
+                }
+                if zm:
+                    total["zm"] = zm
         return out, digests, total or None
 
     @staticmethod
@@ -1043,49 +978,6 @@ class LakeTable:
         import pyarrow.parquet as pq
 
         return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-
-    def _file_key_stats(self, files: list[str]) -> dict[str, dict[str, Any]]:
-        """Per-file key zone maps harvested from parquet FOOTERS — a
-        metadata-only read (O(files) tiny IOs, no data pages). Returns
-        ``{file: {"key_min": v, "key_max": v}}`` for the first key column.
-
-        Used after key-clustered rewrites, where each file covers a narrow
-        key band, to replace the conservative commit-level bounds in the
-        manifest. Parquet stat truncation (long strings) is pruning-safe by
-        construction: a truncated min is a prefix ≤ the true min and a
-        truncated max has its last byte incremented ≥ the true max, so the
-        recorded interval always CONTAINS the true one. Files whose stats
-        are absent or not JSON-storable (bytes) are skipped — they keep
-        their commit-level entry and are always read (conservative)."""
-        import pyarrow.parquet as pq
-
-        key = self.key_cols[0]
-        out: dict[str, dict[str, Any]] = {}
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            mins: list[Any] = []
-            maxs: list[Any] = []
-            ok = True
-            for rg in range(md.num_row_groups):
-                row_group = md.row_group(rg)
-                col = next(
-                    (row_group.column(i) for i in range(row_group.num_columns)
-                     if row_group.column(i).path_in_schema == key),
-                    None,
-                )
-                st = col.statistics if col is not None else None
-                if st is None or not st.has_min_max:
-                    ok = False
-                    break
-                if not (isinstance(st.min, (int, float, str))
-                        and isinstance(st.max, (int, float, str))):
-                    ok = False  # bytes/temporal stats — not JSON-storable
-                    break
-                mins.append(st.min)
-                maxs.append(st.max)
-            if ok and mins:
-                out[f] = {"key_min": min(mins), "key_max": max(maxs)}
-        return out
 
     @staticmethod
     def _norm_bound(v: Any) -> Any:
@@ -1101,47 +993,56 @@ class LakeTable:
             return v.isoformat()
         return v
 
-    def _file_col_stats(
+    def _footer_zones(
         self, files: list[str], cols: list[str]
     ) -> dict[str, dict[str, Any]]:
-        """Per-file min/max zone maps for arbitrary columns, harvested from
-        parquet FOOTERS (metadata-only, O(files) tiny IOs). Returns
-        ``{file: {"cs": {col: [min, max]}}}``; a column is recorded only
-        when every row group has usable stats (else it is omitted and the
-        file is always read for that column — conservative). String stats
-        are pruning-safe under parquet truncation (see _file_key_stats)."""
+        """Per-file zone maps harvested from parquet FOOTERS — a metadata-
+        only read (O(files) tiny IOs, no data pages). Returns file stats
+        ``{file: {"zm": {col: [min, max]}}}``; a column is recorded only
+        when every row group has usable, JSON-storable stats (else it is
+        omitted and the file is always read for that column —
+        conservative). Parquet stat truncation (long strings) is pruning-
+        safe by construction: a truncated min is a prefix ≤ the true min
+        and a truncated max has its last byte incremented ≥ the true max,
+        so the recorded interval always CONTAINS the true one."""
         import pyarrow.parquet as pq
 
         out: dict[str, dict[str, Any]] = {}
-        for f in files:
+        for f in files if cols else []:  # no columns: no footer reads
             md = pq.ParquetFile(f).metadata
-            cs: dict[str, Any] = {}
+            chunks = [
+                {rg.column(i).path_in_schema: rg.column(i) for i in range(rg.num_columns)}
+                for rg in (md.row_group(r) for r in range(md.num_row_groups))
+            ]
+            zm: dict[str, Any] = {}
             for col in cols:
-                mins: list[Any] = []
-                maxs: list[Any] = []
-                ok = True
-                for rg in range(md.num_row_groups):
-                    row_group = md.row_group(rg)
-                    c = next(
-                        (row_group.column(i) for i in range(row_group.num_columns)
-                         if row_group.column(i).path_in_schema == col),
-                        None,
-                    )
-                    st = c.statistics if c is not None else None
+                los: list[Any] = []
+                his: list[Any] = []
+                for chunk in chunks:
+                    st = chunk[col].statistics if col in chunk else None
                     if st is None or not st.has_min_max:
-                        ok = False
                         break
                     lo, hi = self._norm_bound(st.min), self._norm_bound(st.max)
                     if not (isinstance(lo, (int, float, str))
                             and isinstance(hi, (int, float, str))):
-                        ok = False
                         break
-                    mins.append(lo)
-                    maxs.append(hi)
-                if ok and mins:
-                    cs[col] = [min(mins), max(maxs)]
-            if cs:
-                out[f] = {"cs": cs}
+                    los.append(lo)
+                    his.append(hi)
+                else:
+                    if los:
+                        zm[col] = [min(los), max(his)]
+            if zm:
+                out[f] = {"zm": zm}
+        return out
+
+    @staticmethod
+    def _overlay(st: dict[str, Any], extra: dict[str, Any]) -> dict[str, Any]:
+        """File stats ``extra`` laid over ``st``; their zone maps merge per
+        column, so a footer bound replaces the commit bound of its column
+        only."""
+        out = {**st, **extra}
+        if "zm" in st and "zm" in extra:
+            out["zm"] = {**st["zm"], **extra["zm"]}
         return out
 
     def _table_checksum(self, m_buckets: dict[str, Any], schema: T.StructType) -> int:
@@ -1327,21 +1228,19 @@ class LakeTable:
         live_files = self._files({"buckets": buckets}, None)
         file_stats = {f: prev_stats[f] for f in live_files if f in prev_stats}
         if batch_total and "lsn_max" in batch_total:
-            bounds = {"lsn_min": batch_total["lsn_min"], "lsn_max": batch_total["lsn_max"]}
-            if "key_max" in batch_total:  # key zone map rides the same entry
-                bounds["key_min"] = batch_total["key_min"]
-                bounds["key_max"] = batch_total["key_max"]
-            if "kzm" in batch_total:  # per-key-column zone maps, same entry
-                bounds["kzm"] = batch_total["kzm"]
+            # the key zone map rides the same entry
+            bounds = {k: batch_total[k] for k in ("lsn_min", "lsn_max", "zm")
+                      if k in batch_total}
             for f in live_files:
                 file_stats.setdefault(f, bounds)
-        # per-file overrides (key-clustered compact footers, rollback
-        # reinstating a prior version's stats) are TIGHTER than the
-        # commit-level bounds — overlay them last, only for live files
+        # per-file overrides (footer zone maps of a compact or purge
+        # rewrite, rollback reinstating a prior version's stats) are TIGHTER
+        # than the commit-level bounds — overlay them last, only for live
+        # files
         live_set = set(live_files)
         for f, st in (extra_file_stats or {}).items():
             if f in live_set:
-                file_stats[f] = {**file_stats.get(f, {}), **st}
+                file_stats[f] = self._overlay(file_stats.get(f, {}), st)
         prev_files = set(self._files(prev, None))
         if self.bloom_filters:
             # key blooms for files NEW in this commit (rollback re-references
@@ -1354,19 +1253,16 @@ class LakeTable:
             for f, st in self._file_blooms(todo, data_schema).items():
                 file_stats[f] = {**file_stats.get(f, {}), **st}
         if props["stats_columns"]:
-            # non-key column zone maps for NEW files: parquet footer reads
+            # stats_columns zone maps for NEW files: parquet footer reads
             # only (metadata, no data pages) — O(new files) per commit
             schema_cols = {f.name for f in data_schema.fields}
             want = [c for c in props["stats_columns"] if c in schema_cols]
             todo = [
-                f for f in live_files
-                if f not in prev_files and "cs" not in file_stats.get(f, {})
+                f for f in live_files if f not in prev_files
+                and not set(want) <= set(file_stats.get(f, {}).get("zm", {}))
             ]
-            if want:
-                for f, st in self._file_col_stats(todo, want).items():
-                    file_stats[f] = {**file_stats.get(f, {}), "cs": {
-                        **file_stats.get(f, {}).get("cs", {}), **st["cs"],
-                    }}
+            for f, st in self._footer_zones(todo, want).items():
+                file_stats[f] = self._overlay(file_stats.get(f, {}), st)
         # incremental-sync watermarks carry forward in EVERY manifest, so
         # resuming a long-lived table reads one JSON file, never a lineage
         # scan over O(commits) versions
@@ -1817,11 +1713,11 @@ class LakeTable:
             his: list[float] = []
             ok = bool(files)
             for f in files:
-                cs = stats.get(f, {}).get("cs", {})
-                if c not in cs:
+                zm = stats.get(f, {}).get("zm", {})
+                if c not in zm:
                     ok = False
                     break
-                lo, hi = num(cs[c][0]), num(cs[c][1])
+                lo, hi = num(zm[c][0]), num(zm[c][1])
                 if lo is None or hi is None:
                     ok = False
                     break
@@ -1895,12 +1791,13 @@ class LakeTable:
         ``cluster_by_key`` + ``max_file_rows``: sort each bucket by the
         first key column during the rewrite and split it into bounded files
         whose PER-FILE key bounds (harvested from parquet footers — a
-        metadata-only read) replace the commit-level zone map in the
-        manifest. This is the Z-order/sort-compaction analogue for a
-        single-key table: key-range reads (reconcile repair,
-        ``read(key_ranges=...)``) then prune to ~(range_width/key_span) of
-        each bucket's files even when keys are hash-random across commits —
-        the one layout commit-level bounds can never prune. Cost: the sort
+        metadata-only read, every key column) replace the commit-level
+        bounds in each file's zone map. This is the Z-order/sort-compaction
+        analogue for a single-key table: range reads on the key (reconcile
+        repair, ``read(ranges={key: ...})``) then prune to
+        ~(range_width/key_span) of each bucket's files even when keys are
+        hash-random across commits — the one layout commit-level bounds can
+        never prune. Cost: the sort
         rides the rewrite's existing shuffle (task-side sort, no extra
         exchange); multi-file buckets forgo the free observe() digests, so
         with checksum on the new base files are re-read once for their
@@ -1915,8 +1812,10 @@ class LakeTable:
         (sorting by ts makes conv-range reads scan everything, and vice
         versa). Costs one tiny bounds aggregate over the rewritten buckets;
         the sort rides the rewrite shuffle. Mutually exclusive with
-        ``cluster_by_key``; per-file stats for the z-ordered columns (plus
-        any configured ``stats_columns``) are harvested from the footers."""
+        ``cluster_by_key``; per-file zone maps for the z-ordered columns
+        (plus any configured ``stats_columns``) are harvested from the
+        footers. The lattice bounds come from the manifest zone maps when
+        every folded file has them, else from one bounds aggregate."""
         if zorder_by and cluster_by_key:
             raise ValueError("zorder_by and cluster_by_key are mutually exclusive")
         m = self._load_manifest()
@@ -1987,10 +1886,12 @@ class LakeTable:
             max_records_per_file=max_file_rows, sort_cols=sort_cols,
         )
         new_files = [f for fs in new.values() for f in fs]
-        key_stats = self._file_key_stats(new_files) if cluster_by_key else None
-        if zorder_by:
-            want = sorted(set(zorder_by) | set(props["stats_columns"]))
-            key_stats = self._file_col_stats(new_files, want)
+        # footer bounds of the clustering columns replace their commit
+        # bounds; stats_columns ride the same footer read
+        cols = self.key_cols if cluster_by_key else list(zorder_by or [])
+        zones = self._footer_zones(
+            new_files, sorted(set(cols) | set(props["stats_columns"])) if cols else []
+        )
         bid = batch_id or f"compact-v{m['version']}"
         rows = self._count_rows(new_files)
         lineage = {"batch_id": bid, "op": "compact", "rows_written": rows,
@@ -2018,7 +1919,7 @@ class LakeTable:
 
         try:
             v = self._commit(m, props, fold_into(m["buckets"]), schema, bid,
-                             lineage, dig, tot, extra_file_stats=key_stats)
+                             lineage, dig, tot, extra_file_stats=zones)
         except ConcurrentWriteError:
             # optimistic rebase: compact is the maintenance op that runs
             # beside live ingest ("a background job that never blocks
@@ -2049,7 +1950,7 @@ class LakeTable:
             lineage = {**lineage, "rebased_from": base_v, "rebased_onto": cur_v}
             # appends evolve the schema additively: commit under theirs
             v = self._commit(cur, props, fold_into(cur["buckets"]), self._schema_of(cur),
-                             bid, lineage, dig, tot, extra_file_stats=key_stats)
+                             bid, lineage, dig, tot, extra_file_stats=zones)
         return MergeResult(v, bid, True, sorted(int(b) for b in new), rows)
 
     # ------------------------------------------------------------- utilities
@@ -2204,14 +2105,13 @@ class LakeTable:
         out_buckets = {
             b: e for b, e in out_buckets.items() if e.get("base") or e.get("delta")
         }
+        # the base and delta rewrites fold into one total; it carries no
+        # zone map — the footers of every new file give each its own
         batch_total: dict[str, Any] | None = None
         if totals:
-            batch_total = dict(totals[0])
+            batch_total = {k: v for k, v in totals[0].items() if k != "zm"}
             for t in totals[1:]:
-                if "d" in t:
-                    batch_total["d"] = batch_total.get("d", 0) + t["d"]
-                for k, fold in (("lsn_min", min), ("lsn_max", max),
-                                ("key_min", min), ("key_max", max)):
+                for k, fold in (("d", int.__add__), ("lsn_min", min), ("lsn_max", max)):
                     if k in t:
                         batch_total[k] = (
                             fold(batch_total[k], t[k]) if k in batch_total else t[k]
@@ -2224,7 +2124,7 @@ class LakeTable:
         }
         v = self._commit(
             m, self._props(m), out_buckets, schema, bid, lineage, all_digests,
-            batch_total, extra_file_stats=self._file_key_stats(new_files_all),
+            batch_total, extra_file_stats=self._footer_zones(new_files_all, self.key_cols),
         )
         report.update(
             version=v, committed=True, files_rewritten=n_rewritten,

@@ -212,7 +212,7 @@ class CdcPipeline:
         self.compact_every = compact_every
         self.compact_delta_ratio = compact_delta_ratio
         # key-clustered compaction: sort buckets by key + bounded files +
-        # per-file footer zone maps, so reconcile-repair / key-range reads
+        # per-file footer zone maps, so reconcile-repair / ``read(ranges=…)``
         # prune inside buckets even for hash-random keys (see
         # LakeTable.compact)
         self.compact_cluster_by_key = compact_cluster_by_key

@@ -134,8 +134,8 @@ def test_mor_merge_stats_ride_the_write_job(spark, tmp_path, monkeypatch):
 
 def test_key_zone_maps_prune_range_reads(spark, tmp_path, monkeypatch):
     """Watermark-ordered ingest (int keys) lands each commit's delta files in
-    a narrow key band; read(key_ranges=...) must open only files whose
-    manifest key zone map intersects a range, and return exactly the
+    a narrow key band; read(ranges={key: ...}) must open only files whose
+    manifest zone map intersects a range, and return exactly the
     filtered rows (LWW-safe: all versions of an in-range key co-locate in
     kept files)."""
     t = LakeTable(spark, str(tmp_path / "t"), ["k"], n_buckets=4,
@@ -149,21 +149,21 @@ def test_key_zone_maps_prune_range_reads(spark, tmp_path, monkeypatch):
     m = t._load_manifest()
     st = m["file_stats"]
     all_files = t._files(m, None)
-    assert all(f in st and "key_max" in st[f] for f in all_files)
+    assert all("k" in st.get(f, {}).get("zm", {}) for f in all_files)
     opened: list[str] = []
     orig = LakeTable._read_files
     monkeypatch.setattr(
         LakeTable, "_read_files",
         lambda self, files, schema: (opened.extend(files), orig(self, files, schema))[1],
     )
-    out = t.read(key_ranges=[(2100, 2200)])
+    out = t.read(ranges={"k": [(2100, 2200)]})
     assert sorted(r.k for r in out.collect()) == list(range(2100, 2200))
     # only commit r2's files (keys 2000-2999) qualify: ≤ n_buckets of 20
     assert 0 < len(opened) <= 4, opened
     assert len(opened) < len(all_files)
     # unbounded range degrades gracefully to a full read
     opened.clear()
-    assert t.read(key_ranges=[(4500, None)]).count() == 500
+    assert t.read(ranges={"k": [(4500, None)]}).count() == 500
     assert len(opened) <= 4
 
 
@@ -230,7 +230,7 @@ def test_clustered_compact_prunes_hash_random_keys(spark, tmp_path, monkeypatch)
     )
     # pre-compact: the same narrow range opens every file (no pruning)
     n_total_pre = len(t._files(t._load_manifest(), None))
-    out = t.read(key_ranges=[(4000, 4400)])
+    out = t.read(ranges={"k": [(4000, 4400)]})
     assert out.count() == 400
     assert len(opened) == n_total_pre
 
@@ -240,19 +240,19 @@ def test_clustered_compact_prunes_hash_random_keys(spark, tmp_path, monkeypatch)
     all_files = t._files(m, None)
     assert len(all_files) > 4, "max_file_rows must split buckets into multiple files"
     st = m["file_stats"]
-    assert all("key_max" in st[f] for f in all_files)
+    assert all("k" in st[f]["zm"] for f in all_files)
     # per-file bounds are tight: within a bucket, files are key-disjoint
     by_bucket: dict[str, list[tuple[int, int]]] = {}
     for f in all_files:
         b = f.split("_bucket=")[1].split("/")[0]
-        by_bucket.setdefault(b, []).append((st[f]["key_min"], st[f]["key_max"]))
+        by_bucket.setdefault(b, []).append(tuple(st[f]["zm"]["k"]))
     for b, ranges in by_bucket.items():
         ranges.sort()
         for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
             assert hi1 < lo2, f"bucket {b}: overlapping file key ranges"
 
     opened.clear()
-    out = t.read(key_ranges=[(4000, 4400)])
+    out = t.read(ranges={"k": [(4000, 4400)]})
     assert sorted(r_.k for r_ in out.collect()) == list(range(4000, 4400))
     # 400 of 10000 keys → at most one ~700-row file per bucket qualifies
     assert 0 < len(opened) <= 4, opened
@@ -382,7 +382,7 @@ def test_composite_key_zone_maps_prune_on_second_key_column(spark, tmp_path, mon
     the selective SECOND key column — first-column bounds alone span the
     whole domain every commit and prune nothing."""
     t = LakeTable(spark, str(tmp_path / "t"), ["tenant", "seq"], n_buckets=4,
-                  merge_mode="mor", checksum=False)
+                  merge_mode="mor", checksum=False, stats_columns=["v"])
     for i in range(5):  # every commit touches every tenant: loose 1st-col bounds
         b = spark.range(i * 1000, (i + 1) * 1000).select(
             (F.col("id") % 3).cast("string").alias("tenant"),
@@ -393,26 +393,36 @@ def test_composite_key_zone_maps_prune_on_second_key_column(spark, tmp_path, mon
     m = t._load_manifest()
     st = m["file_stats"]
     all_files = t._files(m, None)
-    assert all("kzm" in st.get(f, {}) and "seq" in st[f]["kzm"] for f in all_files)
+    assert all({"seq", "v"} <= set(st.get(f, {}).get("zm", {})) for f in all_files)
     opened: list[str] = []
     orig = LakeTable._read_files
     monkeypatch.setattr(
         LakeTable, "_read_files",
         lambda self, files, schema: (opened.extend(files), orig(self, files, schema))[1],
     )
-    out = t.read(key_ranges=[(2100, 2200)], key_ranges_col="seq")
+    out = t.read(ranges={"seq": [(2100, 2200)]})
     assert sorted(r.seq for r in out.collect()) == list(range(2100, 2200))
     # only commit r2's files (seq 2000-2999) qualify: ≤ n_buckets of ~20
     assert 0 < len(opened) <= 4, opened
     assert len(opened) < len(all_files)
     # first-column bounds really are useless here (they span every commit)
     opened.clear()
-    assert t.read(key_ranges=[("1", "2")]).count() == 1667
+    assert t.read(ranges={"tenant": [("1", "2")]}).count() == 1667
     assert len(opened) == len(all_files)
-    # non-key columns are rejected (MoR-unsafe to file-prune under deltas)
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="key_ranges_col"):
-        t.read(key_ranges=[(0, 1)], key_ranges_col="v")
+    # a NON-key column prunes resolved buckets only: here every bucket has
+    # pending deltas, so a range on v (whose zone maps would keep commit r2
+    # alone) opens every file, and the rows match a post-resolve filter —
+    # the moved-out versions below must not come back as stale matches
+    t.merge_into(spark.range(2100, 2110).select(
+        (F.col("id") % 3).cast("string").alias("tenant"), F.col("id").alias("seq"),
+        F.lit(-1).cast("long").alias("v"), F.lit("update").alias("op"),
+        (F.col("id") + 10_000).alias("lsn"),
+    ), batch_id="moved")
+    opened.clear()
+    got = sorted(r.seq for r in t.read(ranges={"v": [(4200, 4400)]}).collect())
+    assert len(opened) == len(t._files(t._load_manifest(), None))
+    want = t.read().filter((F.col("v") >= 4200) & (F.col("v") < 4400))
+    assert got == sorted(r.seq for r in want.collect()) == list(range(2110, 2200))
 
 
 def _merge_jobs(spark, table, batch, batch_id, strategy):

@@ -10,14 +10,15 @@ import os
 import pyarrow.parquet as pq
 import pytest
 
+from data_sync_tool_spark.session import local_frame
 from data_sync_tool_spark.sources.lake import LakeTable
 
 KEYS = ["conv_id", "turn_idx"]
 
 
 def _mk(spark, rows):
-    return spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, text string, lsn long, op string"
+    return local_frame(
+        spark, rows, "conv_id string, turn_idx int, text string, lsn long, op string"
     )
 
 
@@ -194,3 +195,31 @@ def test_purge_where_resolves_keys_from_live_rows(spark, tmp_path):
 
     with pytest.raises(ValueError, match="more than"):
         t.purge_where(F.lit(True), max_keys=1)
+
+
+@pytest.mark.parametrize("key_cols, purge", [(["k"], [3]), (["tenant", "k"], ["zzz"])])
+def test_purge_rewrite_keeps_each_files_key_bounds(spark, tmp_path, key_cols, purge):
+    """A purge rewrites a bucket's base and delta files in separate writes.
+    Each rewritten file's zone map must cover its OWN keys: folding the
+    writes' bounds once gave the rewritten delta (k 5 and 100) the base's
+    k bounds [1, 10], and a range read on k then skipped the live row 100.
+    The composite case purges a key no file holds, so nothing is dropped,
+    yet the rewrite still lost the second key column's bounds."""
+    schema = "tenant string, k long, v long, op string, lsn long"
+    t = LakeTable(spark, str(tmp_path / "t"), key_cols, n_buckets=1,
+                  merge_mode="mor", checksum=False)
+    t.merge_into(local_frame(
+        spark, [("t", k, k, "upsert", k) for k in range(1, 11)], schema), "b0")
+    t.compact()
+    t.merge_into(local_frame(
+        spark, [("t", 5, 50, "upsert", 20), ("t", 100, 100, "upsert", 21)], schema), "b1")
+    assert t.purge_keys(purge, vacuum_history=False)["committed"]
+    m = t._load_manifest()
+    for f in t._files(m, None):
+        ks = pq.read_table(f, columns=["k"]).column("k").to_pylist()
+        bound = m["file_stats"][f].get("zm", {}).get("k")
+        assert bound is not None and bound[0] <= min(ks) and max(ks) <= bound[1], \
+            (f, m["file_stats"][f], ks)
+    assert [r.k for r in t.read(ranges={"k": [(100, 101)]}).collect()] == [100]
+    live = [k for k in range(1, 11) if k not in purge] + [100]
+    assert sorted(r.k for r in t.read().collect()) == live

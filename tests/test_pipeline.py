@@ -126,7 +126,7 @@ def test_last_watermark_opens_bounded_manifests(spark, pipe, monkeypatch):
 
 def test_repair_read_uses_key_zone_maps(spark, sf_small, tmp_path, monkeypatch):
     """When the reconcile partitions on the lake key column (int), the
-    repair-phase sink read passes the divergent block ranges as key_ranges —
+    repair-phase sink read passes the divergent block ranges as ranges on it —
     file-level zone-map pruning (mechanics pytest-pinned at the lake level in
     test_key_zone_maps_prune_range_reads) — and still converges."""
     from data_sync_tool_spark.sources.lake import LakeTable
@@ -163,13 +163,14 @@ def test_repair_read_uses_key_zone_maps(spark, sf_small, tmp_path, monkeypatch):
     monkeypatch.setattr(
         LakeTable, "read",
         lambda self, *a, **kw: (
-            seen_ranges.append(kw.get("key_ranges")),
+            seen_ranges.append(kw.get("ranges")),
             orig_read(self, *a, **kw),
         )[1],
     )
     out = pipe.run_reconciliation("full", apply=True)
     assert out["counts"]["M"] > 0
-    assert any(kr for kr in seen_ranges), "repair never passed key_ranges"
+    assert any(r and list(r) == ["o_orderkey"] for r in seen_ranges), \
+        "repair never passed ranges on the partition column"
     out2 = pipe.run_reconciliation("full", apply=False)
     assert out2["counts"]["M"] == 0 and out2["counts"]["A"] == 0 and out2["counts"]["D"] == 0
 
@@ -227,9 +228,9 @@ COMPOSITE_YAML = YAML.replace(
 def test_repair_prunes_on_second_key_column(spark, sf_small, tmp_path, monkeypatch):
     """Composite key whose FIRST column is low-cardinality (o_orderstatus:
     3 values, so first-key bounds span the domain every commit): the repair
-    read must pass key_ranges over the SELECTIVE second key column
-    (key_ranges_col=o_orderkey) and open a bounded file subset via the
-    per-column key zone maps."""
+    read must pass ranges over the SELECTIVE second key column
+    (o_orderkey) and open a bounded file subset via the per-column zone
+    maps."""
     from data_sync_tool_spark.sources.lake import LakeTable
 
     cfg_path = tmp_path / "config.yaml"
@@ -266,8 +267,8 @@ def test_repair_prunes_on_second_key_column(spark, sf_small, tmp_path, monkeypat
     orig_files = LakeTable._read_files
 
     def spy_read(self, *a, **kw):
-        if kw.get("key_ranges"):
-            seen.append((kw.get("key_ranges"), kw.get("key_ranges_col")))
+        if kw.get("ranges"):
+            seen.append(kw["ranges"])
             opened: list[str] = []
             monkeypatch.setattr(
                 LakeTable, "_read_files",
@@ -285,7 +286,7 @@ def test_repair_prunes_on_second_key_column(spark, sf_small, tmp_path, monkeypat
     out = pipe.run_reconciliation("full", apply=True)
     monkeypatch.setattr(LakeTable, "read", orig_read)
     assert out["counts"]["M"] > 0
-    assert seen and all(col == "o_orderkey" for _, col in seen)
+    assert seen and all(list(r) == ["o_orderkey"] for r in seen)
     # the repair read opened a strict subset of the table's files (the
     # drifted slice is ~1/4 of the key span; first-key bounds alone would
     # have opened everything)

@@ -198,8 +198,8 @@ def test_asof_join_is_single_shuffle_no_join_node(spark):
 
 
 def test_key_range_read_pushes_filter_to_scan(spark, tmp_path):
-    """read(key_ranges=...) must combine BOTH pruning layers: manifest key
-    zone maps drop whole files before the plan exists, and the residual
+    """read(ranges=...) on a key column must combine BOTH pruning layers:
+    manifest zone maps drop whole files before the plan exists, and the residual
     range condition reaches the parquet scan as a data filter (row-group
     statistics pruning) instead of a post-scan Filter node."""
     from data_sync_tool_spark.sources.lake import LakeTable
@@ -212,7 +212,7 @@ def test_key_range_read_pushes_filter_to_scan(spark, tmp_path):
             F.lit("insert").alias("op"), F.col("id").alias("lsn"),
         )
         t.merge_into(b, batch_id=f"r{i}")
-    df = t.read(key_ranges=[(1100, 1200)])
+    df = t.read(ranges={"k": [(1100, 1200)]})
     plan = df._jdf.queryExecution().executedPlan().toString()
     scan = next(l for l in plan.splitlines() if "FileScan parquet" in l)
     assert "(k#" in scan and ">= 1100" in scan and "< 1200" in scan, scan
