@@ -16,8 +16,11 @@ Scale shape:
   driver. Codebooks are tiny (m × k × dim/m doubles ≈ 128 KB at
   m=8, k=256, dim=64→768) and broadcast.
 - **encode** is ONE lazy Arrow pass: per batch, a numpy argmin against
-  each subspace codebook. The corpus is encoded once (build-once /
-  query-many — persist the codes, drop the vectors).
+  each subspace codebook (``_assign_codes``). The corpus is encoded once
+  (build-once / query-many — persist the codes, drop the vectors). A
+  ``pq_encode`` frame searched as returned is encoded per batch inside the
+  search's top-k kernel (one Python runner per task); a transformed,
+  cached or persisted one, or an index's, is scanned as codes.
 - **search (ADC)** runs in the top-k kernel shared with every similarity
   search (``similarity._block_topk``): each query's m×k lookup table of
   subvector·codeword dot products is built driver-side (numpy over the
@@ -43,6 +46,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -55,6 +59,7 @@ from .similarity import (
     _probe,
     _refine,
     _topk_per_query,
+    _vectors,
 )
 
 
@@ -128,23 +133,24 @@ def pq_train(
     return _subspace_books(smat, m, k, n_iters)
 
 
-def _encode_udf(books_bc):
-    from pyspark.sql import types as T
+def _assign_codes(x: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """``(n, m)`` int32 codes: each row's nearest codeword per subspace."""
+    m, _, dsub = books.shape
+    codes = np.empty((len(x), m), dtype=np.int32)
+    for sub in range(m):
+        xs = x[:, sub * dsub:(sub + 1) * dsub]
+        # ||x-c||² = ||x||² − 2x·c + ||c||²; ||x||² is rank-constant
+        d2 = -2.0 * (xs @ books[sub].T) + (books[sub] ** 2).sum(axis=1)[None, :]
+        codes[:, sub] = np.argmin(d2, axis=1)
+    return codes
 
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
+
+def _encode_udf(books_bc):
+    @F.pandas_udf("array<int>")
     def _encode(vs: pd.Series) -> pd.Series:
-        books = books_bc.value  # (m, k, dsub)
         if len(vs) == 0:
             return pd.Series([], dtype="object")
-        mat = _normalize(np.asarray(vs.tolist(), dtype=np.float64))
-        m, k, dsub = books.shape
-        codes = np.empty((len(mat), m), dtype=np.int32)
-        for sub in range(m):
-            x = mat[:, sub * dsub:(sub + 1) * dsub]
-            # ||x-c||² = ||x||² − 2x·c + ||c||²; ||x||² is rank-constant
-            d2 = -2.0 * (x @ books[sub].T) + (books[sub] ** 2).sum(axis=1)[None, :]
-            codes[:, sub] = np.argmin(d2, axis=1)
-        return pd.Series(list(codes))
+        return pd.Series(list(_assign_codes(_normalize(_vectors(vs)), books_bc.value)))
 
     return _encode
 
@@ -159,13 +165,15 @@ def pq_encode(
     """``(id, codes: array<int>)`` — the compressed corpus. One Arrow
     pass against the broadcast codebooks; everything but the id is
     dropped, so the persisted/queried table is ~100× smaller than the
-    raw vectors."""
-    bc = corpus.sparkSession.sparkContext.broadcast(
-        np.asarray(books, dtype=np.float64)
-    )
-    return corpus.select(
+    raw vectors. The returned frame records its inputs: searched as it
+    is, it is encoded inside the search's kernel (see ``_adc_topk``)."""
+    books = np.asarray(books, dtype=np.float64)
+    bc = corpus.sparkSession.sparkContext.broadcast(books)
+    codes = corpus.select(
         F.col(id_col), _encode_udf(bc)(F.col(vec_col)).alias(code_col)
     )
+    codes._pq_encoded = (corpus.select(id_col, vec_col), books)
+    return codes
 
 
 def _lut_udf(bc_books):
@@ -200,12 +208,17 @@ def _luts(qmat: np.ndarray, books: np.ndarray) -> np.ndarray:
     return luts
 
 
-def _adc_block(luts: np.ndarray, pdf: pd.DataFrame):
-    """Score function of ``pq_topk``: ``score(q, r)`` is the ADC of batch
-    rows ``r`` (codes in column 1) for queries ``q``, folded over subspaces
-    from 0.0 like the JVM ``aggregate(zip_with(codes, lut, …))``
-    (``0.0 + lut[0][c0] + …``), so every double is equal."""
+def _adc_block(side, pdf: pd.DataFrame):
+    """Score function of ``pq_topk``: ``side`` is ``(luts, books)`` and
+    ``score(q, r)`` is the ADC of batch rows ``r`` for queries ``q``,
+    folded over subspaces from 0.0 like the JVM
+    ``aggregate(zip_with(codes, lut, …))`` (``0.0 + lut[0][c0] + …``), so
+    every double is equal. Column 1 holds the codes, or with ``books`` the
+    raw vectors, encoded here as ``pq_encode`` would."""
+    luts, books = side
     c = np.stack(pdf.iloc[:, 1].to_numpy())
+    if books is not None:
+        c = _assign_codes(_normalize(c.astype(np.float64)), books)
 
     def score(q, r):
         acc = np.zeros(np.broadcast_shapes(np.shape(q), np.shape(r)))
@@ -218,11 +231,15 @@ def _adc_block(luts: np.ndarray, pdf: pd.DataFrame):
 
 def _adc_topk(codes: DataFrame, id_col: str, code_col: str, qids, qmat: np.ndarray,
               books: np.ndarray, k: int) -> DataFrame:
-    """Flat ADC top-k of a collected query batch."""
-    return _block_topk(
-        codes.select(id_col, code_col), id_col, qids,
-        _luts(_normalize(qmat), books), k, _adc_block, "adc",
-    )
+    """Flat ADC top-k of a collected query batch. ``codes`` straight from
+    ``pq_encode`` (not transformed, cached or persisted) is scored from its
+    raw corpus, encoded per batch inside the kernel: one Python runner
+    instead of the encode UDF's plus the kernel's."""
+    corpus, enc_books = codes.select(id_col, code_col), None
+    if "_pq_encoded" in vars(codes) and codes.storageLevel == StorageLevel.NONE:
+        corpus, enc_books = codes._pq_encoded
+    return _block_topk(corpus, id_col, qids, (_luts(_normalize(qmat), books), enc_books),
+                       k, _adc_block, "adc")
 
 
 def pq_topk(
@@ -246,6 +263,8 @@ def pq_topk(
     with ``adc = Σ_sub lut[sub][code[sub]]`` (a numpy gather per subspace)
     and keeps each partition's top k per query — the hot path moves ~m
     ints per corpus row, never a vector, and no (query, code) pair row.
+    A lazy ``pq_encode`` frame is the exception: its vectors are encoded
+    per batch inside the kernel, which saves the encode UDF's runner.
 
     The driver-side LUT build bounds the query batch at ``max_queries``
     (serving-sized; past it the collect itself is the bottleneck) and
@@ -372,19 +391,16 @@ def pq_index_write(
     codebooks are FROZEN at build time, so appended batches encode
     against them without touching existing codes."""
     books = pq_train(corpus, m, k, id_col, vec_col, n_iters)
-    mm, kk, dsub = books.shape
-    spark = corpus.sparkSession
-    rows = [
-        (sub, c, [float(x) for x in books[sub, c]])
-        for sub in range(mm)
-        for c in range(kk)
-    ]
-    spark.createDataFrame(
-        rows, _BOOKS
-    ).write.mode("overwrite").parquet(f"{path}/books")
+    _write_books(corpus.sparkSession, books, path)
     pq_encode(corpus, books, id_col, vec_col).write.mode("overwrite").parquet(
         f"{path}/codes"
     )
+
+
+def _write_books(spark, books: np.ndarray, path: str) -> None:
+    rows = [(sub, c, [float(x) for x in books[sub, c]])
+            for sub in range(books.shape[0]) for c in range(books.shape[1])]
+    spark.createDataFrame(rows, _BOOKS).write.mode("overwrite").parquet(f"{path}/books")
 
 
 def pq_read_books(spark, path: str) -> np.ndarray:
@@ -452,22 +468,12 @@ def pq_topk_indexed(
 
 
 def _rescode_udf(books_bc, cmat_bc):
-    from pyspark.sql import types as T
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
+    @F.pandas_udf("array<int>")
     def enc(vs: pd.Series, lists: pd.Series) -> pd.Series:
-        books, cmat = books_bc.value, cmat_bc.value
         if len(vs) == 0:
             return pd.Series([], dtype="object")
-        mat = _normalize(np.asarray(vs.tolist(), dtype=np.float64))
-        res = mat - cmat[lists.to_numpy(dtype=np.int64)]
-        m, k, dsub = books.shape
-        codes = np.empty((len(res), m), dtype=np.int32)
-        for sub in range(m):
-            x = res[:, sub * dsub:(sub + 1) * dsub]
-            d2 = -2.0 * (x @ books[sub].T) + (books[sub] ** 2).sum(axis=1)[None, :]
-            codes[:, sub] = np.argmin(d2, axis=1)
-        return pd.Series(list(codes))
+        res = _normalize(_vectors(vs)) - cmat_bc.value[lists.to_numpy(dtype=np.int64)]
+        return pd.Series(list(_assign_codes(res, books_bc.value)))
 
     return enc
 
@@ -513,15 +519,7 @@ def ivfpq_index_write(
         .write.partitionBy("list_id").mode("overwrite").parquet(f"{path}/codes")
     )
     centroids_df.write.mode("overwrite").parquet(f"{path}/centroids")
-    mm, kk, dsub = books.shape
-    spark.createDataFrame(
-        [
-            (sub, c, [float(x) for x in books[sub, c]])
-            for sub in range(mm)
-            for c in range(kk)
-        ],
-        _BOOKS,
-    ).write.mode("overwrite").parquet(f"{path}/books")
+    _write_books(spark, books, path)
 
 
 def _load_ivfpq(spark, path: str) -> tuple[np.ndarray, np.ndarray]:
@@ -563,7 +561,7 @@ def _ivfpq_block(side, pdf: pd.DataFrame):
     batch's codes (column 1) and list ids (column 2), added like the JVM
     ``qc + aggregate(…)``."""
     luts, qc = side
-    adc = _adc_block(luts, pdf)
+    adc = _adc_block((luts, None), pdf)
     lists = pdf.iloc[:, 2].to_numpy()
     return lambda q, r: qc[q, lists[r]] + adc(q, r)
 

@@ -102,10 +102,15 @@ def _cosine(q_t, qn, c_t, cn):
     return score
 
 
+def _vectors(col: pd.Series) -> np.ndarray:
+    """An Arrow batch's vector column as an ``(n, dim)`` float64 matrix."""
+    return np.stack(col.to_numpy()).astype(np.float64)
+
+
 def _cosine_block(side, pdf: pd.DataFrame):
     """Cosine score function of ``_block_topk``: the batch's vectors
     (column 1) against the broadcast ``_cosine_side``."""
-    c_t = np.stack(pdf.iloc[:, 1].to_numpy()).astype(np.float64).T.copy()
+    c_t = _vectors(pdf.iloc[:, 1]).T.copy()
     return _cosine(*side, c_t, _fold_norms(c_t))
 
 

@@ -237,16 +237,19 @@ def _kernel_rows(make):
 def test_kernel_equals_jvm_pair_plans_exactly(corpus, queries, pq_index, jvm_truth):
     """Every (query, neighbor, score) double equals the JVM fold's: k=2 cuts
     through the three-way tie of vector 0's copies, k=5 exceeds the 3-row
-    partition, k=51 is corpus size − 1 (every partition fits in k)."""
+    partition, k=51 is corpus size − 1 (every partition fits in k). PQ runs
+    over the cached codes and over a lazy ``pq_encode`` frame, which the
+    kernel encodes itself."""
     books, codes = pq_index
     got = _kernel_rows(lambda k: brute_force_topk(corpus, queries, k=k))
-    got_pq = _kernel_rows(lambda k: pq_topk(codes, queries, books, k=k))
     assert got == jvm_truth["brute"]
-    assert got_pq == jvm_truth["pq"]
     assert {n for q, n, _ in got[2] if q == 0} == {100, 101}
     assert all(c == (0.0).hex() for q, _, c in got[51] if q == 50)
-    for k in KS:
-        assert len(got_pq[k]) == sum(min(k, 52 - (q != 999)) for q in (0, 7, 50, 100, 999))
+    for frame in (codes, pq_encode(corpus, books)):
+        got_pq = _kernel_rows(lambda k: pq_topk(frame, queries, books, k=k))
+        assert got_pq == jvm_truth["pq"]
+        for k in KS:
+            assert len(got_pq[k]) == sum(min(k, 52 - (q != 999)) for q in (0, 7, 50, 100, 999))
 
 
 def _label_sets(frames):
@@ -306,10 +309,11 @@ def test_key_restricted_searches_equal_jvm_pair_plans_exactly(
         refined[f"ivfpq_refine@{k}"] = (
             ivfpq_topk(spark, ivfpq_path, queries, k=k, n_probe=2, oversample=3, refine=corpus),
             _jvm_ivfpq(spark, ivfpq_path, queries, k, 2, 3, corpus))
-        refined[f"pq_refined@{k}"] = (
-            pq_topk_refined(codes, corpus, queries, books, k=k, oversample=3),
-            _jvm_exact(_jvm_pq(spark, codes, queries, books, 3 * k).select(
-                "query_id", "neighbor_id"), queries, corpus, k))
+        pq_plan = _jvm_exact(_jvm_pq(spark, codes, queries, books, 3 * k).select(
+            "query_id", "neighbor_id"), queries, corpus, k)
+        for route, frame in (("", codes), ("_fused", pq_encode(corpus, books))):
+            refined[f"pq_refined{route}@{k}"] = (
+                pq_topk_refined(frame, corpus, queries, books, k=k, oversample=3), pq_plan)
     made = {f"{label}@{k}": make(k) for label, (make, _) in ranked.items() for k in KS}
     made.update({label: df for label, (df, _) in refined.items()})
     plans = {label: plan for label, (_, plan) in ranked.items()}
@@ -358,8 +362,8 @@ def _plan(df) -> str:
 MAX_JOBS = {
     "brute_force_topk": 3,
     "pq_topk": 3,
-    "lsh_topk_0bits": 6,
-    "lsh_topk_3bits": 13,
+    "lsh_topk_0bits": 3,
+    "lsh_topk_3bits": 9,
     "ivf_topk": 5,
     "ivf_topk_indexed": 5,
     "ivfpq_topk": 6,
@@ -368,11 +372,13 @@ MAX_JOBS = {
 }
 
 
-def test_topk_job_count(spark, tmp_path, monkeypatch):
+def test_topk_job_count(spark, tmp_path, monkeypatch, pq_index):
     """A corpus of 3 parquet files and a one-file query batch: one bounded
     query collect, then the kernel stage and the window merge (two for a
     refined search), plus what a search reads first — the IVF sample, the
-    index's centroids and codebooks, the LSH hyperplanes."""
+    index's centroids and codebooks, the LSH hyperplanes. A lazy
+    ``pq_encode`` frame is encoded inside the kernel (one Python runner);
+    cached codes are scanned, not encoded again."""
     rng = np.random.default_rng(2)
     rows = [(i, [float(x) for x in rng.standard_normal(DIM)]) for i in range(120)]
     spark.createDataFrame(rows, SCHEMA).repartition(3).write.parquet(str(tmp_path / "c"))
@@ -403,6 +409,13 @@ def test_topk_job_count(spark, tmp_path, monkeypatch):
         plan = _plan(make())
         assert "MapInPandas" in plan
         assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
+    for name in ("pq_topk", "pq_topk_refined"):
+        assert "ArrowEvalPython" not in _plan(searches[name]()), name
+    cached_books, cached = pq_index
+    plan = _plan(pq_topk(cached, q, cached_books, k=5))
+    scan = plan[plan.index("MapInPandas"):].splitlines()
+    assert "codes#" in scan[0] and scan[1].strip().startswith("+- InMemoryTableScan")
+    assert plan.index("ArrowEvalPython") > plan.index("InMemoryRelation")
 
 
 def test_query_bound_raises_and_score_chunks_do_not_change_rows(
@@ -412,7 +425,8 @@ def test_query_bound_raises_and_score_chunks_do_not_change_rows(
     # a budget of 30 scores per block: one or two queries per chunk
     monkeypatch.setattr(similarity, "_SCORE_BLOCK_ELEMS", 30)
     assert _rowset(brute_force_topk(corpus, queries, k=5)) == jvm_truth["brute"][5]
-    assert _rowset(pq_topk(codes, queries, books, k=5)) == jvm_truth["pq"][5]
+    for frame in (codes, pq_encode(corpus, books)):
+        assert _rowset(pq_topk(frame, queries, books, k=5)) == jvm_truth["pq"][5]
 
     monkeypatch.setattr(similarity, "_MAX_DRIVER_QUERIES", 4)
     for search in (brute_force_topk, lsh_topk, ivf_topk):
