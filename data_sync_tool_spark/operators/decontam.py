@@ -105,43 +105,6 @@ def contamination_hits(
     )
 
 
-def benchmark_index_write(
-    bench: DataFrame,
-    path: str,
-    n: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> int:
-    """Persist the benchmark's distinct-gram set (single ``gram`` column,
-    with ``n`` recorded in the file path's ``_n={n}`` suffix directory) —
-    build once per eval suite, probe every ingest batch against it without
-    re-tokenizing the benchmark. Returns the gram count."""
-    grams = benchmark_grams(bench, n, text_col, id_col)
-    grams.write.mode("overwrite").parquet(f"{path}/_n={n}")
-    return grams.sparkSession.read.parquet(f"{path}/_n={n}").count()
-
-
-def contamination_hits_indexed(
-    batch: DataFrame,
-    path: str,
-    n: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(id, n_hit_grams) for a NEW ingest batch against a stored benchmark
-    gram index — the incremental path: cost is O(batch grams + index
-    broadcast); neither the benchmark nor previously-ingested corpus text
-    is ever rescanned. Pair with the lake's ``changes_since`` feed to
-    decontaminate continuously as batches land."""
-    bg = batch.sparkSession.read.parquet(f"{path}/_n={n}")
-    return (
-        doc_ngrams(batch, n, text_col, id_col)
-        .join(F.broadcast(bg), "gram")
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("n_hit_grams"))
-    )
-
-
 def decontaminate(
     train: DataFrame,
     bench: DataFrame,

@@ -30,10 +30,9 @@ Scale shape:
   per-query window merges those — no Python row loop, no shuffle of the
   corpus, no decode, no (query, code) pair rows. IVF-PQ restricts the
   same kernel to the posting lists each query probes, and both refine
-  stages restrict it to each query's candidate ids. The executor-side
-  LUT path for corpus-sized query sets (``distributed_luts=True``) keeps
-  the JVM ``zip_with`` + ``aggregate`` join — the one JVM pair scorer
-  left; both give equal doubles.
+  stages restrict it to each query's candidate ids. Like every search,
+  each collects its query batch once, bounded at
+  ``similarity._MAX_DRIVER_QUERIES``, and raises past it.
 
 Vectors are L2-normalized before subspace split, so ADC inner product
 approximates cosine (residual/OPQ rotations are out of scope).
@@ -52,13 +51,11 @@ from pyspark.sql import functions as F
 
 from .similarity import (
     _CENTROIDS,
-    _MAX_DRIVER_QUERIES,
     _block_topk,
     _collect_queries,
     _centroid_matrix,
     _probe,
     _refine,
-    _topk_per_query,
     _vectors,
 )
 
@@ -176,27 +173,6 @@ def pq_encode(
     return codes
 
 
-def _lut_udf(bc_books):
-    """Arrow-batched LUT construction on the EXECUTORS — the distributed
-    twin of the driver-side loop in pq_topk, for corpus-sized query sets."""
-
-    @F.pandas_udf("array<array<double>>")
-    def lut(v: pd.Series) -> pd.Series:
-        books = bc_books.value  # (m, k, dsub)
-        m, _, dsub = books.shape
-        out = []
-        for vec in v:
-            q = np.asarray(vec, dtype=np.float64)
-            q = q / max(float(np.linalg.norm(q)), 1e-12)
-            out.append([
-                [float(x) for x in q[s * dsub:(s + 1) * dsub] @ books[s].T]
-                for s in range(m)
-            ])
-        return pd.Series(out)
-
-    return lut
-
-
 def _luts(qmat: np.ndarray, books: np.ndarray) -> np.ndarray:
     """``(m, n_queries, k)`` ADC lookup tables of the (normalized) query
     rows: one subvector·codebook product per query and subspace."""
@@ -250,10 +226,6 @@ def pq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     code_col: str = "codes",
-    max_queries: int = _MAX_DRIVER_QUERIES,
-    distributed_luts: bool = False,
-    lut_slice_bytes: int = 64 << 20,
-    max_lut_slices: int = 64,
 ) -> DataFrame:
     """(query_id, neighbor_id, adc) approximate top-k by asymmetric
     distance: the corpus side is the CODES table only. Each query's m×k
@@ -265,88 +237,11 @@ def pq_topk(
     ints per corpus row, never a vector, and no (query, code) pair row.
     A lazy ``pq_encode`` frame is the exception: its vectors are encoded
     per batch inside the kernel, which saves the encode UDF's runner.
-
-    The driver-side LUT build bounds the query batch at ``max_queries``
-    (serving-sized; past it the collect itself is the bottleneck) and
-    raises past the bound. For LARGER query sets pass
-    ``distributed_luts=True``: LUTs are built executor-side by an
-    Arrow-batched UDF and scored by a JVM join. The query set is
-    hash-partitioned into slices whose LUT payload is *expected* to stay
-    ≤ ``lut_slice_bytes`` under uniform hashing (not a hard cap; the
-    budget counts LUT doubles only, not Spark's row and array overhead),
-    and EACH slice joins with an explicit broadcast hint — the non-equi
-    scoring join must always plan as a *Broadcast*NestedLoopJoin
-    (plan-pinned); without the hint a LUT relation past the autoBroadcast
-    size estimate silently degrades to a CartesianProduct with the corpus
-    side replicated per partition pair. Each slice rescans the codes, so
-    the corpus is read once per slice, and ``queries`` is evaluated
-    n_slices + 1 times (a count, then once per slice): it must be
-    deterministic — checkpoint it first if it is not. Past
-    ``max_lut_slices`` slices (~4 GB of LUTs at the defaults) the flat
-    all-pairs scan is the wrong tool and this raises, pointing at
-    ``ivfpq_topk`` (bucketed, sub-all-pairs). Both paths score
-    identically (pytest-pinned)."""
+    The query batch is bounded at ``similarity._MAX_DRIVER_QUERIES``; past
+    it this raises."""
+    qids, qmat = _collect_queries(queries, id_col, vec_col, "pq_topk")
     books = np.asarray(books, dtype=np.float64)
-    m, kk, _ = books.shape
-    spark = codes.sparkSession
-    if not distributed_luts:
-        qids, qmat = _collect_queries(queries, id_col, vec_col, max_queries, "pq_topk")
-        return _adc_topk(codes, id_col, code_col, qids.cast(pa.int64()), qmat, books, k)
-
-    n_q = queries.select(id_col).count()
-    if n_q == 0:
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, adc double"
-        )
-    lut_bytes = m * kk * 8  # doubles per query LUT
-    slice_rows = max(1, lut_slice_bytes // lut_bytes)
-    n_slices = -(-n_q // slice_rows)
-    if n_slices > max_lut_slices:
-        raise ValueError(
-            f"pq_topk(distributed_luts=True) would need {n_slices} "
-            f"broadcast LUT slices for {n_q} queries "
-            f"(> max_lut_slices={max_lut_slices}); a flat ADC scan at "
-            f"this size is the wrong shape — use ivfpq_topk (bucketed) "
-            f"or raise lut_slice_bytes/max_lut_slices deliberately."
-        )
-    bc = spark.sparkContext.broadcast(books)
-
-    def _score(i: int) -> DataFrame:
-        # deterministic hash slicing BELOW the LUT projection: the filter
-        # prunes before the Arrow UDF, so LUT work totals one pass over the
-        # queries across all slices
-        sliced = queries if n_slices == 1 else queries.filter(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_slices)) == F.lit(i)
-        )
-        qdf = F.broadcast(sliced.select(
-            F.col(id_col).alias("query_id"),
-            _lut_udf(bc)(F.col(vec_col)).alias("lut"),
-        ))
-        return (
-            codes.select(F.col(id_col).alias("neighbor_id"), F.col(code_col))
-            .join(qdf, F.col("query_id") != F.col("neighbor_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(
-                    F.aggregate(
-                        F.zip_with(
-                            F.col(code_col),
-                            F.col("lut"),
-                            lambda c, lut: F.element_at(lut, c + F.lit(1)),
-                        ),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    ),
-                    6,
-                ).alias("adc"),
-            )
-        )
-
-    scored = _score(0)
-    for i in range(1, n_slices):  # slices partition the query set: union is exact
-        scored = scored.unionByName(_score(i))
-    return _topk_per_query(scored, "adc", k)
+    return _adc_topk(codes, id_col, code_col, qids.cast(pa.int64()), qmat, books, k)
 
 
 def pq_topk_refined(
@@ -367,9 +262,7 @@ def pq_topk_refined(
     query's candidate ids). The query batch is collected once for both
     stages, bounded as in ``pq_topk``. Returns (query_id, neighbor_id,
     cos)."""
-    qids, qmat = _collect_queries(
-        queries, id_col, vec_col, _MAX_DRIVER_QUERIES, "pq_topk_refined"
-    )
+    qids, qmat = _collect_queries(queries, id_col, vec_col, "pq_topk_refined")
     qids = qids.cast(pa.int64())
     books = np.asarray(books, dtype=np.float64)
     cands = _adc_topk(codes, id_col, code_col, qids, qmat, books, k * oversample)
@@ -439,19 +332,12 @@ def pq_topk_indexed(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_queries: int = _MAX_DRIVER_QUERIES,
-    distributed_luts: bool = False,
-    lut_slice_bytes: int = 64 << 20,
-    max_lut_slices: int = 64,
 ) -> DataFrame:
-    """ADC top-k against a persisted PQ index — reads codes only. Query
-    batch bounds / distributed-LUT path as in :func:`pq_topk`."""
+    """ADC top-k against a persisted PQ index — reads codes only. The query
+    batch is bounded as in :func:`pq_topk`."""
     books = pq_read_books(spark, path)
     codes = spark.read.parquet(f"{path}/codes")
-    return pq_topk(codes, queries, books, k, id_col, vec_col,
-                   max_queries=max_queries, distributed_luts=distributed_luts,
-                   lut_slice_bytes=lut_slice_bytes,
-                   max_lut_slices=max_lut_slices)
+    return pq_topk(codes, queries, books, k, id_col, vec_col)
 
 
 # ------------------------------------------------------------------- IVF-PQ
@@ -467,15 +353,29 @@ def pq_topk_indexed(
 # partitions.
 
 
-def _rescode_udf(books_bc, cmat_bc):
-    @F.pandas_udf("array<int>")
-    def enc(vs: pd.Series, lists: pd.Series) -> pd.Series:
-        if len(vs) == 0:
-            return pd.Series([], dtype="object")
-        res = _normalize(_vectors(vs)) - cmat_bc.value[lists.to_numpy(dtype=np.int64)]
-        return pd.Series(list(_assign_codes(res, books_bc.value)))
+def _ivfpq_codes(batch: DataFrame, cmat: np.ndarray, books: np.ndarray,
+                 id_col: str, vec_col: str) -> DataFrame:
+    """``(id, list_id, codes)`` of ``batch`` in one Arrow pass: per batch the
+    vectors are normalized once, each row takes its nearest list (argmax
+    against the centroid matrix, as ``similarity._assign_udf``) and is
+    residual-encoded against that list's centroid — one Python runner.
+    Clustered by list for the ``list_id=`` partitioned write."""
 
-    return enc
+    @F.pandas_udf("list_id long, codes array<int>")
+    def enc(vs: pd.Series) -> pd.DataFrame:
+        if len(vs) == 0:
+            return pd.DataFrame({"list_id": pd.Series([], dtype="int64"),
+                                 "codes": pd.Series([], dtype="object")})
+        x = _normalize(_vectors(vs))
+        lists = np.argmax(x @ cmat.T, axis=1)
+        return pd.DataFrame({"list_id": lists.astype(np.int64),
+                             "codes": list(_assign_codes(x - cmat[lists], books))})
+
+    return (
+        batch.select(F.col(id_col), enc(F.col(vec_col)).alias("e"))
+        .select(id_col, "e.list_id", "e.codes")
+        .repartition(max(1, len(cmat) // 4), F.col("list_id"))
+    )
 
 
 def ivfpq_index_write(
@@ -491,14 +391,13 @@ def ivfpq_index_write(
 ) -> None:
     """Build a persisted IVF-PQ index: ``{path}/codes`` = (id, codes)
     parquet PARTITIONED BY list_id, ``{path}/centroids`` = the coarse
-    quantizer, ``{path}/books`` = residual codebooks. Training cost is one
-    bounded sample collect + two lazy Arrow passes (assign, encode) over
-    the corpus — never an iteration over it."""
+    quantizer, ``{path}/books`` = residual codebooks. Training cost is two
+    bounded sample collects (centroids, residual codebooks) + one lazy
+    Arrow pass over the corpus that assigns and encodes — never an
+    iteration over it."""
     from .similarity import ivf_assign
 
-    assigned, centroids_df = ivf_assign(
-        corpus, n_centroids, id_col, vec_col, n_iters
-    )
+    centroids_df = ivf_assign(corpus, n_centroids, id_col, vec_col, n_iters)[1]
     spark = corpus.sparkSession
     cmat = _centroid_matrix(centroids_df)[1]
     # residual codebooks: sample assigned driver-side against the same
@@ -507,17 +406,8 @@ def ivfpq_index_write(
     smat = _hash_min_sample(corpus, max(k, k * sample_per_code), id_col, vec_col)
     sres = smat - cmat[np.argmax(smat @ cmat.T, axis=1)]
     books = _subspace_books(sres, m, k, n_iters)
-
-    sc = spark.sparkContext
-    enc = _rescode_udf(sc.broadcast(books), sc.broadcast(cmat))
-    (
-        assigned.select(
-            F.col(id_col), F.col("list_id"),
-            enc(F.col(vec_col), F.col("list_id")).alias("codes"),
-        )
-        .repartition(max(1, n_centroids // 4), F.col("list_id"))
-        .write.partitionBy("list_id").mode("overwrite").parquet(f"{path}/codes")
-    )
+    _ivfpq_codes(corpus, cmat, books, id_col, vec_col).write.partitionBy(
+        "list_id").mode("overwrite").parquet(f"{path}/codes")
     centroids_df.write.mode("overwrite").parquet(f"{path}/centroids")
     _write_books(spark, books, path)
 
@@ -536,24 +426,9 @@ def ivfpq_index_append(
     """Assign + residual-encode NEW vectors against the FROZEN stored
     centroids/codebooks and append into the partitioned posting lists —
     O(batch), corpus never rescanned, append ≡ rebuild (pytest-pinned)."""
-    from .similarity import _assign_udf
-
-    spark = batch.sparkSession
-    cmat, books = _load_ivfpq(spark, path)
-    sc = spark.sparkContext
-    assigned = batch.withColumn(
-        "list_id",
-        _assign_udf(cmat, np.arange(len(cmat), dtype=np.int64))(F.col(vec_col)),
-    )
-    enc = _rescode_udf(sc.broadcast(books), sc.broadcast(cmat))
-    (
-        assigned.select(
-            F.col(id_col), F.col("list_id"),
-            enc(F.col(vec_col), F.col("list_id")).alias("codes"),
-        )
-        .repartition(max(1, len(cmat) // 4), F.col("list_id"))
-        .write.partitionBy("list_id").mode("append").parquet(f"{path}/codes")
-    )
+    cmat, books = _load_ivfpq(batch.sparkSession, path)
+    _ivfpq_codes(batch, cmat, books, id_col, vec_col).write.partitionBy(
+        "list_id").mode("append").parquet(f"{path}/codes")
 
 
 def _ivfpq_block(side, pdf: pd.DataFrame):
@@ -576,11 +451,10 @@ def ivfpq_topk(
     refine: DataFrame | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_queries: int = _MAX_DRIVER_QUERIES,
 ) -> DataFrame:
     """ADC top-k against a persisted IVF-PQ index. The query batch is
-    collected once (bounded at ``max_queries``; past it this raises — split
-    it, or score flat codes with ``pq_topk(distributed_luts=True)``).
+    collected once (bounded at ``similarity._MAX_DRIVER_QUERIES``; past it
+    this raises).
     Probes, the ``(n_queries, n_lists)`` q·centroid matrix and the
     ``(m, n_queries, k)`` LUTs are computed driver-side and broadcast; the
     posting-list scan reads ONLY the probed ``list_id=`` partitions and
@@ -591,7 +465,7 @@ def ivfpq_topk(
     without it the ADC scores rank directly. Returns (query_id,
     neighbor_id, score)."""
     cmat, books = _load_ivfpq(spark, path)
-    qids, qmat = _collect_queries(queries, id_col, vec_col, max_queries, "ivfpq_topk")
+    qids, qmat = _collect_queries(queries, id_col, vec_col, "ivfpq_topk")
     qids = qids.cast(pa.int64())
     qn = _normalize(qmat)
     qc = qn @ cmat.T  # (n_queries, n_lists)

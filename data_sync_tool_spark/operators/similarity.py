@@ -22,8 +22,7 @@ optional key restriction turns the flat search into a bucketed one: each
 corpus row carries keys (its SRP bucket per table, its IVF list, or its own
 id for an exact re-rank of candidates), each query probes keys, and only
 (query, row) pairs sharing a key are scored — no (query, corpus) pair ever
-materializes in the JVM. The one JVM pair scorer left is
-``pq.pq_topk(distributed_luts=True)``, for query sets past the bound.
+materializes in the JVM. Past the bound every search raises.
 """
 
 import numpy as np
@@ -35,12 +34,14 @@ from pyspark.sql.window import Window
 from ..functions.numeric import round6_half_up
 from ..functions.vectors import cosine_prenormed, norm
 
-# Every top-k search collects its query batch on the driver, bounded here:
-# past it the collect itself is the bottleneck.
+# Every top-k search collects its query batch on the driver, bounded here
+# (read at call time): past it the collect itself is the bottleneck.
 _MAX_DRIVER_QUERIES = 65_536
 _OVER_BOUND = (
-    "Split the query batch, or score PQ codes with "
-    "pq_topk(distributed_luts=True) (executor-side LUTs, no driver collect)."
+    "{who} collects its query batch on the driver and is bounded at "
+    "_MAX_DRIVER_QUERIES={bound}; got more. Split the query batch into slices "
+    "of at most {bound} queries and union the outputs: each query's top k does "
+    "not depend on the other queries, so the union is exact."
 )
 # float64 elements per score block in ``_block_topk`` (≤ ~64 MB), the same
 # budget ``_pairs_within_groups`` uses for its gram chunks.
@@ -50,18 +51,14 @@ _SCORE_BLOCK_ELEMS = 8_000_000
 _CENTROIDS = "list_id long, centroid array<double>"
 
 
-def _collect_queries(
-    queries: DataFrame, id_col: str, vec_col: str, max_queries: int, who: str,
-):
+def _collect_queries(queries: DataFrame, id_col: str, vec_col: str, who: str):
     """``(ids, mat)``: the query batch as an Arrow id array (its Spark type
     intact) and an ``(n, dim)`` float64 matrix — one bounded collect that
-    raises past ``max_queries``."""
-    t = queries.select(id_col, vec_col).limit(max_queries + 1).toArrow()
-    if t.num_rows > max_queries:
-        raise ValueError(
-            f"{who} collects its query batch on the driver and is bounded at "
-            f"max_queries={max_queries}; got more. {_OVER_BOUND}"
-        )
+    raises past ``_MAX_DRIVER_QUERIES``."""
+    bound = _MAX_DRIVER_QUERIES
+    t = queries.select(id_col, vec_col).limit(bound + 1).toArrow()
+    if t.num_rows > bound:
+        raise ValueError(_OVER_BOUND.format(who=who, bound=bound))
     flat = t.column(1).combine_chunks().flatten().to_numpy(zero_copy_only=False)
     mat = flat.astype(np.float64).reshape(t.num_rows, -1 if t.num_rows else 0)
     return t.column(0).combine_chunks(), mat
@@ -277,9 +274,7 @@ def brute_force_topk(
     against it. Every score is bit-identical to the JVM
     ``round(cosine_prenormed(q, c), 6)``: dot products and norms fold left
     to right over dims, then ``d > 0 ? dot/d : 0.0``."""
-    qids, qmat = _collect_queries(
-        queries, id_col, vec_col, _MAX_DRIVER_QUERIES, "brute_force_topk"
-    )
+    qids, qmat = _collect_queries(queries, id_col, vec_col, "brute_force_topk")
     return _block_topk(
         corpus.select(id_col, vec_col), id_col, qids, _cosine_side(qmat),
         k, _cosine_block, "cos",
@@ -359,7 +354,7 @@ def lsh_topk(
     ``_block_topk`` scores only the (query, row) pairs that share one —
     each pair once, however many tables it shares, and the vectors never
     leave their corpus batch."""
-    qids, qmat = _collect_queries(queries, id_col, vec_col, _MAX_DRIVER_QUERIES, "lsh_topk")
+    qids, qmat = _collect_queries(queries, id_col, vec_col, "lsh_topk")
     spark, (nq, dim) = corpus.sparkSession, qmat.shape
     q_keys = np.empty((nq, n_tables), dtype=np.int64)
     for t in range(n_tables):
@@ -483,7 +478,7 @@ def _ivf_search(
     each query probes its ``n_probe`` nearest centroids by an unrounded
     numpy cosine folded like the JVM ``cosine``, only the probed lists are
     read, and ``_block_topk`` scores the rows of the lists a query probes."""
-    qids, qmat = _collect_queries(queries, id_col, vec_col, _MAX_DRIVER_QUERIES, who)
+    qids, qmat = _collect_queries(queries, id_col, vec_col, who)
     side = _cosine_side(qmat)
     c_t = cmat.T.copy()
     cs = _cosine(*side, c_t, _fold_norms(c_t))(np.arange(len(qmat))[:, None],

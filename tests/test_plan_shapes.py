@@ -290,53 +290,39 @@ def test_holistic_plus_distinct_agg_splits_into_joined_aggregates(spark):
         assert rows[g][0] == round(statistics.median([i * 1.5 for i in ids]), 4)
 
 
-def test_distributed_lut_adc_join_is_always_broadcast_nested_loop(spark):
-    """round-5 verdict item: the ``pq_topk(distributed_luts=True)``
-    non-equi scoring join must plan as a *Broadcast*NestedLoopJoin even
-    when the LUT relation's size estimate exceeds the autoBroadcast
-    threshold — without the explicit per-slice hint it silently degrades
-    to a CartesianProduct with the corpus side unbounded (exactly the
-    >max_queries regime the flag exists for). Also pins: hash-sliced
-    multi-broadcast plan, exact score equality to the driver-LUT path,
-    and the past-the-bound redirect to ivfpq_topk."""
+def test_pq_adc_plans_have_no_pair_join(spark):
+    """round-5 verdict item: PQ scoring must never plan a (query, code)
+    pair join, even when no relation is under the autoBroadcast threshold
+    — a non-equi scoring join past it silently degrades to a
+    CartesianProduct with the corpus side unbounded. ``pq_topk`` and
+    ``pq_topk_refined`` score in the top-k kernel's ``MapInPandas``, with
+    no nested-loop join of either kind."""
     import numpy as np
 
-    from data_sync_tool_spark.operators.pq import pq_encode, pq_topk, pq_train
+    from data_sync_tool_spark.operators.pq import (
+        pq_encode,
+        pq_topk,
+        pq_topk_refined,
+        pq_train,
+    )
+    from data_sync_tool_spark.session import local_frame
 
     rng = np.random.default_rng(11)
     rows = [(int(i), [float(x) for x in rng.standard_normal(8)]) for i in range(40)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    df = local_frame(spark, rows, "vec_id long, embedding array<double>")
     books = pq_train(df, m=4, k=4)
     codes = pq_encode(df, books)
     q = df.filter(F.col("vec_id") < 12)
 
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
-        # past-threshold regime: nothing auto-broadcasts; only the hint can
+        # past-threshold regime: nothing auto-broadcasts
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1KB")
-        out = pq_topk(codes, q, books, k=3, distributed_luts=True)
-        plan = _plan(out)
-        assert "BroadcastNestedLoopJoin" in plan
-        assert "CartesianProduct" not in plan
-
-        # force multiple LUT slices (4*4*8 B per LUT; 3 LUTs per slice)
-        lut_bytes = 4 * 4 * 8
-        sliced = pq_topk(
-            codes, q, books, k=3, distributed_luts=True,
-            lut_slice_bytes=3 * lut_bytes,
-        )
-        plan_s = _plan(sliced)
-        assert plan_s.count("BroadcastNestedLoopJoin") >= 2
-        assert "CartesianProduct" not in plan_s
-
-        driver = {(r.query_id, r.neighbor_id, r.adc)
-                  for r in pq_topk(codes, q, books, k=3).collect()}
-        assert {(r.query_id, r.neighbor_id, r.adc) for r in out.collect()} == driver
-        assert {(r.query_id, r.neighbor_id, r.adc) for r in sliced.collect()} == driver
-        assert driver
-
-        with pytest.raises(ValueError, match="ivfpq_topk"):
-            pq_topk(codes, q, books, k=3, distributed_luts=True,
-                    lut_slice_bytes=lut_bytes, max_lut_slices=4)
+        for out in (pq_topk(codes, q, books, k=3),
+                    pq_topk_refined(codes, df, q, books, k=3)):
+            plan = _plan(out)
+            assert "MapInPandas" in plan
+            assert "CartesianProduct" not in plan
+            assert "NestedLoopJoin" not in plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)

@@ -16,7 +16,9 @@ from data_sync_tool_spark.operators.pq import (
     pq_topk_indexed,
     pq_train,
 )
+from data_sync_tool_spark.operators import similarity
 from data_sync_tool_spark.operators.similarity import brute_force_topk
+from data_sync_tool_spark.session import local_frame
 
 DIM, M, K = 16, 4, 8
 
@@ -29,7 +31,7 @@ def _vecs(spark, n=120, seed=3):
     for i in range(n):
         v = centers[i % 6] + 0.15 * rng.randn(DIM)
         rows.append((i, [float(x) for x in v]))
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    return local_frame(spark, rows, "vec_id long, embedding array<float>")
 
 
 def _normalize(m):
@@ -230,26 +232,20 @@ def test_ivfpq_append_equals_rebuild(spark, tmp_path):
     out = ivfpq_topk(spark, path, q, k=3, n_probe=5)
     assert out.groupBy("query_id").count().filter(F.col("count") != 3).count() == 0
 
-def test_max_queries_guard_and_distributed_lut_path(spark, tmp_path):
-    """Driver-bound query collects are bounded: past max_queries both
-    pq_topk and ivfpq_topk raise with guidance; the distributed-LUT join
-    path (executor-side Arrow LUTs, no collect) scores identically to the
-    driver path."""
+def test_query_bound_raises_for_pq_and_ivfpq(spark, tmp_path, monkeypatch):
+    """Driver-bound query collects are bounded: past the one bound
+    (``similarity._MAX_DRIVER_QUERIES``) both pq_topk and ivfpq_topk raise
+    with guidance."""
     from data_sync_tool_spark.operators.pq import ivfpq_index_write, ivfpq_topk
 
     df = _vecs(spark)
     books = pq_train(df, m=M, k=K)
     codes = pq_encode(df, books)
     q = df.filter(F.col("vec_id") < 10)
-    with pytest.raises(ValueError, match="max_queries"):
-        pq_topk(codes, q, books, k=3, max_queries=4)
     path = str(tmp_path / "ivfpq")
     ivfpq_index_write(df, path, n_centroids=4, m=M, k=K)
-    with pytest.raises(ValueError, match="max_queries"):
-        ivfpq_topk(spark, path, q, k=3, max_queries=4)
-    # join path ≡ driver path, exact scores
-    a = {(r.query_id, r.neighbor_id, r.adc)
-         for r in pq_topk(codes, q, books, k=5).collect()}
-    b = {(r.query_id, r.neighbor_id, r.adc)
-         for r in pq_topk(codes, q, books, k=5, distributed_luts=True).collect()}
-    assert a == b and a
+    monkeypatch.setattr(similarity, "_MAX_DRIVER_QUERIES", 4)
+    with pytest.raises(ValueError, match="_MAX_DRIVER_QUERIES=4"):
+        pq_topk(codes, q, books, k=3)
+    with pytest.raises(ValueError, match="_MAX_DRIVER_QUERIES=4"):
+        ivfpq_topk(spark, path, q, k=3)

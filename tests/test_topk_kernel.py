@@ -16,6 +16,7 @@ from pyspark.sql.window import Window
 from data_sync_tool_spark.functions.vectors import cosine, cosine_prenormed, norm
 from data_sync_tool_spark.operators import similarity
 from data_sync_tool_spark.operators.pq import (
+    _ivfpq_codes,
     _load_ivfpq,
     _normalize,
     ivfpq_index_write,
@@ -411,6 +412,9 @@ def test_topk_job_count(spark, tmp_path, monkeypatch, pq_index):
         assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     for name in ("pq_topk", "pq_topk_refined"):
         assert "ArrowEvalPython" not in _plan(searches[name]()), name
+    # the IVF-PQ index encode assigns and residual-encodes in one runner
+    encode_plan = _plan(_ivfpq_codes(corpus, *_load_ivfpq(spark, ivfpq), "vec_id", "embedding"))
+    assert encode_plan.count("ArrowEvalPython") == 1, encode_plan
     cached_books, cached = pq_index
     plan = _plan(pq_topk(cached, q, cached_books, k=5))
     scan = plan[plan.index("MapInPandas"):].splitlines()
@@ -429,6 +433,13 @@ def test_query_bound_raises_and_score_chunks_do_not_change_rows(
         assert _rowset(pq_topk(frame, queries, books, k=5)) == jvm_truth["pq"][5]
 
     monkeypatch.setattr(similarity, "_MAX_DRIVER_QUERIES", 4)
-    for search in (brute_force_topk, lsh_topk, ivf_topk):
-        with pytest.raises(ValueError, match="distributed_luts"):
-            search(corpus, queries, k=4)
+    searches = (
+        lambda: brute_force_topk(corpus, queries, k=4),
+        lambda: lsh_topk(corpus, queries, k=4),
+        lambda: ivf_topk(corpus, queries, k=4),
+        lambda: pq_topk(codes, queries, books, k=4),
+        lambda: pq_topk_refined(codes, corpus, queries, books, k=4),
+    )
+    for search in searches:
+        with pytest.raises(ValueError, match="slices of at most 4 queries"):
+            search()
