@@ -9,7 +9,10 @@ dominant cost. The refresh here is O(changed groups), not O(table):
 
 - **Affected groups from the pruned feed.** ``changes_since`` reads only
   the commits since the view's watermark; the refresh takes the DISTINCT
-  group keys in that window (bounded by the batch, not the table).
+  group keys in that window (bounded by the batch, not the table). The
+  refresh's head lsn comes off those files' parquet footers, so no pass over
+  the feed runs just to find it, and the bootstrap (every group affected)
+  never groups the feed at all.
 - **Recompute, don't retract.** Each affected group is re-aggregated from
   the source's CURRENT rows — correct for every aggregate including the
   retraction-hostile ones (min/max/count-distinct, which differential
@@ -35,7 +38,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .lake import LSN_COL, LakeTable, MergeResult
@@ -139,20 +142,11 @@ def refresh_agg_view(
     last = agg_view_watermark(view, name)
     if max_lsn is not None and last is not None and last >= max_lsn:
         return None  # refreshed through the bound: feed provably empty
-    feed = src.changes_since(-1 if last is None else last, max_lsn=max_lsn)
-    if not feed.columns:
+    # the head lsn (row-level, off the feed files' footers) and the feed,
+    # from one manifest load: None means nothing new
+    feed, hi = src._feed(-1 if last is None else last, max_lsn)
+    if hi is None:
         return None
-    # ONE pass over the pruned feed: the affected groups (one row per touched
-    # group), checkpointed once for every later consumer (probe collect,
-    # recompute semi-join, vanished-group anti-join), observing the head lsn
-    # on the way (the plan's top node, so no rule drops it over an empty feed).
-    obs = Observation()
-    aff = feed.groupBy(group).agg(F.max(LSN_COL).alias("_hi"))
-    aff = aff.observe(obs, F.max("_hi").alias("head")).localCheckpoint()
-    head = obs.get["head"]
-    if head is None:
-        return None
-    hi = int(head)
     agg_cols = [expr.alias(out) for out, expr in aggs.items()]
     if last is None:
         # bootstrap: every group is affected — aggregate the full live view
@@ -173,7 +167,10 @@ def refresh_agg_view(
         batch = current.groupBy(group).agg(*agg_cols)
         deletes: DataFrame | None = None
     else:
-        affected = aff.select(group)
+        # ONE pass over the pruned feed: the affected groups (one row per
+        # touched group), checkpointed once for every later consumer (probe
+        # collect, recompute semi-join, vanished-group anti-join)
+        affected = feed.select(group).distinct().localCheckpoint()
         groups: list[Any] = [
             r[0] for r in affected.limit(max_probe_keys + 1).collect()
         ]
@@ -198,20 +195,20 @@ def refresh_agg_view(
     # barrier the expensive recompute pipeline runs up to 4x per refresh
     batch = batch.localCheckpoint()
     out_schema = batch.drop(group).schema
-    up = batch.withColumn("op", F.lit("upsert")).withColumn("lsn", F.lit(int(hi)))
+    up = batch.withColumn("op", F.lit("upsert")).withColumn("lsn", F.lit(hi))
     if deletes is not None:
         down = deletes.select(
             group,
             *[F.lit(None).cast(f.dataType).alias(f.name) for f in out_schema.fields],
             F.lit("delete").alias("op"),
-            F.lit(int(hi)).alias("lsn"),
+            F.lit(hi).alias("lsn"),
         )
         up = up.unionByName(down)
     recon = _recon(name)
     return view.merge_into(
         up,
-        batch_id=f"{recon}:lsn{int(hi)}",
-        lineage_extra={"reconciliation": recon, "watermark": int(hi)},
+        batch_id=f"{recon}:lsn{hi}",
+        lineage_extra={"reconciliation": recon, "watermark": hi},
         # the batch is one row per group by construction (per-key aggregate
         # ∪ anti-joined deletes, disjoint keys) — skip the merge's dedupe
         unique_keys=True,

@@ -604,10 +604,13 @@ class LakeTable:
             return local_frame(self.spark, [], schema)
         return self.spark.read.schema(schema).option("mergeSchema", "true").parquet(*files)
 
-    def _resolve_lww(self, df: DataFrame) -> DataFrame:
+    def _resolve_lww(self, df: DataFrame, by: tuple[str, ...] = ()) -> DataFrame:
         """Reduce to one row per key: max (_lsn, deleted-rank). Hash aggregate
-        with map-side partial combine — the skew-safe reduction (SURVEY §7)."""
-        data_cols = [c for c in df.columns if c not in self.key_cols]
+        with map-side partial combine — the skew-safe reduction (SURVEY §7).
+        ``by``: columns that are functions of the key (the bucket) grouped
+        with it, so the rows keep the partitioning of an exchange on them."""
+        group = (*self.key_cols, *by)
+        data_cols = [c for c in df.columns if c not in group]
         del_rank = (
             F.when(F.coalesce(F.col(DELETED_COL), F.lit(False)), F.lit(2)).otherwise(F.lit(1))
             if DELETED_COL in df.columns
@@ -617,10 +620,8 @@ class LakeTable:
             F.col(LSN_COL).alias("_o1"), del_rank.alias("_o2"),
             *[F.col(c) for c in data_cols],
         )
-        won = df.groupBy(*self.key_cols).agg(F.max(payload).alias("_w"))
-        return won.select(
-            *self.key_cols, *[F.col(f"_w.{c}").alias(c) for c in data_cols]
-        )
+        won = df.groupBy(*group).agg(F.max(payload).alias("_w"))
+        return won.select(*group, *[F.col(f"_w.{c}").alias(c) for c in data_cols])
 
     # ----------------------------------------------------------------- reads
     def read(
@@ -1311,6 +1312,9 @@ class LakeTable:
             df = df.withColumn(LSN_COL, F.lit(lsn).cast("long"))
         if DELETED_COL not in df.columns:
             df = df.withColumn(DELETED_COL, F.lit(False))
+        # a _bucket read back from snapshot dirs (partition discovery) may
+        # hash over another bucket count: the commit derives it again
+        df = df.drop(BUCKET_COL)
         # a full replace defines the table's schema: no evolution onto the old
         return self._commit_write(
             self._load_manifest(), df, batch_id, "overwrite", evolve=False
@@ -1505,15 +1509,22 @@ class LakeTable:
                     for name in ("insert", "update", "upsert", "delete")
                 ],
             )
+        if append:
+            # the write's bucket exchange, moved under the dedupe: grouped by
+            # keys + BUCKET_COL, the per-key reduction needs no shuffle of its
+            # own, and the write's repartition on the same column is planned
+            # away (one exchange per append merge, one delta file per bucket)
+            batch = batch.repartition(props["n_buckets"], F.col(BUCKET_COL))
         fold = None
         if strategy == "collapse":
             op_rank = F.when(F.col("_op") == "delete", 2).otherwise(1)
             payload = [c for c in data_cols if c not in self.key_cols]
             rows = (
-                batch.groupBy(*self.key_cols)
+                batch.groupBy(*self.key_cols, BUCKET_COL)
                 .agg(F.max(F.struct(F.col(LSN_COL), op_rank.alias("_r"), F.col("_op"),
                                     *[F.col(c) for c in payload])).alias("w"))
-                .select(*self.key_cols, *[F.col(f"w.{c}").alias(c) for c in payload],
+                .select(*self.key_cols, BUCKET_COL,
+                        *[F.col(f"w.{c}").alias(c) for c in payload],
                         F.col(f"w.{LSN_COL}").alias(LSN_COL), F.col("w._op").alias("_op"))
                 .withColumn(DELETED_COL, F.col("_op") == F.lit("delete"))
                 .drop("_op")
@@ -1537,7 +1548,8 @@ class LakeTable:
             tombstoned = batch.withColumn(
                 DELETED_COL, F.col("_op") == F.lit("delete")
             ).drop("_op")
-            rows = tombstoned if unique_keys else self._resolve_lww(tombstoned)
+            rows = tombstoned if unique_keys else self._resolve_lww(
+                tombstoned, by=(BUCKET_COL,) if append else ())
             if not append:
                 def fold(target: DataFrame, deduped: DataFrame) -> DataFrame:
                     return self._resolve_lww(
@@ -1573,7 +1585,9 @@ class LakeTable:
         version the commit publishes at all come from it, so a writer
         landing at any later point fails the commit with
         :class:`ConcurrentWriteError` instead of being silently
-        overwritten. ``df``'s rows are bucketed here.
+        overwritten. ``df``'s rows are bucketed here unless ``df`` already
+        carries ``BUCKET_COL`` (``merge_into``'s append shape: the write
+        reuses its dedupe's bucket exchange).
 
         Two write shapes:
 
@@ -1591,7 +1605,8 @@ class LakeTable:
         ``m``'s schema (off for ``overwrite``, which defines a new one)."""
         props = props or self._props(m)
         bucket = self._bucket_col(props["n_buckets"])
-        df = df.withColumn(BUCKET_COL, bucket)
+        if BUCKET_COL not in df.columns:
+            df = df.withColumn(BUCKET_COL, bucket)
         data_schema = df.drop(BUCKET_COL).schema
         if evolve and m is not None:
             data_schema = _merge_schemas(self._schema_of(m), data_schema)
@@ -1658,10 +1673,28 @@ class LakeTable:
         faithful at COMMIT granularity: a merge batch stores only its
         within-batch LWW winners, so a bound cutting through the middle of
         one commit's lsn range cannot recover versions that commit already
-        superseded (same contract as replaying a table-format changelog)."""
+        superseded (same contract as replaying a table-format changelog).
+
+        Lazy: building the feed runs no Spark job and reads no footer."""
+        return self._feed(lsn, max_lsn, with_head=False)[0]
+
+    def _feed(
+        self, lsn: int, max_lsn: int | None = None, with_head: bool = True
+    ) -> tuple[DataFrame, int | None]:
+        """``changes_since``'s feed and its head lsn (the max ``_lsn`` of the
+        rows in ``(lsn, max_lsn]``; None for an empty window), both from ONE
+        manifest load.
+
+        The head is row-level, read off the feed files' parquet footers
+        (exact for the long ``_lsn``) — never from manifest bounds, which a
+        rewrite commit (compact, purge) leaves conservative: a head past the
+        last row would move a consumer's watermark over rows landing under
+        it. Only a file with no ``_lsn`` statistic, or whose footer range
+        straddles ``max_lsn``, goes through one ``max(_lsn)`` aggregate;
+        without one, no job runs."""
         m = self._load_manifest()
         if m is None:
-            return local_frame(self.spark, [], T.StructType([]))
+            return local_frame(self.spark, [], T.StructType([])), None
         stats = m.get("file_stats", {})
         files = [
             f for f in self._files(m, None)
@@ -1669,14 +1702,32 @@ class LakeTable:
             and (max_lsn is None or f not in stats
                  or stats[f].get("lsn_min", max_lsn) <= max_lsn)
         ]
-        df = self._read_files(files, self._schema_of(m)).filter(F.col(LSN_COL) > lsn)
-        if max_lsn is not None and df.columns:
-            df = df.filter(F.col(LSN_COL) <= max_lsn)
+        schema = self._schema_of(m)
+
+        def window(fs: list[str]) -> DataFrame:
+            df = self._read_files(fs, schema).filter(F.col(LSN_COL) > lsn)
+            return df if max_lsn is None else df.filter(F.col(LSN_COL) <= max_lsn)
+
+        head = None
+        if with_head:
+            zones = self._footer_zones(files, [LSN_COL])
+            his: list[int] = []
+            blind: list[str] = []
+            for f in files:
+                z = zones.get(f, {}).get("zm", {}).get(LSN_COL)
+                if z is None or (max_lsn is not None and z[0] <= max_lsn < z[1]):
+                    blind.append(f)
+                elif z[1] > lsn and (max_lsn is None or z[1] <= max_lsn):
+                    his.append(z[1])
+            if blind:
+                his += [v for v in window(blind).agg(F.max(LSN_COL)).first() if v is not None]
+            head = max(his, default=None)
+        df = window(files)
         if DELETED_COL in df.columns:
             op = F.when(F.coalesce(F.col(DELETED_COL), F.lit(False)), F.lit("delete")) \
                 .otherwise(F.lit("upsert"))
-            return df.withColumn("op", op).drop(DELETED_COL)
-        return df.withColumn("op", F.lit("upsert"))
+            return df.withColumn("op", op).drop(DELETED_COL), head
+        return df.withColumn("op", F.lit("upsert")), head
 
     # ------------------------------------------------------------ compaction
     @staticmethod

@@ -8,7 +8,9 @@ engine's other incremental consumers (vocabulary merge, classifier rescore):
 
 - **O(new commits) per step.** ``changes_since`` prunes files via the
   manifest's per-commit lsn bounds, so a step over a 10^10-row source reads
-  only the commits since the last sync — never the table.
+  only the commits since the last sync — never the table. The step's head
+  lsn comes off those files' parquet footers, so the merge is the step's
+  only pass over the feed.
 - **Atomic watermark.** The synced-through lsn rides the SAME commit as the
   merged data (the manifest's carried ``watermarks`` map, the mechanism
   ``Pipeline.last_watermark`` uses), so a crash between "apply" and "record"
@@ -28,7 +30,7 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import Observation, functions as F
+from pyspark.sql import functions as F
 
 from .lake import BUCKET_COL, LSN_COL, SIGN_COL, LakeTable, MergeResult
 
@@ -59,11 +61,13 @@ def sync_step(
     """Apply one incremental sync step from ``src`` into ``dst``; returns the
     commit, or None when there is nothing new.
 
-    Reads the PRUNED feed once: its checkpoint observes the head lsn (a max
-    over row-level ``_lsn``, which also gates the empty case) and the merge
-    reads the checkpoint. Row-level, not manifest bounds: rewrite commits
-    (compact/rollback) carry conservative file bounds, and an inflated
-    watermark would silently skip source rows landing under it.
+    The merge is the step's one pass over the PRUNED feed. The head lsn —
+    the batch id and the recorded watermark — is the row-level max ``_lsn``
+    read off the feed files' parquet footers (``LakeTable._feed``: only a
+    file whose footer cannot answer is aggregated), and None means there is
+    nothing to apply. Row-level, not manifest bounds: rewrite commits
+    (compact/rollback/purge) carry conservative file bounds, and an
+    inflated watermark would silently skip source rows landing under it.
 
     ``row_filter`` (a boolean Column over source columns) makes ``dst`` a
     FILTERED replica — the ClickHouse materialized-view-WHERE shape. A
@@ -88,16 +92,8 @@ def sync_step(
         # bounded drain loop terminates on a manifest read alone (no probe
         # job over the feed)
         return None
-    feed = src.changes_since(last, max_lsn=max_lsn)
-    if not feed.columns:  # source has never committed
-        return None
-    # materialize the pruned feed once (batch-sized: O(new commits), never
-    # table-sized), observing its head lsn on the way; the observe is the
-    # checkpointed plan's top node, so no rule drops it over an empty feed.
-    obs = Observation()
-    feed = feed.observe(obs, F.max(LSN_COL).alias("hi")).localCheckpoint()
-    hi = obs.get["hi"]
-    if hi is None:
+    feed, hi = src._feed(last, max_lsn)
+    if hi is None:  # nothing in the window, or the source never committed
         return None
     batch = feed.drop(
         *[c for c in (BUCKET_COL, SIGN_COL) if c in feed.columns]
@@ -113,11 +109,11 @@ def sync_step(
     recon = _recon(name)
     return dst.merge_into(
         batch,
-        batch_id=f"{recon}:lsn{int(hi)}",
+        batch_id=f"{recon}:lsn{hi}",
         op_col="op",
         lsn_col="_sync_lsn",
         strategy=strategy,
-        lineage_extra={"reconciliation": recon, "watermark": int(hi)},
+        lineage_extra={"reconciliation": recon, "watermark": hi},
     )
 
 

@@ -326,3 +326,33 @@ def test_pq_adc_plans_have_no_pair_join(spark):
             assert "NestedLoopJoin" not in plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+@pytest.mark.parametrize("strategy", ["upsert", "collapse"])
+def test_append_merge_dedupes_inside_the_write_exchange(spark, tmp_path, monkeypatch, strategy):
+    """An append-shape merge (MoR upsert, collapse) dedupes its batch over
+    the write's own bucket exchange: the plan under the delta write holds
+    exactly ONE Exchange, the hash on ``_bucket``, and each touched bucket
+    still gets one delta file."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from data_sync_tool_spark.session import local_frame
+    from data_sync_tool_spark.sources.lake import LakeTable
+
+    plans = []
+    orig = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        plans.append(_plan(self._df))
+        return orig(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    t = LakeTable(spark, str(tmp_path / "t"), ["k"], n_buckets=4, merge_mode="mor")
+    batch = local_frame(spark, [(f"k{i % 9}", f"v{i}", "upsert", i) for i in range(40)],
+                        "k string, v string, op string, lsn long")
+    res = t.merge_into(batch, batch_id="b", strategy=strategy)
+    assert len(plans) == 1 and plans[0].count("Exchange") == 1, plans
+    assert "Exchange hashpartitioning(_bucket" in plans[0], plans[0]
+    m = t._load_manifest()
+    assert all(len(m["buckets"][str(b)]["delta"]) == 1 for b in res.touched_buckets)
+    assert res.rows_written == 9

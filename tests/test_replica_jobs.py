@@ -1,11 +1,12 @@
-"""Jobs per replica step, and the head lsn observed on the checkpoint.
+"""Jobs per replica step, and the head lsn each step reads.
 
 The replica step — ``sync_step``, ``refresh_agg_view`` and ``build_blocks``
 over a MoR leader — pins its Spark job count per call shape, counted by job
 group the way ``test_merge_job_count_per_write_shape`` counts merges. The
-sync and view steps read their head lsn from an ``observe`` on the feed
-checkpoint they already run; the rest of the file checks that this holds
-on empty, tombstone-only and ``max_lsn``-bounded windows.
+sync and view steps read their head lsn off the feed files' parquet footers
+(``LakeTable._feed``); the rest of the file checks that it equals the
+row-level max on empty, tombstone-only, ``max_lsn``-bounded and post-purge
+windows.
 """
 
 from __future__ import annotations
@@ -66,14 +67,15 @@ def _jobs(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-# Jobs per call. The merge a step commits through is included (3 for a MoR
-# upsert, 6 for a CoW one — test_merge_job_count_per_write_shape).
+# Jobs per call. The merge a step commits through is included (2 for a MoR
+# upsert, 6 for a CoW one — test_merge_job_count_per_write_shape); the sync
+# and view steps find their head lsn in footers, with no job.
 JOBS = {
     "build_blocks_in_sync": 4,
     "build_blocks_drill": 9,
-    "sync_bulk": 4,
-    "sync_incremental": 4,
-    "view_bootstrap": 6,
+    "sync_bulk": 2,
+    "sync_incremental": 2,
+    "view_bootstrap": 4,
     "view_incremental_mor": 9,
     "view_incremental_cow": 14,
 }
@@ -142,15 +144,15 @@ def _no_block(fn, timeout=180):
 
 def _head(src, last, max_lsn=None):
     """The head lsn of ``src``'s feed after ``last``, read by a separate max
-    over the feed (the probe the observed checkpoint replaces)."""
+    over the feed rows."""
     return src.changes_since(last, max_lsn=max_lsn).agg(F.max(LSN_COL)).first()[0]
 
 
 def test_head_lsn_on_bounded_caught_up_and_tombstone_only_windows(spark, tmp_path):
-    """The observed head lsn equals a separate max over the feed on every
-    window shape: ``max_lsn``-bounded (bootstrap and incremental), caught
-    up (an empty feed: returns None without blocking, commits nothing) and
-    tombstone-only."""
+    """The head lsn equals a separate max over the feed on every window
+    shape: ``max_lsn``-bounded (bootstrap and incremental), caught up (an
+    empty feed: returns None without blocking, commits nothing),
+    tombstone-only, and after a purge of the max-lsn key."""
     leader = _leader(spark, tmp_path / "leader")
     follower = LakeTable(spark, str(tmp_path / "f"), KEYS, n_buckets=4, merge_mode="mor")
     view = LakeTable(spark, str(tmp_path / "v"), ["conv_id"], n_buckets=2)
@@ -180,3 +182,20 @@ def test_head_lsn_on_bounded_caught_up_and_tombstone_only_windows(spark, tmp_pat
     assert want == 4_004 and all(r is not None for r in step())
     assert sync_watermark(follower) == agg_view_watermark(view) == want
     assert follower.read().count() == leader.read().count() == 117
+    # a purge of the max-lsn key: the files it leaves alone keep their
+    # commit's bounds, so the manifest's lsn_max outruns the rows; a head
+    # taken from it would move the watermark over the purged lsn, and a
+    # later commit at that lsn would never reach the follower or the view
+    leader.merge_into(_batch(spark, [(f"c{90 + i}", 0, "new", 5_000 + i, "insert")
+                                     for i in range(8)]), batch_id="new")
+    leader.purge_keys(["c97"])
+    manifest_max = max(st["lsn_max"] for st in leader._load_manifest()["file_stats"].values())
+    row_max = leader.read(include_deleted=True).agg(F.max(LSN_COL)).first()[0]
+    assert manifest_max == 5_007 > row_max == _head(leader, 4_004) == 5_006
+    assert all(r is not None for r in step())
+    assert sync_watermark(follower) == agg_view_watermark(view) == row_max
+    leader.merge_into(_batch(spark, [("c89", 0, "late", 5_007, "insert")]), batch_id="late")
+    assert all(r is not None for r in step())
+    assert sync_watermark(follower) == agg_view_watermark(view) == 5_007
+    assert follower.read().filter("conv_id = 'c89'").count() == 1
+    assert view.read().filter("conv_id = 'c89'").first()["n_turns"] == 1
