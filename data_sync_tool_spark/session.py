@@ -14,6 +14,21 @@ Scale notes (the confs below are the ones that matter at 100 TB):
   ``functions.hashes`` depends on it.
 - ``shuffle.partitions`` defaults to 2× cores locally; on a real cluster set it
   to ~2-3× total executor cores (or leave AQE's coalescing to shrink it).
+- DataFrame call-site capture off (``spark.python.sql.dataFrameDebugging.enabled``
+  = false). With it on, every PySpark API call (each ``F.col``, ``withColumn``,
+  comparison …) reads a conf through the JVM, walks the Python stack and sets
+  and clears the JVM-side origin: ``F.col("x")`` is 13 py4j commands with it,
+  3 without (two reflection lookups and one call). Replica steps are bound by
+  the driver, not the executors; off, a perfbench cdc_replica repetition
+  makes 3.0 k py4j calls instead of 7.1 k (not counting the object releases
+  py4j sends as Python frees JVM references). The cost: the "== DataFrame =="
+  section of an ANSI runtime error names a JVM frame instead of the Python
+  file and line; the error class and message stay. To get it back, set the
+  key to ``true`` through ``extra_conf`` or ``SPARK_GRAFT_EXTRA_CONF`` (both
+  apply after the base block). PySpark reads the flag once per process, at
+  the first Column built while a session is active, so the setting only
+  holds for a session built here before that point; a session handed in
+  from outside (``__spark_entry__.entry(spark)``) keeps PySpark's default.
 """
 
 from __future__ import annotations
@@ -65,6 +80,10 @@ def build_session(
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # call-site capture off (see "Scale notes"); PySpark caches the flag
+        # at the first Column built while a session is active, so this and
+        # any override below only hold if no Column was built before
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # extra jars (JDBC drivers for the live Postgres/MySQL integration
     # tests): must be on the classpath at JVM start, so they ride the

@@ -19,9 +19,10 @@ module supplies the streaming machinery from Spark per SURVEY §2.8:
   duplicate).
 - lineage: each commit records the batch's lsn offset range, op counts, and
   PER-SOURCE-PARTITION lineage rows (input file → offset range, event count,
-  order-independent checksum — one groupBy-on-input_file_name aggregate, the
-  same single job that previously computed only the global range) in the
-  table manifest; ``CdcMetrics`` aggregates per-batch rows/sec.
+  order-independent checksum — one groupBy-on-input_file_name aggregate,
+  which also yields the global range; under AQE it runs as 2 jobs, its map
+  stage and its result) in the table manifest; ``CdcMetrics`` aggregates
+  per-batch rows/sec.
 - resume: kill the query at any point; restarting with the same checkpoint
   dir replays from the last un-committed epoch (tested in
   ``tests/test_cdc_stream.py``).
@@ -334,8 +335,9 @@ class CdcPipeline:
             # grouped by SOURCE PARTITION (input file/split): per-partition
             # lineage rows — offset range, event count, order-independent
             # checksum (JVM xxhash64 sum) — per north star, with the global
-            # offset range derived from the same single job. input_file_name
-            # is still live here (no shuffle between the scan and this agg).
+            # offset range derived from the same aggregate (2 jobs under
+            # AQE: its map stage, then its result). input_file_name is
+            # still live here (no shuffle between the scan and this agg).
             # Skippable for max throughput via track_offsets=False.
             from ..functions.hashes import rowhash_xxhash64
 

@@ -7,6 +7,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from data_sync_tool_spark.operators.dedupe import lww_dedupe, replay_final_state
+from data_sync_tool_spark.session import local_frame
 from data_sync_tool_spark.sources.lake import LakeTable, collapse_live_view
 from data_sync_tool_spark.sources.registry import changelog
 
@@ -24,7 +25,8 @@ def _mk_table(spark, tmp_path, **kw):
 
 
 def test_lww_dedupe_keeps_max_lsn(spark):
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         [("a", 1, 10, "old", "update"), ("a", 1, 20, "new", "update"), ("b", 1, 5, "x", "insert")],
         "conv_id string, turn_idx int, lsn long, text string, op string",
     )
@@ -33,7 +35,8 @@ def test_lww_dedupe_keeps_max_lsn(spark):
 
 
 def test_lww_tiebreak_delete_wins(spark):
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         [("a", 1, 10, "keep", "update"), ("a", 1, 10, "gone", "delete")],
         "conv_id string, turn_idx int, lsn long, text string, op string",
     )
@@ -84,11 +87,13 @@ def test_out_of_order_batches_converge(spark, ch, tmp_path):
 
 def test_allow_delete_false_ignores_deletes(spark, tmp_path):
     table = _mk_table(spark, tmp_path)
-    ins = spark.createDataFrame(
+    ins = local_frame(
+        spark,
         [("a", 1, "hello", "insert", 1)],
         "conv_id string, turn_idx int, text string, op string, lsn long",
     )
-    dele = spark.createDataFrame(
+    dele = local_frame(
+        spark,
         [("a", 1, None, "delete", 2)],
         "conv_id string, turn_idx int, text string, op string, lsn long",
     )
@@ -101,13 +106,15 @@ def test_allow_delete_false_ignores_deletes(spark, tmp_path):
 
 def test_delete_insert_strategy(spark, tmp_path):
     table = _mk_table(spark, tmp_path)
-    base = spark.createDataFrame(
+    base = local_frame(
+        spark,
         [("a", 1, "one", "insert", 1), ("a", 2, "two", "insert", 2), ("b", 1, "bee", "insert", 3)],
         "conv_id string, turn_idx int, text string, op string, lsn long",
     )
     table.merge_into(base, batch_id="base")
     # delete_insert on key (a,1): row replaced; (a,2),(b,1) untouched
-    repl = spark.createDataFrame(
+    repl = local_frame(
+        spark,
         [("a", 1, "ONE", "insert", 9)],
         "conv_id string, turn_idx int, text string, op string, lsn long",
     )
@@ -121,11 +128,13 @@ def test_collapse_strategy_appends_version_rows(spark, tmp_path):
     as +1 rows; superseded versions annihilate at read/compact, never at
     merge (VersionedCollapsingMergeTree — no -1 rows are ever written)."""
     table = _mk_table(spark, tmp_path)
-    ins = spark.createDataFrame(
+    ins = local_frame(
+        spark,
         [("a", 1, "v1", "insert", 1)],
         "conv_id string, turn_idx int, text string, op string, lsn long",
     )
-    upd = spark.createDataFrame(
+    upd = local_frame(
+        spark,
         [("a", 1, "v2", "update", 2)],
         "conv_id string, turn_idx int, text string, op string, lsn long",
     )
@@ -148,11 +157,13 @@ def test_collapse_delete_tombstones_survive_compact_until_expiry(spark, tmp_path
     tombstones (read hides them): dropping them would let a late stale
     update resurrect the key. expire_tombstones is the physical GC."""
     table = _mk_table(spark, tmp_path)
-    base = spark.createDataFrame(
+    base = local_frame(
+        spark,
         [("a", 1, "one", "insert", 1), ("b", 1, "bee", "insert", 2)],
         "conv_id string, turn_idx int, text string, op string, lsn long",
     )
-    dele = spark.createDataFrame(
+    dele = local_frame(
+        spark,
         [("a", 1, None, "delete", 3)],
         "conv_id string, turn_idx int, text string, op string, lsn long",
     )
@@ -166,7 +177,8 @@ def test_collapse_delete_tombstones_survive_compact_until_expiry(spark, tmp_path
     assert {r.conv_id for r in table.read().collect()} == {"b"}  # but hidden
     assert raw.filter(F.col("_sign") != 1).count() == 0
     # a LATE STALE update (lsn below the delete) must NOT resurrect the key
-    stale = spark.createDataFrame(
+    stale = local_frame(
+        spark,
         [("a", 1, "zombie", "update", 2)],
         "conv_id string, turn_idx int, text string, op string, lsn long",
     )
