@@ -44,9 +44,11 @@ _SEP = "\x1f"
 def concat_fields(*cols: Column | str) -> Column:
     """Canonical string image of a row: fields joined by a unit separator,
     NULL encoded distinctly from empty string (concat_ws drops nulls, which
-    would make (NULL,'x') == ('x',NULL) ambiguous)."""
+    would make (NULL,'x') == ('x',NULL) ambiguous). One NULL literal serves
+    every column: each ``F.*`` call is a JVM round trip."""
+    null = F.lit("\x00")
     parts = [
-        F.coalesce(F.col(c).cast("string") if isinstance(c, str) else c.cast("string"), F.lit("\x00"))
+        F.coalesce((F.col(c) if isinstance(c, str) else c).cast("string"), null)
         for c in cols
     ]
     return F.concat_ws(_SEP, *parts)
@@ -113,12 +115,6 @@ def bucket_expr(x: Column, interval: int) -> Column:
     Works for negative values too (floor division semantics).
     """
     return F.floor(x / F.lit(interval)).cast("long")
-
-
-def bucket_range(bucket_id: Column, interval: int) -> tuple[Column, Column]:
-    """Inverse of ``bucket_expr``: the [start, end) covered by a bucket."""
-    start = (bucket_id * F.lit(interval)).cast("long")
-    return start, start + F.lit(interval)
 
 
 def salted_key(key: Column, n_salts: int) -> Column:

@@ -40,10 +40,3 @@ def cosine_prenormed(a: Column, b: Column, na: Column, nb: Column) -> Column:
     division are unchanged."""
     d = na * nb
     return F.when(d > 0, dot(a, b) / d).otherwise(F.lit(0.0))
-
-
-def l2_normalize(a: Column) -> Column:
-    n = norm(a)
-    return F.when(n > 0, F.transform(a, lambda x: x.cast("double") / n)).otherwise(
-        F.transform(a, lambda x: x.cast("double"))
-    )

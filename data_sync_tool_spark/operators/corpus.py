@@ -81,50 +81,6 @@ def vocabulary(
     )
 
 
-def vocabulary_approx(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    rsd: float = 0.02,
-) -> DataFrame:
-    """(token, doc_freq_approx, term_freq) in ONE pass with bounded state:
-    ``doc_freq`` via HyperLogLog++ (``approx_count_distinct``, relative
-    standard deviation ``rsd``) instead of the exact (token, doc) collapse.
-
-    The exact :func:`vocabulary` shuffles one row per distinct (token, doc)
-    pair — at 100 TB that intermediate is itself corpus-sized. This variant
-    keeps one constant-size sketch per token (map-side mergeable), trading
-    ~2% doc-frequency error for an order-of-magnitude smaller shuffle; IDF
-    consumers are insensitive at that error level. ``term_freq`` stays exact.
-    """
-    return (
-        tokenize(df, text_col, id_col)
-        .groupBy("token")
-        .agg(
-            F.approx_count_distinct(id_col, rsd).alias("doc_freq_approx"),
-            F.count(F.lit(1)).alias("term_freq"),
-        )
-    )
-
-
-def merge_vocabularies(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Merge two :func:`vocabulary` outputs computed over DISJOINT document
-    sets (e.g. yesterday's corpus stats + today's ingest batch): both counts
-    are additive under disjointness, so the merge is one aggregate over the
-    two (token-level, tiny) stats tables — the new batch's text is tokenized
-    once and the historical corpus is never rescanned. The incremental twin
-    of ``minhash_index_write``/``ivf_index_append``.
-    """
-    return (
-        a.unionByName(b)
-        .groupBy("token")
-        .agg(
-            F.sum("doc_freq").alias("doc_freq"),
-            F.sum("term_freq").alias("term_freq"),
-        )
-    )
-
-
 def tfidf_keywords(
     df: DataFrame,
     k: int = 3,

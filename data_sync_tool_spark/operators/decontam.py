@@ -48,19 +48,6 @@ def _gram_windows(toks: Column, n: int, distinct: bool = True) -> Column:
     return F.array_distinct(grams) if distinct else grams
 
 
-def token_ngram_array(text_col: Column, n: int) -> Column:
-    """Array of the DISTINCT token ``n``-grams of a text column (each gram a
-    space-joined run of ``n`` consecutive normalized tokens). Docs with
-    fewer than ``n`` tokens yield an empty array.
-
-    Column-expression convenience form — for corpus-sized scans prefer
-    :func:`doc_ngrams`, which stages the token array in its own projection
-    (see :func:`_gram_windows` for why that matters)."""
-    if n < 1:
-        raise ValueError("require n >= 1")
-    return _gram_windows(_tokens(text_col), n)
-
-
 def doc_ngrams(
     df: DataFrame, n: int, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:

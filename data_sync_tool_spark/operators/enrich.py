@@ -76,21 +76,3 @@ def enrich_with_service(
             yield pdf
 
     return keyed.mapInPandas(_map, schema=schema_str).drop("_ek")
-
-
-def apply_output_mapper(df: DataFrame, conf: EnrichmentConfig) -> DataFrame:
-    """Optional ``output: 'lambda v: {col: v...}'`` mapper — renames/expands
-    the looked-up value into one or more columns (``README.md:174``).
-    Evaluated once at plan time against the column handle."""
-    if not conf.output:
-        return df
-    from ..config import parse_sandboxed_lambda
-
-    fn = parse_sandboxed_lambda(conf.output)
-    src = conf.output_field or conf.name
-    mapping = fn(F.col(src))
-    if isinstance(mapping, dict):
-        for name, col in mapping.items():
-            df = df.withColumn(name, col)
-        return df.drop(src)
-    return df.withColumn(src, mapping)

@@ -280,9 +280,7 @@ def pq_index_write(
 ) -> None:
     """Persist a PQ index: ``{path}/codes`` = the compressed corpus
     parquet, ``{path}/books`` = the flattened codebook table. Build-once
-    / query-many, with the same incremental contract as the IVF index:
-    codebooks are FROZEN at build time, so appended batches encode
-    against them without touching existing codes."""
+    / query-many."""
     books = pq_train(corpus, m, k, id_col, vec_col, n_iters)
     _write_books(corpus.sparkSession, books, path)
     pq_encode(corpus, books, id_col, vec_col).write.mode("overwrite").parquet(
@@ -307,22 +305,6 @@ def pq_read_books(spark, path: str) -> np.ndarray:
     for r in rows:
         books[r["sub"], r["code"]] = r["word"]
     return books
-
-
-def pq_index_append(
-    batch: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Encode NEW vectors against the stored (frozen) codebooks and
-    append to the codes table — O(batch), the corpus is never rescanned;
-    append ≡ rebuilding the codes over corpus ∪ batch with the same
-    codebooks (pytest-asserted)."""
-    books = pq_read_books(batch.sparkSession, path)
-    pq_encode(batch, books, id_col, vec_col).write.mode("append").parquet(
-        f"{path}/codes"
-    )
 
 
 def pq_topk_indexed(
@@ -415,20 +397,6 @@ def ivfpq_index_write(
 def _load_ivfpq(spark, path: str) -> tuple[np.ndarray, np.ndarray]:
     cmat = _centroid_matrix(spark.read.schema(_CENTROIDS).parquet(f"{path}/centroids"))[1]
     return cmat, pq_read_books(spark, path)
-
-
-def ivfpq_index_append(
-    batch: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Assign + residual-encode NEW vectors against the FROZEN stored
-    centroids/codebooks and append into the partitioned posting lists —
-    O(batch), corpus never rescanned, append ≡ rebuild (pytest-pinned)."""
-    cmat, books = _load_ivfpq(batch.sparkSession, path)
-    _ivfpq_codes(batch, cmat, books, id_col, vec_col).write.partitionBy(
-        "list_id").mode("append").parquet(f"{path}/codes")
 
 
 def _ivfpq_block(side, pdf: pd.DataFrame):

@@ -535,35 +535,6 @@ def ivf_index_write(
     centroids.write.mode("overwrite").parquet(f"{path}/centroids")
 
 
-def ivf_index_append(
-    batch: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Append NEW vectors to a persisted IVF index — the incremental
-    maintenance path a corpus pipeline needs (the minhash-incremental twin):
-    the batch is assigned against the STORED centroids and appended into the
-    partitioned posting lists. Cost: one O(batch) assignment pass + one
-    append write; the existing corpus is never rescanned, and probes keep
-    their partition pruning (appended files land inside ``list_id=``
-    directories).
-
-    Centroids are FROZEN at build time — standard IVF practice (FAISS
-    ``add`` after ``train``): retraining on the grown corpus would reassign
-    every existing posting list, i.e. a full rebuild. By construction,
-    append ≡ rebuilding the whole index with the same centroids over
-    corpus ∪ batch (pytest-asserted)."""
-    cids, cmat = _centroid_matrix(
-        batch.sparkSession.read.schema(_CENTROIDS).parquet(f"{path}/centroids"))
-    assigned = batch.withColumn("list_id", _assign_udf(cmat, cids)(F.col(vec_col)))
-    (
-        assigned.select(id_col, vec_col, "list_id")
-        .repartition(max(1, len(cids) // 4), F.col("list_id"))
-        .write.partitionBy("list_id").mode("append").parquet(f"{path}/lists")
-    )
-
-
 def ivf_topk_indexed(
     spark,
     path: str,

@@ -94,42 +94,6 @@ def transcript_agg(
     )
 
 
-def assemble_changed_transcripts(
-    table,
-    since_lsn: int,
-    conv_col: str = "conv_id",
-    order_col: str = "turn_idx",
-    role_col: str = "role",
-    text_col: str = "text",
-    sep: str = "\n",
-    max_pruned_keys: int = 10_000,
-) -> DataFrame:
-    """Incrementally reassemble ONLY the conversations touched after
-    ``since_lsn`` in a :class:`~data_sync_tool_spark.sources.lake.LakeTable`
-    of turns: the ``changes_since`` feed (file-pruned to new commits) names
-    the dirty conversations, and their CURRENT turns are re-read and
-    re-assembled — a downstream transcript corpus stays fresh at O(changed
-    conversations) per poll, never O(table).
-
-    The dirty-conversation list is bounded by the polled commits. When it
-    fits ``max_pruned_keys`` and ``conv_col`` is the table's leading key,
-    the live read prunes FILES through the manifest zone maps
-    (``read(ranges={conv_col: ...})`` — a point range per conversation; on
-    a key-clustered table only the touched conversations' files are opened).
-    Larger change sets fall back to one broadcast semi-join over a full
-    scan, which is the same cost a fresh batch assembly would pay."""
-    changed = table.changes_since(since_lsn).select(conv_col).dropDuplicates()
-    dirty = [r[0] for r in changed.collect()]
-    if not dirty:
-        schema = "conv_id string, n_turns bigint, transcript string, fp string"
-        return table.spark.createDataFrame([], schema)
-    if len(dirty) <= max_pruned_keys and table.key_cols[0] == conv_col:
-        live = table.read(ranges={conv_col: [(c, c + "\x00") for c in sorted(dirty)]})
-    else:
-        live = table.read().join(F.broadcast(changed), conv_col, "left_semi")
-    return assemble_transcripts(live, conv_col, order_col, role_col, text_col, sep)
-
-
 def transcript_dup_groups(assembled: DataFrame) -> DataFrame:
     """(conv_id, canonical_id, fp) for every conversation whose EXACT
     turn sequence occurs more than once; canonical is the min conv_id of

@@ -1,6 +1,10 @@
 """Pipeline runner — ``engine/pipeline.py`` parity: resolve datastores, build
-the source plan (table + joins + filters + transform + enrichment), validate
-schemas, and execute sync strategies against a lake-table sink.
+the source plan (table + joins + filters + transform), validate schemas, and
+execute sync strategies against a lake-table sink. Non-lake endpoint tables
+and every join table are read through their datastore's adapter
+(``sources/adapters.get_adapter``). A pipeline that configures
+``enrichment`` is rejected: the runner does not apply it (the enrich
+operators are ``operators/enrich``).
 
 Execution strategies (reference ``ReconciliationConfig.strategy`` +
 ``project.yaml`` "method" notes):
@@ -23,11 +27,12 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .config import Config, EndpointConfig, PipelineConfig
+from .config import Config, DatastoreConfig, EndpointConfig, PipelineConfig
 from .operators.reconcile import ReconcileConfig, build_blocks, plan_repair, status_counts
 from .operators.transform import apply_transform
 from .plans.query import Filter as IRFilter
 from .plans.query import _filter_condition
+from .sources.adapters import get_adapter
 from .sources.lake import LakeTable
 
 
@@ -69,9 +74,18 @@ class Pipeline:
         self.spark = spark
         self.config = config
         self.pconf: PipelineConfig = config.pipeline(name)
+        if self.pconf.enrichment:
+            raise ValueError(
+                f"pipeline {name!r}: the runner does not apply `enrichment`; "
+                "remove the field or enrich with operators.enrich"
+            )
         self._sink_table: LakeTable | None = None
 
     # ------------------------------------------------------------- source
+    def _table_df(self, ds: DatastoreConfig, table: str) -> DataFrame:
+        got = get_adapter(self.spark, ds, table)
+        return got.read() if isinstance(got, LakeTable) else got
+
     def _endpoint_df(self, endpoint: EndpointConfig, transform: bool) -> DataFrame:
         ds = self.config.datastore(endpoint.datastore)
         if ds.type == "lake":
@@ -80,11 +94,11 @@ class Pipeline:
                 endpoint.meta_columns.unique_columns or ["id"],
             ).read()
         else:
-            df = self.spark.read.parquet(f"{ds.path}/{endpoint.table.table}.parquet")
+            df = self._table_df(ds, endpoint.table.table)
         if endpoint.table.alias:
             df = df.alias(endpoint.table.alias)
         for j in endpoint.joins:
-            right = self.spark.read.parquet(f"{ds.path}/{j.table}.parquet")
+            right = self._table_df(ds, j.table)
             df = df.join(right.alias(j.alias or j.table), on=F.expr(j.on), how=j.type)
         for flt in endpoint.filters:
             df = df.filter(_filter_condition(IRFilter(flt.column, flt.operator, flt.value)))

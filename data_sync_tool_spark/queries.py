@@ -1880,9 +1880,8 @@ def q_emb_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     store actually scans), ADC top-k over the codes in the flat numpy
     kernel.
     Rows-only: PQ is lossy by construction (no exhaustive configuration
-    equals brute force); the code assignment, ADC math, recall vs brute
-    force, and frozen-codebook append path are pytest-pinned against
-    numpy references in test_pq."""
+    equals brute force); the code assignment, ADC math and recall vs brute
+    force are pytest-pinned against numpy references in test_pq."""
     from .operators.pq import pq_encode, pq_topk, pq_train
 
     emb = read_table(spark, sf_dir, "embeddings")

@@ -208,4 +208,5 @@ def make_webhook_sink(
 register_adapter("parquet", _parquet_adapter)
 register_adapter("lake", _lake_adapter)
 register_adapter("jdbc", _jdbc_adapter)
+register_adapter("postgres", _jdbc_adapter)
 register_adapter("memory", lambda spark, ds, table: spark.table(table))

@@ -1445,8 +1445,8 @@ class LakeTable:
         ``unique_keys``: the caller guarantees the batch already holds at
         most ONE row per key (e.g. it is the output of a per-key aggregate).
         Skips the within-batch LWW dedupe — one full shuffle of the batch —
-        on the upsert path. Purely an optimization hint; a violated
-        guarantee degrades to both versions landing as deltas and the READ
+        on the upsert and collapse paths. Purely an optimization hint; a
+        violated guarantee degrades to both versions landing as deltas and the READ
         side's LWW resolve picking one, never a corrupt table.
         """
         # the ONE manifest this merge reads the target from and commits
@@ -1521,20 +1521,7 @@ class LakeTable:
             # away (one exchange per append merge, one delta file per bucket)
             batch = batch.repartition(props["n_buckets"], F.col(BUCKET_COL))
         fold = None
-        if strategy == "collapse":
-            op_rank = F.when(F.col("_op") == "delete", 2).otherwise(1)
-            payload = [c for c in data_cols if c not in self.key_cols]
-            rows = (
-                batch.groupBy(*self.key_cols, BUCKET_COL)
-                .agg(F.max(F.struct(F.col(LSN_COL), op_rank.alias("_r"), F.col("_op"),
-                                    *[F.col(c) for c in payload])).alias("w"))
-                .select(*self.key_cols, BUCKET_COL,
-                        *[F.col(f"w.{c}").alias(c) for c in payload],
-                        F.col(f"w.{LSN_COL}").alias(LSN_COL),
-                        (F.col("w._op") == "delete").alias(DELETED_COL),
-                        F.lit(1).alias(SIGN_COL))
-            )
-        elif strategy == "delete_insert":
+        if strategy == "delete_insert":
             keys = batch.select(*self.key_cols).distinct()
             rows = (
                 batch.filter(F.col("_op") != F.lit("delete"))
@@ -1548,7 +1535,9 @@ class LakeTable:
                     DELETED_COL, F.coalesce(F.col(DELETED_COL), F.lit(False))
                 )
         else:
-            # upsert: dedupe the batch to one row per key, with tombstones
+            # upsert and collapse: dedupe the batch to one row per key, with
+            # tombstones, by the LWW fold reads resolve deltas with (so a
+            # collapse table's state cannot depend on the batch boundaries);
             # tombstones derived here, not in the batch projection: that
             # would leave a bare drop("_op") here, which the optimizer pushes
             # under the append shape's bucket exchange — one more copy of
@@ -1556,7 +1545,9 @@ class LakeTable:
             tombstoned = batch.withColumn(DELETED_COL, F.col("_op") == "delete").drop("_op")
             rows = tombstoned if unique_keys else self._resolve_lww(
                 tombstoned, by=(BUCKET_COL,) if append else ())
-            if not append:
+            if strategy == "collapse":
+                rows = rows.withColumn(SIGN_COL, F.lit(1))
+            elif not append:
                 def fold(target: DataFrame, deduped: DataFrame) -> DataFrame:
                     return self._resolve_lww(
                         target.unionByName(deduped, allowMissingColumns=True)
@@ -2383,10 +2374,6 @@ class LakeTable:
                 os.unlink(p)
                 removed_manifests += 1
         return {"removed_files": removed_files, "removed_manifests": removed_manifests}
-
-    def destroy(self) -> None:
-        shutil.rmtree(self.path, ignore_errors=True)
-
 
 _INT_RANK: dict[type, int] = {
     T.ByteType: 1, T.ShortType: 2, T.IntegerType: 3, T.LongType: 4,

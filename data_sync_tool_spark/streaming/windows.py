@@ -164,32 +164,3 @@ def conversation_state_tracker(
         outputMode="update",
         timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
     )
-
-
-def stream_exact_dedup(
-    stream_df: DataFrame,
-    key_cols: list[str],
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Ingest-time exact dedup over an unbounded stream: emit the FIRST
-    record per key and drop every later duplicate that arrives within the
-    watermark of the first — the at-ingest twin of the batch
-    ``dedup_suite.exact_dedupe`` (dedupe the crawl as it lands instead of
-    re-scanning the lake). Built on ``dropDuplicatesWithinWatermark``, so
-    per-key state is EVICTED once the watermark passes it: state size is
-    bounded by keys-per-watermark-window, never by stream length — the
-    property that lets this run forever on a 10^10-event feed. Duplicates
-    separated by MORE than the watermark are deliberately re-admitted
-    (bounded-state tradeoff); catch those with the batch dedup suite over
-    the lake's change feed downstream.
-
-    ``key_cols`` is typically a content fingerprint (``text.fingerprint``
-    / md5 of normalized text) so near-simultaneous re-crawls and webhook
-    retries collapse; the emitted row keeps its full payload.
-    """
-    if not key_cols:
-        raise ValueError("key_cols must be non-empty")
-    return stream_df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        key_cols
-    )

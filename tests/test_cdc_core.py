@@ -152,6 +152,21 @@ def test_collapse_strategy_appends_version_rows(spark, tmp_path):
     assert len(live) == 1 and live[0].text == "v2"
 
 
+def test_collapse_same_lsn_tie_does_not_depend_on_batching(spark, tmp_path):
+    """Two non-delete versions of one key at the same lsn: the collapse write
+    breaks the tie as the read side's LWW resolve does, so merging them as
+    one batch or as two reads the same row."""
+    schema = "conv_id string, turn_idx int, text string, op string, lsn long"
+    # "update" sorts after "insert" but its payload "a" before "b"
+    rows = [("a", 1, "b", "insert", 5), ("a", 1, "a", "update", 5)]
+    one = _mk_table(spark, tmp_path / "one")
+    one.merge_into(local_frame(spark, rows, schema), batch_id="b", strategy="collapse")
+    two = _mk_table(spark, tmp_path / "two")
+    for i, row in enumerate(rows):
+        two.merge_into(local_frame(spark, [row], schema), batch_id=f"b{i}", strategy="collapse")
+    assert one.read().collect() == two.read().collect()
+
+
 def test_collapse_delete_tombstones_survive_compact_until_expiry(spark, tmp_path):
     """Compact folds superseded versions but RETAINS delete markers as
     tombstones (read hides them): dropping them would let a late stale

@@ -17,7 +17,6 @@ from data_sync_tool_spark.config import (
     parse_sandboxed_lambda,
 )
 from data_sync_tool_spark.operators.enrich import (
-    apply_output_mapper,
     enrich_with_service,
     enrich_with_table,
 )
@@ -159,15 +158,6 @@ def test_enrich_service_batched(spark):
     assert all(r.score == f"score-{r.user_id}" for r in out)
     # one bulk call per Arrow batch, not one per row
     assert 1 <= n_calls.value < 10
-
-
-def test_enrich_output_mapper(spark):
-    df = spark.createDataFrame([("x", "42")], "k string, score string")
-    conf = EnrichmentConfig(name="score", output_field="score",
-                            output='lambda v: {"credit": v}')
-    out = apply_output_mapper(df, conf)
-    assert out.columns == ["k", "credit"]
-    assert out.first()["credit"] == "42"
 
 
 # --------------------------------------------------- native lambda compilation

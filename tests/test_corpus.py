@@ -11,13 +11,11 @@ from pyspark.sql import functions as F
 
 from data_sync_tool_spark.operators.corpus import (
     hash_sample,
-    merge_vocabularies,
     stratified_hash_sample,
     tfidf_keywords,
     tokenize,
     unigram_cross_entropy,
     vocabulary,
-    vocabulary_approx,
 )
 
 
@@ -38,40 +36,6 @@ def test_vocabulary_doc_and_term_freq(spark):
         for r in vocabulary(df).collect()
     }
     assert got == {"a": (2, 3), "b": (1, 1), "c": (2, 4)}
-
-
-def test_merge_vocabularies_equals_batch_on_disjoint_docs(spark):
-    d1 = _docs(spark, [(1, "a b a"), (2, "a c")])
-    d2 = _docs(spark, [(3, "c c c"), (4, "b d")])
-    merged = {
-        r["token"]: (r["doc_freq"], r["term_freq"])
-        for r in merge_vocabularies(vocabulary(d1), vocabulary(d2)).collect()
-    }
-    full = {
-        r["token"]: (r["doc_freq"], r["term_freq"])
-        for r in vocabulary(d1.unionByName(d2)).collect()
-    }
-    assert merged == full
-
-
-def test_vocabulary_approx_tracks_exact(spark):
-    # 200 docs, each containing token 'w<i%40>' → every token has exact
-    # doc_freq 5; HLL at rsd=0.02 must land within 5% on every token and
-    # term_freq stays exact
-    df = _docs(spark, [(i, f"w{i % 40} filler") for i in range(200)])
-    approx = {
-        r["token"]: (r["doc_freq_approx"], r["term_freq"])
-        for r in vocabulary_approx(df).collect()
-    }
-    exact = {
-        r["token"]: (r["doc_freq"], r["term_freq"])
-        for r in vocabulary(df).collect()
-    }
-    assert set(approx) == set(exact)
-    for tok, (dfa, tfa) in approx.items():
-        dfe, tfe = exact[tok]
-        assert tfa == tfe
-        assert abs(dfa - dfe) <= max(1, 0.05 * dfe), (tok, dfa, dfe)
 
 
 def test_tfidf_keywords_hand_computed(spark):
@@ -236,42 +200,6 @@ def test_hash_sample_validates_params(spark):
         hash_sample(df, ["k"], 1001, 1000)
     with pytest.raises(ValueError):
         hash_sample(df, ["k"], 10, 1000, remainder=1000)
-
-
-def test_incremental_vocabulary_via_lake_cdf(spark, tmp_path):
-    """Corpus stats maintained from the lake's change feed: each ingest
-    batch's NEW documents flow through `changes_since` → `vocabulary` →
-    `merge_vocabularies`, and after three batches the incrementally-merged
-    stats equal a full recompute over the table — the historical corpus text
-    is never rescanned (insert-only growth; updates would need old-version
-    subtraction, out of scope for additive stats)."""
-    from data_sync_tool_spark.operators.corpus import merge_vocabularies
-    from data_sync_tool_spark.sources.lake import LakeTable
-
-    t = LakeTable(
-        spark, str(tmp_path / "docs"), ["doc_id"], n_buckets=4,
-        merge_mode="mor", checksum=False,
-    )
-    batches = [
-        [(1, "a b a"), (2, "a c")],
-        [(3, "c c c")],
-        [(4, "b d"), (5, "a d d")],
-    ]
-    stats = None
-    last = -1
-    for i, rows in enumerate(batches):
-        df = spark.createDataFrame(
-            [(k, txt, "upsert", i * 10 + j) for j, (k, txt) in enumerate(rows)],
-            "doc_id long, text string, op string, lsn long",
-        )
-        t.merge_into(df, batch_id=f"b{i}")
-        feed = t.changes_since(last).filter(F.col("op") == "upsert")
-        last = feed.agg(F.max("_lsn")).first()[0]
-        delta = vocabulary(feed)
-        stats = delta if stats is None else merge_vocabularies(stats, delta)
-    inc = sorted(tuple(r) for r in stats.collect())
-    full = sorted(tuple(r) for r in vocabulary(t.read()).collect())
-    assert inc == full
 
 
 def _cap_docs(spark):

@@ -4,32 +4,17 @@ and the broadcast-join plan shape (the training corpus must not shuffle)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from data_sync_tool_spark.operators.decontam import (
     contamination_hits,
     decontaminate,
     doc_ngrams,
-    token_ngram_array,
 )
 
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_token_ngram_array_normalizes_and_windows(spark):
-    df = _docs(spark, [(1, "The quick! brown FOX jumps")])
-    got = df.select(token_ngram_array(F.col("text"), 3).alias("g")).first()["g"]
-    assert got == ["the quick brown", "quick brown fox", "brown fox jumps"]
-
-
-def test_token_ngram_array_short_and_empty_docs(spark):
-    df = _docs(spark, [(1, "a b"), (2, ""), (3, "---")])
-    rows = {r["doc_id"]: r["g"] for r in
-            df.select("doc_id", token_ngram_array(F.col("text"), 3).alias("g")).collect()}
-    assert rows == {1: [], 2: [], 3: []}
 
 
 def test_doc_ngrams_distinct_per_doc(spark):
@@ -60,12 +45,6 @@ def test_decontaminate_keeps_all_when_benchmark_disjoint(spark):
     bench = _docs(spark, [(100, "one two three")])
     train = _docs(spark, [(1, "four five six"), (2, "seven eight nine")])
     assert decontaminate(train, bench, n=2).count() == 2
-
-
-def test_ngram_validates_n(spark):
-    df = _docs(spark, [(1, "a b")])
-    with pytest.raises(ValueError):
-        df.select(token_ngram_array(F.col("text"), 0))
 
 
 def test_redact_pii_and_counts(spark):

@@ -1,4 +1,4 @@
-"""Dedup suite + similarity search + multimodal plumbing."""
+"""Dedup suite + similarity search."""
 
 from __future__ import annotations
 
@@ -11,14 +11,6 @@ from data_sync_tool_spark.operators.dedup_suite import (
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_near_pairs,
-)
-from data_sync_tool_spark.operators.multimodal import (
-    decode_image,
-    deterministic_fake_decoder,
-    extract_features,
-    resize_plan,
-    sample_frames,
-    synthesize_media,
 )
 from data_sync_tool_spark.operators.similarity import (
     brute_force_topk,
@@ -140,122 +132,6 @@ def test_embedding_near_dup_pairs_finds_planted_dup(spark, emb):
     assert (orig, 999_999) in found
 
 
-def test_multimodal_pipeline_with_fake_decoder(spark):
-    media = synthesize_media(spark, 50)
-    assert media.schema["payload"].dataType.simpleString() == "binary"
-    feats = extract_features(media, n_features=8, decoder=deterministic_fake_decoder)
-    rows = feats.collect()
-    assert len(rows) == 50 and all(len(r.features) == 8 for r in rows)
-    # determinism across partitionings
-    feats2 = extract_features(media.repartition(7), n_features=8,
-                              decoder=deterministic_fake_decoder)
-    assert sorted(map(tuple, rows)) == sorted(map(tuple, feats2.collect()))
-
-
-def test_multimodal_decode_stub_raises(spark):
-    media = synthesize_media(spark, 3)
-    with pytest.raises(Exception, match="(?i)imaging library|NotImplemented"):
-        extract_features(media, decoder=decode_image).collect()
-
-
-def test_frame_sampling_and_resize_plan(spark):
-    media = synthesize_media(spark, 200)
-    frames = sample_frames(media, every_ms=10_000)
-    joined = frames.join(media, "media_id").select("media_id", "frame_ts_ms", "meta.duration_ms")
-    assert joined.filter(F.col("frame_ts_ms") > F.col("duration_ms")).count() == 0
-    assert frames.count() > 0
-    rp = resize_plan(media, max_side=256)
-    bad = rp.filter(
-        F.col("needs_resize") & (F.greatest("meta.width", "meta.height") <= 256)
-    ).count()
-    assert bad == 0
-
-
-def test_ppm_codec_round_trip():
-    import numpy as np
-
-    from data_sync_tool_spark.operators.multimodal import (
-        decode_ppm,
-        encode_ppm,
-        resize_nearest,
-    )
-
-    img = (np.arange(12 * 9 * 3).reshape(9, 12, 3) % 256).astype("uint8")
-    assert np.array_equal(decode_ppm(encode_ppm(img)), img)
-    # header comments per the netpbm spec
-    with_comment = b"P6\n# made by tests\n12 9\n255\n" + img.tobytes()
-    assert np.array_equal(decode_ppm(with_comment), img)
-    small = resize_nearest(img, 0.5)
-    assert small.shape == (4, 6, 3) or small.shape == (5, 6, 3)
-
-
-def test_real_image_pipeline_decode_features_resize(spark):
-    """End-to-end REAL pixel path: synthesize valid PPMs → decode (no
-    injected fake) → features; resize pass halves oversized images and
-    re-encodes valid PPMs with updated metadata."""
-    import numpy as np
-
-    from data_sync_tool_spark.operators.multimodal import (
-        apply_resize,
-        decode_ppm,
-        extract_features,
-        synthesize_ppm_images,
-    )
-
-    media = synthesize_ppm_images(spark, 40).cache()
-    feats = {r["media_id"]: r["features"]
-             for r in extract_features(media, n_features=4).collect()}
-    assert len(feats) == 40 and all(len(v) == 4 for v in feats.values())
-    # features computed from real pixels: recompute one locally
-    row = media.filter(F.col("media_id") == 3).first()
-    arr = decode_ppm(bytes(row["payload"])).ravel()
-    chunks = np.array_split(arr.astype(np.float64), 4)
-    assert feats[3] == [round(float(c.mean()), 6) for c in chunks]
-
-    resized = apply_resize(media, max_side=32).cache()
-    assert resized.count() == 40
-    for r in resized.collect():
-        img = decode_ppm(bytes(r["payload"]))
-        assert max(img.shape[0], img.shape[1]) <= 32
-        assert (r["meta"]["height"], r["meta"]["width"]) == img.shape[:2]
-
-
-def test_wav_codec_and_mixed_media_features(spark):
-    """Real audio path: PCM WAV round-trips through the pure-numpy codec and
-    mixed PPM+WAV tables feature-extract through one kind-sniffing decoder."""
-    import numpy as np
-    import pandas as pd
-
-    from data_sync_tool_spark.operators.multimodal import (
-        decode_media,
-        decode_wav,
-        encode_ppm,
-        encode_wav,
-        extract_features,
-    )
-
-    t = np.arange(800)
-    tone = (np.sin(t / 10.0) * 20_000).astype("int16")
-    payload = encode_wav(np.stack([tone, -tone], axis=1), sample_rate=8_000)
-    samples, rate = decode_wav(payload)
-    assert rate == 8_000 and samples.shape == (800, 2)
-    assert np.array_equal(samples[:, 0], tone)
-
-    img = (np.arange(16 * 16 * 3).reshape(16, 16, 3) % 256).astype("uint8")
-    media = spark.createDataFrame(
-        pd.DataFrame({
-            "media_id": [0, 1],
-            "payload": [bytearray(encode_ppm(img)), bytearray(payload)],
-        })
-    )
-    rows = {r["media_id"]: r["features"]
-            for r in extract_features(media, n_features=4, decoder=decode_media).collect()}
-    assert len(rows) == 2 and all(len(v) == 4 for v in rows.values())
-    # audio features are real sample-chunk means
-    chunks = np.array_split(samples.astype(np.float64).ravel(), 4)
-    assert rows[1] == [round(float(c.mean()), 6) for c in chunks]
-
-
 def test_ivf_trains_on_sample_with_single_driver_collect(spark, emb, monkeypatch):
     """Index build must cost ONE bounded driver collect (the hash-min sample)
     — Lloyd refinement runs in numpy over that sample, never as per-iteration
@@ -336,53 +212,6 @@ def test_ivf_indexed_equals_direct_and_prunes_partitions(spark, emb, tmp_path):
     # partition pruning: the plan's parquet scan carries a list_id filter
     plan = indexed_df._jdf.queryExecution().executedPlan().toString()
     assert "list_id" in plan and ("PartitionFilters: [" in plan or "isin" in plan.lower())
-
-
-def test_ivf_index_append_equals_rebuild_with_frozen_centroids(spark, emb, tmp_path):
-    """Incremental index maintenance: appending a batch against the stored
-    (frozen) centroids must leave the index identical to rebuilding the
-    posting lists over corpus ∪ batch with those same centroids — and probes
-    must stay partition-pruned over the appended files."""
-    import pyspark.sql.functions as F
-
-    from data_sync_tool_spark.operators.similarity import (
-        ivf_index_append,
-        ivf_index_write,
-        ivf_topk_indexed,
-    )
-
-    half = emb.filter(F.col("vec_id") % 2 == 0)
-    rest = emb.filter(F.col("vec_id") % 2 == 1)
-    path = str(tmp_path / "ivf_inc")
-    ivf_index_write(half, path, n_centroids=8)
-    before = spark.read.parquet(f"{path}/lists").count()
-    ivf_index_append(rest, path)
-    lists = spark.read.parquet(f"{path}/lists")
-    assert lists.count() == before + rest.count()  # append, no rewrite
-    # same assignment rule for old and new rows: every vector sits in the
-    # list of its nearest stored centroid — recompute independently
-    from data_sync_tool_spark.functions.vectors import cosine
-
-    cents = spark.read.parquet(f"{path}/centroids")
-    best = (
-        emb.join(F.broadcast(cents))
-        .select("vec_id", "list_id", cosine(F.col("embedding"), F.col("centroid")).alias("cs"))
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("vec_id").orderBy(F.col("cs").desc(), F.col("list_id"))
-    expect = {
-        (r.vec_id, r.list_id)
-        for r in best.withColumn("rn", F.row_number().over(w)).filter("rn = 1").collect()
-    }
-    got = {(r.vec_id, r.list_id) for r in lists.select("vec_id", "list_id").collect()}
-    assert got == expect
-    # probes over the appended index stay partition-pruned
-    q = emb.limit(3)
-    out_df = ivf_topk_indexed(spark, path, q, k=5, n_probe=3)
-    plan = out_df._jdf.queryExecution().executedPlan().toString()
-    assert "list_id" in plan and ("PartitionFilters: [" in plan or "isin" in plan.lower())
-    assert out_df.count() > 0
 
 
 def test_minhash_incremental_index_equals_batch_cross_pairs(spark, docs, tmp_path):

@@ -274,55 +274,3 @@ def test_conversation_state_tracker_expires_idle_conversations(spark, tmp_path):
     a_rows = [r for r in exp if r.conv_id == "A"]
     assert any(r.expired for r in a_rows), a_rows
     assert any(not r.expired and r.n_changes == 1 and r.max_turn == 2 for r in a_rows), a_rows
-
-
-def test_stream_exact_dedup_drops_within_watermark_and_bounds_state(spark, tmp_path):
-    """Ingest-time dedup: duplicates arriving within the watermark of the
-    first occurrence are dropped; once the watermark passes a key its state
-    is EVICTED, so a far-later duplicate is re-admitted — the bounded-state
-    tradeoff stated in the docstring, pinned here so it can't silently
-    change."""
-    from data_sync_tool_spark.streaming.windows import stream_exact_dedup
-
-    d = tmp_path / "feed"
-    d.mkdir()
-    schema = "fp string, ts timestamp, payload string"
-    chunks = [
-        [("A", "2024-01-01 00:00:00", "a0"), ("B", "2024-01-01 00:01:00", "b0")],
-        [("A", "2024-01-01 00:02:00", "a-dup"), ("C", "2024-01-01 00:03:00", "c0")],
-        [("D", "2024-01-01 01:00:00", "d0")],  # advances watermark past A...
-        # ...but the new watermark only takes effect (and evicts) from the
-        # NEXT batch — one more batch must commit before A's state is gone
-        [("E", "2024-01-01 01:01:00", "e0")],
-        [("A", "2024-01-01 01:05:00", "a-late")],  # state evicted → re-admitted
-    ]
-    import time as _t
-
-    for i, rows in enumerate(chunks):
-        spark.createDataFrame(rows, "fp string, ts_s string, payload string").select(
-            "fp", F.col("ts_s").cast("timestamp").alias("ts"), "payload"
-        ).coalesce(1).write.parquet(f"{d}/chunk-{i:03d}")
-        _t.sleep(0.3)  # distinct mtimes: the file source orders by timestamp
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/chunk-*")
-    )
-    q = (
-        stream_exact_dedup(stream, ["fp"], "ts", watermark="10 minutes")
-        .writeStream.format("memory")
-        .queryName("ingest_dedup")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_drained(q)
-    got = [(r.fp, r.payload) for r in spark.table("ingest_dedup").collect()]
-    by_fp = {}
-    for fp, payload in got:
-        by_fp.setdefault(fp, []).append(payload)
-    assert sorted(by_fp["B"]) == ["b0"] and sorted(by_fp["C"]) == ["c0"]
-    assert sorted(by_fp["D"]) == ["d0"] and sorted(by_fp["E"]) == ["e0"]
-    assert sorted(by_fp["A"]) == ["a-late", "a0"]  # dup dropped, late re-admitted
-    with pytest.raises(ValueError, match="non-empty"):
-        stream_exact_dedup(stream, [], "ts")

@@ -293,3 +293,28 @@ def test_repair_prunes_on_second_key_column(spark, sf_small, tmp_path, monkeypat
     assert pruned_opens and max(pruned_opens) < n_files_total
     out2 = pipe.run_reconciliation("full", apply=False)
     assert out2["counts"]["M"] == 0 and out2["counts"]["A"] == 0 and out2["counts"]["D"] == 0
+
+
+def _first_seven(spark, ds, table):
+    """An ``adapter_class`` factory: seven rows of the table's parquet file."""
+    return spark.read.parquet(f"{ds.path}/{table}.parquet").limit(7)
+
+
+def test_source_reads_through_the_datastore_adapter(spark, sf_small, tmp_path):
+    cfg_path = tmp_path / "config.yaml"
+    cfg_path.write_text(YAML.format(sf=sf_small, lake=tmp_path / "lake").replace(
+        "type: parquet",
+        "type: custom\n    options: {adapter_class: 'tests.test_pipeline:_first_seven'}", 1,
+    ))
+    pipe = Pipeline(spark, Config.load(str(cfg_path)), "orders_sync")
+    assert pipe.source_df().count() == 7
+
+
+def test_enrichment_is_rejected_not_ignored(spark, sf_small, tmp_path):
+    cfg_path = tmp_path / "config.yaml"
+    cfg_path.write_text(
+        YAML.format(sf=sf_small, lake=tmp_path / "lake")
+        + "    enrichment:\n      - {name: tier, key_template: '{{ o_custkey }}'}\n"
+    )
+    with pytest.raises(ValueError, match="enrichment"):
+        Pipeline(spark, Config.load(str(cfg_path)), "orders_sync")

@@ -1,5 +1,5 @@
 """Product quantization: numpy-reference parity of codes and ADC scores,
-recall against brute force, frozen-codebook append, determinism."""
+recall against brute force, the persisted index, determinism."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from data_sync_tool_spark.operators.pq import (
     pq_encode,
-    pq_index_append,
     pq_index_write,
     pq_read_books,
     pq_topk,
@@ -123,11 +122,8 @@ def test_train_deterministic_across_partitionings(spark):
 
 def test_index_append_equals_rebuild(spark, tmp_path):
     df = _vecs(spark, n=100)
-    a = df.filter(F.col("vec_id") < 70)
-    b = df.filter(F.col("vec_id") >= 70)
     path = str(tmp_path / "pq")
-    pq_index_write(a, path, m=M, k=K)
-    pq_index_append(b, path)
+    pq_index_write(df, path, m=M, k=K)
     books = pq_read_books(spark, path)
     stored = {
         r["vec_id"]: list(r["codes"])
@@ -136,7 +132,7 @@ def test_index_append_equals_rebuild(spark, tmp_path):
     rebuilt = {
         r["vec_id"]: list(r["codes"]) for r in pq_encode(df, books).collect()
     }
-    assert stored == rebuilt  # frozen codebooks: append ≡ full re-encode
+    assert stored == rebuilt  # stored codes ≡ a re-encode with the stored codebooks
     q = df.filter(F.col("vec_id") < 3)
     direct = pq_topk(spark.read.parquet(f"{path}/codes"), q, books, k=5)
     via_index = pq_topk_indexed(spark, path, q, k=5)
@@ -207,30 +203,6 @@ def test_ivfpq_exhaustive_equals_bruteforce_ranking_with_refine(spark, tmp_path)
     )
     assert got == exact
 
-
-def test_ivfpq_append_equals_rebuild(spark, tmp_path):
-    from data_sync_tool_spark.operators.pq import (
-        ivfpq_index_append,
-        ivfpq_index_write,
-        ivfpq_topk,
-    )
-
-    df = _vecs(spark, n=100)
-    a = df.filter(F.col("vec_id") < 70)
-    b = df.filter(F.col("vec_id") >= 70)
-    path = str(tmp_path / "inc")
-    ivfpq_index_write(a, path, n_centroids=5, m=M, k=K)
-    ivfpq_index_append(b, path)
-    # frozen centroids+codebooks: the appended index must answer like one
-    # whose codes cover a ∪ b (centroids/books derive from a only, both ways)
-    stored = {
-        r["vec_id"]: (r["list_id"], list(r["codes"]))
-        for r in spark.read.parquet(f"{path}/codes").collect()
-    }
-    assert set(stored) == set(range(100))
-    q = df.filter(F.col("vec_id") >= 95)  # appended rows are queryable
-    out = ivfpq_topk(spark, path, q, k=3, n_probe=5)
-    assert out.groupBy("query_id").count().filter(F.col("count") != 3).count() == 0
 
 def test_query_bound_raises_for_pq_and_ivfpq(spark, tmp_path, monkeypatch):
     """Driver-bound query collects are bounded: past the one bound

@@ -71,58 +71,3 @@ def test_role_text_boundary_cannot_be_forged(spark):
     fa, fb = a.collect()[0], b.collect()[0]
     assert fa["transcript"] == fb["transcript"]
     assert fa["fp"] != fb["fp"]
-
-
-def _turn_rows(conv, turns, lsn0=0):
-    return [
-        {"conv_id": conv, "turn_idx": i, "role": r, "text": t, "lsn": lsn0 + i, "op": "upsert"}
-        for i, (r, t) in enumerate(turns)
-    ]
-
-
-def test_assemble_changed_transcripts_incremental(spark, tmp_path):
-    from data_sync_tool_spark.operators.transcripts import (
-        assemble_changed_transcripts,
-        assemble_transcripts,
-    )
-    from data_sync_tool_spark.sources.lake import LakeTable
-
-    schema = "conv_id string, turn_idx int, role string, text string, lsn long, op string"
-    table = LakeTable(spark, str(tmp_path / "turns"), ["conv_id", "turn_idx"], n_buckets=4)
-    b1 = _turn_rows("conv-a", [("user", "hi"), ("bot", "hello")]) + _turn_rows(
-        "conv-b", [("user", "q1"), ("bot", "a1")], lsn0=10
-    )
-    table.merge_into(spark.createDataFrame(b1, schema), batch_id="b1")
-    lsn_after_b1 = 11
-    # second batch touches only conv-b (update turn 1 + new turn 2)
-    b2 = [
-        {"conv_id": "conv-b", "turn_idx": 1, "role": "bot", "text": "a1-fixed", "lsn": 20, "op": "upsert"},
-        {"conv_id": "conv-b", "turn_idx": 2, "role": "user", "text": "thanks", "lsn": 21, "op": "upsert"},
-    ]
-    table.merge_into(spark.createDataFrame(b2, schema), batch_id="b2")
-
-    for max_pruned in (10_000, 0):  # zone-map-pruned path, then semi-join fallback
-        got = assemble_changed_transcripts(table, lsn_after_b1, max_pruned_keys=max_pruned)
-        rows = {r["conv_id"]: r for r in got.collect()}
-        assert set(rows) == {"conv-b"}
-        assert rows["conv-b"]["transcript"] == "user: q1\nbot: a1-fixed\nuser: thanks"
-    # incremental result ≡ full reassembly restricted to the dirty conv
-    full = {
-        r["conv_id"]: r["fp"]
-        for r in assemble_transcripts(table.read()).collect()
-    }
-    assert rows["conv-b"]["fp"] == full["conv-b"]
-
-
-def test_assemble_changed_transcripts_empty_feed(spark, tmp_path):
-    from data_sync_tool_spark.operators.transcripts import assemble_changed_transcripts
-    from data_sync_tool_spark.sources.lake import LakeTable
-
-    schema = "conv_id string, turn_idx int, role string, text string, lsn long, op string"
-    table = LakeTable(spark, str(tmp_path / "turns2"), ["conv_id", "turn_idx"], n_buckets=2)
-    table.merge_into(
-        spark.createDataFrame(_turn_rows("c", [("user", "x")]), schema), batch_id="b1"
-    )
-    got = assemble_changed_transcripts(table, since_lsn=10**9)
-    assert got.count() == 0
-    assert got.columns == ["conv_id", "n_turns", "transcript", "fp"]
