@@ -192,7 +192,6 @@ class EnrichmentConfig(BaseModel):
     externalstore: Optional[str] = None
     key_template: Optional[str] = None
     output_field: Optional[str] = None
-    output: Optional[str] = None  # 'lambda v: {...}' mapper
     path: Optional[str] = None
     params: dict[str, str] = {}
 

@@ -97,6 +97,7 @@ import os
 import shutil
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
@@ -144,6 +145,37 @@ _BLOOM_K = 3
 _BLOOM_M_MAX = 1 << 17  # 16 KiB of bits; exact fp target up to ~10k keys/file
 _BLOOM_M_MIN = 1 << 10
 _BLOOM_BITS_PER_KEY = 13  # m ≈ 13n with k=3 → fp ≈ 1%
+
+
+def _bloom_entry(words: dict[int, int], n_rows: int) -> dict[str, Any]:
+    """A file's bloom stats from its set 64-bit words at ``_BLOOM_M_MAX``
+    resolution, pow2-folded down to the smallest size meeting the ~1% fp
+    target for ``n_rows`` (rows ≥ distinct keys: a conservative m)."""
+    import base64
+
+    m = _BLOOM_M_MIN
+    while m < _BLOOM_M_MAX and m < _BLOOM_BITS_PER_KEY * max(1, n_rows):
+        m *= 2
+    buf = bytearray(_BLOOM_M_MAX // 8)
+    for w, bits in words.items():
+        buf[w * 8:(w + 1) * 8] = bits.to_bytes(8, "little")
+    while len(buf) * 8 > m:  # pow2 fold: bit p at 2m ORs into p mod m
+        half = len(buf) // 2
+        buf = bytearray(a | b for a, b in zip(buf[:half], buf[half:]))
+    return {"bloom": base64.b64encode(bytes(buf)).decode("ascii"),
+            "bloom_m": m, "bloom_k": _BLOOM_K}
+
+
+def _local_path(uri: str) -> str:
+    """The local path of an ``input_file_name()`` URI."""
+    from urllib.parse import unquote, urlparse
+
+    return unquote(urlparse(uri).path) if uri.startswith("file:") else uri
+
+
+# The one helper thread of the process, reused across merges: an append
+# merge runs its batch-stats pass here while the calling thread writes.
+_HELPER = ThreadPoolExecutor(max_workers=1, thread_name_prefix="lake-batch-stats")
 
 
 class ConstraintViolationError(ValueError):
@@ -216,12 +248,12 @@ class LakeTable:
         self.key_cols = list(key_cols)
         self.checksum = checksum
         self.merge_mode = merge_mode
-        # per-batch op-count lineage costs one extra scan of the batch;
-        # max-throughput ingest turns it off (offsets/rows still recorded)
+        # per-batch op counts in lineage; they ride a job the merge runs
+        # anyway (the append write's observe, the rewrite's pre-scan)
         self.track_stats = track_stats
-        # opt-in per-file key blooms: each commit pays one keys-only
-        # column-pruned read-back of its NEW files (O(batch)); point-lookup
-        # reads then skip bucket files that cannot contain the probed keys
+        # opt-in per-file key blooms, so point lookups skip files: an append
+        # merge folds them from its batch-stats pass, a commit rewriting
+        # files reads its new files' keys back (they hold target rows too)
         self.bloom_filters = bloom_filters
         # exactly-once memory: how many recent batch_ids each manifest
         # retains. Bounded so manifests stay O(1) over 10^6 commits; safe
@@ -413,63 +445,82 @@ class LakeTable:
             F.pmod(b1 + F.lit(i) * b2, F.lit(_BLOOM_M_MAX)) for i in range(_BLOOM_K)
         ]
 
+    def _batch_stats(
+        self,
+        df: DataFrame,
+        keep: F.Column | None = None,
+        src: F.Column | None = None,
+        ops: bool = False,
+        bloom_by: F.Column | None = None,
+    ) -> dict[str, Any]:
+        """ONE aggregate over ``df`` (2 jobs under AQE) whose parts share one
+        shuffle, each row exploded into a tagged group key per part:
+        ``src`` (``df`` carries ``_ck``, each row's digest) gives
+        ``"lineage"`` — per source the offset range, row count and checksum
+        of EVERY row, and their envelope; ``ops`` gives (op, bucket, rows)
+        and ``bloom_by`` per label (bucket, file) the set words of
+        ``_bloom_positions`` and their count, both over the ``keep`` rows.
+        An ``input_file_name`` label needs no shuffle or cache below it."""
+
+        def part(t: int, s: F.Column, w: F.Column = F.lit(None),
+                 bit: F.Column = F.lit(None)) -> F.Column:
+            tag = F.lit(t) if keep is None or t == 0 else F.when(keep, F.lit(t))
+            return F.struct(tag.alias("t"), s.cast("string").alias("s"),
+                            w.cast("long").alias("w"), bit.cast("long").alias("bit"))
+
+        parts = [part(0, src)] if src is not None else []
+        if ops:
+            parts.append(part(1, F.col("_op"), F.col(BUCKET_COL)))
+        if bloom_by is not None:
+            parts += [
+                part(2, bloom_by, F.shiftright(p, 6), F.call_function(
+                    "shiftleft", F.lit(1).cast("long"), (p % 64).cast("int")))
+                for p in self._bloom_positions(F.col(self.key_cols[0]))
+            ]
+        # the row digest is projected below the explode: once per row
+        lin = [LSN_COL, "_ck"] if src is not None else []
+        keys = df.select(F.array(*parts).alias("_g"), *lin).select(F.inline("_g"), *lin)
+        if keep is not None:
+            keys = keys.filter(F.col("t").isNotNull())
+        aggs = [F.count(F.lit(1)).alias("n"), F.bit_or("bit").alias("bits")]
+        if src is not None:
+            aggs += [F.min(LSN_COL).alias("lo"), F.max(LSN_COL).alias("hi"),
+                     F.sum("_ck").alias("ck")]
+        out: dict[str, Any] = {"ops": [], "blooms": {}}
+        per = []
+        for r in keys.groupBy("t", "s", "w").agg(*aggs).collect():
+            if r["t"] == 0:
+                per.append({"src": r["s"], "offset_min": r["lo"], "offset_max": r["hi"],
+                            "rows": r["n"], "checksum": int(r["ck"])})
+            elif r["t"] == 1:
+                out["ops"].append((r["s"], int(r["w"]), r["n"]))
+            else:
+                words, n = out["blooms"].get(r["s"], ({}, 0))
+                words[int(r["w"])] = r["bits"] & 0xFFFFFFFFFFFFFFFF
+                out["blooms"][r["s"]] = (words, n + r["n"])
+        if src is not None:
+            # the full path: basenames repeat across the directories of one
+            # partitioned write, the path is unique and stable across replays
+            per.sort(key=lambda d: str(d["src"]))
+            out["lineage"] = {"partitions": per, **({
+                "offset_min": min(d["offset_min"] for d in per),
+                "offset_max": max(d["offset_max"] for d in per),
+            } if per else {})}
+        return out
+
     def _file_blooms(self, files: list[str], schema: T.StructType) -> dict[str, dict[str, Any]]:
         """Per-file bloom over the FIRST key column for exactly ``files`` —
-        ONE keys-only, column-pruned scan (grouped by ``input_file_name``,
-        sparse (file, word) partial aggregates; no wide aggregate row). Each
-        file's bloom is folded from the max resolution down to the smallest
-        pow2 meeting the ~1% fp target for its row count, so small delta
-        files carry small blooms. Zero-row files get no bloom (always read)."""
+        ONE keys-only, column-pruned scan labelled by ``input_file_name``,
+        each file's bloom folded to its row count: the read-back of commits
+        whose new files hold target rows too. Zero-row files get no bloom
+        (always read)."""
         if not files:
             return {}
-        import base64
-        from urllib.parse import unquote, urlparse
-
-        key = self.key_cols[0]
-        df = self.spark.read.schema(schema).parquet(*files).select(
-            F.input_file_name().alias("_f"), F.col(key)
-        )
-        pos = F.array(*self._bloom_positions(F.col(key)))
-        rows = (
-            df.select("_f", F.explode(pos).alias("p"))
-            .select(
-                "_f",
-                F.shiftright(F.col("p"), 6).alias("w"),
-                F.expr("shiftleft(CAST(1 AS BIGINT), CAST(p % 64 AS INT))").alias("b"),
-            )
-            .groupBy("_f", "w")
-            .agg(F.bit_or("b").alias("bits"), F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        )
-        per: dict[str, dict[int, int]] = {}
-        n_pos: dict[str, int] = {}
-        for r in rows:
-            p = r["_f"]
-            if p.startswith("file:"):
-                p = unquote(urlparse(p).path)
-            per.setdefault(p, {})[int(r["w"])] = r["bits"] & 0xFFFFFFFFFFFFFFFF
-            n_pos[p] = n_pos.get(p, 0) + int(r["cnt"])
-        out: dict[str, dict[str, Any]] = {}
-        for f in files:
-            words = per.get(f)
-            if not words:
-                continue
-            n = max(1, n_pos[f] // _BLOOM_K)  # rows ≥ distinct keys: conservative m
-            m = _BLOOM_M_MIN
-            while m < _BLOOM_M_MAX and m < _BLOOM_BITS_PER_KEY * n:
-                m *= 2
-            buf = bytearray(_BLOOM_M_MAX // 8)
-            for w, bits in words.items():
-                buf[w * 8:(w + 1) * 8] = bits.to_bytes(8, "little")
-            while len(buf) * 8 > m:  # pow2 fold: bit p at 2m ORs into p mod m
-                half = len(buf) // 2
-                buf = bytearray(a | b for a, b in zip(buf[:half], buf[half:]))
-            out[f] = {
-                "bloom": base64.b64encode(bytes(buf)).decode("ascii"),
-                "bloom_m": m,
-                "bloom_k": _BLOOM_K,
-            }
-        return out
+        df = self.spark.read.schema(schema).parquet(*files)
+        got = {_local_path(p): _bloom_entry(words, n_pos // _BLOOM_K)
+               for p, (words, n_pos) in self._batch_stats(
+                   df, bloom_by=F.input_file_name())["blooms"].items()}
+        return {f: got[f] for f in files if f in got}
 
     def _probe_keys(
         self, keys: list[Any], key_type: T.DataType, n_buckets: int
@@ -821,11 +872,12 @@ class LakeTable:
         sort_by_key: bool = False,
         max_records_per_file: int | None = None,
         sort_cols: list[str] | None = None,
-    ) -> tuple[dict[str, list[str]], dict[str, dict[str, Any]], dict[str, Any] | None]:
+    ) -> tuple[str, dict[str, list[str]], dict[str, dict[str, Any]], dict[str, Any] | None]:
         """Write ``df`` (must carry BUCKET_COL, hashed over ``n_buckets``)
-        partitioned by bucket under a fresh snapshot dir; return (bucket_id
-        → absolute file list, file → digest, the batch totals observed by
-        the write: digest, lsn bounds, key zone map — None when none apply).
+        partitioned by bucket under a fresh snapshot dir; return (that dir,
+        bucket_id → absolute file list, file → digest, the batch totals
+        observed by the write: digest, lsn bounds, key zone map — None when
+        none apply).
 
         Digests (checksum=True) are observed INSIDE the write job: an
         ``observe()`` over the clustered rows sums each row's hash per
@@ -973,13 +1025,13 @@ class LakeTable:
                 }
                 if zm:
                     total["zm"] = zm
-        return out, digests, total or None
+        return snap, out, digests, total or None
 
     @staticmethod
-    def _count_rows(files: list[str]) -> int:
+    def _footer_rows(files: list[str]) -> dict[str, int]:
         import pyarrow.parquet as pq
 
-        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+        return {f: pq.ParquetFile(f).metadata.num_rows for f in files}
 
     @staticmethod
     def _norm_bound(v: Any) -> Any:
@@ -1079,29 +1131,17 @@ class LakeTable:
         return self._table_checksum(m["buckets"], self._schema_of(m))
 
     def _file_digests(self, files: list[str], schema: T.StructType) -> dict[str, int]:
-        """Per-file digest (sum of xxhash64 rowhashes over non-deleted rows) for
-        exactly ``files`` — ONE distributed scan of those files, grouped by
-        ``input_file_name``. Zero-live-row files digest to 0."""
+        """Per-file digest (sum of ``_row_digest`` over non-deleted rows) for
+        exactly ``files`` — ONE scan of those files, each file a source of
+        ``_batch_stats``. Zero-live-row files digest to 0."""
         if not files:
             return {}
         df = self._read_files(files, schema)
         if DELETED_COL in df.columns:
             df = df.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
-        cols = [c for c in df.columns if c not in _SYSTEM_COLS]
-        rows = (
-            df.select(F.input_file_name().alias("_f"),
-                      _row_digest(*cols).cast("decimal(38,0)").alias("_h"))
-            .groupBy("_f").agg(F.sum("_h").alias("_d"))
-            .collect()
-        )
-        from urllib.parse import unquote, urlparse
-
-        got = {}
-        for r in rows:
-            p = r["_f"]
-            if p.startswith("file:"):
-                p = unquote(urlparse(p).path)
-            got[p] = int(r["_d"])
+        df = df.withColumn("_ck", _row_digest(*[c for c in df.columns if c not in _SYSTEM_COLS]))
+        got = {_local_path(d["src"]): d["checksum"] for d in self._batch_stats(
+            df, src=F.input_file_name())["lineage"]["partitions"]}
         return {f: got.get(f, 0) for f in files}
 
     def _maintain_digests(
@@ -1245,9 +1285,9 @@ class LakeTable:
                 file_stats[f] = self._overlay(file_stats.get(f, {}), st)
         prev_files = set(self._files(prev, None))
         if self.bloom_filters:
-            # key blooms for files NEW in this commit (rollback re-references
-            # old files whose blooms arrive via extra_file_stats — skipped):
-            # one keys-only read-back of the just-written batch, O(batch)
+            # key blooms for files NEW in this commit that extra_file_stats
+            # did not bring (an append merge's folded blooms, a rollback's
+            # re-referenced files): one keys-only read-back of those files
             todo = [
                 f for f in live_files
                 if f not in prev_files and "bloom" not in file_stats.get(f, {})
@@ -1324,11 +1364,12 @@ class LakeTable:
     # ----------------------------------------------------------------- merge
     def _enforce_constraints(
         self, batch: DataFrame, batch_id: str, props: dict[str, Any]
-    ) -> tuple[DataFrame, int]:
+    ) -> tuple[F.Column | None, int]:
         """Apply the CHECK constraints of the table properties ``props`` to
         a change batch (non-delete rows only — a delete carries no payload
         to validate). Violation = expression evaluates FALSE (NULL passes,
-        SQL CHECK semantics).
+        SQL CHECK semantics). Returns the predicate of the rows that merge
+        (None: all of them) and the number of rows quarantined.
 
         ``error``: raise :class:`ConstraintViolationError` with a bounded
         row sample before anything is written — the batch retries after the
@@ -1361,7 +1402,7 @@ class LakeTable:
                     f"Fix the producer and retry, or declare "
                     f"on_violation='quarantine' to divert bad rows."
                 )
-            return batch, 0
+            return None, 0
         from pyspark.sql import Observation
 
         reasons = F.array_compact(F.array(*[
@@ -1382,7 +1423,7 @@ class LakeTable:
         n = int(obs.get.get("n") or 0)
         if n == 0:
             shutil.rmtree(qdir, ignore_errors=True)
-        return batch.filter(~is_bad), n
+        return ~is_bad, n
 
     def quarantined(self, batch_id: str | None = None) -> DataFrame:
         """Rows diverted by ``on_violation="quarantine"`` (all batches, or
@@ -1409,6 +1450,7 @@ class LakeTable:
         allow_delete: bool = True,
         lineage_extra: dict[str, Any] | None = None,
         unique_keys: bool = False,
+        source_col: str | None = None,
     ) -> MergeResult:
         """Apply one change batch. ``batch_df`` columns = data columns +
         ``op_col`` ∈ {insert, update, upsert, delete} + monotone ``lsn_col``.
@@ -1448,6 +1490,13 @@ class LakeTable:
         on the upsert and collapse paths. Purely an optimization hint; a
         violated guarantee degrades to both versions landing as deltas and the READ
         side's LWW resolve picking one, never a corrupt table.
+
+        ``source_col``: a column of ``batch_df`` naming each row's source
+        (``CdcPipeline``: its input file), not stored. Lineage and
+        ``MergeResult.stats`` then carry ``partitions`` — per source the
+        offset range, row count and checksum of ALL its rows — and their
+        envelope ``offset_min``/``offset_max``; an empty batch publishes
+        nothing (``applied`` False, ``partitions`` empty).
         """
         # the ONE manifest this merge reads the target from and commits
         # against — loaded before anything reads the table, so a writer that
@@ -1465,41 +1514,60 @@ class LakeTable:
         # ONE projection of the batch (each withColumn/drop re-analyzes the
         # plan). Columns are taken off ``batch_df``: one py4j call each,
         # where ``F.col`` makes three.
-        data_cols = [c for c in batch_df.columns
+        in_cols = [c for c in batch_df.columns if c != source_col]
+        data_cols = [c for c in in_cols
                      if c not in (op_col, lsn_col, LSN_COL, "_op", BUCKET_COL)]
-        batch = batch_df.select(
+        cols = [
             *[batch_df[c] for c in data_cols],
             batch_df[lsn_col].cast("long").alias(LSN_COL),
             batch_df[op_col].alias("_op"),
             self._bucket_col(props["n_buckets"]).alias(BUCKET_COL),
-        )
-        if not allow_delete:
-            # deletes ignored entirely (reference MergeStrategyConfig
-            # allow_delete=False, core/config.py:158-160)
-            batch = batch.filter(F.col("_op") != F.lit("delete"))
-        rows_quarantined = 0
+        ]
+        batch = batch_df.select(*cols)
+        # rows that merge: all but ignored deletes (reference
+        # MergeStrategyConfig allow_delete=False, core/config.py:158-160)
+        # and quarantined violators; source lineage counts every row
+        keep = None if allow_delete else F.col("_op") != F.lit("delete")
         if props["constraints"]:
-            batch, rows_quarantined = self._enforce_constraints(batch, batch_id, props)
+            valid, rows_quarantined = self._enforce_constraints(batch, batch_id, props)
+            if valid is not None:
+                keep = valid if keep is None else keep & valid
             if rows_quarantined:
                 lineage_extra = {**(lineage_extra or {}),
                                  "rows_quarantined": rows_quarantined}
 
-        # ONE pre-scan of the batch serves both the op-count lineage stats and
-        # the dirty-bucket list (the rewrite shape needs it; the append shape
-        # learns its buckets from the write itself) — two separate jobs here
-        # would scan the batch twice per commit
+        # ONE batch-stats pass, under the pinned manifest's bucket count and
+        # before any filter, shuffle or observe: the rewrite's dirty buckets
+        # and op counts (before its write), an append's blooms (beside its
+        # write) and the per-source lineage
+        stats_in, src = batch, None
+        if source_col is not None:
+            # each row's xxhash64 masked to 32 bits: a raw sum overflows
+            # long under ANSI after a handful of rows
+            ck = rowhash_xxhash64(*[batch_df[c] for c in in_cols])
+            stats_in = batch_df.select(*cols, batch_df[source_col].alias("_src"),
+                                       ck.bitwiseAND(F.lit((1 << 32) - 1)).alias("_ck"))
+            src = F.col("_src")
+        blooms = F.col(BUCKET_COL) if append and self.bloom_filters else None
+
+        def batch_stats() -> dict[str, Any]:
+            return self._batch_stats(stats_in, keep, src, not append, blooms)
+
+        if keep is not None:
+            batch = batch.filter(keep)
         stats: dict[str, Any] = {}
         dirty: list[int] | None = None
         obs_ops = None
         if not append:
-            pre = batch.groupBy("_op", BUCKET_COL).agg(F.count(F.lit(1)).alias("n")).collect()
+            side = batch_stats()
+            stats |= side.get("lineage", {})
             # dirty buckets of the raw batch == those of the deduped rows
             # (LWW only drops rows within a key, never a bucket)
-            dirty = sorted({r[BUCKET_COL] for r in pre})
+            dirty = sorted({b for _, b, _ in side["ops"]})
             if self.track_stats:
                 op_counts: dict[str, int] = {}
-                for r in pre:
-                    op_counts[r["_op"]] = op_counts.get(r["_op"], 0) + r["n"]
+                for o, _, n in side["ops"]:
+                    op_counts[o] = op_counts.get(o, 0) + n
                 stats["op_counts"] = op_counts
         elif self.track_stats:
             # append shape: op counts ride the WRITE job via observe() — a
@@ -1555,6 +1623,8 @@ class LakeTable:
         return self._commit_write(
             m, rows, batch_id, op, append=append, dirty=dirty, fold=fold,
             stats=stats, obs_ops=obs_ops, extra=lineage_extra, props=props,
+            batch_stats=batch_stats if append and (blooms is not None or src is not None)
+            else None,
         )
 
     def _commit_write(
@@ -1571,6 +1641,7 @@ class LakeTable:
         obs_ops: Any = None,
         extra: dict[str, Any] | None = None,
         props: dict[str, Any] | None = None,
+        batch_stats: Callable[[], dict[str, Any]] | None = None,
     ) -> MergeResult:
         """The one commit tail of every merge strategy, ``overwrite``,
         ``expire_tombstones`` and ``rescale``: schema evolution → snapshot
@@ -1599,7 +1670,12 @@ class LakeTable:
           bucket (overwrite, expire_tombstones, rescale).
 
         ``evolve``: additive + type-widening schema evolution of ``df`` onto
-        ``m``'s schema (off for ``overwrite``, which defines a new one)."""
+        ``m``'s schema (off for ``overwrite``, which defines a new one).
+
+        ``batch_stats`` (an append merge's ``_batch_stats`` pass) runs on the
+        helper thread while this thread writes, joined before anything
+        publishes. If it raises, or its source lineage saw no row, the
+        snapshot is removed and nothing publishes."""
         props = props or self._props(m)
         bucket = self._bucket_col(props["n_buckets"])
         schema = df.schema
@@ -1620,9 +1696,36 @@ class LakeTable:
             data_schema = T.StructType(
                 [f for f in df.schema.fields if f.name != BUCKET_COL])
             df = df.withColumn(BUCKET_COL, bucket)
-        new, dig, tot = self._write_snapshot(
-            df, n_buckets=props["n_buckets"], per_file_digests=not append
-        )
+        pending = None
+        if batch_stats is not None:
+            # the helper runs under this thread's Spark local properties
+            # (job group, pool), as pyspark.InheritableThread's threads do
+            jsc = self.spark.sparkContext._jsc.sc()
+            local = jsc.getLocalProperties().clone()
+
+            def beside() -> dict[str, Any]:
+                jsc.setLocalProperties(local)
+                return batch_stats()
+
+            pending = _HELPER.submit(beside)
+        snap = None
+        try:
+            snap, new, dig, tot = self._write_snapshot(
+                df, n_buckets=props["n_buckets"], per_file_digests=not append
+            )
+            side = {} if pending is None else pending.result()
+        except BaseException:
+            if pending is not None:
+                pending.exception()  # joined on every path: nothing left running
+            if snap is not None:
+                shutil.rmtree(snap, ignore_errors=True)
+            raise
+        stats = {**(stats or {}), **side.get("lineage", {})}
+        if stats.get("partitions") == []:
+            # source lineage saw no row (an epoch the catch-up filter
+            # emptied): nothing to publish
+            shutil.rmtree(snap, ignore_errors=True)
+            return MergeResult(int(m["version"]) if m else 0, batch_id, False, stats=stats)
         if append:
             buckets = dict(m["buckets"]) if m else {}
             for b, fs in new.items():
@@ -1634,8 +1737,8 @@ class LakeTable:
                 b: e for b, e in m["buckets"].items() if b not in replaced
             }
             buckets.update({b: {"base": fs, "delta": []} for b, fs in new.items()})
-        rows_written = self._count_rows([f for fs in new.values() for f in fs])
-        stats = {} if stats is None else stats
+        counts = self._footer_rows([f for fs in new.values() for f in fs])
+        rows_written = sum(counts.values())
         if obs_ops is not None:
             # the per-op observe counters, read after the write job ran. On
             # an empty batch, PropagateEmptyRelation optimizes the metrics
@@ -1650,7 +1753,13 @@ class LakeTable:
             "batch_id": batch_id, "op": op, "touched_buckets": touched,
             "rows_written": rows_written, **stats, **(extra or {}),
         }
-        v = self._commit(m, props, buckets, data_schema, batch_id, lineage, dig, tot)
+        # a bucket's new delta file holds exactly the bucket's kept batch
+        # keys: its bloom folds from the pass's words at the file's footer
+        # row count, with no read-back
+        words = side.get("blooms", {})
+        blooms = {f: _bloom_entry(words[b][0], counts[f])
+                  for b, fs in new.items() if b in words for f in fs if counts[f]}
+        v = self._commit(m, props, buckets, data_schema, batch_id, lineage, dig, tot, blooms)
         return MergeResult(v, batch_id, True, touched, rows_written, stats)
 
     def changes_since(self, lsn: int, max_lsn: int | None = None) -> DataFrame:
@@ -1932,7 +2041,7 @@ class LakeTable:
                 "_zo", self._zorder_value(resolved, zorder_by, bounds)
             )
             sort_cols = ["_zo"]
-        new, dig, tot = self._write_snapshot(
+        _, new, dig, tot = self._write_snapshot(
             resolved, n_buckets=props["n_buckets"], sort_by_key=cluster_by_key,
             max_records_per_file=max_file_rows, sort_cols=sort_cols,
         )
@@ -1944,7 +2053,7 @@ class LakeTable:
             new_files, sorted(set(cols) | set(props["stats_columns"])) if cols else []
         )
         bid = batch_id or f"compact-v{m['version']}"
-        rows = self._count_rows(new_files)
+        rows = sum(self._footer_rows(new_files).values())
         lineage = {"batch_id": bid, "op": "compact", "rows_written": rows,
                    "compacted_buckets": sorted(dirty)}
         if ttl_obs is not None:
@@ -2133,11 +2242,11 @@ class LakeTable:
             if not files:
                 continue
             n_rewritten += len(files)
-            rows_before += self._count_rows(files)
+            rows_before += sum(self._footer_rows(files).values())
             kept = drop_keys(self._read_files(files, schema)).withColumn(
                 BUCKET_COL, self._bucket_col(nb)
             )
-            new, dig, tot = self._write_snapshot(kept, n_buckets=nb)
+            _, new, dig, tot = self._write_snapshot(kept, n_buckets=nb)
             all_digests.update(dig)
             if tot:
                 totals.append(tot)
@@ -2152,7 +2261,7 @@ class LakeTable:
                     out_buckets.get(b, {}).get(kind, []) + fs
                 )
                 new_files_all.extend(fs)
-            rows_after += self._count_rows([f for fs in new.values() for f in fs])
+            rows_after += sum(self._footer_rows([f for fs in new.values() for f in fs]).values())
         out_buckets = {
             b: e for b, e in out_buckets.items() if e.get("base") or e.get("delta")
         }
@@ -2184,39 +2293,6 @@ class LakeTable:
         if vacuum_history:
             report["vacuum"] = self.vacuum(keep_last=1)
         return report
-
-    def purge_where(
-        self,
-        condition: F.Column,
-        batch_id: str | None = None,
-        vacuum_history: bool = True,
-        max_keys: int = 1_000_000,
-    ) -> dict[str, Any]:
-        """Predicate erasure ("delete every conversation matching X"):
-        resolve the keys whose LIVE row matches ``condition``, then
-        :meth:`purge_keys` them. Deliberately key-based, never
-        version-based — physically removing individual row VERSIONS that
-        match a predicate on a mutable column would resurrect the
-        next-older version of any key whose latest row matched. One
-        filtered scan to find the keys (predicate pushes to the parquet
-        scan on resolved tables), then the bounded bloom-pruned rewrite."""
-        m = self._load_manifest()
-        if m is None:
-            return {"version": 0, "committed": False,
-                    "files_rewritten": 0, "rows_purged": 0}
-        key0 = self.key_cols[0]
-        rows = (
-            self.read().filter(condition).select(key0).distinct()
-            .limit(max_keys + 1).collect()
-        )
-        if len(rows) > max_keys:
-            raise ValueError(
-                f"purge_where matched more than {max_keys} keys — this is a "
-                f"table rewrite, not an erasure; use overwrite() or raise max_keys"
-            )
-        return self.purge_keys(
-            [r[0] for r in rows], batch_id=batch_id, vacuum_history=vacuum_history
-        )
 
     def rescale(self, n_buckets: int, batch_id: str | None = None) -> MergeResult:
         """Rewrite the table under a new bucket count (Iceberg

@@ -19,10 +19,11 @@ module supplies the streaming machinery from Spark per SURVEY §2.8:
   duplicate).
 - lineage: each commit records the batch's lsn offset range, op counts, and
   PER-SOURCE-PARTITION lineage rows (input file → offset range, event count,
-  order-independent checksum — one groupBy-on-input_file_name aggregate,
-  which also yields the global range; under AQE it runs as 2 jobs, its map
-  stage and its result) in the table manifest; ``CdcMetrics`` aggregates
-  per-batch rows/sec.
+  order-independent checksum; the global range is their envelope) in the
+  table manifest. The merge computes them in its own batch-stats pass
+  (``LakeTable.merge_into(source_col=...)``): beside the write for an append
+  merge, inside the bucket pre-scan for a rewrite — no lineage job of its
+  own. ``CdcMetrics`` aggregates per-batch rows/sec.
 - resume: kill the query at any point; restarting with the same checkpoint
   dir replays from the last un-committed epoch (tested in
   ``tests/test_cdc_stream.py``).
@@ -152,6 +153,8 @@ def install_shutdown_handler(
 
 
 VALID_OPS = ("insert", "update", "upsert", "delete")
+# the per-row source-file column of a tracked batch; never stored
+_SOURCE_COL = "_src_file"
 
 
 def change_event_reasons(
@@ -314,6 +317,10 @@ class CdcPipeline:
         extra: dict[str, Any] = {"epoch_id": epoch_id}
         quarantined = 0
         annotated = None
+        if self.track_offsets:
+            # each row's source file, read at the scan: above a persist (the
+            # DLQ split) or a shuffle, input_file_name() is "" for every row
+            batch_df = batch_df.withColumn(_SOURCE_COL, F.input_file_name())
         if self.dlq_dir is not None:
             # one validation pass, then split. The batch is persisted so the
             # quarantine write and the merge don't re-read the source files.
@@ -323,77 +330,36 @@ class CdcPipeline:
             quarantined = bad.count()
             if quarantined:
                 (
-                    bad.withColumn("_dlq_epoch", F.lit(int(epoch_id)))
+                    bad.drop(_SOURCE_COL)
+                    .withColumn("_dlq_epoch", F.lit(int(epoch_id)))
                     .withColumn("_dlq_pipeline", F.lit(self.name))
                     .write.mode("append")
                     .parquet(self.dlq_dir)
                 )
             batch_df = annotated.filter(F.size("_dlq_reason") == 0).drop("_dlq_reason")
             extra["quarantined"] = quarantined
-        if self.track_offsets:
-            # one cheap agg on the (already materialized-in-plan) batch,
-            # grouped by SOURCE PARTITION (input file/split): per-partition
-            # lineage rows — offset range, event count, order-independent
-            # checksum (JVM xxhash64 sum) — per north star, with the global
-            # offset range derived from the same aggregate (2 jobs under
-            # AQE: its map stage, then its result). input_file_name is
-            # still live here (no shuffle between the scan and this agg).
-            # Skippable for max throughput via track_offsets=False.
-            from ..functions.hashes import rowhash_xxhash64
-
-            per = (
-                batch_df.groupBy(F.input_file_name().alias("src"))
-                .agg(
-                    F.min("lsn").alias("lo"), F.max("lsn").alias("hi"),
-                    F.count(F.lit(1)).alias("n"),
-                    # mask to 32 bits before summing: a raw xxhash64 sum
-                    # overflows long under ANSI after a handful of rows
-                    F.sum(rowhash_xxhash64(*batch_df.columns)
-                          .bitwiseAND(F.lit((1 << 32) - 1))).alias("ck"),
-                )
-                .collect()
-            )
-            input_rows = sum(r["n"] for r in per)
-            if input_rows == 0:
-                if annotated is not None:
-                    annotated.unpersist()
-                return  # empty epoch (availableNow tail): nothing to commit
-            extra |= {
-                "offset_min": min(r["lo"] for r in per),
-                "offset_max": max(r["hi"] for r in per),
-                "partitions": sorted(
-                    (
-                        {
-                            # the full path: basenames repeat across the
-                            # directories of one partitioned write, the
-                            # path is unique and stable across replays
-                            "src": r["src"],
-                            "offset_min": r["lo"], "offset_max": r["hi"],
-                            "rows": r["n"], "checksum": int(r["ck"]),
-                        }
-                        for r in per
-                    ),
-                    key=lambda d: str(d["src"]),
-                ),
-            }
-        else:
-            input_rows = -1
         try:
+            # with track_offsets, the merge's batch-stats pass records the
+            # per-source lineage (see LakeTable.merge_into ``source_col``)
             res = self.table.merge_into(
                 batch_df,
                 batch_id=f"{self.name}:{epoch_id}",
                 strategy=self.merge_strategy,
                 allow_delete=self.allow_delete,
                 lineage_extra=extra,
+                source_col=_SOURCE_COL if self.track_offsets else None,
             )
         finally:
             if annotated is not None:
                 annotated.unpersist()
+        parts = res.stats.get("partitions")
+        if parts == []:
+            return  # empty epoch (availableNow tail): nothing committed
         self.metrics.batches.append(
             {
                 "epoch_id": epoch_id,
                 "applied": res.applied,
-                "input_rows": int(input_rows) if input_rows and input_rows > 0 else 0,
+                "input_rows": sum(p["rows"] for p in parts or ()),
                 "rows_written": res.rows_written,
                 "quarantined": quarantined,
                 "seconds": time.time() - t0,

@@ -239,6 +239,32 @@ def test_dead_letter_queue_quarantines_malformed_events(spark, tmp_path):
     ]
     assert sum(int(l.get("quarantined", 0)) for l in lin if l) == 5
 
+
+def test_dead_letter_queue_keeps_per_source_lineage(spark, tmp_path):
+    """The DLQ split persists the batch, above which ``input_file_name()``
+    reads "" for every row; the source file is captured before the persist,
+    so an epoch of 2 files x 1,000 events still records two lineage entries
+    (not one ``("", 2000)``), and the capture never reaches the DLQ."""
+    from data_sync_tool_spark.streaming.cdc import CHANGE_STREAM_SCHEMA
+
+    d = tmp_path / "binlog"
+    ch = changelog_stream(spark, 2_000, n_convs=40, max_turns=8)
+    bad = spark.createDataFrame(
+        [("conv-bad", 1, "user", "bad op", None, None, "sideload", 5_000)],
+        CHANGE_STREAM_SCHEMA)
+    ch.filter(F.col("lsn") < 1_000).coalesce(1).write.parquet(f"{d}/chunk-000")
+    ch.filter(F.col("lsn") >= 1_000).union(bad).coalesce(1).write.parquet(f"{d}/chunk-001")
+    table = LakeTable(spark, str(tmp_path / "tbl"), ["conv_id", "turn_idx"], n_buckets=8)
+    dlq = str(tmp_path / "dlq")
+    CdcPipeline(spark, f"{d}/chunk-*", table, str(tmp_path / "ckpt"), name="dlqsrc",
+                dlq_dir=dlq, max_files_per_trigger=None).run_available()
+    parts = [p for r in table.lineage() for p in r.get("partitions", [])]
+    assert [(p["src"].split("/")[-2], p["rows"]) for p in parts] == [
+        ("chunk-000", 1_000), ("chunk-001", 1_000)]
+    assert [r["text"] for r in spark.read.parquet(dlq).collect()] == ["bad op"]
+    assert not [c for c in spark.read.parquet(dlq).columns if c.startswith("_src")]
+
+
 def test_per_partition_lineage_rows(spark, tmp_path, stream_dir):
     """Each commit records per-SOURCE-PARTITION lineage rows — offset range,
     event count, order-independent checksum per input file — and the global

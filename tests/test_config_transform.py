@@ -160,6 +160,13 @@ def test_enrich_service_batched(spark):
     assert 1 <= n_calls.value < 10
 
 
+def test_enrichment_config_loads_with_the_retired_output_mapper():
+    """``output`` (a ``'lambda v: {...}'`` mapper) was read by nothing and is
+    gone; a config that still sets it loads, the key ignored."""
+    conf = EnrichmentConfig(name="tier", output_field="tier", output="lambda v: {'t': v}")
+    assert conf.output_field == "tier" and not hasattr(conf, "output")
+
+
 # --------------------------------------------------- native lambda compilation
 def test_row_lambda_native_compilation_matches_udf(spark):
     """Simple lambdas compile to native Columns; results must match plain

@@ -127,10 +127,15 @@ def test_stale_data_merge_raises_instead_of_clobbering(spark, tmp_path, strategy
 
 @pytest.mark.parametrize("merge_mode", ["mor", "cow"])
 def test_writer_landing_during_commit_bloom_build_raises(spark, tmp_path, merge_mode):
-    """A commit's own Spark work (key blooms here; stats and digests alike)
-    runs after the merge read the table and before the publish. A writer
+    """A commit's own work (key blooms here; stats and digests alike) runs
+    after the merge read the table and before the publish. A writer
     landing there must fail the publish, not be dropped from the bucket
-    map: the version check and the publish are one atomic step."""
+    map: the version check and the publish are one atomic step. A CoW
+    merge reads its new files' keys back (``_file_blooms``); an MoR merge
+    folds them from its batch-stats pass, so the racer lands after the
+    join, at the footer read that precedes the fold on the calling thread
+    (``_footer_rows``): a racer run inside the pass would wait on the one
+    helper thread it occupies."""
     path = str(tmp_path / "t")
     a = LakeTable(spark, path, KEYS, n_buckets=1, merge_mode=merge_mode,
                   bloom_filters=True)
@@ -141,7 +146,8 @@ def test_writer_landing_during_commit_bloom_build_raises(spark, tmp_path, merge_
     def racer():
         b.merge_into(_mk(spark, [("r", 0, "racer", 2, "upsert")]), "race")
 
-    restore = _inject_during_write(a, racer, method="_file_blooms")
+    hook = "_footer_rows" if merge_mode == "mor" else "_file_blooms"
+    restore = _inject_during_write(a, racer, method=hook)
     try:
         with pytest.raises(ConcurrentWriteError, match="manifest advanced"):
             a.merge_into(_mk(spark, [("x", 0, "v2", 3, "upsert")]), "b1")

@@ -163,40 +163,6 @@ def test_purge_on_collapse_strategy_removes_sign_rows(spark, tmp_path):
     assert [(r.conv_id, r.text) for r in t.read().collect()] == [("k", "fine")]
 
 
-def test_purge_where_resolves_keys_from_live_rows(spark, tmp_path):
-    """Predicate purge is key-based: it erases keys whose LIVE row matches,
-    including their non-matching old versions — and never touches keys
-    whose only match is a superseded version (version-level removal would
-    resurrect the older row)."""
-    path = str(tmp_path / "t")
-    t = LakeTable(spark, path, KEYS, n_buckets=2, merge_mode="mor")
-    t.merge_into(_mk(spark, [
-        ("gone", 0, "clean v1", 1, "upsert"),    # live row will match
-        ("stays", 0, "pii draft", 2, "upsert"),  # old version matches...
-        ("other", 0, "clean", 3, "upsert"),
-    ]), "b0")
-    t.merge_into(_mk(spark, [
-        ("gone", 0, "pii final", 4, "upsert"),
-        ("stays", 0, "clean v2", 5, "upsert"),   # ...but live row does not
-    ]), "b1")
-    import pyspark.sql.functions as F
-
-    report = t.purge_where(F.col("text").contains("pii"))
-    assert report["committed"]
-    got = {(r.conv_id, r.text) for r in t.read().collect()}
-    assert got == {("stays", "clean v2"), ("other", "clean")}
-    # 'gone' erased entirely (both versions); 'stays' kept with live text.
-    # Its matching OLD version survives only until compaction/vacuum of
-    # history - which purge already ran - so no pii remains on disk:
-    vals = _disk_values(path, "text")
-    assert not any("pii final" in v for v in vals if v)
-    assert ("gone", 0) not in {(r.conv_id, r.turn_idx)
-                               for r in t.read(include_deleted=True).collect()}
-
-    with pytest.raises(ValueError, match="more than"):
-        t.purge_where(F.lit(True), max_keys=1)
-
-
 @pytest.mark.parametrize("key_cols, purge", [(["k"], [3]), (["tenant", "k"], ["zzz"])])
 def test_purge_rewrite_keeps_each_files_key_bounds(spark, tmp_path, key_cols, purge):
     """A purge rewrites a bucket's base and delta files in separate writes.
